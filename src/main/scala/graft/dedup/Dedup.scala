@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.graph.SizePolicy
 import graft.text.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -133,8 +134,8 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = dist.count()
     val hashed = build(dist)
-    val side = if (n * rowBytes <= (100L << 20)) broadcast(hashed)
-      else hashed
+    val side = if (SizePolicy.fits(n, rowBytes, SizePolicy.broadcastBytes))
+      broadcast(hashed) else hashed
     postings.join(side, Seq("shingle"))
   }
 

@@ -48,81 +48,55 @@ object Bfs {
     * already contain both directions for an undirected walk. */
   def hopDistances(edges: DataFrame, seeds: DataFrame,
                    maxHops: Int,
-                   driverFinishMaxEdges: Long = 2000000L,
+                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
                    maxBroadcastBytes: Long =
-                     GraphJoins.defaultBroadcastBytes): DataFrame = {
+                     SizePolicy.broadcastBytes): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count() // consumed every round — materialize once
-    // RAW-EDGE exact driver finish (the PageRank/LabelPropagation
-    // economics): at ≤ driverFinishMaxEdges edge ROWS the whole
-    // frontier loop — per hop one join + distinct + anti-join + eager
-    // checkpoint, each a driver-scheduled job — collapses to one
-    // 2-column collect and an in-memory BFS with identical semantics
-    // (first reach = min hops; duplicate edges are fanout only;
-    // seeds kept only when they appear as a src — the same left-semi
-    // guard). Spec-pinned equal to the distributed loop
+    // RAW-EDGE exact driver finish: at ≤ driverFinishMaxEdges edge
+    // ROWS the whole frontier loop — per hop one join + distinct +
+    // anti-join + eager checkpoint, each a driver-scheduled job —
+    // collapses to one collect and an in-memory BFS with identical
+    // semantics (first reach = min hops; duplicate edges are fanout
+    // only; seeds kept only when they appear as a src — the same
+    // left-semi guard). Spec-pinned equal to the distributed loop
     // (Round15OpsSpec); 0 forces the distributed path.
     if (nEdges <= driverFinishMaxEdges) {
-      val nodeType = e.schema("src").dataType
-      val es = e.select(col("src").cast("long"),
-          col("dst").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val g = LocalGraph.collect(e)
       e.unpersist(false)
-      val adj = new java.util.HashMap[Long,
-        scala.collection.mutable.ArrayBuffer[Long]]()
-      es.foreach { case (s0, d0) =>
-        adj.computeIfAbsent(s0,
-          _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += d0
-      }
-      val seedArr = seeds.select(col("node").cast("long")).collect()
-        .map(_.getLong(0)).distinct.filter(adj.containsKey)
-      val dist = new scala.collection.mutable.LongMap[Long]()
-      var frontier = seedArr.toSeq
-      frontier.foreach(n => dist(n) = 0L)
+      val dist = Array.fill(g.n)(-1L)
+      var frontier = seeds.select(col("node").cast("long")).collect()
+        .map(r => g.index(r.getLong(0)))
+        .filter(i => i >= 0 && g.degree(i) > 0).distinct
+      frontier.foreach(dist(_) = 0L)
       var hop = 1
       while (hop <= maxHops && frontier.nonEmpty) {
-        val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-        frontier.foreach { n =>
-          val out = adj.get(n)
-          if (out != null) out.foreach { d0 =>
-            if (!dist.contains(d0)) { dist(d0) = hop.toLong; next += d0 }
-          }
+        val next = Array.newBuilder[Int]
+        for (i <- frontier; k <- g.offsets(i) until g.offsets(i + 1)) {
+          val j = g.targets(k)
+          if (dist(j) < 0L) { dist(j) = hop.toLong; next += j }
         }
-        frontier = next.toSeq
+        frontier = next.result()
         hop += 1
       }
-      val ses = edges.sparkSession
-      import ses.implicits._
-      return dist.toSeq.map(identity).toDF("node", "dist")
-        .select(col("node").cast(nodeType), col("dist"))
+      return g.toDF(dist.indices.filter(dist(_) >= 0L)
+        .map(i => (g.ids(i), dist(i))), "node", "dist")
     }
-    // Per-round join-side policy (guide §2.4/§3.1, the GraphJoins
-    // discipline): frontier and settled sets are node-sized, and
-    // their row counts are FREE (the loop counts the frontier every
-    // hop anyway) — broadcast them while they fit, so the cached
-    // edge list is never re-exchanged or sorted in any round. When
-    // |V| can exceed the cap, the edge cache is pre-partitioned on
-    // the join key once up-front and the state sides carry a
-    // shuffled-hash hint (edge side streams sort-free). Spec-pinned:
-    // broadcast == fallback == driver finish (Round16OpsSpec).
-    val nNodes = e.select(col("src")).distinct().count()
-    val allFit = GraphJoins.fitsBroadcast(nNodes,
-      GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes)
+    // Per-round join-side policy (SizePolicy): frontier and settled
+    // sets are node-sized, and their row counts are FREE (the loop
+    // counts the frontier every hop anyway) — broadcast them while
+    // they fit. The settled set can reach every endpoint, so the
+    // up-front edge-cache decision gates on |src ∪ dst|.
+    val allFit = SizePolicy.fits(SizePolicy.nodeCount(e, "src", "dst"),
+      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
     val seedLayer = seeds.select(col("node")).distinct()
       .join(e.select(col("src").as("node")), Seq("node"), "left_semi")
       .select(col("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    val eLoop =
-      if (allFit) e
-      else {
-        val ep = e.repartition(col("src"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        ep.count()
-        e.unpersist(false) // seedLayer is checkpointed — e is done
-        ep
-      }
+    // seedLayer is checkpointed — e has no other reader left
+    val eLoop = SizePolicy.loopEdges(e, "src", allFit)
     var layers = List(seedLayer)
     var frontier = seedLayer.select("node")
     var frontierSize = frontier.count()
@@ -131,13 +105,13 @@ object Bfs {
     while (hop <= maxHops && frontierSize > 0) {
       val settledNodes =
         layers.map(_.select("node")).reduce(_ union _)
-      val fSide = GraphJoins.sideFor(
+      val fSide = SizePolicy.sideFor(
         frontier.withColumnRenamed("node", "src"),
-        GraphJoins.fitsBroadcast(frontierSize,
-          GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes))
-      val sSide = GraphJoins.sideFor(settledNodes,
-        GraphJoins.fitsBroadcast(settledCount,
-          GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes))
+        SizePolicy.fits(frontierSize, SizePolicy.keyedLongRowBytes,
+          maxBroadcastBytes))
+      val sSide = SizePolicy.sideFor(settledNodes,
+        SizePolicy.fits(settledCount, SizePolicy.keyedLongRowBytes,
+          maxBroadcastBytes))
       val next = eLoop
         .join(fSide, Seq("src"))
         .select(col("dst").as("node")).distinct()

@@ -58,9 +58,10 @@ object Components {
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 20,
-                          driverFinishMaxEdges: Long = 1000000L,
+                          driverFinishMaxEdges: Long =
+                            SizePolicy.driverMaxEdges,
                           maxBroadcastBytes: Long =
-                            GraphJoins.defaultBroadcastBytes)
+                            SizePolicy.broadcastBytes)
     : DataFrame = {
     val e = edges.select(col("id1"), col("id2"))
       .filter(col("id1") =!= col("id2"))
@@ -71,7 +72,7 @@ object Components {
     // eager: materialized now, logical plan truncated (see scaladoc)
     var labels = nodes.select(col("id"), col("id").as("component"))
       .localCheckpoint(true)
-    // Per-round join-side policy (GraphJoins, guide §2.4/§3.1): the
+    // Per-round join-side policy (SizePolicy, guide §2.4/§3.1): the
     // label/nbrMin/stepA sides are all bounded by |nodes| — under the
     // byte gate every per-round join BROADCASTS its node-sized side,
     // so the edge stream is never exchanged or sorted; past it the
@@ -79,26 +80,19 @@ object Components {
     // (dst) and node-sized sides carry shuffled-hash hints.
     // Spec-pinned: broadcast == fallback == driver finish
     // (Round16OpsSpec).
-    val nNodes = labels.count()
-    val bcast = GraphJoins.fitsBroadcast(nNodes,
-      GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes)
-    val symRaw = e.select(col("id1").as("src"), col("id2").as("dst"))
-      .union(e.select(col("id2").as("src"), col("id1").as("dst")))
-    val sym =
-      if (bcast) symRaw
-      else {
-        val sp = symRaw.repartition(col("dst"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        sp.count()
-        sp
-      }
+    val bcast = SizePolicy.fits(labels.count(),
+      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
+    val sym = SizePolicy.loopEdges(
+      e.select(col("id1").as("src"), col("id2").as("dst"))
+        .union(e.select(col("id2").as("src"), col("id1").as("dst"))),
+      "dst", bcast)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       // neighbour minima: one join (node side broadcast/SHJ-built)
       // + one aggregate
       val nbrMin = sym
-        .join(GraphJoins.sideFor(labels.select(col("id").as("dst"),
+        .join(SizePolicy.sideFor(labels.select(col("id").as("dst"),
           col("component").as("nbr")), bcast), Seq("dst"))
         .groupBy("src").agg(min(col("nbr")).as("nbr_min"))
       // materialized eagerly: stepA feeds BOTH sides of the pointer-
@@ -106,7 +100,7 @@ object Components {
       // cannot dedupe the subtree) — without the checkpoint the
       // neighbour-min join + aggregate would execute twice per round
       val stepA = labels
-        .join(GraphJoins.sideFor(
+        .join(SizePolicy.sideFor(
           nbrMin.select(col("src").as("id"), col("nbr_min")), bcast),
           Seq("id"), "left")
         .select(col("id"),
@@ -125,7 +119,7 @@ object Components {
       val ptr = stepA.select(col("id").as("cid"),
         col("component").as("cc"))
       labels = stepA.as("x")
-        .join(GraphJoins.sideFor(ptr, bcast).as("p"),
+        .join(SizePolicy.sideFor(ptr, bcast).as("p"),
           col("x.component") === col("p.cid"), "left")
         .select(col("x.id").as("id"),
           coalesce(col("p.cc"), col("x.component")).as("component"))
@@ -133,7 +127,7 @@ object Components {
       converged = changed == 0
       iter += 1
     }
-    if (!bcast) sym.unpersist(false)
+    sym.unpersist(false)
     e.unpersist(false)
     if (!converged) throw new IllegalStateException(
       s"connectedComponents: not converged after $maxIter rounds")

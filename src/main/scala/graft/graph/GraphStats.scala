@@ -21,7 +21,8 @@ object GraphStats {
     * (the DuckDB oracle mirrors in HUGEINT either way).
     */
   def assortativityPpm(edges: DataFrame,
-                       driverFinishMaxEdges: Long = 2000000L)
+                       driverFinishMaxEdges: Long =
+                         SizePolicy.driverMaxEdges)
     : DataFrame = {
     // the canonical edge set feeds the union twice, the degree
     // aggregate and the join chain — uncached, the caller's edge
@@ -43,23 +44,16 @@ object GraphStats {
     // documented 1e8-edge bound anyway). Spec-pinned equal
     // (DriverFinishParitySpec); 0 forces the distributed path.
     if (nE <= driverFinishMaxEdges) {
-      import scala.collection.mutable.LongMap
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val g = LocalGraph.collect(e, symmetric = true)
       e.unpersist(false)
-      val degM = new LongMap[Long](es.length * 4)
-      es.foreach { case (a, b) =>
-        degM(a) = degM.getOrElse(a, 0L) + 1L
-        degM(b) = degM.getOrElse(b, 0L) + 1L
-      }
       var n = 0L; var sx = 0L; var sxy = 0L; var sxx = 0L
-      es.foreach { case (a, b) =>
-        val da = degM(a)
-        val db = degM(b)
-        // both directions of the symmetrized list
-        n += 2L
-        sx += da + db
-        sxy += 2L * da * db
-        sxx += da * da + db * db
+      // one term per direction of the symmetrized list
+      g.foreachEdge { (u, v) =>
+        val du = g.degree(u).toLong
+        n += 1L
+        sx += du
+        sxy += du * g.degree(v)
+        sxx += du * du
       }
       val varx = n * sxx - sx * sx
       val cov = n * sxy - sx * sx
@@ -67,10 +61,8 @@ object GraphStats {
         if (varx == 0L) 0L
         else if (cov >= 0L) (2L * 1000000L * cov + varx) / (2L * varx)
         else -((2L * 1000000L * (-cov) + varx) / (2L * varx))
-      val ses = edges.sparkSession
-      import ses.implicits._
-      return Seq((n, sx, sxy, sxx, ppm))
-        .toDF("n", "sx", "sxy", "sxx", "assortativity_ppm")
+      return g.toDF(Seq((n, sx, sxy, sxx, ppm)),
+        "n", "sx", "sxy", "sxx", "assortativity_ppm")
     }
     val dir = e.select(col("a").as("u"), col("b").as("v"))
       .union(e.select(col("b").as("u"), col("a").as("v")))

@@ -81,15 +81,13 @@ object HyperBall {
     // shared, not replicated. Spec-pinned equal to the distributed
     // loop (Round15OpsSpec); 0 forces the distributed path.
     if (nEdges <= driverFinishMaxEdges) {
-      val nodeType = e.schema("src").dataType
-      val es = e.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val g = LocalGraph.collect(e)
       e.unpersist(false)
-      return localStates(edges.sparkSession, nodeType, es, rounds)
+      return localStates(g, rounds)
     }
-    // Per-round join-side policy (guide §2.4/§3.1, the GraphJoins
-    // discipline): the register state is one ~70 B row per node, so
-    // under the byte gate every round BROADCASTS the state (the
+    // Per-round join-side policy (SizePolicy): the register state is
+    // one ~70 B row per node, so under the byte gate every round
+    // BROADCASTS the state (the
     // scaladoc's long-standing claim, now actually planned — a
     // localCheckpoint'ed state has no stats, so auto-broadcast never
     // fired) and the cached edge list is never re-exchanged or
@@ -101,10 +99,8 @@ object HyperBall {
     // over all rounds). Spec-pinned: broadcast == fallback == driver
     // finish (Round16OpsSpec).
     val nodes = e.select(col("src").as("node")).distinct()
-    val nV = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().count()
-    val bcastState = GraphJoins.fitsBroadcast(nV,
-      GraphJoins.bytesPerRegisterRow, maxBroadcastBytes)
+    val bcastState = SizePolicy.fits(SizePolicy.nodeCount(e, "src", "dst"),
+      SizePolicy.registerRowBytes, maxBroadcastBytes)
     val h = md5(col("node").cast("string"))
     val j = conv(substring(h, 1, 2), 16, 10).cast("long") % R
     val wh = substring(h, 3, 13)
@@ -120,18 +116,10 @@ object HyperBall {
       .localCheckpoint(true)
     // state is checkpointed — in the fallback branch the plain cache
     // has no consumers left once the pre-partitioned copy exists
-    val eLoop =
-      if (bcastState) e
-      else {
-        val ep = e.repartition(col("src"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        ep.count()
-        e.unpersist(false)
-        ep
-      }
+    val eLoop = SizePolicy.loopEdges(e, "src", bcastState)
     (1 to rounds).map { r =>
       val prop = eLoop
-        .join(GraphJoins.sideFor(
+        .join(SizePolicy.sideFor(
           state.withColumnRenamed("node", "src"), bcastState),
           Seq("src"))
         .select(col("dst").as("node"), col("regs"))
@@ -152,11 +140,7 @@ object HyperBall {
     * state is byte-wise max over the node's own state and every
     * in-neighbour's — identical to the union + byteMax aggregate.
     * Returns one LocalRelation per round, (node, regs BINARY). */
-  private def localStates(spark: org.apache.spark.sql.SparkSession,
-                          nodeType: org.apache.spark.sql.types.DataType,
-                          es: Array[(Long, Long)], rounds: Int)
-    : Seq[DataFrame] = {
-    import scala.collection.mutable.LongMap
+  private def localStates(g: LocalGraph, rounds: Int): Seq[DataFrame] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     def initRegs(node: Long): Array[Byte] = {
       md.reset()
@@ -182,36 +166,24 @@ object HyperBall {
       regs(j) = math.min(rho, 40).toByte
       regs
     }
-    // nodes = distinct sources, exactly like the distributed init
-    var state = new LongMap[Array[Byte]]()
-    es.foreach { case (s0, _) =>
-      if (!state.contains(s0)) state(s0) = initRegs(s0)
-    }
-    def byteMaxInto(dst: Array[Byte], src: Array[Byte]): Unit = {
-      var i = 0
-      while (i < R) {
-        if (src(i) > dst(i)) dst(i) = src(i)
-        i += 1
-      }
-    }
-    def toDf(st: LongMap[Array[Byte]]): DataFrame = {
-      import spark.implicits._
-      st.toSeq.map { case (n, r) => (n, r) }.toDF("node", "regs")
-        .select(col("node").cast(nodeType), col("regs"))
-    }
+    // nodes = distinct sources, exactly like the distributed init;
+    // null = not yet reached
+    var state = Array.tabulate(g.n)(i =>
+      if (g.degree(i) > 0) initRegs(g.ids(i)) else null)
     (1 to rounds).map { _ =>
-      val next = new LongMap[Array[Byte]](state.size * 2)
-      state.foreachEntry((n, r) => next(n) = r.clone())
-      es.foreach { case (s0, d0) =>
-        state.get(s0).foreach { sr =>
-          next.get(d0) match {
-            case Some(dr) => byteMaxInto(dr, sr)
-            case None => next(d0) = sr.clone()
+      val next = state.map(r => if (r == null) null else r.clone())
+      g.foreachEdge { (s0, d0) =>
+        val sr = state(s0)
+        if (sr != null) {
+          if (next(d0) == null) next(d0) = sr.clone()
+          else for (j <- 0 until R) {
+            if (sr(j) > next(d0)(j)) next(d0)(j) = sr(j)
           }
         }
       }
       state = next
-      toDf(state)
+      g.toDF(state.indices.filter(state(_) != null)
+        .map(i => (g.ids(i), state(i))), "node", "regs")
     }
   }
 
@@ -236,9 +208,9 @@ object HyperBall {
     * `(node, s_scaled, v_empty, ball_est)` — `ball_est` counts the
     * node itself, exact sketch parity with the q42 formula. */
   def neighborhood(edges: DataFrame, rounds: Int,
-                   driverFinishMaxEdges: Long = 2000000L,
+                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
                    maxBroadcastBytes: Long =
-                     GraphJoins.defaultBroadcastBytes): DataFrame =
+                     SizePolicy.broadcastBytes): DataFrame =
     estimate(ballStates(edges, rounds, driverFinishMaxEdges,
       maxBroadcastBytes).last)
 
@@ -251,9 +223,10 @@ object HyperBall {
     * 1/k weights are exact integer `DIV`s in milli units. Output:
     * `(node, est_1.., harmonic_milli)`. */
   def harmonicCentrality(edges: DataFrame, rounds: Int,
-                         driverFinishMaxEdges: Long = 2000000L,
+                         driverFinishMaxEdges: Long =
+                           SizePolicy.driverMaxEdges,
                          maxBroadcastBytes: Long =
-                           GraphJoins.defaultBroadcastBytes)
+                           SizePolicy.broadcastBytes)
     : DataFrame = {
     val states = ballStates(edges, rounds, driverFinishMaxEdges,
       maxBroadcastBytes)

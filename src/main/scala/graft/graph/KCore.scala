@@ -37,9 +37,9 @@ object KCore {
     *         deg ≥ k
     */
   def kcore(edges: DataFrame, k: Int, rounds: Int,
-            driverFinishMaxEdges: Long = 2000000L,
+            driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
             maxBroadcastBytes: Long =
-              GraphJoins.defaultBroadcastBytes): DataFrame = {
+              SizePolicy.broadcastBytes): DataFrame = {
     require(k >= 1 && rounds >= 0)
     val e = edges.select(
         least(col("id1"), col("id2")).cast("long").as("a"),
@@ -48,66 +48,48 @@ object KCore {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count()
-    // bounded exact driver finish (the PageRank/Components raw-edge
-    // economics): each peel round is 3 jobs distributed; in-memory
-    // the whole peel is one pass per round over an edge array.
-    // Identical fixed-round semantics — spec-pinned to the loop.
+    // bounded exact driver finish: each peel round is 3 jobs
+    // distributed; in-memory the whole peel is one pass per round over
+    // the symmetric CSR. Identical fixed-round semantics — spec-pinned
+    // to the loop.
     if (nEdges <= driverFinishMaxEdges) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val g = LocalGraph.collect(e, symmetric = true)
       e.unpersist(false)
-      import scala.collection.mutable.LongMap
-      def degrees(alive: Long => Boolean): LongMap[Long] = {
-        val d = new LongMap[Long](es.length)
-        es.foreach { case (a, b) =>
-          if (alive(a) && alive(b)) {
-            d(a) = d.getOrElse(a, 0L) + 1L
-            d(b) = d.getOrElse(b, 0L) + 1L
-          }
+      // induced degree of every alive node over its alive neighbours
+      def degrees(alive: Int => Boolean): Array[Int] =
+        Array.tabulate(g.n) { i =>
+          if (!alive(i)) 0
+          else (g.offsets(i) until g.offsets(i + 1))
+            .count(k => alive(g.targets(k)))
         }
-        d
-      }
-      var alive: Long => Boolean = _ => true
+      var deg = degrees(_ => true)
       for (_ <- 0 until rounds) {
-        val surv = degrees(alive).filter(_._2 >= k).keySet
-        alive = surv
+        val surv = deg.map(_ >= k)
+        deg = degrees(surv(_))
       }
-      val fin = degrees(alive)
-      val ses = edges.sparkSession
-      import ses.implicits._
-      return fin.toSeq.map(identity).toDF("node", "deg")
+      return g.toDF(deg.indices.filter(deg(_) > 0)
+        .map(i => (g.ids(i), deg(i).toLong)), "node", "deg")
     }
     var alive = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .distinct()
       .localCheckpoint(true)
-    // Per-round join-side policy (GraphJoins, guide §2.4/§3.1): the
-    // survivor set only SHRINKS from |V|, so one byte gate on the
-    // initial node count decides every round — under it both endpoint
-    // semi-joins BROADCAST the survivor set and the cached edge list
-    // streams unexchanged/unsorted; past it the edge cache persists
-    // pre-partitioned on `a` (the first semi-join's key) and the
-    // survivor sides carry shuffled-hash hints. Spec-pinned:
-    // broadcast == fallback == driver finish (Round16OpsSpec).
-    val nNodes = alive.count()
-    val bcast = GraphJoins.fitsBroadcast(nNodes,
-      GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes)
-    val eLoop =
-      if (bcast) e
-      else {
-        val ep = e.repartition(col("a"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        ep.count()
-        e.unpersist(false) // alive is checkpointed — e is done
-        ep
-      }
+    // Per-round join-side policy (SizePolicy): the survivor set only
+    // SHRINKS from |V|, so one byte gate on the initial node count
+    // decides every round; past it the edge cache persists
+    // pre-partitioned on `a` (the first semi-join's key). alive is
+    // checkpointed, so e has no other reader left.
+    val bcast = SizePolicy.fits(alive.count(),
+      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
+    val eLoop = SizePolicy.loopEdges(e, "a", bcast)
     // degrees of the subgraph induced on `alive` — nodes with zero
     // induced edges simply don't appear (and could never reach k)
     def degrees(alive: DataFrame): DataFrame = {
       val ind = eLoop
-        .join(GraphJoins.sideFor(
+        .join(SizePolicy.sideFor(
           alive.select(col("node").as("a")), bcast), Seq("a"),
           "left_semi")
-        .join(GraphJoins.sideFor(
+        .join(SizePolicy.sideFor(
           alive.select(col("node").as("b")), bcast), Seq("b"),
           "left_semi")
       ind.select(col("a").as("node"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.mutable.LongMap
+
 /** Community detection by synchronous label propagation (Raghavan,
   * Albert & Kumara 2007, public method): every node starts in its own
   * community (label = node id); each round, a node adopts the label
@@ -76,8 +78,8 @@ object LabelPropagation {
     */
   def run(edges: DataFrame, rounds: Int,
           canonical: Boolean = false,
-          driverFinishMaxEdges: Long = 2000000L,
-          maxBroadcastBytes: Long = GraphJoins.defaultBroadcastBytes)
+          driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
+          maxBroadcastBytes: Long = SizePolicy.broadcastBytes)
     : DataFrame = {
     require(rounds >= 1)
     val e0 = canon(edges, canonical)
@@ -88,9 +90,9 @@ object LabelPropagation {
       else e0.persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count()
     if (nEdges <= driverFinishMaxEdges) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val g = LocalGraph.collect(e, symmetric = true)
       if (!canonical) e.unpersist(false)
-      return runLocal(edges.sparkSession, es, rounds)
+      return runLocal(g, rounds)
     }
     // per-round edge-side shuffle removal (guide §2.4/§3.1): labels
     // are one row per node, so when |V|·row bytes clears the
@@ -106,18 +108,16 @@ object LabelPropagation {
     var labels = symRaw.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint(true)
-    val nNodes = labels.count()
-    val bcastLabels = GraphJoins.fitsBroadcast(nNodes,
-      GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes)
-    val sym = (if (bcastLabels) symRaw
-      else symRaw.repartition(col("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count() // reused by every round — materialize before the loop
-    if (!canonical) e.unpersist(false)
+    val bcastLabels = SizePolicy.fits(labels.count(),
+      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
+    val sym = SizePolicy.loopEdges(symRaw, "src", bcastLabels)
+    // past the gate sym is its own cache; under it every round reads e
+    if (!canonical && !bcastLabels) e.unpersist(false)
     for (_ <- 1 to rounds) {
       labels = lpaRound(sym, labels, bcastLabels).localCheckpoint(true)
     }
     sym.unpersist(false)
+    if (!canonical) e.unpersist(false)
     labels
   }
 
@@ -127,7 +127,7 @@ object LabelPropagation {
     * share one body. Arithmetic identical to the pre-r16 inline loop. */
   private[graft] def lpaRound(sym: DataFrame, labels: DataFrame,
                               bcastLabels: Boolean): DataFrame = {
-    val lab = GraphJoins.sideFor(
+    val lab = SizePolicy.sideFor(
       labels.withColumnRenamed("node", "src"), bcastLabels)
     val msgs = sym.join(lab, Seq("src"))
       .select(col("dst").as("node"), col("label"))
@@ -141,44 +141,65 @@ object LabelPropagation {
           - col("enc") - lit(1L)).as("label"))
   }
 
-  /** In-memory synchronous LPA over a collected canonical edge list —
-    * the [[run]] driver finish. Arithmetic is the distributed loop's
-    * EXACTLY: one message per edge row per direction, per-(node,
-    * label) counts packed `enc = cnt·2^32 − (label+1)`, per-node max,
-    * the same decode — so duplicate edge rows, ties and label ranges
-    * behave identically (spec-pinned on random graphs). Node/label
-    * ids must sit in [0, 2^31) — the packing contract the distributed
-    * aggregate already carries. */
-  private def runLocal(spark: org.apache.spark.sql.SparkSession,
-                       es: Array[(Long, Long)], rounds: Int)
-    : DataFrame = {
-    import scala.collection.mutable.LongMap
-    var lab = new LongMap[Long](es.length * 4)
-    es.foreach { case (a, b) => lab(a) = a; lab(b) = b }
+  /** In-memory synchronous LPA over the collected symmetric graph —
+    * the [[run]] driver finish. Semantics are the distributed loop's
+    * EXACTLY: one message per edge row per direction, and each node
+    * adopts the most frequent neighbour label, ties to the smallest
+    * (the packed `enc` max) — so duplicate edge rows and ties behave
+    * identically (spec-pinned on random graphs). Labels are node
+    * indices until the output maps them back to ids; index order is
+    * id order, so "smallest" is unchanged. */
+  private def runLocal(g: LocalGraph, rounds: Int): DataFrame = {
+    var lab = Array.range(0, g.n)
     for (_ <- 1 to rounds) {
-      // cnt per (dst node, neighbour label), key-packed: both ids
-      // < 2^31 by the enc contract, so (node << 32) | label is exact
-      val cnt = new LongMap[Long](es.length * 4)
-      def msg(dst: Long, srcLab: Long): Unit = {
-        val k = (dst << 32) | srcLab
-        cnt(k) = cnt.getOrElse(k, 0L) + 1L
+      val prev = lab
+      lab = Array.tabulate(g.n) { i =>
+        // sorted neighbour labels: the first longest run wins
+        val ls = java.util.Arrays.copyOfRange(g.targets, g.offsets(i),
+          g.offsets(i + 1))
+        for (k <- ls.indices) ls(k) = prev(ls(k))
+        java.util.Arrays.sort(ls)
+        var (best, bestCnt, k) = (ls(0), 0, 0)
+        while (k < ls.length) {
+          var j = k
+          while (j < ls.length && ls(j) == ls(k)) j += 1
+          if (j - k > bestCnt) { best = ls(k); bestCnt = j - k }
+          k = j
+        }
+        best
       }
-      es.foreach { case (a, b) => msg(b, lab(a)); msg(a, lab(b)) }
-      val best = new LongMap[Long](lab.size * 2)
-      cnt.foreachEntry { (k, c) =>
-        val node = k >>> 32
-        val label = k & 0xFFFFFFFFL
-        val enc = c * 4294967296L - (label + 1L)
-        if (best.getOrElse(node, Long.MinValue) < enc) best(node) = enc
-      }
-      val next = new LongMap[Long](lab.size * 2)
-      best.foreachEntry { (node, enc) =>
-        next(node) = ((enc / 4294967296L) + 1L) * 4294967296L - enc - 1L
-      }
-      lab = next
     }
-    import spark.implicits._
-    lab.toSeq.map(identity).toDF("node", "label")
+    g.toDF((0 until g.n).map(i => (g.ids(i), g.ids(lab(i)))),
+      "node", "label")
+  }
+
+  /** Driver-side label sums over the collected edge rows of `e`, with
+    * the distributed chains' inner-join semantics (an endpoint with no
+    * label row drops out): per label its degree total `dc` and
+    * intra-edge count `ec`, and per community pair — key
+    * (min << 32) | max, exact for labels in [0, 2^31) (the [[run]]
+    * contract) — its between-edge count. */
+  private def labelSums(e: DataFrame, labels: DataFrame)
+    : (LongMap[Long], LongMap[Long], LongMap[Long]) = {
+    val g = LocalGraph.collect(e)
+    val lab = Array.fill[Option[Long]](g.n)(None)
+    labels.select(col("node").cast("long"), col("label").cast("long"))
+      .collect().foreach { r =>
+        val i = g.index(r.getLong(0))
+        if (i >= 0) lab(i) = Some(r.getLong(1))
+      }
+    val (dc, ec, between) =
+      (new LongMap[Long](), new LongMap[Long](), new LongMap[Long]())
+    def bump(m: LongMap[Long], k: Long): Unit =
+      m(k) = m.getOrElse(k, 0L) + 1L
+    g.foreachEdge { (a, b) =>
+      lab(a).foreach(bump(dc, _))
+      lab(b).foreach(bump(dc, _))
+      for (x <- lab(a); y <- lab(b))
+        if (x == y) bump(ec, x)
+        else bump(between, (math.min(x, y) << 32) | math.max(x, y))
+    }
+    (dc, ec, between)
   }
 
   /** Labels + modularity + community-size histogram off ONE LPA run —
@@ -232,7 +253,7 @@ object LabelPropagation {
     *         the smaller of the two labels
     */
   def refineMerge(edges: DataFrame, labels: DataFrame,
-                  driverFinishMaxEdges: Long = 2000000L,
+                  driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
                   canonical: Boolean = false): DataFrame = {
     // canonical ⇒ the caller's persisted frame backs every consumer;
     // otherwise the distinct is materialized locally (2+ branches)
@@ -275,37 +296,12 @@ object LabelPropagation {
       // between/dc). Inner-join semantics mirrored: endpoints with
       // no label row drop from both. Spec-pinned equal to the
       // distributed fallback (Round13OpsSpec/Round15OpsSpec).
-      import scala.collection.mutable.LongMap
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val labM = new LongMap[Long]()
-      lab.select(col("node").cast("long"), col("label").cast("long"))
-        .collect().foreach(r => labM(r.getLong(0)) = r.getLong(1))
-      val dcmM = new LongMap[Long]()
-      // labels sit in [0, 2^31) (the run() packing contract), so a
-      // (c << 32) | p key is exact for the between counts
-      val betM = new LongMap[Long]()
-      es.foreach { case (a, b) =>
-        val la = labM.get(a)
-        val lb = labM.get(b)
-        la.foreach(l => dcmM(l) = dcmM.getOrElse(l, 0L) + 1L)
-        lb.foreach(l => dcmM(l) = dcmM.getOrElse(l, 0L) + 1L)
-        (la, lb) match {
-          case (Some(x), Some(y)) if x != y =>
-            val k = (math.min(x, y) << 32) | math.max(x, y)
-            betM(k) = betM.getOrElse(k, 0L) + 1L
-          case _ => ()
-        }
-      }
-      val bet = betM.toSeq.map { case (k, n) =>
-        (k >>> 32, k & 0xFFFFFFFFL, n)
-      }.toArray
-      val dcm = dcmM
+      val (dcm, _, betM) = labelSums(e, lab)
       val m = nEdges
       // both directions of every community pair; gains in BigInt so
       // a caller raising driverFinishMaxEdges past ~1e9 edges can't
       // silently wrap 2·d_c·d_d (~8m²) through Long
-      val best = scala.collection.mutable.LongMap
-        .empty[(Long, BigInt)] // c -> (best partner, gain)
+      val best = LongMap.empty[(Long, BigInt)] // c -> (partner, gain)
       def offer(c: Long, p: Long, ecd: Long): Unit = {
         val gain = BigInt(4) * m * ecd - BigInt(2) * dcm(c) * dcm(p)
         best.get(c) match {
@@ -314,7 +310,8 @@ object LabelPropagation {
           case _ => best(c) = (p, gain)
         }
       }
-      bet.foreach { case (c, p, ecd) =>
+      betM.foreachEntry { (k, ecd) =>
+        val (c, p) = (k >>> 32, k & 0xFFFFFFFFL)
         offer(c, p, ecd); offer(p, c, ecd)
       }
       val merges = best.iterator.collect {
@@ -400,7 +397,8 @@ object LabelPropagation {
     */
   def modularityPpm(edges: DataFrame, labels: DataFrame,
                     canonical: Boolean = false,
-                    driverFinishMaxEdges: Long = 2000000L): DataFrame = {
+                    driverFinishMaxEdges: Long =
+                      SizePolicy.driverMaxEdges): DataFrame = {
     val e0 = canon(edges, canonical)
     val e = if (canonical) e0
       else e0.persist(StorageLevel.MEMORY_AND_DISK)
@@ -415,25 +413,8 @@ object LabelPropagation {
     // DECIMAL(38,0) chain. Spec-pinned equal (Round15OpsSpec);
     // 0 forces the distributed path.
     if (m <= driverFinishMaxEdges) {
-      import scala.collection.mutable.LongMap
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val (dcM, ecM, _) = labelSums(e, labels)
       if (!canonical) e.unpersist(false)
-      val labM = new LongMap[Long]()
-      labels.select(col("node").cast("long"), col("label").cast("long"))
-        .collect().foreach(r => labM(r.getLong(0)) = r.getLong(1))
-      // inner-join semantics mirrored: nodes/edges whose label is
-      // missing drop from dc/ec exactly as the distributed joins drop
-      val dcM = new LongMap[Long]()
-      val ecM = new LongMap[Long]()
-      es.foreach { case (a, b) =>
-        labM.get(a).foreach(la => dcM(la) = dcM.getOrElse(la, 0L) + 1L)
-        labM.get(b).foreach(lb => dcM(lb) = dcM.getOrElse(lb, 0L) + 1L)
-        (labM.get(a), labM.get(b)) match {
-          case (Some(la), Some(lb)) if la == lb =>
-            ecM(la) = ecM.getOrElse(la, 0L) + 1L
-          case _ => ()
-        }
-      }
       var num = BigInt(0)
       dcM.foreachEntry { (label: Long, dc: Long) =>
         val ec: Long = ecM.getOrElse(label, 0L)

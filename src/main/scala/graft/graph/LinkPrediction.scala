@@ -37,7 +37,8 @@ object LinkPrediction {
 
   def jaccardCandidates(edges: DataFrame, topK: Int = 50,
                         maxCenterDegree: Long = 10000L,
-                        driverFinishMaxEdges: Long = 2000000L)
+                        driverFinishMaxEdges: Long =
+                          SizePolicy.driverMaxEdges)
     : DataFrame = {
     // canonical undirected edge set; persisted — it feeds the wedge
     // stream (via adj), the degree aggregate AND the anti-join, and
@@ -52,8 +53,8 @@ object LinkPrediction {
     val nE = e.count()
     // RAW-EDGE exact driver finish (the PageRank/Triangles
     // economics), doubly gated: edge rows ≤ driverFinishMaxEdges AND
-    // capped wedge count Σ_{deg≤cap} C(deg,2) ≤ Triangles'
-    // maxLocalWedges (the hub cap bounds the blowup, but a graph of
+    // capped wedge count Σ_{deg≤cap} C(deg,2) ≤ the local wedge cap
+    // (the hub cap bounds the blowup, but a graph of
     // many mid-degree centers can still imply too much single-thread
     // work). Mirrors the distributed chain operator for operator:
     // capped centers → p<q wedge pairs → common-neighbour counts →
@@ -61,67 +62,35 @@ object LinkPrediction {
     // (ppm desc, id1, id2) top-k. Spec-pinned equal
     // (DriverFinishParitySpec); 0 forces the distributed path.
     if (nE <= driverFinishMaxEdges) {
-      import scala.collection.mutable.{ArrayBuffer, LongMap}
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val degM = new LongMap[Long](es.length * 4)
-      es.foreach { case (a, b) =>
-        degM(a) = degM.getOrElse(a, 0L) + 1L
-        degM(b) = degM.getOrElse(b, 0L) + 1L
-      }
-      var wedgeBound = 0L
-      degM.foreachEntry { (_, d) =>
-        if (d <= maxCenterDegree) wedgeBound += d * (d - 1) / 2
-      }
-      var maxNode = 0L
-      es.foreach { case (a, b) =>
-        if (a > maxNode) maxNode = a
-        if (b > maxNode) maxNode = b
-      }
-      // node ids ≥ 1e9 break the packed pair key below — fall through
-      // to the distributed chain (no packing constraint) instead of
-      // refusing a graph the pre-finish code handled (r15 advice)
-      if (wedgeBound <= graft.graph.Triangles.maxLocalWedges &&
-          maxNode < 1000000000L) {
+      val g = LocalGraph.collect(e, symmetric = true)
+      def center(i: Int): Boolean = g.degree(i) <= maxCenterDegree
+      val wedgeBound = (0 until g.n).filter(center)
+        .map { i => val d = g.degree(i).toLong; d * (d - 1) / 2 }.sum
+      // node ids ≥ 1e9 keep the r15 routing to the distributed chain,
+      // which has no id-range limit
+      if (wedgeBound <= SizePolicy.localMaxWedges &&
+          g.ids.lastOption.getOrElse(0L) < 1000000000L) {
         e.unpersist(false)
-        val adjM = new LongMap[ArrayBuffer[Long]](degM.size * 2)
-        val eset = new java.util.HashSet[Long](es.length * 2)
-        es.foreach { case (a, b) =>
-          if (degM(a) <= maxCenterDegree)
-            adjM.getOrElseUpdate(a, ArrayBuffer.empty[Long]) += b
-          if (degM(b) <= maxCenterDegree)
-            adjM.getOrElseUpdate(b, ArrayBuffer.empty[Long]) += a
-          eset.add(a * 1000000000L + b)
+        val n = g.n.toLong
+        val cn = new scala.collection.mutable.LongMap[Long]()
+        for (c <- 0 until g.n if center(c);
+             k <- g.offsets(c) until g.offsets(c + 1);
+             k2 <- k + 1 until g.offsets(c + 1)) {
+          val (x, y) = (g.targets(k), g.targets(k2))
+          val key = math.min(x, y) * n + math.max(x, y)
+          cn(key) = cn.getOrElse(key, 0L) + 1L
         }
-        val cn = new LongMap[Long]()
-        adjM.foreachEntry { (_, ns) =>
-          val arr = ns.toArray
-          var i = 0
-          while (i < arr.length) {
-            var j = i + 1
-            while (j < arr.length) {
-              val p = math.min(arr(i), arr(j))
-              val q = math.max(arr(i), arr(j))
-              val k = p * 1000000000L + q
-              cn(k) = cn.getOrElse(k, 0L) + 1L
-              j += 1
-            }
-            i += 1
+        g.foreachEdge((u, v) => cn.remove(u * n + v)) // adjacent pairs
+        val rows = cn.toSeq.map { case (key, c) =>
+          val (p, q) = ((key / n).toInt, (key % n).toInt)
+          val (dp, dq) = (g.degree(p).toLong, g.degree(q).toLong)
+          (p, q, c, dp, dq,
+            (2L * 1000000L * c + (dp + dq - c)) / (2L * (dp + dq - c)))
+        }.sortBy { case (p, q, _, _, _, ppm) => (-ppm, p, q) }.take(topK)
+          .map { case (p, q, c, dp, dq, ppm) =>
+            (g.ids(p), g.ids(q), c, dp, dq, ppm)
           }
-        }
-        val rows = cn.toSeq.collect {
-          case (k, c) if !eset.contains(k) =>
-            val p = k / 1000000000L
-            val q = k % 1000000000L
-            val dp = degM(p)
-            val dq = degM(q)
-            val ppm = (2L * 1000000L * c + (dp + dq - c)) /
-              (2L * (dp + dq - c))
-            (p, q, c, dp, dq, ppm)
-        }.sortBy { case (p, q, _, _, _, ppm) => (-ppm, p, q) }
-          .take(topK)
-        val ses = edges.sparkSession
-        import ses.implicits._
-        return rows.toDF("id1", "id2", "common", "deg1", "deg2",
+        return g.toDF(rows, "id1", "id2", "common", "deg1", "deg2",
           "jaccard_ppm")
       }
     }

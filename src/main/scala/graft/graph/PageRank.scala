@@ -32,6 +32,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object PageRank {
 
+  private val total = 1000000000000L // 1e12 mass units
+
   /** @param edges directed edge list, columns `src`, `dst` (any
     *              integral type; nodes = distinct sources)
     * @param iters fixed iteration count (deterministic by design —
@@ -42,9 +44,9 @@ object PageRank {
     */
   def pageRank(edges: DataFrame, iters: Int = 5,
                dampNum: Long = 17L, dampDen: Long = 20L,
-               driverFinishMaxEdges: Long = 2000000L,
+               driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
                maxBroadcastBytes: Long =
-                 GraphJoins.defaultBroadcastBytes): DataFrame =
+                 SizePolicy.broadcastBytes): DataFrame =
     run(edges, None, iters, dampNum, dampDen, driverFinishMaxEdges,
       maxBroadcastBytes)
 
@@ -63,9 +65,9 @@ object PageRank {
     */
   def personalized(edges: DataFrame, seeds: DataFrame, iters: Int = 5,
                    dampNum: Long = 17L, dampDen: Long = 20L,
-                   driverFinishMaxEdges: Long = 2000000L,
+                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
                    maxBroadcastBytes: Long =
-                     GraphJoins.defaultBroadcastBytes): DataFrame =
+                     SizePolicy.broadcastBytes): DataFrame =
     run(edges, Some(seeds), iters, dampNum, dampDen,
       driverFinishMaxEdges, maxBroadcastBytes)
 
@@ -101,10 +103,11 @@ object PageRank {
   def blockPersonalized(edges: DataFrame, seeds: DataFrame,
                         iters: Int = 5,
                         dampNum: Long = 17L, dampDen: Long = 20L,
-                        driverFinishMaxEdges: Long = 2000000L,
+                        driverFinishMaxEdges: Long =
+                          SizePolicy.driverMaxEdges,
                         cohortBatchSize: Int = Int.MaxValue,
                         maxBroadcastBytes: Long =
-                          GraphJoins.defaultBroadcastBytes)
+                          SizePolicy.broadcastBytes)
     : DataFrame = {
     require(cohortBatchSize > 0, "cohortBatchSize must be positive")
     require(iters >= 0 && dampNum > 0 && dampDen >= dampNum)
@@ -119,73 +122,22 @@ object PageRank {
         col("dst").cast("long"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nRaw = e0.count()
-    val total = 1000000000000L
     val teleport = total - total * dampNum / dampDen
     if (nRaw <= driverFinishMaxEdges) {
-      // raw-edge driver finish (see run()): degrees, the source set
-      // and per-cohort teleport shares all derive on the driver —
-      // no deg aggregate, no attach join, a 2-column collect
-      import scala.collection.mutable.LongMap
-      val esRaw = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
+      // raw-edge driver finish (see run()): one cohort iteration each
+      val g = distinctTargets(LocalGraph.collect(e0))
       e0.unpersist(false)
-      // driver-side distinct (ids may exceed 2^31 — no packed key)
-      val seen = new java.util.HashSet[(Long, Long)](esRaw.length * 2)
-      val es = esRaw.filter(seen.add)
-      val degM = new LongMap[Long](es.length * 2)
-      es.foreach { case (s0, _) => degM(s0) = degM.getOrElse(s0, 0L) + 1L }
       val seedRows = seeds.select(col("cohort").cast("long"),
           col("node").cast("long")).distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .filter(t => degM.contains(t._2))
+        .collect().map(r => (r.getLong(0), g.index(r.getLong(1))))
+        .filter { case (_, i) => i >= 0 && g.degree(i) > 0 }
       require(seedRows.nonEmpty,
         "blockPersonalized: no cohort has a seed inside the graph")
-      val out = Seq.newBuilder[(Long, Long, Long)]
-      // CSR adjacency walk (r16, the run() shape): one rank probe +
-      // one contribution division per SOURCE per round over primitive
-      // arrays — the sparse early rounds skip unreached sources at
-      // one LongMap probe each, with no per-edge run-boundary scan
-      // and no tuple deref (the former sorted-tuple walk paid O(|E|)
-      // boundary detection per round per cohort)
-      val (csrSrcs, csrStarts, csrDsts) = csr(es)
-      seedRows.groupBy(_._1).foreach { case (cohort, rows) =>
-        val ns = rows.length.toLong
-        val b = teleport / ns
-        val r0 = total / ns
-        val base = LongMap.from(rows.iterator.map(t => t._2 -> b))
-        var r = LongMap.from(rows.iterator.map(t => t._2 -> r0))
-        for (_ <- 0 until iters) {
-          val acc = new LongMap[Long]()
-          var k0 = 0
-          while (k0 < csrSrcs.length) {
-            val rs = r.getOrElse(csrSrcs(k0), 0L)
-            if (rs > 0L) {
-              val lo = csrStarts(k0)
-              val hi = csrStarts(k0 + 1)
-              val c = (rs * dampNum) / ((hi - lo) * dampDen)
-              if (c != 0L) {
-                var e1 = lo
-                while (e1 < hi) {
-                  acc(csrDsts(e1)) = acc.getOrElse(csrDsts(e1), 0L) + c
-                  e1 += 1
-                }
-              }
-            }
-            k0 += 1
-          }
-          val nr = new LongMap[Long]()
-          base.foreach { case (n, bb) =>
-            nr(n) = bb + acc.getOrElse(n, 0L)
-          }
-          acc.foreach { case (n, s0) =>
-            if (!base.contains(n) && s0 > 0L) nr(n) = s0
-          }
-          r = nr
-        }
-        r.foreach { case (n, v) => if (v > 0L) out += ((cohort, n, v)) }
+      val out = seedRows.groupBy(_._1).toSeq.flatMap { case (c, rows) =>
+        val r = iterate(g, rows.map(_._2), iters, dampNum, dampDen)
+        r.indices.filter(r(_) > 0L).map(i => (c, g.ids(i), r(i)))
       }
-      val ses = edges.sparkSession
-      import ses.implicits._
-      return out.result().toDF("cohort", "node", "rank_u")
+      return g.toDF(out, "cohort", "node", "rank_u")
     }
     val e = e0.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
@@ -218,14 +170,14 @@ object PageRank {
       var ranks = bases.select(col("cohort"), col("node"),
         col("r0").as("r")).localCheckpoint(true)
       for (_ <- 0 until iters) {
-        // join-side policy per round (GraphJoins): the sparse state
+        // join-side policy per round (SizePolicy): the sparse state
         // grows with each cohort's reached neighbourhood, so the
         // byte gate re-reads the count every round — cheap, ranks is
         // already checkpointed. Fallback past the cap: shuffled-hash
         // hint, the cached ed plan is hash-partitioned on src
-        val rankSide = GraphJoins.sideFor(ranks,
-          GraphJoins.fitsBroadcast(ranks.count(),
-            GraphJoins.bytesPerKeyedLongRow + 8L, maxBroadcastBytes))
+        val rankSide = SizePolicy.sideFor(ranks,
+          SizePolicy.fits(ranks.count(),
+            SizePolicy.keyedLongRowBytes + 8L, maxBroadcastBytes))
         val contrib = ed.join(rankSide, ed("src") === ranks("node"))
           .select(col("cohort"), col("dst").as("node"),
             expr(s"(r * $dampNum) DIV (deg * $dampDen)").as("c"))
@@ -254,39 +206,58 @@ object PageRank {
     out
   }
 
-  /** CSR layout of a deduplicated edge array for the driver-finish
-    * walks: `(srcs, starts, dsts)` with `srcs` the distinct sources
-    * in ascending order, `dsts(starts(k) until starts(k+1))` the
-    * k-th source's out-neighbours (so the out-degree is the offset
-    * delta), all primitive arrays. Built once; each PageRank
-    * iteration then probes one rank per SOURCE instead of scanning
-    * per-edge run boundaries over a tuple array. */
-  private def csr(es: Array[(Long, Long)])
-    : (Array[Long], Array[Int], Array[Long]) = {
-    val sorted = es.sortBy(_._1)
-    val m = sorted.length
-    val dsts = new Array[Long](m)
-    val srcsB = Array.newBuilder[Long]
-    val startsB = Array.newBuilder[Int]
-    var i = 0
-    while (i < m) {
-      val s0 = sorted(i)._1
-      srcsB += s0
-      startsB += i
-      while (i < m && sorted(i)._1 == s0) {
-        dsts(i) = sorted(i)._2
-        i += 1
+  /** The collected raw edges with each source's repeated targets
+    * dropped — the driver-side twin of the distributed path's
+    * `distinct` (per CSR slice, so ids may exceed 2^31). */
+  private def distinctTargets(g: LocalGraph): LocalGraph = {
+    val ts = g.targets.clone()
+    val offsets = new Array[Int](g.n + 1)
+    val targets = new Array[Int](ts.length)
+    var m = 0
+    for (i <- 0 until g.n) {
+      val (lo, hi) = (g.offsets(i), g.offsets(i + 1))
+      java.util.Arrays.sort(ts, lo, hi)
+      for (k <- lo until hi if k == lo || ts(k) != ts(k - 1)) {
+        targets(m) = ts(k); m += 1
       }
+      offsets(i + 1) = m
     }
-    startsB += m
-    (srcsB.result(), startsB.result(), dsts)
+    g.withAdjacency(offsets, targets)
+  }
+
+  /** The driver finish's per-cohort iteration, shared by all three
+    * entry points: rank starts at total / |cohort| on each cohort
+    * node (all sources), and each of `iters` rounds gives every node
+    * its teleport share (cohort nodes only) plus, per in-edge, the
+    * source's (r·dampNum) DIV (outdeg·dampDen) — the distributed
+    * loop's exact arithmetic. A zero rank contributes zero, so
+    * skipping it is lossless. Returns the rank of every node index. */
+  private def iterate(g: LocalGraph, cohort: Array[Int], iters: Int,
+                      dampNum: Long, dampDen: Long): Array[Long] = {
+    val teleport = total - total * dampNum / dampDen
+    val base = new Array[Long](g.n)
+    var r = new Array[Long](g.n)
+    cohort.foreach { i =>
+      base(i) = teleport / cohort.length
+      r(i) = total / cohort.length
+    }
+    for (_ <- 0 until iters) {
+      val next = base.clone()
+      for (i <- 0 until g.n if r(i) > 0L && g.degree(i) > 0) {
+        val c = (r(i) * dampNum) / (g.degree(i) * dampDen)
+        if (c != 0L)
+          for (k <- g.offsets(i) until g.offsets(i + 1))
+            next(g.targets(k)) += c
+      }
+      r = next
+    }
+    r
   }
 
   private def run(edges: DataFrame, seeds: Option[DataFrame], iters: Int,
                   dampNum: Long, dampDen: Long,
                   driverFinishMaxEdges: Long,
-                  maxBroadcastBytes: Long =
-                    GraphJoins.defaultBroadcastBytes): DataFrame = {
+                  maxBroadcastBytes: Long): DataFrame = {
     require(iters >= 0 && dampNum > 0 && dampDen >= dampNum)
     // raw projection first (the blockPersonalized r15 shape): the
     // driver-finish gate counts RAW rows (≥ distinct, so strictly
@@ -299,7 +270,6 @@ object PageRank {
         col("dst").cast("long"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nRaw = e0.count()
-    val total = 1000000000000L // 1e12 mass units
     val teleport = total - total * dampNum / dampDen
     // Exact driver finish on RAW edges: degrees, the node set and
     // the teleport/init vector are all derivable on the driver, so
@@ -309,76 +279,24 @@ object PageRank {
     // graph query at sf0.1). Arithmetic identical to the distributed
     // loop; the pinning specs cover every variant.
     if (nRaw <= driverFinishMaxEdges) {
-      import scala.collection.mutable.LongMap
-      val esRaw = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val g = distinctTargets(LocalGraph.collect(e0))
       e0.unpersist(false)
-      // driver-side distinct (ids may exceed 2^31 — no packed key)
-      val seen = new java.util.HashSet[(Long, Long)](esRaw.length * 2)
-      val es = esRaw.filter(seen.add)
-      val degM = new LongMap[Long](es.length * 2)
-      es.foreach { case (s0, _) => degM(s0) = degM.getOrElse(s0, 0L) + 1L }
-      val nodeArr = degM.keys.toArray
-      val (baseM, r0M) = seeds match {
+      val sources = (0 until g.n).filter(g.degree(_) > 0).toArray
+      val cohort = seeds match {
         case None =>
-          val n = nodeArr.length.toLong
-          require(n > 0, "pageRank: empty graph")
-          val b = teleport / n
-          val r0 = total / n
-          (LongMap.from(nodeArr.iterator.map(_ -> b)),
-            LongMap.from(nodeArr.iterator.map(_ -> r0)))
+          require(sources.nonEmpty, "pageRank: empty graph")
+          sources
         case Some(sd) =>
           val seedSet = sd.select(col("node").cast("long")).distinct()
             .collect().map(_.getLong(0)).toSet
-          val sn = nodeArr.filter(seedSet)
-          val nSeeds = sn.length.toLong
-          require(nSeeds > 0,
+          val sn = sources.filter(i => seedSet(g.ids(i)))
+          require(sn.nonEmpty,
             "personalized pageRank: no seed is a graph node")
-          val b = teleport / nSeeds
-          val r0 = total / nSeeds
-          val inSeed = sn.toSet
-          (LongMap.from(nodeArr.iterator.map(n =>
-            n -> (if (inSeed(n)) b else 0L))),
-            LongMap.from(nodeArr.iterator.map(n =>
-              n -> (if (inSeed(n)) r0 else 0L))))
+          sn
       }
-      var r = r0M
-      // CSR adjacency walk (r16): the per-edge contribution
-      // (r(s)·dampNum) DIV (deg(s)·dampDen) is constant per source,
-      // so compute it once per source and add it per out-edge. The
-      // CSR layout (primitive src/offset/dst arrays built ONCE)
-      // replaces the former src-sorted tuple-array walk: per
-      // iteration one rank probe per SOURCE over a primitive array
-      // (no per-edge run-boundary scan, no tuple deref), and the
-      // out-degree IS the offset delta (no degree-map probe). Sums
-      // are identical — same contributions in the same per-source
-      // order, zero contributions add zero either way.
-      val (csrSrcs, csrStarts, csrDsts) = csr(es)
-      for (_ <- 0 until iters) {
-        val acc = new LongMap[Long](nodeArr.length * 2)
-        var k = 0
-        while (k < csrSrcs.length) {
-          val lo = csrStarts(k)
-          val hi = csrStarts(k + 1)
-          val c = (r(csrSrcs(k)) * dampNum) / ((hi - lo) * dampDen)
-          if (c != 0L) {
-            var e1 = lo
-            while (e1 < hi) {
-              val d0 = csrDsts(e1)
-              acc(d0) = acc.getOrElse(d0, 0L) + c
-              e1 += 1
-            }
-          }
-          k += 1
-        }
-        val nr = new LongMap[Long](nodeArr.length * 2)
-        nodeArr.foreach { n =>
-          nr(n) = baseM(n) + acc.getOrElse(n, 0L)
-        }
-        r = nr
-      }
-      val ses = edges.sparkSession
-      import ses.implicits._
-      return r.toSeq.map(identity).toDF("node", "rank_u")
+      val r = iterate(g, cohort, iters, dampNum, dampDen)
+      return g.toDF(sources.toSeq.map(i => (g.ids(i), r(i))),
+        "node", "rank_u")
     }
     val e = e0.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
@@ -414,7 +332,7 @@ object PageRank {
     }).localCheckpoint(true)
     var ranks = nodes.select(col("node"), col("r0").as("r"))
       .localCheckpoint(true)
-    // Per-round join-side policy (guide §2.4/§3.1, the GraphJoins
+    // Per-round join-side policy (guide §2.4/§3.1, the SizePolicy
     // discipline): ranks is exactly one row per node every round, so
     // the broadcast decision is one byte gate on the node count —
     // under it the rank side broadcasts EXPLICITLY (the pre-r16 loop
@@ -426,8 +344,8 @@ object PageRank {
     // Spec-pinned: broadcast == fallback == driver finish
     // (Round16OpsSpec).
     val nNodes = nodes.count()
-    val bcastRanks = GraphJoins.fitsBroadcast(nNodes,
-      GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes)
+    val bcastRanks = SizePolicy.fits(nNodes,
+      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
     for (_ <- 0 until iters) {
       val contrib = prContrib(ed, ranks, dampNum, dampDen, bcastRanks)
       // every node has out-edges by construction; in a symmetrized
@@ -455,7 +373,7 @@ object PageRank {
   private[graft] def prContrib(ed: DataFrame, ranks: DataFrame,
                                dampNum: Long, dampDen: Long,
                                bcastRanks: Boolean): DataFrame =
-    ed.join(GraphJoins.sideFor(ranks, bcastRanks),
+    ed.join(SizePolicy.sideFor(ranks, bcastRanks),
         ed("src") === ranks("node"))
       .select(col("dst").as("node"),
         expr(s"(r * $dampNum) DIV (deg * $dampDen)").as("c"))

@@ -72,14 +72,14 @@ object Reachability {
     */
   def reachingSet(edges: DataFrame, targets: DataFrame,
                   maxRounds: Int = 20,
-                  driverFinishMaxEdges: Long = 2000000L,
+                  driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
                   maxBroadcastBytes: Long =
-                    GraphJoins.defaultBroadcastBytes): DataFrame = {
+                    SizePolicy.broadcastBytes): DataFrame = {
     val e0 = edges.select(col("child"), col("parent"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e0.count()
     if (nEdges <= driverFinishMaxEdges) return driverFinish(e0, targets)
-    // Per-round join-side policy (GraphJoins, guide §2.4/§3.1): the
+    // Per-round join-side policy (SizePolicy, guide §2.4/§3.1): the
     // reach set is node-sized and its count is FREE (the convergence
     // check counts it every round) — broadcast it while it fits, so
     // the cached edge list is never re-exchanged or sorted; when the
@@ -87,29 +87,21 @@ object Reachability {
     // pre-partition the edge cache on the join key (parent) once and
     // hint shuffled-hash on the reach side. Spec-pinned: broadcast ==
     // fallback == driver finish (Round16OpsSpec).
-    val nV = e0.select(col("child").as("node"))
-      .union(e0.select(col("parent").as("node"))).distinct().count()
-    val allFit = GraphJoins.fitsBroadcast(nV,
-      GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes)
+    val allFit = SizePolicy.fits(
+      SizePolicy.nodeCount(e0, "child", "parent"),
+      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
     var reach = targets.select(col("node")).distinct()
       .localCheckpoint(true)
-    val e =
-      if (allFit) e0
-      else {
-        val ep = e0.repartition(col("parent"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        ep.count()
-        e0.unpersist(false) // reach is checkpointed — e0 is done
-        ep
-      }
+    // reach is checkpointed — e0 has no other reader left
+    val e = SizePolicy.loopEdges(e0, "parent", allFit)
     var size = reach.count()
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
-      val rSide = GraphJoins.sideFor(
+      val rSide = SizePolicy.sideFor(
         reach.select(col("node").as("parent")),
-        GraphJoins.fitsBroadcast(size,
-          GraphJoins.bytesPerKeyedLongRow, maxBroadcastBytes))
+        SizePolicy.fits(size, SizePolicy.keyedLongRowBytes,
+          maxBroadcastBytes))
       val next = e
         .join(rSide, Seq("parent"))
         .select(col("child").as("node"))
@@ -168,7 +160,7 @@ object Reachability {
     * ~16 B/row against a ~100 MB cap ≈ 6M types) so the member side
     * (the corpus-scale side) never shuffles; past the cap the
     * semi-join shuffles both sides, which is the honest cost — the
-    * size decision mirrors the Triangles closing-edge gate.
+    * SizePolicy gate the Triangles closing edges also take.
     *
     * @param memberTypes columns `member`, `tid` (seed type
     *                    assignments, already redirect-resolved)
@@ -176,11 +168,12 @@ object Reachability {
     * @return distinct `member` keys that validate
     */
   def validMembers(memberTypes: DataFrame, reach: DataFrame,
-                   maxBroadcastBytes: Long = 100L << 20): DataFrame = {
+                   maxBroadcastBytes: Long = SizePolicy.broadcastBytes)
+    : DataFrame = {
     val r = reach.select(col("node").as("tid"))
     // reachingSet returns a materialized set — this count is cheap
-    val keyed = if (r.count() * 16L <= maxBroadcastBytes)
-      broadcast(r) else r
+    val keyed = if (SizePolicy.fits(r.count(), SizePolicy.keyRowBytes,
+      maxBroadcastBytes)) broadcast(r) else r
     memberTypes.join(keyed, Seq("tid"), "left_semi")
       .select("member").distinct()
   }

@@ -22,15 +22,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Triangles {
 
-  /** Canonicalize + degree-orient an undirected edge list. Returns
-    * (oriented edges persisted+materialized, per-node degrees,
-    * oriented edge count). `oriented` carries src, dst and the packed
-    * (deg, id) order key of dst (`dstk`) so wedge canonicalization
-    * needs no further join. The degree subtree keeps `e` persisted
-    * underneath it — callers re-read deg when their results
-    * materialize, and recomputing the caller's whole edge pipeline
-    * (the dominant cost of a co-occurrence graph) would dwarf the
-    * cache; the session harness releases caches between queries. */
   /** Canonical (a < b, loop-free) distinct edge view, persisted —
     * shared by the driver-finish gate and [[orient]]. Callers count
     * it to materialize. */
@@ -42,94 +33,66 @@ object Triangles {
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** In-memory mirror of orient + wedge + closing-edge counting over
-    * a collected canonical edge list — the [[count]]/[[perNode]]
-    * driver finish. Same packed (deg·10⁹ + id) total order, same
-    * wedge canonicalization (dstk(v) < dstk(w)), same closing-edge
-    * membership, same 1e9 id guard. Returns (nNodes, nEdges,
-    * nWedges, nTriangles, degM, triM). */
-  private[graph] def localTriangles(es: Array[(Long, Long)])
-    : (Long, Long, Long, Long,
-       scala.collection.mutable.LongMap[Long],
-       scala.collection.mutable.LongMap[Long]) = {
-    import scala.collection.mutable.{ArrayBuffer, LongMap}
-    val degM = new LongMap[Long](es.length * 4)
-    var maxNode = Long.MinValue
-    es.foreach { case (a, b) =>
-      degM(a) = degM.getOrElse(a, 0L) + 1L
-      degM(b) = degM.getOrElse(b, 0L) + 1L
-      if (a > maxNode) maxNode = a
-      if (b > maxNode) maxNode = b
-    }
+  /** The [[count]]/[[perNode]] driver finish: in-memory mirror of
+    * orient + wedge + closing-edge counting over the collected
+    * canonical edges, with the same packed (deg·10⁹ + id) order, the
+    * same wedge canonicalization and the same 1e9 id guard. Doubly
+    * gated: None past `maxEdges` edge rows, or when the implied wedge
+    * count Σ C(outdeg, 2) — read off the same orientation pass —
+    * exceeds the local wedge cap (a dense graph under the edge gate
+    * can still imply E^1.5 wedges; that work belongs on the cluster).
+    * Returns (graph, wedges, triangles, per-node triangle counts) and
+    * releases `eC`. */
+  private def local(eC: DataFrame, nE: Long, maxEdges: Long)
+    : Option[(LocalGraph, Long, Long, Array[Long])] = {
+    if (nE > maxEdges) return None
+    val g = LocalGraph.collect(eC, symmetric = true)
+    val maxNode = g.ids.lastOption.getOrElse(Long.MinValue)
     require(maxNode < 1000000000L,
       s"Triangles: node id $maxNode >= 1e9 breaks the packed " +
         "(deg, id) order key — remap ids first")
-    val maxId = 1000000000L
-    def okey(n: Long): Long = degM(n) * maxId + n
-    // oriented adjacency: src = smaller (deg, id); membership set
-    // packs src·10⁹ + dst (ids < 10⁹ by the guard above)
-    val out = new LongMap[ArrayBuffer[Long]](degM.size * 2)
-    val eset = new java.util.HashSet[Long](es.length * 2)
-    es.foreach { case (a, b) =>
-      val (s0, d0) = if (okey(a) < okey(b)) (a, b) else (b, a)
-      out.getOrElseUpdate(s0, ArrayBuffer.empty[Long]) += d0
-      eset.add(s0 * maxId + d0)
+    val okey = Array.tabulate(g.n)(i => g.degree(i) * 1000000000L + g.ids(i))
+    // oriented src = the canonical pair's smaller (deg, id) endpoint
+    def src(u: Int, v: Int): Int = if (okey(u) < okey(v)) u else v
+    val outdeg = new Array[Int](g.n)
+    g.foreachEdge((u, v) => if (u < v) outdeg(src(u, v)) += 1)
+    val nWedges = outdeg.map(d => d.toLong * (d - 1) / 2).sum
+    if (nWedges > SizePolicy.localMaxWedges) return None
+    eC.unpersist(false)
+    val offsets = outdeg.scanLeft(0)(_ + _)
+    val fill = offsets.clone()
+    val out = new Array[Int](offsets(g.n))
+    g.foreachEdge { (u, v) =>
+      if (u < v) { val s = src(u, v); out(fill(s)) = u + v - s; fill(s) += 1 }
     }
-    var nWedges = 0L
+    // a wedge (v, w) at u closes iff v → w is an oriented edge: mark
+    // u's out-neighbours, then scan each out-neighbour's own list
+    val tri = new Array[Long](g.n)
+    val mark = Array.fill(g.n)(-1)
     var nTriangles = 0L
-    val triM = new LongMap[Long]()
-    def bump(n: Long): Unit = triM(n) = triM.getOrElse(n, 0L) + 1L
-    out.foreachEntry { (src, ds) =>
-      val arr = ds.toArray
-      var i = 0
-      while (i < arr.length) {
-        var j = i + 1
-        while (j < arr.length) {
-          nWedges += 1L
-          // canonical wedge order: dstk(v) < dstk(w)
-          val (v, w) =
-            if (okey(arr(i)) < okey(arr(j))) (arr(i), arr(j))
-            else (arr(j), arr(i))
-          if (eset.contains(v * maxId + w)) {
-            nTriangles += 1L
-            bump(src); bump(v); bump(w)
-          }
-          j += 1
-        }
-        i += 1
+    for (u <- 0 until g.n) {
+      for (k <- offsets(u) until offsets(u + 1)) mark(out(k)) = u
+      for (k <- offsets(u) until offsets(u + 1);
+           k2 <- offsets(out(k)) until offsets(out(k) + 1)
+           if mark(out(k2)) == u) {
+        nTriangles += 1L
+        tri(u) += 1L; tri(out(k)) += 1L; tri(out(k2)) += 1L
       }
     }
-    (degM.size.toLong, es.length.toLong, nWedges, nTriangles, degM,
-      triM)
+    Some((g, nWedges, nTriangles, tri))
   }
 
-  /** Wedge count implied by a degree-oriented edge list — the
-    * driver-finish admission test: even under the edge gate, a dense
-    * graph's Σ C(outdeg, 2) can exceed what a single thread should
-    * chew, so past `maxLocalWedges` the distributed path runs. */
-  private[graph] def localWedgeBound(es: Array[(Long, Long)]): Long = {
-    import scala.collection.mutable.LongMap
-    val degM = new LongMap[Long](es.length * 4)
-    es.foreach { case (a, b) =>
-      degM(a) = degM.getOrElse(a, 0L) + 1L
-      degM(b) = degM.getOrElse(b, 0L) + 1L
-    }
-    def okey(n: Long): Long = degM(n) * 1000000000L + n
-    val outdeg = new LongMap[Long](degM.size * 2)
-    es.foreach { case (a, b) =>
-      val s0 = if (okey(a) < okey(b)) a else b
-      outdeg(s0) = outdeg.getOrElse(s0, 0L) + 1L
-    }
-    var w = 0L
-    outdeg.foreachEntry((_, d) => w += d * (d - 1) / 2)
-    w
-  }
-
-  private[graph] val maxLocalWedges: Long = 50000000L
-
+  /** Canonicalize + degree-orient the canonical edge list `e`
+    * (persisted+materialized by the caller via [[canonPersisted]]).
+    * Returns (oriented edges persisted+materialized, per-node
+    * degrees, oriented edge count). `oriented` carries src, dst and
+    * the packed (deg, id) order key of dst (`dstk`) so wedge
+    * canonicalization needs no further join. The degree subtree keeps
+    * `e` persisted underneath it — callers re-read deg when their
+    * results materialize, and recomputing the caller's whole edge
+    * pipeline (the dominant cost of a co-occurrence graph) would dwarf
+    * the cache; the session harness releases caches between queries. */
   private def orient(e: DataFrame): (DataFrame, DataFrame, Long) = {
-    // e: canonical distinct (a < b) pairs, persisted+materialized by
-    // the caller via [[canonPersisted]]
     // ids must fit under the okey packing factor — corrupt order keys
     // would silently mis-orient edges, so refuse loudly instead.
     // e is materialized, so this max is a cheap cached scan.
@@ -166,46 +129,22 @@ object Triangles {
     (oriented, deg, nEdges)
   }
 
-  /** The closing-edge broadcast is a SIZE decision, not a row count:
-    * a 1000-executor cluster pays |closing| × ~48 B (two long keys +
-    * hashed-relation row/map overhead) on every executor, so the gate
-    * is estimated bytes against a ~100 MB cap (≈2M edges) — past it
-    * the equi-join shuffles both sides, which is the honest cost. */
-  val defaultBroadcastBytes: Long = 100L << 20
-  private[graft] val bytesPerClosingEdge: Long = 48L
-  private[graft] def shouldBroadcastClosing(
-      nEdges: Long, maxBroadcastBytes: Long): Boolean =
-    nEdges * bytesPerClosingEdge <= maxBroadcastBytes
-  private def maybeBroadcast(closing: DataFrame, nEdges: Long,
-                             maxBroadcastBytes: Long): DataFrame =
-    if (shouldBroadcastClosing(nEdges, maxBroadcastBytes))
-      broadcast(closing) else closing
-
   /** @param edges undirected edge list, columns `id1`, `id2` (one row
     *              per edge, any orientation, self-loops ignored)
     * @return one row: n_nodes, n_edges, n_wedges, n_triangles
     */
   def count(edges: DataFrame,
-            maxBroadcastBytes: Long = defaultBroadcastBytes,
-            driverFinishMaxEdges: Long = 2000000L): DataFrame = {
+            maxBroadcastBytes: Long = SizePolicy.broadcastBytes,
+            driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
+    : DataFrame = {
     val eC = canonPersisted(edges)
     val nE = eC.count()
-    // RAW-EDGE exact driver finish (the PageRank/LabelPropagation
-    // economics), doubly gated: edge rows ≤ driverFinishMaxEdges AND
-    // implied wedge count ≤ maxLocalWedges (a dense graph under the
-    // edge gate can still imply E^1.5 wedges — that work belongs on
-    // the cluster). Spec-pinned equal (DriverFinishParitySpec);
-    // 0 forces the distributed path.
-    if (nE <= driverFinishMaxEdges) {
-      val es = eC.collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (localWedgeBound(es) <= maxLocalWedges) {
-        eC.unpersist(false)
-        val (nn, ne, nw, nt, _, _) = localTriangles(es)
-        val ses = edges.sparkSession
-        import ses.implicits._
-        return Seq((nn, ne, nw, nt))
-          .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles")
-      }
+    // exact driver finish ([[local]]); spec-pinned equal
+    // (DriverFinishParitySpec); 0 forces the distributed path
+    local(eC, nE, driverFinishMaxEdges) match {
+      case Some((g, nw, nt, _)) => return g.toDF(Seq((g.n.toLong, nE, nw,
+        nt)), "n_nodes", "n_edges", "n_wedges", "n_triangles")
+      case None =>
     }
     val (oriented, deg, nEdges) = orient(eC)
     // e stays persisted: the n_nodes branch below re-reads deg (and
@@ -228,7 +167,8 @@ object Triangles {
     // to out-deg² per source — never shuffles. Past broadcast size
     // the equi-join on (v, w) shuffles both sides; the wedge side is
     // then the cost, which is the algorithm's honest lower bound.
-    val close = maybeBroadcast(closing, nEdges, maxBroadcastBytes)
+    val close = if (SizePolicy.fits(nEdges, SizePolicy.keyedLongRowBytes,
+      maxBroadcastBytes)) broadcast(closing) else closing
     val agg2 = wedges.join(close, Seq("v", "w"), "left")
       .agg(sqlCount(lit(1)).as("n_wedges"),
         coalesce(sum("hit"), lit(0L)).as("n_triangles"))
@@ -256,28 +196,21 @@ object Triangles {
     * @return (node, deg, tri, cc_ppm) for every node with deg ≥ 2
     */
   def perNode(edges: DataFrame,
-              maxBroadcastBytes: Long = defaultBroadcastBytes,
-              driverFinishMaxEdges: Long = 2000000L): DataFrame = {
+              maxBroadcastBytes: Long = SizePolicy.broadcastBytes,
+              driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
+    : DataFrame = {
     val eC = canonPersisted(edges)
     val nE = eC.count()
-    // same double gate as [[count]]; per-node output mirrors the
+    // same driver finish as [[count]]; per-node output mirrors the
     // deg ≥ 2 filter, the left-join coalesce and the HALF_UP ppm
-    if (nE <= driverFinishMaxEdges) {
-      val es = eC.collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (localWedgeBound(es) <= maxLocalWedges) {
-        eC.unpersist(false)
-        val (_, _, _, _, degM, triM) = localTriangles(es)
-        val rows = degM.toSeq.collect {
-          case (node, deg) if deg >= 2 =>
-            val tri = triM.getOrElse(node, 0L)
-            (node, deg, tri,
-              (4L * tri * 1000000L + deg * (deg - 1)) /
-                (2L * deg * (deg - 1)))
-        }
-        val ses = edges.sparkSession
-        import ses.implicits._
-        return rows.toDF("node", "deg", "tri", "cc_ppm")
-      }
+    local(eC, nE, driverFinishMaxEdges) match {
+      case Some((g, _, _, tri)) => return g.toDF(
+        (0 until g.n).filter(g.degree(_) >= 2).map { i =>
+          val deg = g.degree(i).toLong
+          (g.ids(i), deg, tri(i), (4L * tri(i) * 1000000L +
+            deg * (deg - 1)) / (2L * deg * (deg - 1)))
+        }, "node", "deg", "tri", "cc_ppm")
+      case None =>
     }
     val (oriented, deg, nEdges) = orient(eC)
     val wedges = oriented.as("x").join(oriented.as("y"),
@@ -287,7 +220,8 @@ object Triangles {
         col("y.dst").as("w"))
     val closing = oriented.select(col("src").as("v"),
       col("dst").as("w"))
-    val close = maybeBroadcast(closing, nEdges, maxBroadcastBytes)
+    val close = if (SizePolicy.fits(nEdges, SizePolicy.keyedLongRowBytes,
+      maxBroadcastBytes)) broadcast(closing) else closing
     val corners = wedges.join(close, Seq("v", "w"))
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(sqlCount(lit(1)).as("tri"))

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * `driverFinishMaxEdges = 0`:
   *
   *   - mode `gen`:      write <dir>/edges.parquet
-  *   - mode `default`:  the byte-gated policy branch the sizes pick
+  *   - mode `default`:  the branch graph.SizePolicy's byte gate picks
   *                      (here: state broadcasts — 300K nodes × 48 B
   *                      ≈ 14 MB < the 100 MB cap)
   *   - mode `fallback`: `maxBroadcastBytes = 0` — pre-partitioned

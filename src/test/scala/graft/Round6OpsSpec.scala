@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.Triangles
+import graft.graph.{SizePolicy, Triangles}
 import org.apache.spark.sql.functions._
 
 /** Round-6 session specs: size-based Triangles broadcast gate and the
@@ -9,12 +9,12 @@ class Round6OpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("triangles broadcast gate is a byte estimate, not a row count") {
-    val capEdges = Triangles.defaultBroadcastBytes /
-      Triangles.bytesPerClosingEdge
-    assert(Triangles.shouldBroadcastClosing(
-      capEdges, Triangles.defaultBroadcastBytes))
-    assert(!Triangles.shouldBroadcastClosing(
-      capEdges + 1, Triangles.defaultBroadcastBytes))
+    val capEdges = SizePolicy.broadcastBytes /
+      SizePolicy.keyedLongRowBytes
+    assert(SizePolicy.fits(capEdges, SizePolicy.keyedLongRowBytes,
+      SizePolicy.broadcastBytes))
+    assert(!SizePolicy.fits(capEdges + 1, SizePolicy.keyedLongRowBytes,
+      SizePolicy.broadcastBytes))
     // ~2M edges under the 100 MB default — 10x below the old 20M rows
     assert(capEdges <= 2200000L && capEdges >= 2000000L)
   }
