@@ -11,6 +11,7 @@ import graft.text.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HllRegisters
 
 /** The full query surface (SURVEY.md §2): every operator exposed as a
   * `(SparkSession, sfDir) => DataFrame`, with a DuckDB-equivalent
@@ -1624,21 +1625,12 @@ object Queries {
     * by DuckDB's arg_min/arg_max). Values in exact cents (e12's
     * proven round idiom). Output is bucket-bounded regardless of
     * corpus size. */
-  val e17_ohlc: QFn = (s, d) => {
-    val e = t(s, d, "events")
-      .select(col("event_type"), unix_millis(col("ts")).as("ms"),
-        col("event_id"),
-        expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
-      .withColumn("hour", floor(col("ms") / 3600000L))
-      .withColumn("k",
-        (col("ms") % 3600000L) * lit(8589934592L) + col("event_id"))
-    e.groupBy("event_type", "hour")
-      .agg(count(lit(1)).as("n_events"),
-        sum("cents").cast("long").as("volume_cents"),
-        min("cents").as("low"), max("cents").as("high"),
-        min_by(col("cents"), col("k")).as("open"),
-        max_by(col("cents"), col("k")).as("close"))
-  }
+  val e17_ohlc: QFn = (s, d) =>
+    Relational.ticks(t(s, d, "events"))
+      .groupBy(col("event_type"), floor(col("ms") / 3600000L).as("hour"))
+      .agg(Relational.barAggs.head, Relational.barAggs.tail: _*)
+      .select("event_type", "hour", "n_events", "volume_cents",
+        "low", "high", "open", "close")
 
   val e17_sql: String =
     """WITH e AS (SELECT event_type, epoch_ms(ts) AS ms, event_id,
@@ -1667,20 +1659,9 @@ object Queries {
     * queries row-for-row — the q57-style mergeability proof, for
     * bars). */
   val e18_bar_rollup: QFn = (s, d) => {
-    val e = t(s, d, "events")
-      .select(col("event_type"), unix_millis(col("ts")).as("ms"),
-        col("event_id"),
-        expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
-      .withColumn("minute", floor(col("ms") / 60000L))
-      .withColumn("k",
-        (col("ms") % 3600000L) * lit(8589934592L) + col("event_id"))
-    val minuteBars = e.groupBy("event_type", "minute")
-      .agg(count(lit(1)).as("n_events"),
-        sum("cents").cast("long").as("volume_cents"),
-        min("cents").as("low"), max("cents").as("high"),
-        min("k").as("min_k"), max("k").as("max_k"),
-        min_by(col("cents"), col("k")).as("open"),
-        max_by(col("cents"), col("k")).as("close"))
+    val minuteBars = Relational.ticks(t(s, d, "events"))
+      .groupBy(col("event_type"), floor(col("ms") / 60000L).as("minute"))
+      .agg(Relational.barAggs.head, Relational.barAggs.tail: _*)
     minuteBars
       .withColumn("hour", floor(col("minute") / 60L))
       .groupBy("event_type", "hour")
@@ -3035,14 +3016,6 @@ object Queries {
     * (row, cell) keys straight off the token stream and never build
     * the vocab. Hash = md5(row ":" token) → first 8 hex digits mod
     * width, mirrored digit-for-digit by the oracle. */
-  /** Count-Min cell index shared by t11 and t12 (and the streaming
-    * sketch maintainer) — see [[TextFunctions.countMinCell]]. */
-  private def cmCell(r: Column, tok: Column): Column =
-    TextFunctions.countMinCell(r, tok, 16)
-
-  private def cmRows: Column =
-    explode(array((0 until 4).map(lit(_)): _*))
-
   val t11_countmin: QFn = (s, d) => {
     val exact = t(s, d, "documents")
       .select(explode(TextFunctions.tokens(lower(col("text"))))
@@ -3051,15 +3024,15 @@ object Queries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // cells + top-k both branch off exact within one job — materialize
     exact.count()
-    val rows = cmRows.as("r")
-    def cellOf(r: Column, tok: Column): Column = cmCell(r, tok)
+    val rows = explode(array((0 until 4).map(lit(_)): _*)).as("r")
+    val cell = TextFunctions.countMinCell(col("r"), col("tok"), 16)
     val cells = exact.select(col("tok"), col("n_exact"), rows)
-      .withColumn("cell", cellOf(col("r"), col("tok")))
+      .withColumn("cell", cell)
       .groupBy("r", "cell").agg(sum("n_exact").as("cnt"))
     val top = exact
       .orderBy(col("n_exact").desc, col("tok").asc).limit(20)
     val probes = top.select(col("tok"), col("n_exact"), rows)
-      .withColumn("cell", cellOf(col("r"), col("tok")))
+      .withColumn("cell", cell)
     probes.join(cells, Seq("r", "cell"))
       .groupBy("tok", "n_exact").agg(min("cnt").as("n_cm"))
       .select(col("tok"), col("n_exact"), col("n_cm"))
@@ -3096,11 +3069,7 @@ object Queries {
     * from its audit vocab — a spec pins both cell sets identical;
     * the oracle here also counts the raw stream). */
   val t12_countmin_pure: QFn = (s, d) =>
-    t(s, d, "documents")
-      .select(explode(TextFunctions.tokens(lower(col("text"))))
-        .as("tok"))
-      .select(col("tok"), cmRows.as("r"))
-      .withColumn("cell", cmCell(col("r"), col("tok")))
+    TextFunctions.countMinCells(t(s, d, "documents"), 4, 16)
       .groupBy("r", "cell").agg(count(lit(1)).as("cnt"))
 
   val t12_sql: String =
@@ -4186,11 +4155,7 @@ object Queries {
     * on a |sources|×64-bounded table — the corpus totals re-derive
     * from that table, never from a second scan. */
   val t26_source_drift: QFn = (s, d) => {
-    val cells = t(s, d, "documents")
-      .select(col("source"),
-        explode(TextFunctions.tokens(col("text"))).as("tok"))
-      .select(col("source"),
-        TextFunctions.hashBucket(col("tok"), 64).as("b"))
+    val cells = TextFunctions.sourceCells(t(s, d, "documents"), 64)
       .groupBy("source", "b").agg(count(lit(1)).as("c"))
     // bounded from here on: |sources| × 64 rows
     val spine = cells.select("source").distinct()
@@ -4291,15 +4256,14 @@ object Queries {
       .drop("gs")
   }
 
-  /** t27's trained model: (trigram lp table, bigram-backoff lp
-    * table, unseen-bigram floor) in integer micro-nats — shared with
-    * the streaming serve twin so both paths score identically. */
-  private[graft] def targetLmModel(s: SparkSession, d: String)
+  /** t27's model trained on a `(doc_id, text)` corpus: (trigram lp
+    * table, bigram-backoff lp table, unseen-bigram floor) in integer
+    * micro-nats — shared with the streaming serve twin so both paths
+    * score identically. */
+  private[graft] def targetLmModel(corpus: DataFrame)
     : (DataFrame, DataFrame, Column) = {
     val K = 4096
-    val tc = charTris(t(s, d, "documents")
-        .filter(col("source") === "src0")
-        .select(col("doc_id"), col("text")))
+    val tc = charTris(corpus)
       .groupBy("tri").agg(count(lit(1)).as("tn"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     tc.count() // feeds the trigram table AND the bigram rollup
@@ -4319,7 +4283,8 @@ object Queries {
 
   val t27_target_lm: QFn = (s, d) => {
     val docs = t(s, d, "documents")
-    val (triLp, biLp, lpFloor) = targetLmModel(s, d)
+    val (triLp, biLp, lpFloor) = targetLmModel(docs
+      .filter(col("source") === "src0").select(col("doc_id"), col("text")))
     val tf = charTris(docs.select(col("doc_id"), col("text")))
       .groupBy("doc_id", "tri")
       .agg(count(lit(1)).as("c"))
@@ -5140,36 +5105,7 @@ object Queries {
           .when(pmod(col("doc_id"), lit(4)) === 3, unhex(g711WavHex))
           .otherwise(col("text").cast("binary")))
       .select(col("doc_id").as("media_id"), col("payload"))
-    // exact integer sqrt: floor(sqrt(double)) is within 1 of truth
-    // for y < 2^52 (IEEE sqrt is correctly rounded), so one ±1
-    // correction pins it — both engines compute identical BIGINTs
-    def isqrt(y: Column): Column = {
-      val r0 = floor(sqrt(y.cast("double"))).cast("long")
-      r0 + when((r0 + 1) * (r0 + 1) <= y, 1L).otherwise(0L) -
-        when(r0 * r0 > y, 1L).otherwise(0L)
-    }
-    Multimodal.extractFrameFeatures(s, media)
-      // per-FRAME the Long product is safe by construction: frames
-      // are ≤64 units, so 1e6·Σs² ≤ 1e6·64·32768² ≈ 6.9e16 < 2^63
-      .withColumn("frame_rms_milli",
-        isqrt(expr("(1000000 * energy) DIV n_units")))
-      .groupBy("media_id", "mime")
-      .agg(count(lit(1)).as("n_frames"),
-        sum(when(col("frame_rms_milli") < 100000L, 1L)
-          .otherwise(0L)).as("n_silent"),
-        max("energy").as("max_energy"),
-        sum("energy").as("total_energy"),
-        sum("n_units").as("total_units"))
-      // the MEDIA-level product 1e6·total_energy overflows Long
-      // after ~8,600 full-scale s16 samples (~0.2 s @ 44.1 kHz), so
-      // scale in 128-bit space: DECIMAL(38,0)·1e6 DIV units — the
-      // quotient itself is ≤ 1e6·32768² ≈ 1.07e15, back in Long (and
-      // under isqrt's 2^52 double-exactness bound). Oracle mirrors
-      // with HUGEINT.
-      .withColumn("rms_milli",
-        isqrt(expr(
-          "(CAST(total_energy AS DECIMAL(38,0)) * 1000000)" +
-            " DIV total_units")))
+    Multimodal.frameEnergy(Multimodal.extractFrameFeatures(s, media))
   }
 
   /** Oracle replay from the planted formulas: the PCM arm recomputes
@@ -6825,37 +6761,17 @@ object Queries {
     * Exact distinct rides along per group to show the error
     * (±~13% at m=64 by theory; see spec). */
   val q42_hll_distinct: QFn = (s, d) => {
-    val h = md5(col("user_id").cast("string"))
-    val j = conv(substring(h, 1, 2), 16, 10).cast("long") % 64
-    val wh = substring(h, 3, 13)
-    val lz = length(regexp_extract(wh, "^(0*)", 1))
-    val nib = substring(wh, lz + lit(1), lit(1))
-    val blen = when(nib === "1", 1).when(nib.isin("2", "3"), 2)
-      .when(nib.isin("4", "5", "6", "7"), 3).otherwise(4)
-    val rho = when(lz === 13, lit(53))
-      .otherwise(lz * 4 + (lit(4) - blen) + 1)
+    val (j, rho) = HllRegisters.register(col("user_id"))
     val regs = t(s, d, "events")
-      .select(col("event_type"), col("user_id"), j.as("j"),
-        least(rho, lit(40)).cast("long").as("rho"))
-    val sketch = regs.groupBy("event_type", "j")
+      .select(col("event_type"), col("user_id"), j.as("j"), rho.as("rho"))
+    val sums = HllRegisters.sparseSums("m") :+
+      sum("nd").cast("long").as("n_exact")
+    regs.groupBy("event_type", "j")
       .agg(max("rho").as("m"), countDistinct("user_id").as("nd"))
       .groupBy("event_type")
-      .agg((sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(40 - m AS INT))"))
-        + (lit(64) - count(lit(1))) * lit(1L << 40)).as("s_scaled"),
-        (lit(64) - count(lit(1))).cast("long").as("v_empty"),
-        sum("nd").cast("long").as("n_exact"))
-    // small-range (linear counting) correction below 2.5m, exactly as
-    // the HLL paper prescribes: floor(m·ln(m/V)) — floor of an
-    // irrational, no decimal tie boundary exists (V=64 ⇒ exactly 0)
-    sketch
-      .withColumn("raw",
-        expr("(709 * 4096 * 1099511627776) DIV (1000 * s_scaled)"))
+      .agg(sums.head, sums.tail: _*)
       .select(col("event_type"), col("s_scaled"), col("v_empty"),
-        when(col("v_empty") > 0 && col("raw") < 160,
-          floor(lit(64.0) * log(lit(64.0) / col("v_empty")))
-            .cast("long"))
-          .otherwise(col("raw")).as("n_approx"),
-        col("n_exact"))
+        HllRegisters.estimate.as("n_approx"), col("n_exact"))
   }
 
   val q42_sql: String =
@@ -8278,28 +8194,17 @@ object Queries {
     * identical to q42 (integer-scaled harmonic sum, floor-of-
     * irrational linear counting) — hash-exact cross-engine. */
   val q57_hll_setops: QFn = (s, d) => {
-    val h = md5(col("o_custkey").cast("string"))
-    val j = conv(substring(h, 1, 2), 16, 10).cast("long") % 64
-    val wh = substring(h, 3, 13)
-    val lz = length(regexp_extract(wh, "^(0*)", 1))
-    val nib = substring(wh, lz + lit(1), lit(1))
-    val blen = when(nib === "1", 1).when(nib.isin("2", "3"), 2)
-      .when(nib.isin("4", "5", "6", "7"), 3).otherwise(4)
-    val rho = when(lz === 13, lit(53))
-      .otherwise(lz * 4 + (lit(4) - blen) + 1)
+    val (j, rho) = HllRegisters.register(col("o_custkey"))
     val base = t(s, d, "orders")
       .filter(col("o_orderstatus").isin("O", "F"))
       .select(col("o_orderstatus").as("seg"), col("o_custkey"),
-        j.as("j"), least(rho, lit(40)).cast("long").as("rho"))
+        j.as("j"), rho.as("rho"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     base.count() // feeds the register build AND the exact-flag agg
     val segRegs = base.groupBy("seg", "j").agg(max("rho").as("m"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     segRegs.count() // feeds per-seg sketches AND the union merge
-    val sScaled =
-      (sum(expr("shiftleft(CAST(1 AS BIGINT), CAST(40 - m AS INT))"))
-        + (lit(64) - count(lit(1))) * lit(1L << 40)).as("s_scaled")
-    val vEmpty = (lit(64) - count(lit(1))).cast("long").as("v_empty")
+    val Seq(sScaled, vEmpty) = HllRegisters.sparseSums("m")
     val segSk = segRegs.groupBy("seg").agg(sScaled, vEmpty)
       .select(col("seg").as("set_name"), col("s_scaled"),
         col("v_empty"))
@@ -8308,13 +8213,8 @@ object Queries {
       .select(lit("union").as("set_name"), col("s_scaled"),
         col("v_empty"))
     val est = segSk.unionByName(uniSk)
-      .withColumn("raw",
-        expr("(709 * 4096 * 1099511627776) DIV (1000 * s_scaled)"))
       .select(col("set_name"), col("s_scaled"), col("v_empty"),
-        when(col("v_empty") > 0 && col("raw") < 160,
-          floor(lit(64.0) * log(lit(64.0) / col("v_empty")))
-            .cast("long"))
-          .otherwise(col("raw")).as("n_approx"))
+        HllRegisters.estimate.as("n_approx"))
     val inter = est.agg(
         sum(when(col("set_name") === "O", col("n_approx"))).as("eo"),
         sum(when(col("set_name") === "F", col("n_approx"))).as("ef"),
@@ -9810,361 +9710,195 @@ object Queries {
     "s09_ann_recall", "m09_dhash_recall", "d17_dedup_impact",
     "s10_cluster_quality", "t18_langid_confusion")
 
-  val all: Map[String, QFn] = Map(
-    "q01_filter_project" -> q01_filter_project,
-    "q02_agg_group" -> q02_agg_group,
-    "q03_join_agg" -> q03_join_agg,
-    "q04_broadcast_dim" -> q04_broadcast_dim,
-    "q05_sort_topk" -> q05_sort_topk,
-    "q06_window_rank" -> q06_window_rank,
-    "q07_distinct" -> q07_distinct,
-    "q08_union_merge" -> q08_union_merge,
-    "q09_semi_join" -> q09_semi_join,
-    "q10_anti_join" -> q10_anti_join,
-    "q11_regex_filter" -> q11_regex_filter,
-    "q12_tokenize_explode" -> q12_tokenize_explode,
-    "q13_collect_members" -> q13_collect_members,
-    "q14_snapshot_diff" -> q14_snapshot_diff,
-    "q15_scoring" -> q15_scoring,
-    "q16_hash_id" -> q16_hash_id,
-    "q17_related_overlap" -> q17_related_overlap,
-    "q18_json_extract" -> q18_json_extract,
-    "q19_collection_pipeline" -> q19_collection_pipeline,
-    "q20_normalize_names" -> q20_normalize_names,
-    "q21_ndcg" -> q21_ndcg,
-    "q22_avatar_assign" -> q22_avatar_assign,
-    "q23_affix_freq" -> q23_affix_freq,
-    "q24_word_segmentation" -> q24_word_segmentation,
-    "q25_quantiles" -> q25_quantiles,
-    "q26_rollup" -> q26_rollup,
-    "q27_pivot" -> q27_pivot,
-    "q28_hash_split" -> q28_hash_split,
-    "t01_token_count" -> t01_token_count,
-    "t02_quality_score" -> t02_quality_score,
-    "t03_langid" -> t03_langid,
-    "t04_fingerprint" -> t04_fingerprint,
-    "t05_ngram_freq" -> t05_ngram_freq,
-    "t06_pii_scrub" -> t06_pii_scrub,
-    "t07_repetition" -> t07_repetition,
-    "d01_exact_dedup" -> d01_exact_dedup,
-    "d02_ngram_jaccard" -> d02_ngram_jaccard,
-    "d03_minhash_lsh" -> d03_minhash_lsh,
-    "d04_simhash" -> d04_simhash,
-    "d05_embedding_dedup" -> d05_embedding_dedup,
-    "d06_dup_clusters" -> d06_dup_clusters,
-    "d07_decontaminate" -> d07_decontaminate,
-    "d08_cluster_canonical" -> d08_cluster_canonical,
-    "d09_span_dedup" -> d09_span_dedup,
-    "d10_bloom_decontaminate" -> d10_bloom_decontaminate,
-    "d11_cdc_chunks" -> d11_cdc_chunks,
-    "d12_minhash_est" -> d12_minhash_est,
-    "d13_simhash_est" -> d13_simhash_est,
-    "t08_tfidf" -> t08_tfidf,
-    "t09_charlm" -> t09_charlm,
-    "t11_countmin" -> t11_countmin,
-    "e05_asof_join" -> e05_asof_join,
-    "e06_funnel" -> e06_funnel,
-    "s01_cosine_topk" -> s01_cosine_topk,
-    "s02_knn_join" -> s02_knn_join,
-    "s03_ann_lsh" -> s03_ann_lsh,
-    "s04_ann_ivf" -> s04_ann_ivf,
-    "s05_quantize" -> s05_quantize,
-    "s06_pq" -> s06_pq,
-    "s07_multiprobe" -> s07_multiprobe,
-    "m01_binary_meta" -> m01_binary_meta,
-    "m02_feature_stub" -> m02_feature_stub,
-    "m03_tile_dedup" -> m03_tile_dedup,
-    "m04_frame_energy" -> m04_frame_energy,
-    "m05_header_probe" -> m05_header_probe,
-    "m06_frame_sample" -> m06_frame_sample,
-    "m07_mjpeg_frames" -> m07_mjpeg_frames,
-    "m08_dhash_neardup" -> m08_dhash_neardup,
-    "m09_dhash_recall" -> m09_dhash_recall,
-    "q67_apply_ops" -> q67_apply_ops,
-    "q68_compact_ops" -> q68_compact_ops,
-    "t21_c4_rules" -> t21_c4_rules,
-    "t22_source_report" -> t22_source_report,
-    "t23_bpe_encode" -> t23_bpe_encode,
-    "t24_nb_train" -> t24_nb_train,
-    "t25_nb_eval" -> t25_nb_eval,
-    "t26_source_drift" -> t26_source_drift,
-    "t27_target_lm" -> t27_target_lm,
-    "t28_url_normalize" -> t28_url_normalize,
-    "t29_unigram_train" -> t29_unigram_train,
-    "t30_unigram_encode" -> t30_unigram_encode,
-    "s13_hard_negatives" -> s13_hard_negatives,
-    "e01_window_agg" -> e01_window_agg,
-    "e02_sessionize" -> e02_sessionize,
-    "e03_user_stats" -> e03_user_stats,
-    "e04_moving_avg" -> e04_moving_avg,
-    "e07_session_window" -> e07_session_window,
-    "e08_retention" -> e08_retention,
-    "q29_ntile" -> q29_ntile,
-    "q30_nested_json" -> q30_nested_json,
-    "q31_skeleton_normalize" -> q31_skeleton_normalize,
-    "q32_field_merge" -> q32_field_merge,
-    "q33_sql_dump_parse" -> q33_sql_dump_parse,
-    "q34_entity_triples" -> q34_entity_triples,
-    "q35_type_filter" -> q35_type_filter,
-    "q36_by_filter" -> q36_by_filter,
-    "q37_nt_entity" -> q37_nt_entity,
-    "q38_pack_sequences" -> q38_pack_sequences,
-    "q39_stratified_sample" -> q39_stratified_sample,
-    "e09_interval_join" -> e09_interval_join,
-    "q40_scd2" -> q40_scd2,
-    "t10_vocab_coverage" -> t10_vocab_coverage,
-    "q41_cube" -> q41_cube,
-    "q42_hll_distinct" -> q42_hll_distinct,
-    "q43_grouping_sets" -> q43_grouping_sets,
-    "q44_uniform_sample" -> q44_uniform_sample,
-    "q45_corr" -> q45_corr,
-    "q46_zorder" -> q46_zorder,
-    "q47_hist_quantile" -> q47_hist_quantile,
-    "q48_ewma" -> q48_ewma,
-    "e10_sliding_window" -> e10_sliding_window,
-    "e11_gap_fill" -> e11_gap_fill,
-    "g01_pagerank" -> g01_pagerank,
-    "g02_triangles" -> g02_triangles,
-    "g03_local_cc" -> g03_local_cc,
-    "g04_ppr" -> g04_ppr,
-    "g05_kcore" -> g05_kcore,
-    "q49_reachability" -> q49_reachability,
-    "q16b_namehash" -> q16b_namehash,
-    "q50_spearman" -> q50_spearman,
-    "q51_rank_eval" -> q51_rank_eval,
-    "t12_countmin_pure" -> t12_countmin_pure,
-    "q52_collection_stats" -> q52_collection_stats,
-    "s08_ivfpq" -> s08_ivfpq,
-    "q62_alpha_merge" -> q62_alpha_merge,
-    "q63_bpe_merges" -> q63_bpe_merges,
-    "q64_token_count_map" -> q64_token_count_map,
-    "s09_ann_recall" -> s09_ann_recall,
-    "s10_cluster_quality" -> s10_cluster_quality,
-    "g06_ppr_topk" -> g06_ppr_topk,
-    "q53_diverse_topk" -> q53_diverse_topk,
-    "q54_temp_mixture" -> q54_temp_mixture,
-    "t13_clean_pipeline" -> t13_clean_pipeline,
-    "g07_jaccard_link" -> g07_jaccard_link,
-    "g08_assortativity" -> g08_assortativity,
-    "g09_bfs_hops" -> g09_bfs_hops,
-    "g10_hyperball" -> g10_hyperball,
-    "g11_harmonic" -> g11_harmonic,
-    "q56_skew_join" -> q56_skew_join,
-    "q57_hll_setops" -> q57_hll_setops,
-    "q58_markov" -> q58_markov,
-    "q59_sort_compare" -> q59_sort_compare,
-    "e13_autocorr" -> e13_autocorr,
-    "e14_changepoint" -> e14_changepoint,
-    "e15_seasonal_profile" -> e15_seasonal_profile,
-    "q60_search_score" -> q60_search_score,
-    "q61_importance_resample" -> q61_importance_resample,
-    "d15_semdedup" -> d15_semdedup,
-    "d16_lsh_recall" -> d16_lsh_recall,
-    "d17_dedup_impact" -> d17_dedup_impact,
-    "d18_source_overlap" -> d18_source_overlap,
-    "t14_ccnet_buckets" -> t14_ccnet_buckets,
-    "t15_gopher_rules" -> t15_gopher_rules,
-    "t16_pmi_collocations" -> t16_pmi_collocations,
-    "t17_zipf_fit" -> t17_zipf_fit,
-    "t18_langid_confusion" -> t18_langid_confusion,
-    "d14_containment" -> d14_containment,
-    "q55_mad" -> q55_mad,
-    "q65_member_type_stats" -> q65_member_type_stats,
-    "t19_readability" -> t19_readability,
-    "t20_boilerplate" -> t20_boilerplate,
-    "e16_debounce" -> e16_debounce,
-    "g12_label_prop" -> g12_label_prop,
-    "g13_modularity" -> g13_modularity,
-    "g14_refine_communities" -> g14_refine_communities,
-    "d19_edit_pairs" -> d19_edit_pairs,
-    "d20_span_removal" -> d20_span_removal,
-    "d21_substr_removal" -> d21_substr_removal,
-    "d22_fuzzy_decontaminate" -> d22_fuzzy_decontaminate,
-    "q66_profile" -> q66_profile,
-    "e17_ohlc" -> e17_ohlc,
-    "e18_bar_rollup" -> e18_bar_rollup,
-    "e19_lateness_profile" -> e19_lateness_profile,
-    "s11_gram" -> s11_gram,
-    "s12_power_iter" -> s12_power_iter,
-    "s14_opq_rotate" -> s14_opq_rotate,
-    "e12_outliers" -> e12_outliers)
+  /** Every registered query once: (name, builder, DuckDB oracle SQL).
+    * [[all]] and [[oracles]] are derived from it, so a query cannot
+    * register without an oracle, and a duplicate name fails at
+    * initialization instead of silently shadowing another query. */
+  private val registry: Seq[(String, QFn, String)] = Seq(
+    ("q01_filter_project", q01_filter_project, q01_sql),
+    ("q02_agg_group", q02_agg_group, q02_sql),
+    ("q03_join_agg", q03_join_agg, q03_sql),
+    ("q04_broadcast_dim", q04_broadcast_dim, q04_sql),
+    ("q05_sort_topk", q05_sort_topk, q05_sql),
+    ("q06_window_rank", q06_window_rank, q06_sql),
+    ("q07_distinct", q07_distinct, q07_sql),
+    ("q08_union_merge", q08_union_merge, q08_sql),
+    ("q09_semi_join", q09_semi_join, q09_sql),
+    ("q10_anti_join", q10_anti_join, q10_sql),
+    ("q11_regex_filter", q11_regex_filter, q11_sql),
+    ("q12_tokenize_explode", q12_tokenize_explode, q12_sql),
+    ("q13_collect_members", q13_collect_members, q13_sql),
+    ("q14_snapshot_diff", q14_snapshot_diff, q14_sql),
+    ("q15_scoring", q15_scoring, q15_sql),
+    ("q16_hash_id", q16_hash_id, q16_sql),
+    ("q17_related_overlap", q17_related_overlap, q17_sql),
+    ("q18_json_extract", q18_json_extract, q18_sql),
+    ("q19_collection_pipeline", q19_collection_pipeline, q19_sql),
+    ("q20_normalize_names", q20_normalize_names, q20_sql),
+    ("q21_ndcg", q21_ndcg, q21_sql),
+    ("q22_avatar_assign", q22_avatar_assign, q22_sql),
+    ("q23_affix_freq", q23_affix_freq, q23_sql),
+    ("q24_word_segmentation", q24_word_segmentation, q24_sql),
+    ("q25_quantiles", q25_quantiles, q25_sql),
+    ("q26_rollup", q26_rollup, q26_sql),
+    ("q27_pivot", q27_pivot, q27_sql),
+    ("q28_hash_split", q28_hash_split, q28_sql),
+    ("t01_token_count", t01_token_count, t01_sql),
+    ("t02_quality_score", t02_quality_score, t02_sql),
+    ("t03_langid", t03_langid, t03_sql),
+    ("t04_fingerprint", t04_fingerprint, t04_sql),
+    ("t05_ngram_freq", t05_ngram_freq, t05_sql),
+    ("t06_pii_scrub", t06_pii_scrub, t06_sql),
+    ("t07_repetition", t07_repetition, t07_sql),
+    ("d01_exact_dedup", d01_exact_dedup, d01_sql),
+    ("d02_ngram_jaccard", d02_ngram_jaccard, d02_sql),
+    ("d03_minhash_lsh", d03_minhash_lsh, d03_sql),
+    ("d04_simhash", d04_simhash, d04_sql),
+    ("d05_embedding_dedup", d05_embedding_dedup, d05_sql),
+    ("d06_dup_clusters", d06_dup_clusters, d06_sql),
+    ("d07_decontaminate", d07_decontaminate, d07_sql),
+    ("d08_cluster_canonical", d08_cluster_canonical, d08_sql),
+    ("d09_span_dedup", d09_span_dedup, d09_sql),
+    ("d10_bloom_decontaminate", d10_bloom_decontaminate, d10_sql),
+    ("d11_cdc_chunks", d11_cdc_chunks, d11_sql),
+    ("d12_minhash_est", d12_minhash_est, d12_sql),
+    ("d13_simhash_est", d13_simhash_est, d13_sql),
+    ("t08_tfidf", t08_tfidf, t08_sql),
+    ("t09_charlm", t09_charlm, t09_sql),
+    ("t11_countmin", t11_countmin, t11_sql),
+    ("e05_asof_join", e05_asof_join, e05_sql),
+    ("e06_funnel", e06_funnel, e06_sql),
+    ("s01_cosine_topk", s01_cosine_topk, s01_sql),
+    ("s02_knn_join", s02_knn_join, s02_sql),
+    ("s03_ann_lsh", s03_ann_lsh, s03_sql),
+    ("s04_ann_ivf", s04_ann_ivf, s04_sql),
+    ("s05_quantize", s05_quantize, s05_sql),
+    ("s06_pq", s06_pq, s06_sql),
+    ("s07_multiprobe", s07_multiprobe, s07_sql),
+    ("m01_binary_meta", m01_binary_meta, m01_sql),
+    ("m02_feature_stub", m02_feature_stub, m02_sql),
+    ("m03_tile_dedup", m03_tile_dedup, m03_sql),
+    ("m04_frame_energy", m04_frame_energy, m04_sql),
+    ("m05_header_probe", m05_header_probe, m05_sql),
+    ("m06_frame_sample", m06_frame_sample, m06_sql),
+    ("m07_mjpeg_frames", m07_mjpeg_frames, m07_sql),
+    ("m08_dhash_neardup", m08_dhash_neardup, m08_sql),
+    ("m09_dhash_recall", m09_dhash_recall, m09_sql),
+    ("q67_apply_ops", q67_apply_ops, q67_sql),
+    ("q68_compact_ops", q68_compact_ops, q68_sql),
+    ("t21_c4_rules", t21_c4_rules, t21_sql),
+    ("t22_source_report", t22_source_report, t22_sql),
+    ("t23_bpe_encode", t23_bpe_encode, t23_sql),
+    ("t24_nb_train", t24_nb_train, t24_sql),
+    ("t25_nb_eval", t25_nb_eval, t25_sql),
+    ("t26_source_drift", t26_source_drift, t26_sql),
+    ("t27_target_lm", t27_target_lm, t27_sql),
+    ("t28_url_normalize", t28_url_normalize, t28_sql),
+    ("t29_unigram_train", t29_unigram_train, t29_sql),
+    ("t30_unigram_encode", t30_unigram_encode, t30_sql),
+    ("s13_hard_negatives", s13_hard_negatives, s13_sql),
+    ("e01_window_agg", e01_window_agg, e01_sql),
+    ("e02_sessionize", e02_sessionize, e02_sql),
+    ("e03_user_stats", e03_user_stats, e03_sql),
+    ("e04_moving_avg", e04_moving_avg, e04_sql),
+    ("e07_session_window", e07_session_window, e07_sql),
+    ("e08_retention", e08_retention, e08_sql),
+    ("q29_ntile", q29_ntile, q29_sql),
+    ("q30_nested_json", q30_nested_json, q30_sql),
+    ("q31_skeleton_normalize", q31_skeleton_normalize, q31_sql),
+    ("q32_field_merge", q32_field_merge, q32_sql),
+    ("q33_sql_dump_parse", q33_sql_dump_parse, q33_sql),
+    ("q34_entity_triples", q34_entity_triples, q34_sql),
+    ("q35_type_filter", q35_type_filter, q35_sql),
+    ("q36_by_filter", q36_by_filter, q36_sql),
+    ("q37_nt_entity", q37_nt_entity, q37_sql),
+    ("q38_pack_sequences", q38_pack_sequences, q38_sql),
+    ("q39_stratified_sample", q39_stratified_sample, q39_sql),
+    ("e09_interval_join", e09_interval_join, e09_sql),
+    ("q40_scd2", q40_scd2, q40_sql),
+    ("t10_vocab_coverage", t10_vocab_coverage, t10_sql),
+    ("q41_cube", q41_cube, q41_sql),
+    ("q42_hll_distinct", q42_hll_distinct, q42_sql),
+    ("q43_grouping_sets", q43_grouping_sets, q43_sql),
+    ("q44_uniform_sample", q44_uniform_sample, q44_sql),
+    ("q45_corr", q45_corr, q45_sql),
+    ("q46_zorder", q46_zorder, q46_sql),
+    ("q47_hist_quantile", q47_hist_quantile, q47_sql),
+    ("q48_ewma", q48_ewma, q48_sql),
+    ("e10_sliding_window", e10_sliding_window, e10_sql),
+    ("e11_gap_fill", e11_gap_fill, e11_sql),
+    ("g01_pagerank", g01_pagerank, g01_sql),
+    ("g02_triangles", g02_triangles, g02_sql),
+    ("g03_local_cc", g03_local_cc, g03_sql),
+    ("g04_ppr", g04_ppr, g04_sql),
+    ("g05_kcore", g05_kcore, g05_sql),
+    ("q49_reachability", q49_reachability, q49_sql),
+    ("q16b_namehash", q16b_namehash, q16b_sql),
+    ("q50_spearman", q50_spearman, q50_sql),
+    ("q51_rank_eval", q51_rank_eval, q51_sql),
+    ("t12_countmin_pure", t12_countmin_pure, t12_sql),
+    ("q52_collection_stats", q52_collection_stats, q52_sql),
+    ("s08_ivfpq", s08_ivfpq, s08_sql),
+    ("q62_alpha_merge", q62_alpha_merge, q62_sql),
+    ("q63_bpe_merges", q63_bpe_merges, q63_sql),
+    ("q64_token_count_map", q64_token_count_map, q64_sql),
+    ("s09_ann_recall", s09_ann_recall, s09_sql),
+    ("s10_cluster_quality", s10_cluster_quality, s10_sql),
+    ("g06_ppr_topk", g06_ppr_topk, g06_sql),
+    ("q53_diverse_topk", q53_diverse_topk, q53_sql),
+    ("q54_temp_mixture", q54_temp_mixture, q54_sql),
+    ("t13_clean_pipeline", t13_clean_pipeline, t13_sql),
+    ("g07_jaccard_link", g07_jaccard_link, g07_sql),
+    ("g08_assortativity", g08_assortativity, g08_sql),
+    ("g09_bfs_hops", g09_bfs_hops, g09_sql),
+    ("g10_hyperball", g10_hyperball, g10_sql),
+    ("g11_harmonic", g11_harmonic, g11_sql),
+    ("q56_skew_join", q56_skew_join, q56_sql),
+    ("q57_hll_setops", q57_hll_setops, q57_sql),
+    ("q58_markov", q58_markov, q58_sql),
+    ("q59_sort_compare", q59_sort_compare, q59_sql),
+    ("e13_autocorr", e13_autocorr, e13_sql),
+    ("e14_changepoint", e14_changepoint, e14_sql),
+    ("e15_seasonal_profile", e15_seasonal_profile, e15_sql),
+    ("q60_search_score", q60_search_score, q60_sql),
+    ("q61_importance_resample", q61_importance_resample, q61_sql),
+    ("d15_semdedup", d15_semdedup, d15_sql),
+    ("d16_lsh_recall", d16_lsh_recall, d16_sql),
+    ("d17_dedup_impact", d17_dedup_impact, d17_sql),
+    ("d18_source_overlap", d18_source_overlap, d18_sql),
+    ("t14_ccnet_buckets", t14_ccnet_buckets, t14_sql),
+    ("t15_gopher_rules", t15_gopher_rules, t15_sql),
+    ("t16_pmi_collocations", t16_pmi_collocations, t16_sql),
+    ("t17_zipf_fit", t17_zipf_fit, t17_sql),
+    ("t18_langid_confusion", t18_langid_confusion, t18_sql),
+    ("d14_containment", d14_containment, d14_sql),
+    ("q55_mad", q55_mad, q55_sql),
+    ("q65_member_type_stats", q65_member_type_stats, q65_sql),
+    ("t19_readability", t19_readability, t19_sql),
+    ("t20_boilerplate", t20_boilerplate, t20_sql),
+    ("e16_debounce", e16_debounce, e16_sql),
+    ("g12_label_prop", g12_label_prop, g12_sql),
+    ("g13_modularity", g13_modularity, g13_sql),
+    ("g14_refine_communities", g14_refine_communities, g14_sql),
+    ("d19_edit_pairs", d19_edit_pairs, d19_sql),
+    ("d20_span_removal", d20_span_removal, d20_sql),
+    ("d21_substr_removal", d21_substr_removal, d21_sql),
+    ("d22_fuzzy_decontaminate", d22_fuzzy_decontaminate, d22_sql),
+    ("q66_profile", q66_profile, q66_sql),
+    ("e17_ohlc", e17_ohlc, e17_sql),
+    ("e18_bar_rollup", e18_bar_rollup, e18_sql),
+    ("e19_lateness_profile", e19_lateness_profile, e19_sql),
+    ("s11_gram", s11_gram, s11_sql),
+    ("s12_power_iter", s12_power_iter, s12_sql),
+    ("s14_opq_rotate", s14_opq_rotate, s14_sql),
+    ("e12_outliers", e12_outliers, e12_sql))
+  require(registry.map(_._1).distinct.size == registry.size,
+    "duplicate query names: " +
+      registry.map(_._1).diff(registry.map(_._1).distinct).mkString(", "))
 
-  val oracles: Map[String, String] = Map(
-    "q01_filter_project" -> q01_sql,
-    "q02_agg_group" -> q02_sql,
-    "q03_join_agg" -> q03_sql,
-    "q04_broadcast_dim" -> q04_sql,
-    "q05_sort_topk" -> q05_sql,
-    "q06_window_rank" -> q06_sql,
-    "q07_distinct" -> q07_sql,
-    "q08_union_merge" -> q08_sql,
-    "q09_semi_join" -> q09_sql,
-    "q10_anti_join" -> q10_sql,
-    "q11_regex_filter" -> q11_sql,
-    "q12_tokenize_explode" -> q12_sql,
-    "q13_collect_members" -> q13_sql,
-    "q14_snapshot_diff" -> q14_sql,
-    "q15_scoring" -> q15_sql,
-    "q16_hash_id" -> q16_sql,
-    "q16b_namehash" -> q16b_sql,
-    "q17_related_overlap" -> q17_sql,
-    "q18_json_extract" -> q18_sql,
-    "q19_collection_pipeline" -> q19_sql,
-    "q20_normalize_names" -> q20_sql,
-    "q21_ndcg" -> q21_sql,
-    "q22_avatar_assign" -> q22_sql,
-    "q23_affix_freq" -> q23_sql,
-    "q24_word_segmentation" -> q24_sql,
-    "q25_quantiles" -> q25_sql,
-    "q26_rollup" -> q26_sql,
-    "q27_pivot" -> q27_sql,
-    "q28_hash_split" -> q28_sql,
-    "t01_token_count" -> t01_sql,
-    "t02_quality_score" -> t02_sql,
-    "t03_langid" -> t03_sql,
-    "t04_fingerprint" -> t04_sql,
-    "t05_ngram_freq" -> t05_sql,
-    "t06_pii_scrub" -> t06_sql,
-    "t07_repetition" -> t07_sql,
-    "d01_exact_dedup" -> d01_sql,
-    "d02_ngram_jaccard" -> d02_sql,
-    "d03_minhash_lsh" -> d03_sql,
-    "d04_simhash" -> d04_sql,
-    "d05_embedding_dedup" -> d05_sql,
-    "d06_dup_clusters" -> d06_sql,
-    "d07_decontaminate" -> d07_sql,
-    "d08_cluster_canonical" -> d08_sql,
-    "d09_span_dedup" -> d09_sql,
-    "d10_bloom_decontaminate" -> d10_sql,
-    "d11_cdc_chunks" -> d11_sql,
-    "d12_minhash_est" -> d12_sql,
-    "d13_simhash_est" -> d13_sql,
-    "t08_tfidf" -> t08_sql,
-    "t09_charlm" -> t09_sql,
-    "t11_countmin" -> t11_sql,
-    "e05_asof_join" -> e05_sql,
-    "e06_funnel" -> e06_sql,
-    "s01_cosine_topk" -> s01_sql,
-    "s02_knn_join" -> s02_sql,
-    "s03_ann_lsh" -> s03_sql,
-    "s04_ann_ivf" -> s04_sql,
-    "s05_quantize" -> s05_sql,
-    "s06_pq" -> s06_sql,
-    "s07_multiprobe" -> s07_sql,
-    "m01_binary_meta" -> m01_sql,
-    "m02_feature_stub" -> m02_sql,
-    "m03_tile_dedup" -> m03_sql,
-    "m04_frame_energy" -> m04_sql,
-    "m05_header_probe" -> m05_sql,
-    "m06_frame_sample" -> m06_sql,
-    "m07_mjpeg_frames" -> m07_sql,
-    "m08_dhash_neardup" -> m08_sql,
-    "m09_dhash_recall" -> m09_sql,
-    "q67_apply_ops" -> q67_sql,
-    "q68_compact_ops" -> q68_sql,
-    "t21_c4_rules" -> t21_sql,
-    "t22_source_report" -> t22_sql,
-    "t23_bpe_encode" -> t23_sql,
-    "t24_nb_train" -> t24_sql,
-    "t25_nb_eval" -> t25_sql,
-    "t26_source_drift" -> t26_sql,
-    "t27_target_lm" -> t27_sql,
-    "t28_url_normalize" -> t28_sql,
-    "t29_unigram_train" -> t29_sql,
-    "t30_unigram_encode" -> t30_sql,
-    "s13_hard_negatives" -> s13_sql,
-    "e01_window_agg" -> e01_sql,
-    "e02_sessionize" -> e02_sql,
-    "e03_user_stats" -> e03_sql,
-    "e04_moving_avg" -> e04_sql,
-    "e07_session_window" -> e07_sql,
-    "e08_retention" -> e08_sql,
-    "q29_ntile" -> q29_sql,
-    "q30_nested_json" -> q30_sql,
-    "q31_skeleton_normalize" -> q31_sql,
-    "q32_field_merge" -> q32_sql,
-    "q33_sql_dump_parse" -> q33_sql,
-    "q34_entity_triples" -> q34_sql,
-    "q35_type_filter" -> q35_sql,
-    "q36_by_filter" -> q36_sql,
-    "q37_nt_entity" -> q37_sql,
-    "q38_pack_sequences" -> q38_sql,
-    "q39_stratified_sample" -> q39_sql,
-    "e09_interval_join" -> e09_sql,
-    "q40_scd2" -> q40_sql,
-    "t10_vocab_coverage" -> t10_sql,
-    "q41_cube" -> q41_sql,
-    "q42_hll_distinct" -> q42_sql,
-    "q43_grouping_sets" -> q43_sql,
-    "q44_uniform_sample" -> q44_sql,
-    "q45_corr" -> q45_sql,
-    "q46_zorder" -> q46_sql,
-    "q47_hist_quantile" -> q47_sql,
-    "q48_ewma" -> q48_sql,
-    "e10_sliding_window" -> e10_sql,
-    "e11_gap_fill" -> e11_sql,
-    "g01_pagerank" -> g01_sql,
-    "g02_triangles" -> g02_sql,
-    "g03_local_cc" -> g03_sql,
-    "g04_ppr" -> g04_sql,
-    "g05_kcore" -> g05_sql,
-    "q49_reachability" -> q49_sql,
-    "q50_spearman" -> q50_sql,
-    "q51_rank_eval" -> q51_sql,
-    "t12_countmin_pure" -> t12_sql,
-    "q52_collection_stats" -> q52_sql,
-    "s08_ivfpq" -> s08_sql,
-    "q62_alpha_merge" -> q62_sql,
-    "q63_bpe_merges" -> q63_sql,
-    "q64_token_count_map" -> q64_sql,
-    "s09_ann_recall" -> s09_sql,
-    "s10_cluster_quality" -> s10_sql,
-    "g06_ppr_topk" -> g06_sql,
-    "q53_diverse_topk" -> q53_sql,
-    "q54_temp_mixture" -> q54_sql,
-    "t13_clean_pipeline" -> t13_sql,
-    "g07_jaccard_link" -> g07_sql,
-    "g08_assortativity" -> g08_sql,
-    "g09_bfs_hops" -> g09_sql,
-    "g10_hyperball" -> g10_sql,
-    "g11_harmonic" -> g11_sql,
-    "q56_skew_join" -> q56_sql,
-    "q57_hll_setops" -> q57_sql,
-    "q58_markov" -> q58_sql,
-    "q59_sort_compare" -> q59_sql,
-    "e13_autocorr" -> e13_sql,
-    "e14_changepoint" -> e14_sql,
-    "e15_seasonal_profile" -> e15_sql,
-    "q60_search_score" -> q60_sql,
-    "q61_importance_resample" -> q61_sql,
-    "d15_semdedup" -> d15_sql,
-    "d16_lsh_recall" -> d16_sql,
-    "d17_dedup_impact" -> d17_sql,
-    "d18_source_overlap" -> d18_sql,
-    "t14_ccnet_buckets" -> t14_sql,
-    "t15_gopher_rules" -> t15_sql,
-    "t16_pmi_collocations" -> t16_sql,
-    "t17_zipf_fit" -> t17_sql,
-    "t18_langid_confusion" -> t18_sql,
-    "d14_containment" -> d14_sql,
-    "q55_mad" -> q55_sql,
-    "q65_member_type_stats" -> q65_sql,
-    "t19_readability" -> t19_sql,
-    "t20_boilerplate" -> t20_sql,
-    "e16_debounce" -> e16_sql,
-    "g12_label_prop" -> g12_sql,
-    "g14_refine_communities" -> g14_sql,
-    "g13_modularity" -> g13_sql,
-    "d19_edit_pairs" -> d19_sql,
-    "d20_span_removal" -> d20_sql,
-    "d21_substr_removal" -> d21_sql,
-    "d22_fuzzy_decontaminate" -> d22_sql,
-    "q66_profile" -> q66_sql,
-    "e17_ohlc" -> e17_sql,
-    "e18_bar_rollup" -> e18_sql,
-    "e19_lateness_profile" -> e19_sql,
-    "s11_gram" -> s11_sql,
-    "s12_power_iter" -> s12_sql,
-    "s14_opq_rotate" -> s14_sql,
-    "e12_outliers" -> e12_sql)
+  val all: Map[String, QFn] =
+    registry.map { case (name, fn, _) => name -> fn }.toMap
+
+  val oracles: Map[String, String] =
+    registry.map { case (name, _, sql) => name -> sql }.toMap
 }

@@ -2,6 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HllRegisters
+import org.apache.spark.sql.graft.HllRegisterFunctions._
 import org.apache.spark.storage.StorageLevel
 
 /** HyperBall (Boldi & Vigna 2013, public method): the neighbourhood
@@ -101,18 +103,8 @@ object HyperBall {
     val nodes = e.select(col("src").as("node")).distinct()
     val bcastState = SizePolicy.fits(SizePolicy.nodeCount(e, "src", "dst"),
       SizePolicy.registerRowBytes, maxBroadcastBytes)
-    val h = md5(col("node").cast("string"))
-    val j = conv(substring(h, 1, 2), 16, 10).cast("long") % R
-    val wh = substring(h, 3, 13)
-    val lz = length(regexp_extract(wh, "^(0*)", 1))
-    val nib = substring(wh, lz + lit(1), lit(1))
-    val blen = when(nib === "1", 1).when(nib.isin("2", "3"), 2)
-      .when(nib.isin("4", "5", "6", "7"), 3).otherwise(4)
-    val rho = when(lz === 13, lit(53))
-      .otherwise(lz * 4 + (lit(4) - blen) + 1)
-    import org.apache.spark.sql.graft.HllRegisterFunctions._
-    var state = nodes.select(col("node"),
-        hllInit(j, least(rho, lit(40)).cast("long")).as("regs"))
+    val (j, rho) = HllRegisters.register(col("node"))
+    var state = nodes.select(col("node"), hllInit(j, rho).as("regs"))
       .localCheckpoint(true)
     // state is checkpointed — in the fallback branch the plain cache
     // has no consumers left once the pre-partitioned copy exists
@@ -190,19 +182,12 @@ object HyperBall {
   /** q42's integer-space estimate over a dense register state; an
     * empty register (0) contributes 2^40 to the scaled harmonic sum —
     * exactly the sparse form's (64 − count) · 2^40 term. */
-  private def estimate(state: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.HllRegisterFunctions._
+  private def estimate(state: DataFrame): DataFrame =
     state
       .select(col("node"), hllScaledSum(col("regs")).as("s_scaled"),
         hllEmptyCount(col("regs")).as("v_empty"))
-      .withColumn("raw",
-        expr("(709 * 4096 * 1099511627776) DIV (1000 * s_scaled)"))
       .select(col("node"), col("s_scaled"), col("v_empty"),
-        when(col("v_empty") > 0 && col("raw") < 160,
-          floor(lit(64.0) * log(lit(64.0) / col("v_empty")))
-            .cast("long"))
-          .otherwise(col("raw")).as("ball_est"))
-  }
+        HllRegisters.estimate.as("ball_est"))
 
   /** Per-node radius-`rounds` ball-size estimates:
     * `(node, s_scaled, v_empty, ball_est)` — `ball_est` counts the

@@ -41,11 +41,7 @@ object KCore {
             maxBroadcastBytes: Long =
               SizePolicy.broadcastBytes): DataFrame = {
     require(k >= 1 && rounds >= 0)
-    val e = edges.select(
-        least(col("id1"), col("id2")).cast("long").as("a"),
-        greatest(col("id1"), col("id2")).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val e = LocalGraph.canonicalEdges(edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count()
     // bounded exact driver finish: each peel round is 3 jobs

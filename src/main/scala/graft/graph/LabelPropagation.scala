@@ -53,12 +53,7 @@ object LabelPropagation {
     if (canonical)
       edges.select(col("id1").cast("long").as("a"),
         col("id2").cast("long").as("b"))
-    else
-      edges.select(
-          least(col("id1"), col("id2")).cast("long").as("a"),
-          greatest(col("id1"), col("id2")).cast("long").as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
+    else LocalGraph.canonicalEdges(edges)
 
   /** @param edges  undirected edge list, columns `id1`, `id2` (any
     *               orientation; self-loops ignored)

@@ -44,11 +44,7 @@ object LinkPrediction {
     // stream (via adj), the degree aggregate AND the anti-join, and
     // the caller's edge pipeline (a co-occurrence join) dwarfs the
     // cache. Materialize before the fan-out (CLAUDE.md persist rule).
-    val e = edges.select(
-        least(col("id1"), col("id2")).cast("long").as("a"),
-        greatest(col("id1"), col("id2")).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val e = LocalGraph.canonicalEdges(edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nE = e.count()
     // RAW-EDGE exact driver finish (the PageRank/Triangles

@@ -3,7 +3,7 @@ package graft.graph
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, greatest, least}
 import org.apache.spark.sql.types.DataType
 
 /** A collected edge list in CSR form — the one format every graph
@@ -58,6 +58,16 @@ final class LocalGraph private (val ids: Array[Long],
 }
 
 object LocalGraph {
+
+  /** The canonical undirected edge set of an `(id1, id2)` list, as
+    * distinct `(a, b)` BIGINT pairs with a < b: each pair oriented
+    * least → greatest and self-loops dropped. */
+  def canonicalEdges(edges: DataFrame): DataFrame =
+    edges.select(
+        least(col("id1"), col("id2")).cast("long").as("a"),
+        greatest(col("id1"), col("id2")).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
 
   /** One collect of an already persisted and counted edge frame whose
     * first two columns are (src, dst), in any integral type. */

@@ -26,11 +26,7 @@ object Triangles {
     * shared by the driver-finish gate and [[orient]]. Callers count
     * it to materialize. */
   private def canonPersisted(edges: DataFrame): DataFrame =
-    edges.select(
-        least(col("id1"), col("id2")).cast("long").as("a"),
-        greatest(col("id1"), col("id2")).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    LocalGraph.canonicalEdges(edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The [[count]]/[[perNode]] driver finish: in-memory mirror of

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1699,6 +1699,47 @@ object Multimodal {
         }
       }(enc)
     ds.toDF()
+  }
+
+  /** The per-media energy fold over frame rows `(media_id, mime,
+    * n_units, energy)`, grouped by `keys` then (media_id, mime) — m04
+    * and its streaming twin (which adds its event-time window):
+    * n_frames, n_silent (frame rms < 100 in milli-units), max/total
+    * energy, total_units and the media rms_milli. Every rms is an
+    * exact corrected isqrt, so both engines compute identical
+    * BIGINTs. */
+  def frameEnergy(frames: DataFrame, keys: Column*): DataFrame = {
+    // floor(sqrt(double)) is within 1 of truth for y < 2^52 (IEEE
+    // sqrt is correctly rounded), so one ±1 correction pins it
+    def isqrt(y: Column): Column = {
+      val r0 = floor(sqrt(y.cast("double"))).cast("long")
+      r0 + when((r0 + 1) * (r0 + 1) <= y, 1L).otherwise(0L) -
+        when(r0 * r0 > y, 1L).otherwise(0L)
+    }
+    frames
+      // per-FRAME the Long product is safe by construction: frames
+      // are ≤64 units, so 1e6·Σs² ≤ 1e6·64·32768² ≈ 6.9e16 < 2^63
+      .withColumn("frame_rms_milli",
+        isqrt(expr("(1000000 * energy) DIV n_units")))
+      .groupBy(keys ++ Seq(col("media_id"), col("mime")): _*)
+      .agg(count(lit(1)).as("n_frames"),
+        sum(when(col("frame_rms_milli") < 100000L, 1L)
+          .otherwise(0L)).as("n_silent"),
+        max("energy").as("max_energy"),
+        sum("energy").as("total_energy"),
+        sum("n_units").as("total_units"))
+      // the MEDIA-level product 1e6·total_energy overflows Long
+      // after ~8,600 full-scale s16 samples (~0.2 s @ 44.1 kHz), so
+      // scale in 128-bit space: DECIMAL(38,0)·1e6 DIV units — the
+      // quotient itself is ≤ 1e6·32768² ≈ 1.07e15, back in Long (and
+      // under isqrt's 2^52 double-exactness bound). Oracles mirror
+      // with HUGEINT.
+      .withColumn("rms_milli",
+        isqrt(expr(
+          "(CAST(total_energy AS DECIMAL(38,0)) * 1000000)" +
+            " DIV total_units")))
+      .select("media_id", "mime", "n_frames", "n_silent",
+        "max_energy", "total_energy", "total_units", "rms_milli")
   }
 
   /** Per-VIDEO-FRAME pixel decode at the same per-partition boundary

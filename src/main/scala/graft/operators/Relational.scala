@@ -259,4 +259,29 @@ object Relational {
     pairs.groupBy("c1", "c2")
       .agg(count(lit(1)).as("shared"))
   }
+
+  /** Tick rows for OHLC bars: `(ts, event_type, ms, event_id, cents,
+    * k)` — value in exact cents (e12's round idiom) and `k` the
+    * packed total-order tick key (within-hour ms offset · 2^33 +
+    * event_id; the offset keeps the pack inside BIGINT for any epoch,
+    * the unique id makes open/close deterministic). Shared by e17,
+    * e18 and [[graft.streaming.Streams.streamingMinuteBars]]. */
+  def ticks(events: DataFrame): DataFrame =
+    events
+      .select(col("ts"), col("event_type"),
+        unix_millis(col("ts")).as("ms"), col("event_id"),
+        expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
+      .withColumn("k",
+        (col("ms") % 3600000L) * lit(8589934592L) + col("event_id"))
+
+  /** The associative bar fold over [[ticks]]: n_events, volume_cents,
+    * low, high, the bar's min/max tick keys, and open/close as
+    * `min_by`/`max_by` over the tick key. Carrying min_k/max_k is
+    * what lets coarser bars re-aggregate finer ones exactly. */
+  def barAggs: Seq[Column] = Seq(count(lit(1)).as("n_events"),
+    sum("cents").cast("long").as("volume_cents"),
+    min("cents").as("low"), max("cents").as("high"),
+    min("k").as("min_k"), max("k").as("max_k"),
+    min_by(col("cents"), col("k")).as("open"),
+    max_by(col("cents"), col("k")).as("close"))
 }

@@ -322,12 +322,6 @@ object Similarity {
       .select("id1", "id2", "cos")
   }
 
-  /** All-pairs k-NN self-join for a bounded corpus slice (exact):
-    * used as the verification oracle for the ANN paths. */
-  def knnSelfJoin(corpus: DataFrame, k: Int, idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame =
-    bruteForceTopK(corpus, corpus, k, idCol, vecCol)
-
   /** Deterministic IVF centroids: a lowest-id seed sample refined by
     * `iters` spherical-k-means (Lloyd) iterations — cosine
     * assignment against broadcast centroids (map-side argmax), then a

@@ -32,15 +32,6 @@ object TextSources {
       .option("mode", "PERMISSIVE")
       .csv(path)
 
-  /** CSV with header (the mapped/sorted category artifacts). */
-  def readCsv(spark: SparkSession, path: String, schema: StructType)
-    : DataFrame =
-    spark.read
-      .schema(schema)
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-
   /** Parse MySQL-dump `INSERT INTO … VALUES (…),(…);` statements —
     * the Wikipedia SQL dump shape the reference ingests
     * (create_inlets.py's page/category/pagelinks parsing) — into one

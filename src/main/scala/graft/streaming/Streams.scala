@@ -1,7 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.operators.Relational
+import graft.text.TextFunctions
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder,
+  SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HllRegisters
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
 
@@ -34,8 +38,7 @@ object Streams {
     * session struct per ACTIVE user, closed and emitted (Append mode)
     * once the watermark passes the session end + gap. This is the
     * form that ages state out by itself, vs [[sessionize]]'s
-    * hand-rolled flatMapGroupsWithState whose NoTimeout state tracks
-    * every key ever seen (that one exists to handle late-event
+    * NoTimeout fold state, which tracks every key ever seen (that one exists to handle late-event
     * merging the native operator doesn't expose). */
   def sessionWindowStats(events: DataFrame, gap: String = "30 minutes",
                          lateness: String = "30 seconds"): DataFrame =
@@ -123,21 +126,12 @@ object Streams {
   def streamingNearDupSignal(docs: DataFrame, lateness: String,
                              window: String = "1 minute",
                              shingleSize: Int = 3, numHashes: Int = 12,
-                             bands: Int = 4): DataFrame = {
-    val toks = graft.text.TextFunctions.tokens(col("text"))
-    val shingles = array_distinct(
-      graft.text.TextFunctions.wordShingles(col("text"), shingleSize))
-    val sig = graft.dedup.Dedup.minhashSignature(shingles, numHashes)
-    val bandKeys = graft.dedup.Dedup.lshBandKeys(sig, bands,
-      numHashes / bands)
-    docs
-      // shingle-less docs (fewer than shingleSize tokens) MUST drop
-      // here: their minhash is array_min(empty) = null per seed, so
-      // every short doc would share the md5('')-derived band keys and
-      // be silently reported as a duplicate of any other short doc.
-      // Mirrors shinglePostings' emit-nothing guard in the batch path.
-      .filter(size(toks) >= shingleSize)
-      .select(col("ts"), col("doc_id"), explode(bandKeys).as("band"))
+                             bands: Int = 4): DataFrame =
+    // explode the key expression itself: exploding a projected column
+    // lets the optimizer infer a non-empty filter on it and push that
+    // below the projection, evaluating the minhash up to three times
+    withBandKeys(docs, shingleSize, numHashes, bands)(keys =>
+        Seq(col("ts"), col("doc_id"), explode(keys).as("band")))
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark(Seq("band"))
       .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
@@ -145,6 +139,25 @@ object Streams {
       .agg(count(lit(1)).as("novel_bands"))
       .select(col("window.start").as("window_start"), col("doc_id"),
         col("novel_bands"))
+
+  /** The near-dup twins' shared prelude: `cols(keys)` per eligible
+    * doc, where `keys` is the doc's LSH band-key array computed
+    * row-locally (tokens → shingles → md5 minhash → bands).
+    * Shingle-less docs (fewer than shingleSize tokens) MUST drop
+    * here: their minhash is array_min(empty) = null per seed, so every
+    * short doc would share the md5('')-derived band keys and be
+    * silently reported as a duplicate of any other short doc. Mirrors
+    * shinglePostings' emit-nothing guard in the batch path. */
+  private def withBandKeys(docs: DataFrame, shingleSize: Int,
+                           numHashes: Int, bands: Int)(
+      cols: Column => Seq[Column]): DataFrame = {
+    val shingles = array_distinct(
+      TextFunctions.wordShingles(col("text"), shingleSize))
+    val sig = graft.dedup.Dedup.minhashSignature(shingles, numHashes)
+    docs
+      .filter(size(TextFunctions.tokens(col("text"))) >= shingleSize)
+      .select(cols(graft.dedup.Dedup.lshBandKeys(sig, bands,
+        numHashes / bands)): _*)
   }
 
   /** Streaming near-dup IMPACT: [[streamingNearDupSignal]]'s band
@@ -174,17 +187,10 @@ object Streams {
                              window: String = "1 minute",
                              shingleSize: Int = 3, numHashes: Int = 12,
                              bands: Int = 4): DataFrame = {
-    val toks = graft.text.TextFunctions.tokens(col("text"))
-    val shingles = array_distinct(
-      graft.text.TextFunctions.wordShingles(col("text"), shingleSize))
-    val sig = graft.dedup.Dedup.minhashSignature(shingles, numHashes)
-    val bandKeys = graft.dedup.Dedup.lshBandKeys(sig, bands,
-      numHashes / bands)
-    val eligible = docs
-      .filter(size(toks) >= shingleSize)
-      .select(col("ts"), col("doc_id"),
-        graft.text.TextFunctions.tokenCount(col("text")).as("ntok"),
-        bandKeys.as("bands"))
+    val eligible = withBandKeys(docs, shingleSize, numHashes, bands)(
+      keys => Seq(col("ts"), col("doc_id"),
+        TextFunctions.tokenCount(col("text")).as("ntok"),
+        keys.as("bands")))
     val bandRows = eligible
       .select(col("ts"), col("doc_id"), lit(0L).as("ntok"),
         explode(col("bands")).as("b"), lit(1L).as("is_band"))
@@ -252,6 +258,31 @@ object Streams {
       }
   }
 
+  /** The ordered per-key fold behind every stateful operator below
+    * that emits per row: group by `key`, sort each micro-batch's rows
+    * of a key by `order` (the operator's deterministic replay order),
+    * and fold them through `step`, which sees the key, the held state
+    * (None before the key's first row), the row and an `emit` sink,
+    * and returns the next state — None removes it. Append output and
+    * NoTimeout are fixed here, so keys never expire: a key's state
+    * lives until its step returns None, and a feed with unbounded key
+    * cardinality needs a timeout policy (or key TTL) upstream. */
+  private def orderedFold[In, K: Encoder, O: Ordering, S: Encoder,
+                          Out: Encoder](in: Dataset[In], key: In => K,
+                                        order: In => O)(
+      step: (K, Option[S], In, Out => Unit) => Option[S])
+    : Dataset[Out] =
+    in.groupByKey(key).flatMapGroupsWithState[S, Out](
+      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+      (k: K, rows: Iterator[In], state: GroupState[S]) =>
+        val out = Seq.newBuilder[Out]
+        val emit: Out => Unit = out += _
+        rows.toSeq.sortBy(order)
+          .foldLeft(state.getOption)((st, r) => step(k, st, r, emit))
+          .fold(state.remove())(state.update)
+        out.result().iterator
+    }
+
   case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
   case class SessionState(start: Long, lastTs: Long, n: Long,
                           sum: Double)
@@ -259,42 +290,33 @@ object Streams {
                         session_end: Long, n_events: Long,
                         sum_value: Double)
 
-  /** Gap-based sessionization with explicit state: a user's session
-    * closes after `gapMs` of silence (processing-time timeout drives
-    * emission). State is one small struct per active user — bounded,
-    * watermark-free by design for the test harness. */
+  /** Gap-based sessionization with explicit state: a user's open
+    * session closes, and is emitted, when a later event of the same
+    * user arrives more than `gapMs` after the session's last event.
+    * There is no timeout and no watermark, so a user's last session
+    * is never emitted, however long the user stays silent. State is
+    * one small struct per user ever seen. */
   def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000)
     : Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[SessionState], SessionOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[List[SessionState]]) =>
-          val sorted = rows.toSeq.sortBy(_.ts.getTime)
-          var sessions = state.getOption.getOrElse(Nil)
-          val closed = scala.collection.mutable.ListBuffer[SessionOut]()
-          sorted.foreach { e =>
-            val t = e.ts.getTime
-            sessions match {
-              // late (out-of-order) event: merge into the open session
-              // without regressing lastTs, extending start if needed
-              case cur :: rest if t <= cur.lastTs =>
-                sessions = cur.copy(start = math.min(cur.start, t),
-                  n = cur.n + 1, sum = cur.sum + e.value) :: rest
-              case cur :: rest if t - cur.lastTs <= gapMs =>
-                sessions = cur.copy(lastTs = t, n = cur.n + 1,
-                  sum = cur.sum + e.value) :: rest
-              case cur :: rest =>
-                closed += SessionOut(uid, cur.start, cur.lastTs, cur.n,
-                  cur.sum)
-                sessions = SessionState(t, t, 1, e.value) :: rest
-              case Nil =>
-                sessions = SessionState(t, t, 1, e.value) :: Nil
-            }
-          }
-          state.update(sessions)
-          closed.iterator
-      }
+    orderedFold[Event, Long, Long, List[SessionState], SessionOut](
+        events, _.user_id, _.ts.getTime) { (uid, held, e, emit) =>
+      val t = e.ts.getTime
+      Some(held.getOrElse(Nil) match {
+        // late (out-of-order) event: merge into the open session
+        // without regressing lastTs, extending start if needed
+        case cur :: rest if t <= cur.lastTs =>
+          cur.copy(start = math.min(cur.start, t), n = cur.n + 1,
+            sum = cur.sum + e.value) :: rest
+        case cur :: rest if t - cur.lastTs <= gapMs =>
+          cur.copy(lastTs = t, n = cur.n + 1, sum = cur.sum + e.value) ::
+            rest
+        case cur :: rest =>
+          emit(SessionOut(uid, cur.start, cur.lastTs, cur.n, cur.sum))
+          SessionState(t, t, 1, e.value) :: rest
+        case Nil => SessionState(t, t, 1, e.value) :: Nil
+      })
+    }
   }
 
   case class HllObs(group: String, j: Int, rho: Int)
@@ -317,7 +339,7 @@ object Streams {
   def streamingHll(obs: Dataset[HllObs]): Dataset[HllOut] = {
     import obs.sparkSession.implicits._
     obs.groupByKey(_.group)
-      .mapGroupsWithState[Array[Int], HllOut](
+      .mapGroupsWithState[Array[Int], (String, Long, Long)](
         GroupStateTimeout.NoTimeout()) {
         case (g, rows, state: GroupState[Array[Int]]) =>
           val regs = state.getOption.getOrElse(new Array[Int](64))
@@ -325,40 +347,23 @@ object Streams {
             if (o.rho > regs(o.j)) regs(o.j) = o.rho
           }
           state.update(regs)
-          var s = 0L
-          var empty = 0L
-          var i = 0
-          while (i < 64) {
-            if (regs(i) == 0) empty += 1
-            s += 1L << (40 - math.min(regs(i), 40))
-            i += 1
-          }
-          val raw = (709L * 4096L * 1099511627776L) / (1000L * s)
-          val est =
-            if (empty > 0 && raw < 160)
-              math.floor(64.0 * math.log(64.0 / empty)).toLong
-            else raw
-          HllOut(g, s, empty, est)
+          (g, regs.map(m => 1L << (40 - math.min(m, 40))).sum,
+            regs.count(_ == 0).toLong)
       }
+      .toDF("group", "s_scaled", "v_empty")
+      .withColumn("n_approx", HllRegisters.estimate)
+      .as[HllOut]
   }
 
-  /** Column derivation for [[streamingHll]] — IDENTICAL md5 register
-    * index and leading-zero rank as batch q42, so the two paths build
-    * the same registers from the same values. */
+  /** Column derivation for [[streamingHll]] — the shared
+    * [[HllRegisters.register]], so the stream builds the same
+    * registers from the same values as batch q42. */
   def hllObservations(df: DataFrame, groupCol: String,
                       valueCol: String): Dataset[HllObs] = {
     import df.sparkSession.implicits._
-    val h = md5(col(valueCol).cast("string"))
-    val wh = substring(h, 3, 13)
-    val lz = length(regexp_extract(wh, "^(0*)", 1))
-    val nib = substring(wh, lz + lit(1), lit(1))
-    val blen = when(nib === "1", 1).when(nib.isin("2", "3"), 2)
-      .when(nib.isin("4", "5", "6", "7"), 3).otherwise(4)
-    val rho = when(lz === 13, lit(53))
-      .otherwise(lz * 4 + (lit(4) - blen) + 1)
+    val (j, rho) = HllRegisters.register(col(valueCol))
     df.select(col(groupCol).cast("string").as("group"),
-      (conv(substring(h, 1, 2), 16, 10).cast("int") % 64).as("j"),
-      least(rho, lit(40)).cast("int").as("rho"))
+      j.cast("int").as("j"), rho.cast("int").as("rho"))
       .as[HllObs]
   }
 
@@ -382,30 +387,22 @@ object Streams {
     * FULL window's stats; the online form judges against the trailing
     * history at arrival — the honest streaming semantics (no
     * lookahead). The spec pins the online form against a driver-side
-    * replay, not against e12. Keys never expire (NoTimeout) — on an
-    * unbounded-cardinality feed add a timeout policy upstream. */
+    * replay, not against e12. */
   def streamingOutliers(events: Dataset[CentEvent])
     : Dataset[OutlierOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[MomentState, OutlierOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[MomentState]) =>
-          var st = state.getOption.getOrElse(MomentState(0L, 0L, 0L))
-          val out = Seq.newBuilder[OutlierOut]
-          rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))
-            .foreach { r =>
-              st = MomentState(st.n + 1, st.s + r.cents,
-                st.q + r.cents * r.cents)
-              if (st.n >= 20) {
-                val num = r.cents * st.n - st.s
-                if (num * num > 9L * (st.n * st.q - st.s * st.s))
-                  out += OutlierOut(uid, r.event_id, r.cents, st.n)
-              }
-            }
-          state.update(st)
-          out.result().iterator
-      }
+    orderedFold[CentEvent, Long, (Long, Long), MomentState, OutlierOut](
+        events, _.user_id, r => (r.ts.getTime, r.event_id)) {
+      (uid, held, r, emit) =>
+        val h = held.getOrElse(MomentState(0L, 0L, 0L))
+        val st = MomentState(h.n + 1, h.s + r.cents, h.q + r.cents * r.cents)
+        if (st.n >= 20) {
+          val num = r.cents * st.n - st.s
+          if (num * num > 9L * (st.n * st.q - st.s * st.s))
+            emit(OutlierOut(uid, r.event_id, r.cents, st.n))
+        }
+        Some(st)
+    }
   }
 
   case class ArrEvent(user_id: Long, event_id: Long,
@@ -431,29 +428,19 @@ object Streams {
     * the monitor itself (arrival is jitter-bounded-monotone, so its
     * own watermark is safe). The watermark attaches AFTER the object
     * boundary, on the re-emitted arrival timestamp (event-time
-    * metadata does not survive object-level transforms). Keys never
-    * expire (NoTimeout) — unbounded-cardinality feeds add a timeout
-    * policy upstream, as with [[streamingOutliers]]. */
+    * metadata does not survive object-level transforms). */
   def streamingLateness(events: Dataset[ArrEvent],
                         windowLen: String = "1 day",
                         lateness: String = "1 hour"): DataFrame = {
     import events.sparkSession.implicits._
-    val perEvent = events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[MaxMsState, LateOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[MaxMsState]) =>
-          var mx = state.getOption.map(_.maxMs).getOrElse(Long.MinValue)
-          val out = Seq.newBuilder[LateOut]
-          rows.toSeq.sortBy(r => (r.arrival_ms, r.event_id))
-            .foreach { r =>
-              val ms = r.ts.getTime
-              val late = if (mx == Long.MinValue) 0L
-                else math.max(mx - ms, 0L)
-              out += LateOut(uid, r.event_id, r.arrival_ms, late)
-              if (ms > mx) mx = ms
-            }
-          state.update(MaxMsState(mx))
-          out.result().iterator
+    val perEvent =
+      orderedFold[ArrEvent, Long, (Long, Long), MaxMsState, LateOut](
+          events, _.user_id, r => (r.arrival_ms, r.event_id)) {
+        (uid, held, r, emit) =>
+          val ms = r.ts.getTime
+          emit(LateOut(uid, r.event_id, r.arrival_ms,
+            held.fold(0L)(h => math.max(h.maxMs - ms, 0L))))
+          Some(MaxMsState(held.fold(ms)(h => math.max(h.maxMs, ms))))
       }
     val delays = Seq(0L, 600000L, 3600000L, 10800000L, 21600000L)
     val aggs = count(lit(1)).cast("long").as("n_events") +:
@@ -489,33 +476,32 @@ object Streams {
     * The running mean is double arithmetic in a DETERMINISTIC fold
     * order (per-key sequential), so outputs are replay-stable; the
     * emitted score rounds to 4 dp. No post-alarm reset (each
-    * super-threshold event emits — downstream chooses a cooldown);
-    * keys never expire (NoTimeout) — on an unbounded-cardinality
-    * feed add a timeout policy upstream, as with
-    * [[streamingOutliers]]. */
+    * super-threshold event emits — downstream chooses a cooldown). */
   def streamingDrift(events: Dataset[CentEvent], delta: Double = 50.0,
                      lambda: Double = 5000.0): Dataset[DriftOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[PhState, DriftOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[PhState]) =>
-          var st = state.getOption.getOrElse(PhState(0L, 0L, 0.0, 0.0))
-          val out = Seq.newBuilder[DriftOut]
-          rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))
-            .foreach { r =>
-              val n = st.n + 1
-              val s = st.sum + r.cents
-              val m = st.m + (r.cents - s.toDouble / n - delta)
-              val mMin = math.min(st.mMin, m)
-              if (m - mMin > lambda)
-                out += DriftOut(uid, r.event_id, n,
-                  math.rint((m - mMin) * 1e4) / 1e4)
-              st = PhState(n, s, m, mMin)
-            }
-          state.update(st)
-          out.result().iterator
-      }
+    orderedFold[CentEvent, Long, (Long, Long), PhState, DriftOut](
+        events, _.user_id, r => (r.ts.getTime, r.event_id)) {
+      (uid, held, r, emit) =>
+        pageHinkley(held, r.cents, delta, lambda)((n, ph) =>
+          emit(DriftOut(uid, r.event_id, n, ph)))
+    }
+  }
+
+  /** One Page–Hinkley step of [[streamingDrift]] and
+    * [[streamingDriftByType]]: folds `cents` into the held state and
+    * calls `alarm(n_seen, score)` when m − min m exceeds `lambda`,
+    * the score rounded to 4 dp. */
+  private def pageHinkley(held: Option[PhState], cents: Long,
+                          delta: Double, lambda: Double)(
+      alarm: (Long, Double) => Unit): Option[PhState] = {
+    val st = held.getOrElse(PhState(0L, 0L, 0.0, 0.0))
+    val n = st.n + 1
+    val s = st.sum + cents
+    val m = st.m + (cents - s.toDouble / n - delta)
+    val mMin = math.min(st.mMin, m)
+    if (m - mMin > lambda) alarm(n, math.rint((m - mMin) * 1e4) / 1e4)
+    Some(PhState(n, s, m, mMin))
   }
 
   case class TypedCentEvent(user_id: Long, event_id: Long,
@@ -532,36 +518,22 @@ object Streams {
     * resolved from a PLAN-CONSTANT map (closure-captured; type
     * cardinality is bounded, the map ships once per task, no join).
     * Fold semantics per key are IDENTICAL to [[streamingDrift]]
-    * (same (ts, event_id) order, same 4-dp rounding, no post-alarm
-    * reset, NoTimeout caveat). */
+    * (same (ts, event_id) order, same [[pageHinkley]] step). */
   def streamingDriftByType(events: Dataset[TypedCentEvent],
                            params: Map[String, (Double, Double)],
                            defaultDelta: Double = 50.0,
                            defaultLambda: Double = 5000.0)
     : Dataset[TypedDriftOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[PhState, TypedDriftOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((uid, typ), rows, state: GroupState[PhState]) =>
-          val (delta, lambda) =
-            params.getOrElse(typ, (defaultDelta, defaultLambda))
-          var st = state.getOption.getOrElse(PhState(0L, 0L, 0.0, 0.0))
-          val out = Seq.newBuilder[TypedDriftOut]
-          rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))
-            .foreach { r =>
-              val n = st.n + 1
-              val s = st.sum + r.cents
-              val m = st.m + (r.cents - s.toDouble / n - delta)
-              val mMin = math.min(st.mMin, m)
-              if (m - mMin > lambda)
-                out += TypedDriftOut(uid, typ, r.event_id, n,
-                  math.rint((m - mMin) * 1e4) / 1e4)
-              st = PhState(n, s, m, mMin)
-            }
-          state.update(st)
-          out.result().iterator
-      }
+    orderedFold[TypedCentEvent, (Long, String), (Long, Long), PhState,
+        TypedDriftOut](events, e => (e.user_id, e.event_type),
+        r => (r.ts.getTime, r.event_id)) {
+      case ((uid, typ), held, r, emit) =>
+        val (delta, lambda) =
+          params.getOrElse(typ, (defaultDelta, defaultLambda))
+        pageHinkley(held, r.cents, delta, lambda)((n, ph) =>
+          emit(TypedDriftOut(uid, typ, r.event_id, n, ph)))
+    }
   }
 
   case class DebounceState(lastMs: Long)
@@ -576,28 +548,20 @@ object Streams {
     * accounting; spec-pinned). State is ONE long per key — the last
     * event's timestamp — regardless of history length. Emits every
     * event with its kept/suppressed flag; downstream filters kept
-    * events or aggregates burst stats in Update mode. Keys never
-    * expire (NoTimeout) — same caveat as [[streamingOutliers]]. */
+    * events or aggregates burst stats in Update mode. */
   def streamingDebounce(events: Dataset[TypedEvent],
                         cooldownMs: Long = 3600000L)
     : Dataset[DebounceOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[DebounceState, DebounceOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case ((uid, typ), rows, state: GroupState[DebounceState]) =>
-          var last = state.getOption.map(_.lastMs)
-          val out = Seq.newBuilder[DebounceOut]
-          rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))
-            .foreach { r =>
-              val ms = r.ts.getTime
-              val kept = last.forall(l => ms - l >= cooldownMs)
-              out += DebounceOut(uid, typ, r.event_id, kept)
-              last = Some(ms)
-            }
-          last.foreach(l => state.update(DebounceState(l)))
-          out.result().iterator
-      }
+    orderedFold[TypedEvent, (Long, String), (Long, Long), DebounceState,
+        DebounceOut](events, e => (e.user_id, e.event_type),
+        r => (r.ts.getTime, r.event_id)) {
+      case ((uid, typ), last, r, emit) =>
+        val ms = r.ts.getTime
+        emit(DebounceOut(uid, typ, r.event_id,
+          last.forall(l => ms - l.lastMs >= cooldownMs)))
+        Some(DebounceState(ms))
+    }
   }
 
   case class SnapOp(seq: Long, user_id: Long, op: String,
@@ -624,32 +588,23 @@ object Streams {
   def streamingSnapshotApply(ops: Dataset[SnapOp])
     : Dataset[SnapOut] = {
     import ops.sparkSession.implicits._
-    ops.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SnapState, SnapOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[SnapState]) =>
-          var cur = state.getOption.orNull
-          val out = Seq.newBuilder[SnapOut]
-          rows.toSeq.sortBy(_.seq).foreach { o =>
-            o.op match {
-              case "delete" =>
-                cur = null
-                out += SnapOut(uid, o.seq, o.op, 0L, 0L,
-                  live = false)
-              case op =>
-                // insert sets both fields; update coalesces onto
-                // the held row — None keeps the current value
-                val base = if (cur == null) SnapState(0L, 0L) else cur
-                cur = SnapState(
-                  o.n_new.getOrElse(base.n_events),
-                  o.s_new.getOrElse(base.sum_cents))
-                out += SnapOut(uid, o.seq, op, cur.n_events,
-                  cur.sum_cents, live = true)
-            }
-          }
-          if (cur == null) state.remove() else state.update(cur)
-          out.result().iterator
+    orderedFold[SnapOp, Long, Long, SnapState, SnapOut](
+        ops, _.user_id, _.seq) { (uid, cur, o, emit) =>
+      o.op match {
+        case "delete" =>
+          emit(SnapOut(uid, o.seq, o.op, 0L, 0L, live = false))
+          None
+        case op =>
+          // insert sets both fields; update coalesces onto the held
+          // row — None keeps the current value
+          val base = cur.getOrElse(SnapState(0L, 0L))
+          val next = SnapState(o.n_new.getOrElse(base.n_events),
+            o.s_new.getOrElse(base.sum_cents))
+          emit(SnapOut(uid, o.seq, op, next.n_events, next.sum_cents,
+            live = true))
+          Some(next)
       }
+    }
   }
 
   /** STREAMING CDC APPLY — the live half of the q14/q67/q68 snapshot
@@ -727,9 +682,7 @@ object Streams {
     * window, so replaying a log through this operator yields
     * EXACTLY the batch query's transition multiset (spec-pinned);
     * a downstream `groupBy(prev, next).count()` in Update mode
-    * maintains the live transition matrix. Keys never expire
-    * (NoTimeout) — on an unbounded-cardinality feed add a timeout
-    * policy upstream, as with [[streamingOutliers]].
+    * maintains the live transition matrix.
     *
     * Late-data caveat (declared): an event older than its user's
     * stored last event still transitions FROM that stored state —
@@ -739,21 +692,12 @@ object Streams {
   def streamingTransitions(events: Dataset[TypedEvent])
     : Dataset[TransOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, TransOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state: GroupState[LastEvent]) =>
-          var last = state.getOption.orNull
-          val out = Seq.newBuilder[TransOut]
-          rows.toSeq.sortBy(r => (r.ts.getTime, r.event_id))
-            .foreach { r =>
-              if (last != null)
-                out += TransOut(uid, last.event_type, r.event_type)
-              last = LastEvent(r.ts.getTime, r.event_id, r.event_type)
-            }
-          state.update(last)
-          out.result().iterator
-      }
+    orderedFold[TypedEvent, Long, (Long, Long), LastEvent, TransOut](
+        events, _.user_id, r => (r.ts.getTime, r.event_id)) {
+      (uid, last, r, emit) =>
+        last.foreach(l => emit(TransOut(uid, l.event_type, r.event_type)))
+        Some(LastEvent(r.ts.getTime, r.event_id, r.event_type))
+    }
   }
 
   /** Streaming MINUTE BARS — batch e17/e18's associative bar algebra
@@ -774,21 +718,10 @@ object Streams {
     * min_k, max_k, open, close). */
   def streamingMinuteBars(events: DataFrame,
                           lateness: String = "1 minute"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .select(col("ts"), col("event_type"),
-        unix_millis(col("ts")).as("ms"), col("event_id"),
-        expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
-      .withColumn("k",
-        (col("ms") % 3600000L) * lit(8589934592L) + col("event_id"))
+    Relational.ticks(events.withWatermark("ts", lateness))
       .groupBy(org.apache.spark.sql.functions.window(col("ts"),
         "1 minute"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum("cents").cast("long").as("volume_cents"),
-        min("cents").as("low"), max("cents").as("high"),
-        min("k").as("min_k"), max("k").as("max_k"),
-        min_by(col("cents"), col("k")).as("open"),
-        max_by(col("cents"), col("k")).as("close"))
+      .agg(Relational.barAggs.head, Relational.barAggs.tail: _*)
       .select(col("event_type"),
         floor(unix_millis(col("window.start")) / 60000L).as("minute"),
         col("n_events"), col("volume_cents"), col("low"), col("high"),
@@ -814,9 +747,9 @@ object Streams {
     val wArr = array((0 until 64).map(b =>
       lit(weights.getOrElse(b.toLong, 0L))): _*)
     aggregate(
-      transform(graft.text.TextFunctions.tokens(text),
+      transform(TextFunctions.tokens(text),
         t => element_at(wArr,
-          (graft.text.TextFunctions.hashBucket(t, 64) + lit(1))
+          (TextFunctions.hashBucket(t, 64) + lit(1))
             .cast("int"))),
       lit(priorMicro), (acc, x) => acc + x)
   }
@@ -852,21 +785,12 @@ object Streams {
                             cmWidth: Int = 16): DataFrame = {
     val gated = docs
       .filter(nbScoreCol(col("text"), weights, priorMicro) >= 0L)
-    val drift = gated
-      .select(col("source"),
-        explode(graft.text.TextFunctions.tokens(col("text")))
-          .as("tok"))
+    val drift = TextFunctions.sourceCells(gated, driftWidth)
       .select(lit("drift").as("kind"), col("source").as("k1"),
-        graft.text.TextFunctions.hashBucket(col("tok"), driftWidth)
-          .cast("string").as("k2"))
-    val cm = gated
-      .select(explode(graft.text.TextFunctions.tokens(
-        lower(col("text")))).as("tok"))
-      .select(col("tok"),
-        explode(array((0 until cmDepth).map(lit(_)): _*)).as("r"))
+        col("b").cast("string").as("k2"))
+    val cm = TextFunctions.countMinCells(gated, cmDepth, cmWidth)
       .select(lit("cm").as("kind"), col("r").cast("string").as("k1"),
-        graft.text.TextFunctions.countMinCell(col("r"), col("tok"),
-          cmWidth).cast("string").as("k2"))
+        col("cell").cast("string").as("k2"))
     drift.unionByName(cm).groupBy("kind", "k1", "k2")
       .agg(count(lit(1)).as("c"))
   }
@@ -874,7 +798,7 @@ object Streams {
   /** STREAMING COUNT-MIN — batch t12's pure-sketch pipeline as an
     * incremental Update-mode aggregate over a document feed: tokens
     * → (r, cell) running counts, identical cell derivation
-    * ([[graft.text.TextFunctions.countMinCell]], 4 rows × 16
+    * ([[TextFunctions.countMinCell]], 4 rows × 16
     * counters). The state store IS the sketch — at most depth×width
     * = 64 keys TOTAL regardless of feed size, and partial
     * aggregation collapses each micro-batch map-side to ≤64 cell
@@ -887,14 +811,7 @@ object Streams {
     * coordinates, not event time, and its state never grows. */
   def streamingCountMin(docs: DataFrame, depth: Int = 4,
                         width: Int = 16): DataFrame =
-    docs
-      .select(explode(graft.text.TextFunctions.tokens(
-        lower(col("text")))).as("tok"))
-      .select(col("tok"),
-        explode(array((0 until depth).map(lit(_)): _*)).as("r"))
-      .select(col("r"),
-        graft.text.TextFunctions.countMinCell(col("r"), col("tok"),
-          width).as("cell"))
+    TextFunctions.countMinCells(docs, depth, width)
       .groupBy("r", "cell").agg(count(lit(1)).as("cnt"))
 
   /** STREAMING SOURCE-DRIFT CELLS — the live half of batch t26's
@@ -909,17 +826,11 @@ object Streams {
     * table batch t26 derives its marginals from (spec-pinned); the
     * KL itself is 64 rows of arithmetic per source, read off the
     * live table whenever the monitor fires. Bucket derivation is
-    * shared ([[graft.text.TextFunctions.hashBucket]]) so the DuckDB
+    * shared ([[TextFunctions.hashBucket]]) so the DuckDB
     * oracle keeps mirroring the batch twin. */
   def streamingSourceDrift(docs: DataFrame,
                            width: Int = 64): DataFrame =
-    docs
-      .select(col("source"),
-        explode(graft.text.TextFunctions.tokens(col("text")))
-          .as("tok"))
-      .select(col("source"),
-        graft.text.TextFunctions.hashBucket(col("tok"), width)
-          .as("b"))
+    TextFunctions.sourceCells(docs, width)
       .groupBy("source", "b").agg(count(lit(1)).as("c"))
 
   /** STREAMING FRAME ENERGY — batch m04's media-ingest twin on a
@@ -956,13 +867,7 @@ object Streams {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("energy",
           org.apache.spark.sql.types.LongType))))
-    def isqrt(y: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-      val r0 = floor(sqrt(y.cast("double"))).cast("long")
-      r0 + when((r0 + 1) * (r0 + 1) <= y, 1L).otherwise(0L) -
-        when(r0 * r0 > y, 1L).otherwise(0L)
-    }
-    media
+    val frames = media
       .select(col("ts"), col("media_id").cast("long"), col("payload"))
       .mapPartitions { rows =>
         rows.flatMap { r =>
@@ -979,26 +884,8 @@ object Streams {
       // survive an object-level mapPartitions, so tag the re-emitted
       // ts column (each media's frames share one event time)
       .withWatermark("ts", lateness)
-      // per-FRAME Long product is safe (≤64 units/frame bounds
-      // 1e6·Σs² at ~6.9e16); the MEDIA total is NOT — scale it in
-      // DECIMAL(38,0) exactly like batch m04 so long media can't
-      // silently wrap
-      .withColumn("frame_rms_milli",
-        isqrt(expr("(1000000 * energy) DIV n_units")))
-      .groupBy(window(col("ts"), "1 minute"), col("media_id"),
-        col("mime"))
-      .agg(count(lit(1)).as("n_frames"),
-        sum(when(col("frame_rms_milli") < 100000L, 1L)
-          .otherwise(0L)).as("n_silent"),
-        max("energy").as("max_energy"),
-        sum("energy").as("total_energy"),
-        sum("n_units").as("total_units"))
-      .withColumn("rms_milli",
-        isqrt(expr(
-          "(CAST(total_energy AS DECIMAL(38,0)) * 1000000)" +
-            " DIV total_units")))
-      .select("media_id", "mime", "n_frames", "n_silent",
-        "max_energy", "total_energy", "total_units", "rms_milli")
+    graft.multimodal.Multimodal.frameEnergy(frames,
+      window(col("ts"), "1 minute"))
   }
 
   /** STREAMING TARGET-LM SCORING — the serve half of batch t27 (the

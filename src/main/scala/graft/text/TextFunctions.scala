@@ -31,6 +31,24 @@ object TextFunctions {
     conv(substring(md5(concat(r.cast("string"), lit(":"), tok)),
       1, 8), 16, 10).cast("long") % width
 
+  /** Count-min cell rows `(r, cell)` of a `text` feed, before any
+    * aggregation: each lowercased token hits one [[countMinCell]] in
+    * each row r < depth. Batch t12 and the streaming count-min twins
+    * count these rows. */
+  def countMinCells(docs: DataFrame, depth: Int, width: Int): DataFrame =
+    docs.select(explode(tokens(lower(col("text")))).as("tok"))
+      .select(col("tok"),
+        explode(array((0 until depth).map(lit(_)): _*)).as("r"))
+      .select(col("r"), countMinCell(col("r"), col("tok"), width)
+        .as("cell"))
+
+  /** Source-drift cell rows `(source, b)` of a `(source, text)` feed,
+    * before any aggregation: each token's [[hashBucket]]. Batch t26
+    * and the streaming drift twins count these rows. */
+  def sourceCells(docs: DataFrame, width: Int): DataFrame =
+    docs.select(col("source"), explode(tokens(col("text"))).as("tok"))
+      .select(col("source"), hashBucket(col("tok"), width).as("b"))
+
   /** Feature-hash bucket for a token (hashing-trick classifiers):
     * md5 first 8 hex digits mod width, mirrored by DuckDB
     * `('0x' || substr(md5(tok), 1, 8))::BIGINT % width`. */
@@ -68,16 +86,6 @@ object TextFunctions {
         aggregate(toks, lit(0L), (acc, t) => acc + length(t)) /
           size(toks).cast("double"), 4))
   }
-
-  /** Composite quality score in [0,1]: long-enough, low punctuation,
-    * sane stopword density. Deliberately simple + deterministic (the
-    * point is the columnar shape, mirrors quality filters in C4/Gopher
-    * style corpora pipelines). */
-  def qualityScore(text: Column): Column =
-    round(
-      least(tokenCount(text) / lit(100.0), lit(1.0)) * lit(0.5)
-        + (lit(1.0) - least(punctRatio(text) * 5, lit(1.0))) * lit(0.25)
-        + least(stopwordRatio(text) * 4, lit(1.0)) * lit(0.25), 4)
 
   /** Stopword-profile language ID over a fixed tiny lexicon —
     * the classic n-gram/stopword heuristic. Returns the language with

@@ -307,19 +307,9 @@ object StreamBench {
             (0 until 8).map(i => concat(lit("w"),
               pmod(col("id") * (i * 2 + 1), lit(200L)))): _*)
             .as("text"))
-      val K = 4096
-      val tc = graft.Queries.charTris(corpus)
-        .groupBy("tri").agg(count(lit(1)).as("tn"))
-      val bc = tc.groupBy(shiftrightunsigned(col("tri"), 21).as("bi"))
-        .agg(sum("tn").as("bn"))
-      val triLp = tc.join(bc,
-          shiftrightunsigned(col("tri"), 21) === col("bi"))
-        .select(col("tri"),
-          round(log((col("tn") + 1) / (col("bn") + K)) * 1e6, 0)
-            .cast("long").as("lp_seen")).cache()
-      val biLp = bc.select(col("bi"),
-        round(log(lit(1.0) / (col("bn") + K)) * 1e6, 0)
-          .cast("long").as("lp_bi")).cache()
+      val (tri, bi, lpFloor) = graft.Queries.targetLmModel(corpus)
+      val triLp = tri.cache()
+      val biLp = bi.cache()
       triLp.count(); biLp.count()
       drive("target_lm",
         Streams.streamingTargetLm(syntheticEvents(advanceMs = 60000L)
@@ -328,9 +318,7 @@ object StreamBench {
               (0 until 8).map(i => concat(lit("w"),
                 pmod(col("event_id") * (i * 2 + 1), lit(200L)))): _*)
               .as("text")),
-          triLp, biLp,
-          round(log(lit(1.0) / K) * 1e6, 0).cast("long"),
-          lateness = "30 seconds"), "append")
+          triLp, biLp, lpFloor, lateness = "30 seconds"), "append")
     }
     // per-source drift cells: state = t26's |sources|x64 table (here
     // 20x64), batches collapse map-side to bounded cell deltas

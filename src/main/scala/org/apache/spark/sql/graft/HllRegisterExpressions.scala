@@ -19,7 +19,48 @@ import org.apache.spark.sql.types._
   * physical row layout changes (oracle parity unaffected).
   */
 object HllRegisters {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions._
+
   val R = 64
+
+  /** q42's engine-portable register for one value, as BIGINT
+    * `(j, rho)`: j = first md5 byte mod 64, rho = leading-zero bits
+    * of the next 13 hex digits + 1 (regexp + a nibble CASE — pure
+    * string/integer ops, no log2 float boundary), capped at 40. The
+    * one derivation behind q42, q57, HyperBall and the streaming
+    * sketch; their oracles mirror it digit for digit. */
+  def register(value: Column): (Column, Column) = {
+    val h = md5(value.cast("string"))
+    val wh = substring(h, 3, 13)
+    val lz = length(regexp_extract(wh, "^(0*)", 1))
+    val nib = substring(wh, lz + lit(1), lit(1))
+    val blen = when(nib === "1", 1).when(nib.isin("2", "3"), 2)
+      .when(nib.isin("4", "5", "6", "7"), 3).otherwise(4)
+    val rho = when(lz === 13, lit(53))
+      .otherwise(lz * 4 + (lit(4) - blen) + 1)
+    (conv(substring(h, 1, 2), 16, 10).cast("long") % R,
+      least(rho, lit(40)).cast("long"))
+  }
+
+  /** `s_scaled` and `v_empty` aggregates over a SPARSE register set
+    * (one row per non-empty register, max rank in column `m`):
+    * Σ 2^(40−m) plus 2^40 per empty register, and the empty count. */
+  def sparseSums(m: String): Seq[Column] = Seq(
+    (sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST(40 - $m AS INT))"))
+      + (lit(R) - count(lit(1))) * lit(1L << 40)).as("s_scaled"),
+    (lit(R) - count(lit(1))).cast("long").as("v_empty"))
+
+  /** The estimate over columns `s_scaled` and `v_empty`, in exact
+    * integer space: raw = (709·4096·2^40) DIV (1000·S), and below
+    * 2.5m the linear-counting correction floor(m·ln(m/V)) — floor of
+    * an irrational, so no decimal tie boundary exists (V = 64 ⇒ 0). */
+  def estimate: Column = {
+    val raw = expr("(709 * 4096 * 1099511627776) DIV (1000 * s_scaled)")
+    when(col("v_empty") > 0 && raw < 160,
+      floor(lit(64.0) * log(lit(64.0) / col("v_empty"))).cast("long"))
+      .otherwise(raw)
+  }
 }
 
 /** `hll_init(j, rho)` → 64-byte vector with register j = rho, rest

@@ -444,6 +444,17 @@ class StreamsSpec extends SparkSpec {
       // small-range correction keeps tiny groups honest
       assert(math.abs(last("b")._2 - 15L) <= 6L)
       assert(math.abs(last("a")._2 - 80L) <= 30L)
+      // and the estimate IS the shared estimator over the batch
+      // registers, exactly ("b" takes the small-range branch)
+      val sums = org.apache.spark.sql.graft.HllRegisters.sparseSums("m")
+      val batchEst = Streams.hllObservations(
+          (usersA ++ usersB).toDF("g", "v"), "g", "v")
+        .groupBy("group", "j")
+        .agg(org.apache.spark.sql.functions.max("rho").as("m"))
+        .groupBy("group").agg(sums.head, sums.tail: _*)
+        .select(col("group"), org.apache.spark.sql.graft.HllRegisters.estimate)
+        .as[(String, Long)].collect().toMap
+      assert(last("a")._2 == batchEst("a") && last("b")._2 == batchEst("b"))
     } finally q.stop()
   }
 
@@ -1020,7 +1031,9 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._
     val dir = sf("sf0.001")
-    val (triLp, biLp, lpFloor) = Queries.targetLmModel(spark, dir)
+    val (triLp, biLp, lpFloor) = Queries.targetLmModel(
+      graft.sources.Tables(spark, dir, "documents")
+        .filter(col("source") === "src0").select(col("doc_id"), col("text")))
     // the static model tables must be concrete relations for the
     // stream-static join (and we don't want the stream re-running
     // the trainer per micro-batch) — materialize them once
