@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. Results are materialized through the noop sink
@@ -27,20 +26,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the default ~100-entry codegen class LRU self-evicts at 126
-      // queries (the scaladoc's pass-warm trap and the round-5
-      // verdict's fixed-cost-drift suspect): a warmed query's
-      // classes can be gone by its timed run once enough other
-      // queries compiled in between. Static conf — must be set
-      // before the first SQLConf read in the JVM.
-      .config("spark.sql.codegen.cache.maxEntries", 2000)
-      .getOrCreate()
+    val spark = SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

@@ -4913,7 +4913,7 @@ object Queries {
         struct(lit("application/octet-stream").as("mime"),
           length(col("payload")).cast("long").as("n_bytes"),
           lit("").as("sha")).as("meta"))
-    Multimodal.extractFeatures(s, media)
+    Multimodal.extractFeatures(media)
       .select(col("media_id"), col("n_bytes"),
         array_join(transform(col("features"),
           f => f.cast("long").cast("string")), ",")
@@ -5105,7 +5105,7 @@ object Queries {
           .when(pmod(col("doc_id"), lit(4)) === 3, unhex(g711WavHex))
           .otherwise(col("text").cast("binary")))
       .select(col("doc_id").as("media_id"), col("payload"))
-    Multimodal.frameEnergy(Multimodal.extractFrameFeatures(s, media))
+    Multimodal.frameEnergy(Multimodal.extractFrameFeatures(media))
   }
 
   /** Oracle replay from the planted formulas: the PCM arm recomputes
@@ -5324,7 +5324,7 @@ object Queries {
         struct(lit("application/octet-stream").as("mime"),
           length(col("payload")).cast("long").as("n_bytes"),
           lit("").as("sha")).as("meta"))
-    val f = Multimodal.extractFeatures(s, media)
+    val f = Multimodal.extractFeatures(media)
     def feat(i: Int) = element_at(col("features"), i).cast("long")
     f.select(col("media_id"),
         when(feat(1) === 1L, "image/bmp")
@@ -5476,7 +5476,7 @@ object Queries {
       chunksHex)
     val media = base.select(col("doc_id").as("media_id"),
       unhex(aviHex).as("payload"))
-    Multimodal.extractMjpegFrames(s, media)
+    Multimodal.extractMjpegFrames(media)
   }
 
   /** Oracle recomputes the PLANTED per-frame container metadata from
@@ -5575,7 +5575,7 @@ object Queries {
       pixHex)
     val media = base
       .select(col("doc_id").as("media_id"), unhex(bmpHex).as("payload"))
-    Multimodal.extractDHashes(s, media)
+    Multimodal.extractDHashes(media)
       .select(col("media_id"), col("dhash"))
   }
 

@@ -12,4 +12,24 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracles
+
+  /** The local session every `main` here and in `graft.tools` runs
+    * on: `local[cpus]` with shuffle partitions = cpus, where cpus is
+    * SPARK_GRAFT_CPUS or, when unset, the processor count the JVM
+    * sees; UTC session time; no UI. The codegen class cache is
+    * raised from its ~100-entry default, which self-evicts once 126
+    * queries have compiled: a warmed query's classes could be gone
+    * by its timed run. It is a static conf, so it must be set before
+    * the first SQLConf read in the JVM. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", 2000)
+      .getOrCreate()
+  }
 }

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,13 +12,14 @@ import org.apache.spark.sql.types._
   * content across all four containers: [[HeaderCodec]] parses the
   * public byte layouts of BMP, PNG, GIF and RIFF/WAVE (dimensions /
   * bit depth / sample rate straight from the file-format specs), and
-  * the content arms decode actual data with nothing beyond the JDK —
-  * 24-bpp BI_RGB BMP pixel rows (per-channel sums, row padding
-  * excluded); every 8-bit PNG color type (grey / RGB / palette /
-  * grey+alpha / RGBA) through java.util.zip inflate + all-five
-  * filter reversal; GIF first frames (interlace included — a row
-  * permutation can't change a sum) through a spec-implemented LZW
-  * decoder + color-table resolution (local table wins per spec);
+  * the content arms decode actual data with nothing beyond the JDK.
+  * Each image format has ONE pixel decode, read by two sinks
+  * (per-channel sums; gray1000 grids for the perceptual hash):
+  * 24-bpp BI_RGB BMP pixel rows (row padding excluded); every PNG
+  * bit depth × color type × interlace through java.util.zip
+  * inflate + all-five filter reversal; GIF first frames
+  * (de-interlaced) through a spec-implemented LZW decoder +
+  * color-table resolution (local table wins per spec);
   * JPEG through the JDK's OWN javax.imageio baseline decoder behind
   * the same strict clean-room marker-walk gate; MJPEG-in-AVI frames
   * through a clean-room RIFF 'movi' walk over the same JPEG decode;
@@ -91,18 +92,21 @@ object Multimodal {
           le16(p, 28)))
       else None
 
+    /** PNG colour type → channels per pixel (0 grey=1, 2 rgb=3,
+      * 3 palette=1, 4 grey+alpha=2, 6 rgba=4); a type missing here is
+      * not a PNG colour type. */
+    private val pngChannels = Map(0 -> 1, 2 -> 3, 3 -> 1, 4 -> 2, 6 -> 4)
+
     /** PNG: the fixed 8-byte signature, then the IHDR chunk (length
       * 13, type "IHDR") with u32be width @16, u32be height @20, bit
       * depth @24, color type @25; bits-per-pixel = bit depth × the
-      * channel count implied by the color type (0 grey=1, 2 rgb=3,
-      * 3 palette=1, 4 grey+alpha=2, 6 rgba=4). */
+      * channel count implied by the color type ([[pngChannels]]). */
     private def png(p: Array[Byte]): Option[MediaInfo] = {
       val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-      val channels = Map(0 -> 1, 2 -> 3, 3 -> 1, 4 -> 2, 6 -> 4)
       if (p.length >= 26 &&
           sig.indices.forall(i => (p(i) & 0xff) == sig(i)) &&
           be32(p, 8) == 13L && ascii(p, 12, "IHDR"))
-        channels.get(u8(p, 25).toInt).map(ch =>
+        pngChannels.get(u8(p, 25).toInt).map(ch =>
           MediaInfo("image/png", be32(p, 16), be32(p, 20),
             u8(p, 24) * ch))
       else None
@@ -111,38 +115,49 @@ object Multimodal {
     /** JPEG (ISO/IEC 10918-1): SOI (FFD8) immediately followed by a
       * marker, then the standard marker-segment walk — every segment
       * is FF xx + u16be length (standalone markers TEM/RSTn have
-      * none) — to the first SOFn frame header (C0–CF except the
-      * non-frame C4 DHT / C8 JPG / CC DAC), which carries sample
-      * precision u8, height u16be, width u16be, component count u8.
-      * depth = precision × components. Stops at SOS/EOI (frame
-      * headers precede the scan) and on any malformed length. */
-    private def jpeg(p: Array[Byte]): Option[MediaInfo] =
+      * none). The FIRST SOFn frame header (C0–CF except the
+      * non-frame C4 DHT / C8 JPG / CC DAC) carries sample precision
+      * u8, height u16be, width u16be, component count u8;
+      * depth = precision × components. The walk goes on to the
+      * first SOS (FFDA) and reports whether it got there — i.e.
+      * whether the stream actually CARRIES entropy-coded scan data.
+      * An abbreviated stream (frame headers only, the declaratively
+      * planted fixtures) can never decode, so [[jpegPixels]] skips
+      * a guaranteed-failing ImageIO attempt on it — at container
+      * scale that was the dominant cost. Exact: segments are walked
+      * from SOI, so a 0xFFDA inside entropy data can't
+      * false-positive. Stops at EOI and on any malformed length;
+      * None without a well-formed SOFn before the stop. */
+    private def jpegMarkers(p: Array[Byte]): Option[(MediaInfo, Boolean)] =
       if (p.length >= 4 && u8(p, 0) == 0xffL && u8(p, 1) == 0xd8L &&
           u8(p, 2) == 0xffL) {
         var i = 2
-        var out: Option[MediaInfo] = None
+        var info: Option[MediaInfo] = None
+        var scan = false
         var stop = false
-        while (!stop && out.isEmpty && i + 4 <= p.length) {
+        while (!stop && i + 4 <= p.length) {
           if (u8(p, i) != 0xffL) stop = true
           else u8(p, i + 1).toInt match {
             case m if m == 0x01 || (m >= 0xd0 && m <= 0xd7) =>
               i += 2 // TEM / RSTn: standalone, no length field
-            case m if m == 0xd9 || m == 0xda => stop = true
+            case 0xda => scan = true; stop = true
+            case 0xd9 => stop = true
             case m =>
               val len = be16(p, i + 2)
               if (len < 2 || i + 2 + len > p.length) stop = true
-              else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 &&
-                  m != 0xc8 && m != 0xcc) {
-                if (len >= 8)
-                  out = Some(MediaInfo("image/jpeg",
+              else if (info.isEmpty && m >= 0xc0 && m <= 0xcf &&
+                  m != 0xc4 && m != 0xc8 && m != 0xcc) {
+                if (len >= 8) {
+                  info = Some(MediaInfo("image/jpeg",
                     be16(p, i + 7),             // width
                     be16(p, i + 5),             // height
                     u8(p, i + 4) * u8(p, i + 9))) // prec × ncomp
-                else stop = true
+                  i += 2 + len.toInt
+                } else stop = true
               } else i += 2 + len.toInt
           }
         }
-        out
+        info.map((_, scan))
       } else None
 
     /** GIF: "GIF87a"/"GIF89a", u16le screen width @6, u16le height
@@ -272,226 +287,149 @@ object Multimodal {
     def probe(p: Array[Byte]): Option[MediaInfo] =
       if (p == null || p.length < 13) None
       else bmp(p).orElse(png(p)).orElse(gif(p)).orElse(wav(p))
-        .orElse(jpeg(p)).orElse(avi(p)).orElse(mp4(p))
+        .orElse(jpegMarkers(p).map(_._1)).orElse(avi(p)).orElse(mp4(p))
 
-    /** REAL JPEG pixel decode through the JDK's OWN baseline decoder
-      * — javax.imageio ships one (com.sun.imageio.plugins.jpeg), so
-      * "needs an external codec library" stopped being true for
-      * JPEG. Gate on the clean-room [[jpeg]] marker walk first (the
-      * strict header contract every other arm follows), then hand
-      * the payload to ImageIO and sum the decoded raster per channel
-      * — (ΣR, ΣG, ΣB) over getRGB's sRGB view, exact Longs, one row
-      * buffer (no w×h int matrix). None when ImageIO can't decode
-      * (truncated scan, arithmetic coding, CMYK variants some JDKs
-      * reject) — the caller falls back to header-only features, the
-      * declared behavior for codec-bound payloads. Pinned by
-      * writer→decoder fuzz (ImageIO encode at random sizes/colors →
-      * sums match a direct-raster reference walk) rather than a
-      * declarative oracle: entropy-coded scans have no closed form a
-      * SQL writer could emit — the same reason PNG's compressed path
-      * is golden-pinned. */
-    /** True iff the marker walk reaches an SOS (FFDA) — i.e. the
-      * stream actually CARRIES entropy-coded scan data. An
-      * abbreviated stream (frame headers only, the declaratively
-      * planted fixtures) can never decode, so gating ImageIO here
-      * skips a guaranteed-failing full decode attempt per frame —
-      * at container scale that was the dominant cost (ImageIO's
-      * default read path also creates a disk-cache temp FILE per
-      * call; see the setUseCache(false) below). Exact: we walk
-      * marker segments from SOI, so a 0xFFDA inside entropy data
-      * can't false-positive (we stop at the first real SOS). */
-    private def jpegHasScan(p: Array[Byte]): Boolean = {
-      if (!(p.length >= 4 && u8(p, 0) == 0xffL &&
-            u8(p, 1) == 0xd8L && u8(p, 2) == 0xffL)) return false
-      var i = 2
-      while (i + 4 <= p.length) {
-        if (u8(p, i) != 0xffL) return false
-        u8(p, i + 1).toInt match {
-          case m if m == 0x01 || (m >= 0xd0 && m <= 0xd7) => i += 2
-          case 0xda => return true
-          case 0xd9 => return false
-          case _ =>
-            val len = be16(p, i + 2)
-            if (len < 2 || i + 2 + len > p.length) return false
-            i += 2 + len.toInt
-        }
-      }
-      false
+    // ---------------------------------------------------------------
+    // Pixel decodes: ONE per image format. Each walks its container
+    // and hands every pixel to a PixelSink; channel sums (m02) and
+    // gray1000 grids (m08/m09) are two sinks over the same decode,
+    // so the two statistics can never disagree on it.
+    // ---------------------------------------------------------------
+
+    /** Receives one image from its format's pixel decode: `start`
+      * once with the dimensions, before any pixel work (false rejects
+      * the image), then `pixel` for every pixel with (x, y) in
+      * DISPLAY order (BMP bottom-up rows, PNG Adam7 passes and GIF
+      * interlace already placed), then `result`. */
+    private abstract class PixelSink[A] {
+      def start(w: Int, h: Int): Boolean = true
+      def pixel(x: Int, y: Int, r: Int, g: Int, b: Int): Unit
+      def result: A
     }
 
-    // ImageIO's default InputStream read path spills a disk-cache
-    // temp file PER CALL — a file create/delete per decoded frame.
-    // Hand it a MemoryCacheImageInputStream instead (the frames here
-    // are byte arrays already): same no-disk behavior as the global
-    // ImageIO.setUseCache(false) without mutating process-global JVM
-    // state for every other ImageIO user in the executor.
-    def jpegChannelSums(p: Array[Byte]): Option[Array[Long]] =
-      jpeg(p).filter(_ => jpegHasScan(p)).flatMap { _ =>
-        try {
-          val img = javax.imageio.ImageIO.read(
-            new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(p)))
-          if (img == null) None
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val sums = new Array[Long](3)
-            val row = new Array[Int](w)
-            var y = 0
-            while (y < h) {
-              img.getRGB(0, y, w, 1, row, 0, w)
-              var x = 0
-              while (x < w) {
-                val v = row(x)
-                sums(0) += (v >> 16) & 0xff
-                sums(1) += (v >> 8) & 0xff
-                sums(2) += v & 0xff
-                x += 1
-              }
-              y += 1
-            }
-            Some(sums)
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
+    /** Per-channel (ΣR, ΣG, ΣB) as exact Longs. Accumulates only —
+      * never a pixel grid: the PNG decode admits 3·w·h up to 2^26,
+      * where a grid would cost 64–256 MB per payload. */
+    private final class ChannelSums extends PixelSink[Array[Long]] {
+      val result = new Array[Long](3)
+      def pixel(x: Int, y: Int, r: Int, g: Int, b: Int): Unit = {
+        result(0) += r; result(1) += g; result(2) += b
       }
+    }
 
-    /** MJPEG-in-AVI frame walk — the JDK-reachable slice of video
-      * pixel decode (round-11 verdict item 2): gate on the strict
-      * [[avi]] header contract, then walk the RIFF chunk tree to
-      * every LIST/'movi' payload and iterate its video chunks
-      * (fourcc `##dc`/`##db` per the published VfW stream-naming
-      * rule — two ASCII stream digits + compressed/uncompressed DIB
-      * tag, even-byte padded like every RIFF chunk). Each chunk body
-      * is one JPEG still: dimensions come from the clean-room ISO
-      * 10918 marker walk ([[jpeg]]), per-channel pixel sums from
-      * [[jpegChannelSums]] (the ImageIO baseline decode behind the
-      * same marker gate); frames whose scan the JDK can't decode
-      * (abbreviated streams, exotic variants) keep their parsed
-      * dimensions and fall back to zero content sums — the declared
-      * codec-bound behavior everywhere else in this file. Emits one
-      * (frame_idx, n_bytes, width, height, (ΣR,ΣG,ΣB)) tuple per
-      * video chunk in stream order; None when the payload isn't a
-      * strict AVI or holds no 'movi' list. True DCT VIDEO (H.264…)
-      * remains the declared gap — this arm makes MJPEG, whose
-      * frames ARE baseline JPEGs, a real decode path. */
-    def aviMjpegFrames(p: Array[Byte])
-      : Option[Vector[(Long, Long, Long, Long, Array[Long])]] =
-      avi(p).flatMap { _ =>
-        val out = Vector.newBuilder[
-          (Long, Long, Long, Long, Array[Long])]
-        var sawMovi = false
-        var n = 0L
-        var off = 12L
-        while (off + 12 <= p.length) {
-          val o = off.toInt
-          val size = le32(p, o + 4)
-          if (ascii(p, o, "LIST") && ascii(p, o + 8, "movi") &&
-              off + 8 + size <= p.length) {
-            sawMovi = true
-            var c = off + 12
-            val end = off + 8 + size
-            while (c + 8 <= end) {
-              val co = c.toInt
-              val csz = le32(p, co + 4)
-              if (c + 8 + csz <= end &&
-                  p(co) >= '0' && p(co) <= '9' &&
-                  p(co + 1) >= '0' && p(co + 1) <= '9' &&
-                  p(co + 2) == 'd' &&
-                  (p(co + 3) == 'c' || p(co + 3) == 'b')) {
-                val frame = java.util.Arrays.copyOfRange(
-                  p, co + 8, co + 8 + csz.toInt)
-                val dims = jpeg(frame)
-                val sums = jpegChannelSums(frame)
-                  .getOrElse(new Array[Long](3))
-                out += ((n, csz,
-                  dims.map(_.width).getOrElse(0L),
-                  dims.map(_.height).getOrElse(0L), sums))
-                n += 1
-              }
-              c += 8L + csz + (csz & 1L)
-            }
-          }
-          off += 8L + size + (size & 1L)
+    /** Integer luma per pixel: 299·R + 587·G + 114·B (the Rec.601
+      * weights in per-mille fixed point — NO division, so grids and
+      * everything derived from them stay exact integers that a SQL
+      * oracle can mirror). */
+    @inline private def gray1000(r: Long, g: Long, b: Long): Int =
+      (299L * r + 587L * g + 114L * b).toInt
+
+    /** Row-major TOP-DOWN gray1000 grid — the image as displayed, the
+      * orientation a perceptual hash is defined over. Rejects w or
+      * h ≤ 0 (an empty grid would send dHash64's clamped cell walk
+      * out of bounds) and w·h > 2^24 on every format. */
+    private final class GrayGrid extends PixelSink[(Int, Int, Array[Int])] {
+      private var w = 0
+      private var h = 0
+      private var grid: Array[Int] = null
+      override def start(w: Int, h: Int): Boolean =
+        w > 0 && h > 0 && w.toLong * h <= (1L << 24) && {
+          this.w = w; this.h = h; grid = new Array[Int](w * h); true
         }
-        if (sawMovi) Some(out.result()) else None
-      }
+      def pixel(x: Int, y: Int, r: Int, g: Int, b: Int): Unit =
+        grid(y * w + x) = gray1000(r, g, b)
+      def result: (Int, Int, Array[Int]) = (w, h, grid)
+    }
 
-    /** REAL pixel decode for the uncompressed BMP arm: 24-bpp BI_RGB
-      * only (bit depth and the biCompression field @30 are checked),
-      * pixel rows read at the header's declared data offset @10 with
-      * the spec's 4-byte row-stride rule; ROW PADDING IS EXCLUDED —
-      * the point over a byte histogram. Returns (ΣB, ΣG, ΣR) over
-      * the w×h pixels as exact Longs (BMP stores pixels B,G,R; row
-      * order — bottom-up vs top-down — cannot change a sum). None
-      * unless the strict header checks pass and the declared pixel
-      * array fits inside the payload. */
-    def bmp24ChannelSums(p: Array[Byte]): Option[Array[Long]] =
+    /** BMP's pixel decode: 24-bpp BI_RGB only (bit depth and the
+      * biCompression field @30 are checked), pixel rows read at the
+      * header's declared data offset @10 with the spec's 4-byte
+      * row-stride rule; ROW PADDING IS EXCLUDED — the point over a
+      * byte histogram. Rows are stored bottom-up unless the raw
+      * signed height is negative (the DIB spec's top-down flag);
+      * pixels are stored B,G,R. None unless the strict header checks
+      * pass and the declared pixel array fits inside the payload. */
+    private def bmpPixels[A](p: Array[Byte], sink: PixelSink[A])
+      : Option[A] =
       bmp(p).filter(_.depth == 24).flatMap { info =>
         val off = le32(p, 10)
         val w = info.width.toInt
         val h = info.height.toInt
+        val topDown = le32(p, 22).toInt < 0
         val stride = ((3L * w + 3L) / 4L) * 4L
         if (le32(p, 30) != 0L || off < 54L ||
-            off + stride * h > p.length) None
+            off + stride * h > p.length || !sink.start(w, h)) None
         else {
-          val sums = new Array[Long](3)
           var r = 0
           while (r < h) {
             val rowOff = (off + r * stride).toInt
+            val y = if (topDown) r else h - 1 - r
             var x = 0
             while (x < w) {
               val base = rowOff + 3 * x
-              sums(0) += u8(p, base)
-              sums(1) += u8(p, base + 1)
-              sums(2) += u8(p, base + 2)
+              sink.pixel(x, y, p(base + 2) & 0xff, p(base + 1) & 0xff,
+                p(base) & 0xff)
               x += 1
             }
             r += 1
           }
-          Some(sums)
+          Some(sink.result)
         }
       }
 
-    /** REAL pixel decode for PNG — the format the round-9 verdict
-      * called a fair non-goal "because codec libraries aren't in the
+    /** REAL pixel decode for the uncompressed BMP arm ([[bmpPixels]]):
+      * (ΣB, ΣG, ΣR) over the w×h pixels as exact Longs. */
+    def bmp24ChannelSums(p: Array[Byte]): Option[Array[Long]] =
+      // BMP stores pixels B,G,R and m02's oracle (and every spec)
+      // pins the sums in that STORAGE order, so the sink's
+      // (ΣR, ΣG, ΣB) is reversed here, once
+      bmpPixels(p, new ChannelSums).map(_.reverse)
+
+    /** 24-bpp BI_RGB BMP → gray1000 grid through [[bmpPixels]]. */
+    def bmp24GrayGrid(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
+      bmpPixels(p, new GrayGrid)
+
+    /** PNG's Paeth predictor: whichever of left, up and upper-left
+      * is closest to left + up − upper-left (ties in that order). */
+    private def paeth(a: Int, b: Int, c: Int): Int = {
+      val q = a + b - c
+      val pa = math.abs(q - a)
+      val pb = math.abs(q - b)
+      val pc = math.abs(q - c)
+      if (pa <= pb && pa <= pc) a
+      else if (pb <= pc) b else c
+    }
+
+    /** PNG's pixel decode — the format the round-9 verdict called a
+      * fair non-goal "because codec libraries aren't in the
       * container": zlib inflate ships IN the JDK
       * (java.util.zip.Inflater), and row unfiltering is ~40 lines of
-      * published spec, so 8-bit RGB (color type 2) AND 8-bit
-      * palette (color type 3, PLTE lookup) non-interlaced PNGs
-      * decode for real — IDAT chunks concatenated, inflated, every
-      * row's filter reversed (None/Sub/Up/Average/Paeth, all five,
-      * at the color type's bpp distance), per-channel (ΣR, ΣG, ΣB)
-      * pixel sums returned as exact Longs. ALL five 8-bit color
-      * types decode — grey (0) contributes its value to every
-      * channel, RGB (2) per channel, palette (3) through PLTE,
-      * grey+alpha (4) the grey sample to every channel, RGBA (6) the
-      * color samples per channel (alpha is transparency, not color,
-      * so it never enters a sum) — and EVERY other defined depth:
-      * 16-bit for the non-palette types (big-endian samples; filters
-      * operate per-BYTE at the pixel's byte distance per the spec;
-      * sums over the full 16-bit values) and 1/2/4-bit grey and
-      * palette (MSB-first unpacking, trailing pad bits excluded).
-      * ADAM7-interlaced images decode too: the seven passes
-      * PARTITION the pixels, so channel sums are the sum over the
-      * pass sub-images (each unfiltered independently at its own
-      * scanline width) with no pixel placement needed. That is the
-      * COMPLETE PNG matrix — every defined depth × color type ×
-      * interlace combination. Strict where it matters (compression/
-      * filter methods 0, inflated length must equal the exact pass
+      * published spec. IDAT chunks are concatenated, inflated, and
+      * every row's filter reversed (None/Sub/Up/Average/Paeth, all
+      * five, at the pixel's byte distance). The COMPLETE PNG matrix
+      * decodes: every color type at 8 bits — grey (0) gives its
+      * value to every channel, RGB (2) per channel, palette (3)
+      * through PLTE, grey+alpha (4) the grey sample to every
+      * channel, RGBA (6) the color samples (alpha is transparency,
+      * not color, so it never reaches a sink) — plus 16-bit for the
+      * non-palette types (big-endian samples, full 16-bit values)
+      * and 1/2/4-bit grey and palette (MSB-first unpacking, trailing
+      * pad bits excluded). ADAM7-interlaced images decode too: each
+      * of the seven passes is its own sub-image (own scanline width,
+      * own filter history) whose pixels land at (x0 + i·dx,
+      * y0 + j·dy). Strict where it matters (compression/filter
+      * methods 0, inflated length must equal the exact pass
       * geometry, unknown filter type or an index past the palette
       * rejects); LENIENT on chunk CRCs (like most real decoders —
       * and what lets the m02 oracle's declarative writer emit valid
       * zlib via stored blocks + closed-form Adler-32 without needing
       * a CRC32 closed form, which doesn't exist). */
-    def pngRgb8ChannelSums(p: Array[Byte]): Option[Array[Long]] =
+    private def pngPixels[A](p: Array[Byte], sink: PixelSink[A])
+      : Option[A] =
       png(p).flatMap { info =>
         val colorType = u8(p, 25).toInt
         val depth = u8(p, 24).toInt
-        // every defined color type (0 grey, 2 RGB, 3 palette,
-        // 4 grey+alpha, 6 RGBA) at 8-bit depth, plus the non-palette
-        // types at 16-bit (big-endian samples; sums are over the
-        // full 16-bit values); deflate/adaptive/non-interlaced only
-        val chByType = Map(0 -> 1, 2 -> 3, 3 -> 1, 4 -> 2, 6 -> 4)
+        val ch = pngChannels(colorType)
         // defined (depth, type) combos: 8-bit everything, 16-bit
         // non-palette, 1/2/4-bit grey and palette
         val depthOk = depth == 8 ||
@@ -499,20 +437,18 @@ object Multimodal {
           (Set(1, 2, 4).contains(depth) &&
             (colorType == 0 || colorType == 3))
         val interlace = u8(p, 28).toInt
-        if (!depthOk || !chByType.contains(colorType) ||
-            u8(p, 26) != 0L || u8(p, 27) != 0L || interlace > 1)
-          None
+        val w = info.width.toInt
+        val h = info.height.toInt
+        if (!depthOk || u8(p, 26) != 0L || u8(p, 27) != 0L ||
+            interlace > 1 || w <= 0 || h <= 0 ||
+            3L * w * h > (1L << 26) || !sink.start(w, h)) None
         else {
-          val sampleBytes = depth / 8 // 0 for sub-byte depths
-          val bpp = math.max(1, chByType(colorType) * sampleBytes)
-          val w = info.width.toInt
-          val h = info.height.toInt
           // chunk walk from the signature, concatenating IDAT data
           // and grabbing the palette if present
           val idat = new java.io.ByteArrayOutputStream()
           var palette: Array[Byte] = null
           var off = 8L
-          var ok = w > 0 && h > 0 && 3L * w * h <= (1L << 26)
+          var ok = true
           var ended = false
           while (ok && !ended && off + 8 <= p.length) {
             val o = off.toInt
@@ -532,22 +468,20 @@ object Multimodal {
           if (colorType == 3 && palette == null) ok = false
           // bytes per scanline: ceil(width·channels·depth / 8)
           def rowB(wi: Int): Int =
-            (wi.toLong * chByType(colorType) * depth + 7).toInt / 8
-          // pass geometry: one full image, or the seven Adam7
-          // sub-images (x0, y0, dx, dy per the spec) — the passes
-          // PARTITION the pixels, so channel sums are just the sum
-          // over the pass sub-images, no pixel placement needed
-          val passes: Seq[(Int, Int)] =
-            if (interlace == 0) Seq((w, h))
+            (wi.toLong * ch * depth + 7).toInt / 8
+          // pass geometry (x0, y0, dx, dy, width, height): one full
+          // image, or the seven Adam7 sub-images per the spec
+          val passes =
+            (if (interlace == 0) Seq((0, 0, 1, 1))
             else Seq((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-              (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
+              (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)))
               .map { case (x0, y0, dx, dy) =>
-                (if (w > x0) (w - x0 + dx - 1) / dx else 0,
-                  if (h > y0) (h - y0 + dy - 1) / dy else 0)
+                (x0, y0, dx, dy, (w - x0 + dx - 1) / dx,
+                  (h - y0 + dy - 1) / dy)
               }
-              .filter(pq => pq._1 > 0 && pq._2 > 0)
-          val rawLen = passes.map { case (wi, hi) =>
-            (1 + rowB(wi)).toLong * hi }.sum
+              .filter(ps => ps._5 > 0 && ps._6 > 0)
+          val rawLen = passes.map { ps =>
+            (1 + rowB(ps._5)).toLong * ps._6 }.sum
           if (!ok || idat.size() == 0 || rawLen <= 0 ||
               rawLen > (1L << 27)) None
           else {
@@ -568,102 +502,90 @@ object Multimodal {
               case _: java.util.zip.DataFormatException => None
             } finally inf.end()
             inflated.flatMap { d =>
-              // reverse the per-row filter (PNG spec; the filter
-              // distance is bpp — 3 for RGB, 1 for palette indices)
-              def paeth(a: Int, b: Int, c: Int): Int = {
-                val q = a + b - c
-                val pa = math.abs(q - a)
-                val pb = math.abs(q - b)
-                val pc = math.abs(q - c)
-                if (pa <= pb && pa <= pc) a
-                else if (pb <= pc) b else c
-              }
-              val sums = new Array[Long](3)
+              // filter distance: bytes per pixel, at least one
+              val bpp = math.max(1, ch * (depth / 8))
+              // sample si of an unfiltered scanline
+              def sample(row: Array[Int], si: Int): Int =
+                if (depth == 16) (row(2 * si) << 8) | row(2 * si + 1)
+                else if (depth == 8) row(si)
+                else {
+                  val per = 8 / depth
+                  (row(si / per) >> (8 - depth * (si % per + 1))) &
+                    ((1 << depth) - 1)
+                }
               var good = true
               var base = 0
-              // each pass is an independent little image: its own
-              // scanline width and its own filter history
-              passes.foreach { case (wImg, hImg) =>
-                if (good) {
-              val w = wImg
-              val rowBytes = rowB(wImg)
-              val stride = 1 + rowBytes
-              var prev = new Array[Int](rowBytes)
-              var cur = new Array[Int](rowBytes)
-              var r = 0
-              while (good && r < hImg) {
-                val t = d(base + r * stride) & 0xff
-                if (t > 4) good = false
-                else {
-                  var j = 0
-                  while (good && j < rowBytes) {
-                    val x = d(base + r * stride + 1 + j) & 0xff
-                    val a = if (j >= bpp) cur(j - bpp) else 0
-                    val b = prev(j)
-                    val c = if (j >= bpp) prev(j - bpp) else 0
-                    val v = t match {
-                      case 0 => x
-                      case 1 => (x + a) & 0xff
-                      case 2 => (x + b) & 0xff
-                      case 3 => (x + (a + b) / 2) & 0xff
-                      case _ => (x + paeth(a, b, c)) & 0xff
-                    }
-                    cur(j) = v
-                    // accumulate per SAMPLE. Sub-byte depths: unpack
-                    // MSB-first, capped at w samples (trailing pad
-                    // bits are not pixels)
-                    if (depth < 8) {
-                      val per = 8 / depth
-                      val mask = (1 << depth) - 1
-                      var k = 0
-                      while (good && k < per && j * per + k < w) {
-                        val sv = (v >> (8 - depth * (k + 1))) & mask
-                        if (colorType == 0) {
-                          sums(0) += sv; sums(1) += sv; sums(2) += sv
-                        } else if (3 * sv + 2 < palette.length) {
-                          sums(0) += palette(3 * sv) & 0xff
-                          sums(1) += palette(3 * sv + 1) & 0xff
-                          sums(2) += palette(3 * sv + 2) & 0xff
-                        } else good = false
-                        k += 1
+              passes.foreach { case (x0, y0, dx, dy, wi, hi) =>
+                val rowBytes = rowB(wi)
+                val stride = 1 + rowBytes
+                var prev = new Array[Int](rowBytes)
+                var cur = new Array[Int](rowBytes)
+                var r = 0
+                while (good && r < hi) {
+                  val t = d(base + r * stride) & 0xff
+                  if (t > 4) good = false
+                  else {
+                    var j = 0
+                    while (j < rowBytes) {
+                      val x = d(base + r * stride + 1 + j) & 0xff
+                      val a = if (j >= bpp) cur(j - bpp) else 0
+                      val b = prev(j)
+                      val c = if (j >= bpp) prev(j - bpp) else 0
+                      cur(j) = t match {
+                        case 0 => x
+                        case 1 => (x + a) & 0xff
+                        case 2 => (x + b) & 0xff
+                        case 3 => (x + (a + b) / 2) & 0xff
+                        case _ => (x + paeth(a, b, c)) & 0xff
                       }
-                    } else if (sampleBytes == 1 || j % 2 == 1) {
-                      val sv =
-                        if (sampleBytes == 1) v
-                        else (cur(j - 1) << 8) | v
-                      val si = j / sampleBytes // sample index in row
+                      j += 1
+                    }
+                    val y = y0 + r * dy
+                    var i = 0
+                    while (good && i < wi) {
+                      val s = i * ch
+                      val x = x0 + i * dx
                       colorType match {
-                        case 2 => sums(si % 3) += sv
-                        case 0 => // grey: one sample -> every channel
-                          sums(0) += sv; sums(1) += sv; sums(2) += sv
-                        case 4 => // grey+alpha: alpha is not color
-                          if (si % 2 == 0) {
-                            sums(0) += sv; sums(1) += sv; sums(2) += sv
-                          }
-                        case 6 => // RGBA: alpha sample never enters
-                          if (si % 4 < 3) sums(si % 4) += sv
-                        case _ => // palette (8-bit only)
-                          if (3 * sv + 2 < palette.length) {
-                            sums(0) += palette(3 * sv) & 0xff
-                            sums(1) += palette(3 * sv + 1) & 0xff
-                            sums(2) += palette(3 * sv + 2) & 0xff
-                          } else good = false // index past the palette
+                        case 0 | 4 =>
+                          val g = sample(cur, s)
+                          sink.pixel(x, y, g, g, g)
+                        case 2 | 6 =>
+                          sink.pixel(x, y, sample(cur, s),
+                            sample(cur, s + 1), sample(cur, s + 2))
+                        case _ =>
+                          val v = sample(cur, s)
+                          if (3 * v + 2 >= palette.length) good = false
+                          else sink.pixel(x, y, palette(3 * v) & 0xff,
+                            palette(3 * v + 1) & 0xff,
+                            palette(3 * v + 2) & 0xff)
                       }
+                      i += 1
                     }
-                    j += 1
+                    val tmp = prev; prev = cur; cur = tmp
                   }
-                  val tmp = prev; prev = cur; cur = tmp
+                  r += 1
                 }
-                r += 1
+                base += stride * hi
               }
-              base += stride * hImg
-                }
-              }
-              if (good) Some(sums) else None
+              if (good) Some(sink.result) else None
             }
           }
         }
       }
+
+    /** REAL pixel decode for PNG ([[pngPixels]], every depth × color
+      * type × interlace): per-channel (ΣR, ΣG, ΣB) as exact Longs. */
+    def pngRgb8ChannelSums(p: Array[Byte]): Option[Array[Long]] =
+      pngPixels(p, new ChannelSums)
+
+    /** 8-bit NON-interlaced PNG → gray1000 grid through
+      * [[pngPixels]]. The grid's domain is narrower than the decode's:
+      * 16-bit, sub-byte and Adam7 images are rejected here, before
+      * the decode — a perceptual grid has no use for them and the
+      * luma weights assume 8-bit samples. */
+    def pngGrayGrid(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
+      png(p).filter(_ => u8(p, 28) == 0L && u8(p, 24) == 8L)
+        .flatMap(_ => pngPixels(p, new GrayGrid))
 
     /** GIF-variant LZW decode, straight off the published spec (no
       * library): little-endian bit stream, clear = 2^min,
@@ -761,49 +683,18 @@ object Multimodal {
       if (ok && outN == expected) Some(out) else None
     }
 
-    /** REAL pixel decode for GIF — LZW is the published spec's ~60
-      * lines, no library needed ([[lzwDecode]]): the FIRST image
-      * frame's sub-blocks are reassembled, LZW-decoded against the
-      * GLOBAL color table, and per-channel (ΣR, ΣG, ΣB) sums
-      * returned over the frame's palette-resolved pixels. The
-      * frame's LOCAL color table, when present, wins over the
-      * global one (per spec); at least one of the two must exist.
+    /** GIF's pixel decode — LZW is the published spec's ~60 lines, no
+      * library needed ([[lzwDecode]]): block walk to the FIRST image
+      * descriptor (extension blocks skipped by the spec's sub-block
+      * walk), its sub-blocks reassembled and LZW-decoded, each index
+      * resolved through the frame's LOCAL color table when present,
+      * else the GLOBAL one (per spec; at least one must exist).
+      * INTERLACED frames store their rows pass by pass (0,8,16…;
+      * 4,12…; 2,6…; 1,3…) and are placed back in display order.
       * Strict: the decoded stream must carry exactly frame-w·h
-      * indices, every index inside the active palette; extension
-      * blocks are skipped by the spec's sub-block walk. INTERLACED
-      * frames are accepted as-is: GIF interlace is a pure ROW
-      * PERMUTATION of the stored scanlines, and a sum is
-      * permutation-invariant, so no de-interlacing pass is needed
-      * for these statistics (per-pixel features would need the
-      * 4-pass reorder). */
-    def gifFirstFramePixelSums(p: Array[Byte]): Option[Array[Long]] =
-      gifFirstFrameIndexed(p).flatMap {
-        case (iw, ih, idx, palOff, palSize, _) =>
-          val sums = new Array[Long](3)
-          var i = 0
-          var good = true
-          while (good && i < idx.length) {
-            val v = idx(i) & 0xff
-            if (v >= palSize) good = false
-            else {
-              sums(0) += u8(p, palOff + 3 * v)
-              sums(1) += u8(p, palOff + 3 * v + 1)
-              sums(2) += u8(p, palOff + 3 * v + 2)
-            }
-            i += 1
-          }
-          if (good) Some(sums) else None
-      }
-
-    /** Shared first-frame decode for the GIF arms: block walk to the
-      * first image descriptor, local-color-table override, LZW
-      * expansion — returns (width, height, index array, palette
-      * offset, palette size, interlaced flag).
-      * [[gifFirstFramePixelSums]] and [[gifGrayGrid]] both derive
-      * from it, so the sums and the perceptual grid can never
-      * disagree on the decode. */
-    private def gifFirstFrameIndexed(p: Array[Byte])
-      : Option[(Int, Int, Array[Byte], Int, Int, Boolean)] =
+      * indices, every index inside the active palette. */
+    private def gifPixels[A](p: Array[Byte], sink: PixelSink[A])
+      : Option[A] =
       gif(p).flatMap { _ =>
         val packed = u8(p, 10).toInt
         val hasGct = (packed & 0x80) != 0
@@ -863,268 +754,165 @@ object Multimodal {
                   else { dat.write(p, o2 + 1, n); o2 += 1 + n }
                 }
               }
-              if (bad2) None
+              if (bad2 || palOff + 3 * palSize > p.length) None
               else lzwDecode(minCode, dat.toByteArray, iw * ih)
-                .filter(_ => palOff + 3 * palSize <= p.length)
-                .map(idx => (iw, ih, idx, palOff, palSize,
-                  (ipacked & 0x40) != 0))
-            }
-          }
-        }
-      }
-
-    // ---------------------------------------------------------------
-    // Perceptual hashing (m08/m09): gray1000 pixel grids + dHash
-    // ---------------------------------------------------------------
-
-    /** Integer luma per pixel: 299·R + 587·G + 114·B (the Rec.601
-      * weights in per-mille fixed point — NO division, so grids and
-      * everything derived from them stay exact integers that a SQL
-      * oracle can mirror). */
-    @inline private def gray1000(r: Long, g: Long, b: Long): Int =
-      (299L * r + 587L * g + 114L * b).toInt
-
-    /** 24-bpp BI_RGB BMP → gray1000 grid, row-major TOP-DOWN (BMP
-      * stores rows bottom-up; the grid is the image as displayed —
-      * the orientation a perceptual hash is defined over). Same
-      * strict walk as [[bmp24ChannelSums]]. */
-    def bmp24GrayGrid(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      bmp(p).filter(_.depth == 24).flatMap { info =>
-        val off = le32(p, 10)
-        val w = info.width.toInt
-        val h = info.height.toInt
-        // raw signed height < 0 ⇒ TOP-DOWN row order (the DIB spec's
-        // flip flag) — placement matters for a grid where it didn't
-        // for the order-independent channel sums
-        val topDown = le32(p, 22).toInt < 0
-        val stride = ((3L * w + 3L) / 4L) * 4L
-        // w/h must be POSITIVE like pngGrayGrid's check: a crafted
-        // zero-dim BMP otherwise yields an empty grid that dHash64's
-        // clamped cell walk indexes out of bounds
-        if (w <= 0 || h <= 0 || le32(p, 30) != 0L || off < 54L ||
-            off + stride * h > p.length ||
-            w.toLong * h > (1L << 24)) None
-        else {
-          val grid = new Array[Int](w * h)
-          var r = 0
-          while (r < h) {
-            val rowOff = (off + r.toLong * stride).toInt
-            val outRow = (if (topDown) r else h - 1 - r) * w
-            var x = 0
-            while (x < w) {
-              val base = rowOff + 3 * x
-              grid(outRow + x) = gray1000(
-                u8(p, base + 2), u8(p, base + 1), u8(p, base))
-              x += 1
-            }
-            r += 1
-          }
-          Some((w, h, grid))
-        }
-      }
-
-    /** 8-bit NON-interlaced PNG → gray1000 grid, all five color
-      * types (grey / RGB / palette / grey+alpha / RGBA; alpha is
-      * transparency, not color, so it never enters the luma — the
-      * [[pngRgb8ChannelSums]] convention). Placement matters for a
-      * grid, which is why this is a separate focused decoder rather
-      * than a sums-path refactor: sums tolerate Adam7 partitioning
-      * and sub-byte depths, a perceptual grid doesn't need them
-      * (golden vectors pin this decoder against the fuzz writer's
-      * real-deflate output). */
-    def pngGrayGrid(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      png(p).flatMap { info =>
-        val depth = u8(p, 24).toInt
-        val colorType = u8(p, 25).toInt
-        val chBy = Map(0 -> 1, 2 -> 3, 3 -> 1, 4 -> 2, 6 -> 4)
-        val interlace = u8(p, 28).toInt
-        if (depth != 8 || !chBy.contains(colorType) ||
-            u8(p, 26) != 0L || u8(p, 27) != 0L || interlace != 0)
-          None
-        else {
-          val ch = chBy(colorType)
-          val w = info.width.toInt
-          val h = info.height.toInt
-          if (w <= 0 || h <= 0 || w.toLong * h > (1L << 24)) None
-          else {
-            // chunk walk: concatenate IDAT, grab PLTE
-            val idat = new java.io.ByteArrayOutputStream()
-            var palette: Array[Byte] = null
-            var off = 8L
-            var ok = true
-            var ended = false
-            while (ok && !ended && off + 8 <= p.length) {
-              val o = off.toInt
-              val len = be32(p, o)
-              if (off + 12L + len > p.length) ok = false
-              else {
-                if (ascii(p, o + 4, "IDAT"))
-                  idat.write(p, o + 8, len.toInt)
-                if (ascii(p, o + 4, "PLTE") && len % 3 == 0 &&
-                    len <= 768)
-                  palette = java.util.Arrays.copyOfRange(
-                    p, o + 8, o + 8 + len.toInt)
-                if (ascii(p, o + 4, "IEND")) ended = true
-                off += 12L + len
-              }
-            }
-            if (!ok || (colorType == 3 && palette == null)) None
-            else {
-              val rowB = w * ch
-              val raw = new Array[Byte](h * (1 + rowB))
-              val inf = new java.util.zip.Inflater()
-              inf.setInput(idat.toByteArray)
-              val got =
-                try {
-                  var t = 0
-                  var done = false
-                  while (!done && t < raw.length) {
-                    val n = inf.inflate(raw, t, raw.length - t)
-                    if (n == 0) done = true else t += n
-                  }
-                  t
-                } catch {
-                  case _: java.util.zip.DataFormatException => -1
-                } finally inf.end()
-              if (got != raw.length) None
-              else {
-                // reverse filters in place per row at bpp = ch
-                val cur = new Array[Byte](rowB)
-                val prev = new Array[Byte](rowB)
-                val grid = new Array[Int](w * h)
-                var y = 0
-                var good = true
-                while (good && y < h) {
-                  val ft = raw(y * (1 + rowB)) & 0xff
-                  System.arraycopy(raw, y * (1 + rowB) + 1, cur, 0,
-                    rowB)
-                  if (ft > 4) good = false
-                  else {
-                    var i = 0
-                    while (i < rowB) {
-                      val a = if (i >= ch) cur(i - ch) & 0xff else 0
-                      val b = prev(i) & 0xff
-                      val c =
-                        if (i >= ch) prev(i - ch) & 0xff else 0
-                      val x = cur(i) & 0xff
-                      val v = ft match {
-                        case 0 => x
-                        case 1 => x + a
-                        case 2 => x + b
-                        case 3 => x + (a + b) / 2
-                        case 4 =>
-                          val pp = a + b - c
-                          val pa = math.abs(pp - a)
-                          val pb = math.abs(pp - b)
-                          val pc = math.abs(pp - c)
-                          if (pa <= pb && pa <= pc) x + a
-                          else if (pb <= pc) x + b
-                          else x + c
-                      }
-                      cur(i) = (v & 0xff).toByte
-                      i += 1
+                .filter(_ => sink.start(iw, ih))
+                .flatMap { idx =>
+                  // stored row s → display row
+                  val rowMap =
+                    if ((ipacked & 0x40) == 0) Array.range(0, ih)
+                    else Array((0, 8), (4, 8), (2, 4), (1, 2)).flatMap {
+                      case (start, step) => Array.range(start, ih, step)
                     }
+                  var s = 0
+                  var good = true
+                  while (good && s < ih) {
                     var x = 0
-                    while (good && x < w) {
-                      val base = x * ch
-                      colorType match {
-                        case 0 | 4 =>
-                          val g = cur(base) & 0xff
-                          grid(y * w + x) = gray1000(g, g, g)
-                        case 2 | 6 =>
-                          grid(y * w + x) = gray1000(
-                            cur(base) & 0xff, cur(base + 1) & 0xff,
-                            cur(base + 2) & 0xff)
-                        case 3 =>
-                          val v = cur(base) & 0xff
-                          if (3 * v + 2 >= palette.length)
-                            good = false
-                          else grid(y * w + x) = gray1000(
-                            palette(3 * v) & 0xff,
-                            palette(3 * v + 1) & 0xff,
-                            palette(3 * v + 2) & 0xff)
-                      }
+                    while (good && x < iw) {
+                      val v = idx(s * iw + x) & 0xff
+                      val c = palOff + 3 * v
+                      if (v >= palSize) good = false
+                      else sink.pixel(x, rowMap(s), p(c) & 0xff,
+                        p(c + 1) & 0xff, p(c + 2) & 0xff)
                       x += 1
                     }
-                    System.arraycopy(cur, 0, prev, 0, rowB)
+                    s += 1
                   }
-                  y += 1
+                  if (good) Some(sink.result) else None
                 }
-                if (good) Some((w, h, grid)) else None
-              }
             }
           }
         }
       }
 
-    /** GIF first frame → gray1000 grid through the shared
-      * [[gifFirstFrameIndexed]] decode, de-interlacing the four
-      * passes into display order when the descriptor flags it. */
+    /** REAL pixel decode for GIF ([[gifPixels]]): per-channel
+      * (ΣR, ΣG, ΣB) over the first frame's palette-resolved pixels,
+      * as exact Longs. */
+    def gifFirstFramePixelSums(p: Array[Byte]): Option[Array[Long]] =
+      gifPixels(p, new ChannelSums)
+
+    /** GIF first frame → gray1000 grid through [[gifPixels]]. */
     def gifGrayGrid(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      gifFirstFrameIndexed(p).flatMap {
-        case (iw, ih, idx, palOff, palSize, interlaced) =>
-          // source row s → display row: interlaced GIFs store rows
-          // pass-by-pass (0,8,16…; 4,12…; 2,6…; 1,3…)
-          val rowMap = new Array[Int](ih)
-          if (!interlaced) { var r = 0
-            while (r < ih) { rowMap(r) = r; r += 1 } }
-          else {
-            var s = 0
-            Seq((0, 8), (4, 8), (2, 4), (1, 2)).foreach {
-              case (start, step) =>
-                var r = start
-                while (r < ih) { rowMap(s) = r; s += 1; r += step }
-            }
-          }
-          val grid = new Array[Int](iw * ih)
-          var s = 0
-          var good = true
-          while (good && s < ih) {
-            val dr = rowMap(s)
+      gifPixels(p, new GrayGrid)
+
+    /** JPEG's pixel decode through the JDK's OWN baseline decoder —
+      * javax.imageio ships one (com.sun.imageio.plugins.jpeg), so
+      * "needs an external codec library" stopped being true for
+      * JPEG. Gated on the clean-room [[jpegMarkers]] walk (`marks`,
+      * passed in so a caller that also wants the frame header walks
+      * once): a well-formed SOFn AND a real SOS, else no decode is
+      * attempted. The pixels are getRGB's sRGB view, one row buffer
+      * at a time. None when ImageIO can't decode (truncated scan,
+      * arithmetic coding, CMYK variants some JDKs reject) — callers
+      * fall back to header-only features, the declared behavior for
+      * codec-bound payloads. Pinned by writer→decoder fuzz (ImageIO
+      * encode at random sizes/colors → sums match a direct-raster
+      * reference walk) rather than a declarative oracle:
+      * entropy-coded scans have no closed form a SQL writer could
+      * emit — the same reason PNG's compressed path is
+      * golden-pinned. */
+    private def jpegPixels[A](p: Array[Byte],
+                              marks: Option[(MediaInfo, Boolean)],
+                              sink: PixelSink[A]): Option[A] =
+      if (!marks.exists(_._2)) None
+      else try {
+        // ImageIO's default InputStream read path spills a disk-cache
+        // temp file PER CALL — a file create/delete per decoded
+        // frame. A MemoryCacheImageInputStream gives the same no-disk
+        // behavior as the global ImageIO.setUseCache(false) without
+        // mutating process-global JVM state for every other ImageIO
+        // user in the executor.
+        val img = javax.imageio.ImageIO.read(
+          new javax.imageio.stream.MemoryCacheImageInputStream(
+            new java.io.ByteArrayInputStream(p)))
+        if (img == null || !sink.start(img.getWidth, img.getHeight))
+          None
+        else {
+          val w = img.getWidth
+          val row = new Array[Int](w)
+          var y = 0
+          while (y < img.getHeight) {
+            img.getRGB(0, y, w, 1, row, 0, w)
             var x = 0
-            while (good && x < iw) {
-              val v = idx(s * iw + x) & 0xff
-              if (v >= palSize) good = false
-              else grid(dr * iw + x) = gray1000(
-                u8(p, palOff + 3 * v), u8(p, palOff + 3 * v + 1),
-                u8(p, palOff + 3 * v + 2))
+            while (x < w) {
+              val v = row(x)
+              sink.pixel(x, y, (v >> 16) & 0xff, (v >> 8) & 0xff,
+                v & 0xff)
               x += 1
             }
-            s += 1
+            y += 1
           }
-          if (good) Some((iw, ih, grid)) else None
-      }
+          Some(sink.result)
+        }
+      } catch { case scala.util.control.NonFatal(_) => None }
 
-    /** JPEG → gray1000 grid: ImageIO baseline decode behind the same
-      * strict marker-walk + SOS gate as [[jpegChannelSums]]. */
+    /** REAL JPEG pixel decode ([[jpegPixels]]): per-channel
+      * (ΣR, ΣG, ΣB) as exact Longs. */
+    def jpegChannelSums(p: Array[Byte]): Option[Array[Long]] =
+      jpegPixels(p, jpegMarkers(p), new ChannelSums)
+
+    /** JPEG → gray1000 grid through [[jpegPixels]]. */
     def jpegGrayGrid(p: Array[Byte]): Option[(Int, Int, Array[Int])] =
-      jpeg(p).filter(_ => jpegHasScan(p)).flatMap { _ =>
-        try {
-          val img = javax.imageio.ImageIO.read(
-            new javax.imageio.stream.MemoryCacheImageInputStream(
-              new java.io.ByteArrayInputStream(p)))
-          if (img == null ||
-              img.getWidth.toLong * img.getHeight > (1L << 24)) None
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val grid = new Array[Int](w * h)
-            val row = new Array[Int](w)
-            var y = 0
-            while (y < h) {
-              img.getRGB(0, y, w, 1, row, 0, w)
-              var x = 0
-              while (x < w) {
-                val v = row(x)
-                grid(y * w + x) = gray1000(
-                  (v >> 16) & 0xff, (v >> 8) & 0xff, v & 0xff)
-                x += 1
+      jpegPixels(p, jpegMarkers(p), new GrayGrid)
+
+    /** MJPEG-in-AVI frame walk — the JDK-reachable slice of video
+      * pixel decode (round-11 verdict item 2): gate on the strict
+      * [[avi]] header contract, then walk the RIFF chunk tree to
+      * every LIST/'movi' payload and iterate its video chunks
+      * (fourcc `##dc`/`##db` per the published VfW stream-naming
+      * rule — two ASCII stream digits + compressed/uncompressed DIB
+      * tag, even-byte padded like every RIFF chunk). Each chunk body
+      * is one JPEG still, its markers walked ONCE ([[jpegMarkers]]):
+      * dimensions from the frame header, per-channel pixel sums from
+      * [[jpegPixels]] behind the same walk; frames whose scan the
+      * JDK can't decode (abbreviated streams, exotic variants) keep
+      * their parsed dimensions and fall back to zero content sums —
+      * the declared codec-bound behavior everywhere else in this
+      * file. Emits one (frame_idx, n_bytes, width, height,
+      * (ΣR,ΣG,ΣB)) tuple per video chunk in stream order; None when
+      * the payload isn't a strict AVI or holds no 'movi' list. True
+      * DCT VIDEO (H.264…) remains the declared gap — this arm makes
+      * MJPEG, whose frames ARE baseline JPEGs, a real decode path. */
+    def aviMjpegFrames(p: Array[Byte])
+      : Option[Vector[(Long, Long, Long, Long, Array[Long])]] =
+      avi(p).flatMap { _ =>
+        val out = Vector.newBuilder[
+          (Long, Long, Long, Long, Array[Long])]
+        var sawMovi = false
+        var n = 0L
+        var off = 12L
+        while (off + 12 <= p.length) {
+          val o = off.toInt
+          val size = le32(p, o + 4)
+          if (ascii(p, o, "LIST") && ascii(p, o + 8, "movi") &&
+              off + 8 + size <= p.length) {
+            sawMovi = true
+            var c = off + 12
+            val end = off + 8 + size
+            while (c + 8 <= end) {
+              val co = c.toInt
+              val csz = le32(p, co + 4)
+              if (c + 8 + csz <= end &&
+                  p(co) >= '0' && p(co) <= '9' &&
+                  p(co + 1) >= '0' && p(co + 1) <= '9' &&
+                  p(co + 2) == 'd' &&
+                  (p(co + 3) == 'c' || p(co + 3) == 'b')) {
+                val frame = java.util.Arrays.copyOfRange(
+                  p, co + 8, co + 8 + csz.toInt)
+                val marks = jpegMarkers(frame)
+                val sums = jpegPixels(frame, marks, new ChannelSums)
+                  .getOrElse(new Array[Long](3))
+                out += ((n, csz,
+                  marks.map(_._1.width).getOrElse(0L),
+                  marks.map(_._1.height).getOrElse(0L), sums))
+                n += 1
               }
-              y += 1
+              c += 8L + csz + (csz & 1L)
             }
-            Some((w, h, grid))
           }
-        } catch { case scala.util.control.NonFatal(_) => None }
+          off += 8L + size + (size & 1L)
+        }
+        if (sawMovi) Some(out.result()) else None
       }
 
     /** Magic-dispatch gray grid over the four image arms. */
@@ -1496,22 +1284,21 @@ object Multimodal {
 
   /** Feature decoder at the per-partition batch boundary. The
     * dispatch is REAL, content included: payloads recognized by
-    * [[HeaderCodec]] (BMP / PNG / GIF / WAV / JPEG — public byte
-    * layouts, parsed, not stubbed) emit
+    * [[HeaderCodec]] (BMP / PNG / GIF / WAV / JPEG / AVI / MP4 —
+    * public byte layouts, parsed, not stubbed) emit
     * `[formatTag, width, height, depth, nBytes, c5, c6, c7]` (tags:
-    * 1 BMP, 2 PNG, 3 GIF, 4 WAV, 5 JPEG) where the content slots
-    * c5..c7 are REAL decoded statistics when the payload stores data
-    * the JDK can reach — 24-bpp BI_RGB BMP: per-channel pixel sums
-    * (ΣB, ΣG, ΣR), row padding excluded; 8-bit RGB PNG: per-channel
-    * pixel sums (ΣR, ΣG, ΣB) through REAL zlib inflate + all-five
-    * filter reversal ([[HeaderCodec.pngRgb8ChannelSums]]); WAVE
-    * (16-bit PCM, G.711 μ-law/A-law, or IMA/MS ADPCM): (sample count,
-    * Σ|s|, Σs²) over the decoded linear samples; GIF: per-channel
-    * sums of the first frame's palette-resolved pixels through a
-    * REAL spec-implemented LZW decoder
-    * ([[HeaderCodec.gifFirstFramePixelSums]]); JPEG: per-channel
-    * sums through the JDK's own ImageIO baseline decoder
-    * ([[HeaderCodec.jpegChannelSums]]) — and 0 for what's left
+    * 1 BMP, 2 PNG, 3 GIF, 4 WAV, 5 JPEG, 6 AVI, 7 MP4) where the
+    * content slots c5..c7 are REAL decoded statistics when the
+    * payload stores data the JDK can reach. Each image arm is the
+    * channel-sum sink over its format's one pixel decode (the
+    * decode m08's gray grids also read): 24-bpp BI_RGB BMP
+    * (ΣB, ΣG, ΣR — storage order; row padding excluded), every PNG
+    * depth × color type × interlace through JDK zlib inflate +
+    * all-five filter reversal, GIF's first frame through a
+    * spec-implemented LZW decoder, and JPEG through the JDK's own
+    * ImageIO baseline decoder — each (ΣR, ΣG, ΣB). WAVE (16-bit
+    * PCM, G.711 μ-law/A-law, or IMA/MS ADPCM) gives (sample count,
+    * Σ|s|, Σs²) over the decoded linear samples. What's left is 0
     * (DCT video and MP3/AAC audio — the true transform codecs;
     * MJPEG-in-AVI pixel frames decode via
     * [[extractMjpegFrames]]'s per-frame fan-out, not this
@@ -1645,30 +1432,35 @@ object Multimodal {
       .select("media_id", "chunk_idx", "chunk")
   }
 
-  /** Partition-wise feature extraction: the decode runs inside
-    * `mapPartitions` so a real codec amortizes per-partition init
-    * (model load, codec context) exactly like a Pandas-UDF batch
-    * would. Output keeps (media_id, features, n_bytes).
-    */
-  def extractFeatures(spark: SparkSession, media: DataFrame)
-    : DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("n_bytes", LongType),
-      StructField("features", ArrayType(DoubleType)))))
-    val ds: Dataset[Row] = media
-      .select(col("media_id").cast("long"), col("payload"),
-        col("meta.n_bytes").as("n_bytes"))
-      .mapPartitions { rows =>
-        // per-partition init happens here (codec/model load)
-        rows.map { r =>
-          val feats = Decoder.decode(r.getAs[Array[Byte]]("payload"))
-          Row(r.getAs[Long]("media_id"), r.getAs[Long]("n_bytes"),
-            feats.toSeq)
-        }
-      }(enc)
-    ds.toDF()
+  /** The one per-partition decode boundary behind every `extract*`:
+    * the decode runs inside `mapPartitions`, so a real codec
+    * amortizes per-partition init (model load, codec context)
+    * exactly like a Pandas-UDF batch would, and payload bytes reach
+    * it once. `decode` turns one input row — `media_id` (as long),
+    * `payload`, then the `extra` columns — into zero or more rows of
+    * `fields`. */
+  private def atDecodeBoundary(media: DataFrame,
+                               fields: Seq[(String, DataType)],
+                               extra: Column*)(
+      decode: Row => Iterator[Row]): DataFrame = {
+    val enc = org.apache.spark.sql.Encoders.row(StructType(
+      fields.map { case (name, tpe) => StructField(name, tpe) }))
+    media.select(col("media_id").cast("long") +: col("payload") +: extra: _*)
+      .mapPartitions(_.flatMap(decode))(enc)
+      .toDF()
   }
+
+  /** Partition-wise feature extraction ([[Decoder.decode]] at the
+    * decode boundary). Output keeps (media_id, n_bytes, features).
+    */
+  def extractFeatures(media: DataFrame): DataFrame =
+    atDecodeBoundary(media, Seq("media_id" -> LongType,
+        "n_bytes" -> LongType, "features" -> ArrayType(DoubleType)),
+      col("meta.n_bytes").as("n_bytes")) { r =>
+      val feats = Decoder.decode(r.getAs[Array[Byte]]("payload"))
+      Iterator.single(Row(r.getAs[Long]("media_id"),
+        r.getAs[Long]("n_bytes"), feats.toSeq))
+    }
 
   /** Per-FRAME feature extraction at the same per-partition decode
     * boundary as [[extractFeatures]], fanning each payload out to
@@ -1680,26 +1472,15 @@ object Multimodal {
     * rows, never payload bytes again — so the downstream media-keyed
     * aggregate shuffles ~40 B/frame regardless of media size.
     */
-  def extractFrameFeatures(spark: SparkSession, media: DataFrame)
-    : DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("mime", StringType),
-      StructField("frame_idx", LongType),
-      StructField("n_units", LongType),
-      StructField("energy", LongType))))
-    val ds: Dataset[Row] = media
-      .select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getAs[Long]("media_id")
-          Decoder.frames(r.getAs[Array[Byte]]("payload")).map {
-            case (mime, idx, n, e) => Row(id, mime, idx, n, e)
-          }
-        }
-      }(enc)
-    ds.toDF()
-  }
+  def extractFrameFeatures(media: DataFrame): DataFrame =
+    atDecodeBoundary(media, Seq("media_id" -> LongType,
+        "mime" -> StringType, "frame_idx" -> LongType,
+        "n_units" -> LongType, "energy" -> LongType)) { r =>
+      val id = r.getAs[Long]("media_id")
+      Decoder.frames(r.getAs[Array[Byte]]("payload")).map {
+        case (mime, idx, n, e) => Row(id, mime, idx, n, e)
+      }
+    }
 
   /** The per-media energy fold over frame rows `(media_id, mime,
     * n_units, energy)`, grouped by `keys` then (media_id, mime) — m04
@@ -1751,31 +1532,16 @@ object Multimodal {
     * shape identical to [[extractFrameFeatures]]: payload bytes
     * reach the boundary once and never shuffle — what leaves is
     * ~56 B/frame of fixed-width integers. */
-  def extractMjpegFrames(spark: SparkSession, media: DataFrame)
-    : DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", LongType),
-      StructField("frame_bytes", LongType),
-      StructField("w", LongType),
-      StructField("h", LongType),
-      StructField("sum_r", LongType),
-      StructField("sum_g", LongType),
-      StructField("sum_b", LongType))))
-    val ds: Dataset[Row] = media
-      .select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val id = r.getAs[Long]("media_id")
-          HeaderCodec.aviMjpegFrames(r.getAs[Array[Byte]]("payload"))
-            .getOrElse(Vector.empty).map {
-              case (idx, nb, w, h, s) =>
-                Row(id, idx, nb, w, h, s(0), s(1), s(2))
-            }
+  def extractMjpegFrames(media: DataFrame): DataFrame =
+    atDecodeBoundary(media, Seq("media_id", "frame_idx", "frame_bytes",
+        "w", "h", "sum_r", "sum_g", "sum_b").map(_ -> LongType)) { r =>
+      val id = r.getAs[Long]("media_id")
+      HeaderCodec.aviMjpegFrames(r.getAs[Array[Byte]]("payload"))
+        .getOrElse(Vector.empty).iterator.map {
+          case (idx, nb, w, h, s) =>
+            Row(id, idx, nb, w, h, s(0), s(1), s(2))
         }
-      }(enc)
-    ds.toDF()
-  }
+    }
 
   /** Perceptual dHash per media at the one-mapPartitions decode
     * boundary (m08): payload bytes → gray1000 grid
@@ -1785,24 +1551,13 @@ object Multimodal {
     * size, so downstream banding shuffles longs, never pixels.
     * Undecodable payloads are dropped (the hash exists only for
     * decoded pixels — no guessed hashes, the MS-ADPCM contract). */
-  def extractDHashes(spark: SparkSession, media: DataFrame)
-    : DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("w", LongType),
-      StructField("h", LongType),
-      StructField("dhash", LongType))))
-    val ds: Dataset[Row] = media
-      .select(col("media_id").cast("long"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          HeaderCodec.grayGrid(r.getAs[Array[Byte]]("payload"))
-            .map { case (w, h, grid) =>
-              Row(r.getAs[Long]("media_id"), w.toLong, h.toLong,
-                HeaderCodec.dHash64(w, h, grid))
-            }
+  def extractDHashes(media: DataFrame): DataFrame =
+    atDecodeBoundary(media,
+      Seq("media_id", "w", "h", "dhash").map(_ -> LongType)) { r =>
+      HeaderCodec.grayGrid(r.getAs[Array[Byte]]("payload")).iterator
+        .map { case (w, h, grid) =>
+          Row(r.getAs[Long]("media_id"), w.toLong, h.toLong,
+            HeaderCodec.dHash64(w, h, grid))
         }
-      }(enc)
-    ds.toDF()
-  }
+    }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 import graft.Queries
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for a set of registered queries —
   * the plans/r{N}/<query>_{before,after}.txt evidence the round
@@ -24,11 +23,7 @@ object ExplainDump {
     val only = args.lift(3)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     Queries.all.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -39,13 +39,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sf = args(1).toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, outDir, sf)
     spark.stop()

@@ -37,14 +37,7 @@ object GraphLoopBench {
     val dir = args.headOption.getOrElse("/tmp/glb")
     val mode = if (args.length > 1) args(1) else "default"
     val outDir = if (args.length > 2) args(2) else "plans/r16"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", 2000)
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
     if (mode == "gen") { gen(spark, dir); spark.stop(); return }
 

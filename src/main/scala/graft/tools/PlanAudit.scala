@@ -111,10 +111,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("ERROR")
     val all = auditAll(spark, sfDir)
     all.toSeq.sortBy(_._1).foreach { case (name, m) =>

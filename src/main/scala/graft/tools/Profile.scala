@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Queries
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc profiler: `runMain graft.tools.Profile <query>[,<query>…]
   * [sfDir] [--explain]` — times each named query (count()) after a
@@ -13,14 +12,7 @@ object Profile {
     val sfDir = if (args.length > 1 && !args(1).startsWith("--")) args(1)
       else "/root/testdata/sf0.001"
     val explain = args.contains("--explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", 2000)
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
     // warmup: JVM + codegen + parquet footer caches
     Queries.all("q02_agg_group")(spark, sfDir).count()

@@ -36,14 +36,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val dataDir = args(0)
     val out = args.lift(1).getOrElse("/tmp/graft_skewbench.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", 2000)
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.streaming.Streams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput probe: drives the watermarked operators with
@@ -37,22 +36,16 @@ object StreamBench {
     // optional 5th arg: only run pipelines whose name contains this
     // substring (local iteration — a full run drives everything)
     val only = if (args.length > 4) args(4) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SparkEntry.localSession()
     if (provider == "rocksdb") {
-      builder.config("spark.sql.streaming.stateStore.providerClass",
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
       // changelog checkpointing: per-batch upload = the delta, not a
       // full snapshot — the production setting for frequent triggers
-      builder.config("spark.sql.streaming.stateStore.rocksdb." +
+      spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled", "true")
     }
-    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // rate-micro-batch: exactly rowsPerBatch rows per trigger, value

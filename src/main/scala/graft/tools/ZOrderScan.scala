@@ -71,13 +71,7 @@ object ZOrderScan {
   def main(args: Array[String]): Unit = {
     val dataDir = args(0)
     val out = args.lift(1).getOrElse("/tmp/graft_zorder.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
 
     val li = spark.read.parquet(s"$dataDir/lineitem.parquet")

@@ -136,6 +136,13 @@ class MultimodalCodecSpec extends SparkSpec {
     assert(HeaderCodec.bmp24ChannelSums(rle) === None)
     assert(Multimodal.Decoder.decode(rle).toList.drop(5) ===
       List(0d, 0d, 0d))
+    assert(HeaderCodec.bmp24GrayGrid(rle) === None)
+    // zero width: the sums see no pixels, the grid rejects the image
+    val zeroW = bmp2x2.clone()
+    (18 to 21).foreach(zeroW(_) = 0)
+    assert(HeaderCodec.bmp24ChannelSums(zeroW).map(_.toList) ===
+      Some(List(0L, 0L, 0L)))
+    assert(HeaderCodec.bmp24GrayGrid(zeroW) === None)
   }
 
   // 3×5 8-bit RGB PNG, REAL deflate + CRCs, one row per FILTER TYPE

@@ -172,6 +172,10 @@ class MultimodalFuzzSpec extends SparkSpec {
       assert(got.exists(_.toList == want.toList),
         s"trial $trial type=$colorType depth=$depth w=$w h=$h " +
           s"i=$interlace got=$got want=${want.toList}")
+      // the gray grid's domain: 8-bit, non-interlaced only
+      assert(HeaderCodec.pngGrayGrid(png).isDefined ==
+        (depth == 8 && interlace == 0),
+        s"trial $trial grid domain depth=$depth i=$interlace")
     }
   }
 

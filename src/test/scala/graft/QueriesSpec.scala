@@ -50,11 +50,11 @@ class QueriesSpec extends SparkSpec {
     val media = Multimodal.asMedia(
       graft.sources.Tables(spark, sf("sf0.001"), "documents"),
       "doc_id", "text")
-    val feats = Multimodal.extractFeatures(spark, media)
+    val feats = Multimodal.extractFeatures(media)
     val row = feats.filter("media_id = 0").collect()(0)
     val f = row.getSeq[Double](row.fieldIndex("features")).toList
     assert(f.length == Multimodal.Decoder.featureDim)
-    val r2 = Multimodal.extractFeatures(spark, media)
+    val r2 = Multimodal.extractFeatures(media)
       .filter("media_id = 0").collect()(0)
     assert(f == r2.getSeq[Double](r2.fieldIndex("features")).toList)
   }

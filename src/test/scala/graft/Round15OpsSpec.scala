@@ -48,7 +48,7 @@ class Round15OpsSpec extends SparkSpec {
       "fixture must actually exceed the Long envelope")
     val df = Seq((1L, wav(samples))).toDF("media_id", "payload")
     val agg = graft.multimodal.Multimodal
-      .extractFrameFeatures(spark, df)
+      .extractFrameFeatures(df)
       .groupBy("media_id")
       .agg(sum("energy").as("total_energy"),
         sum("n_units").as("total_units"))

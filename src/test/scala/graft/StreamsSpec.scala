@@ -1000,7 +1000,7 @@ class StreamsSpec extends SparkSpec {
     val payloadDf = spark.createDataFrame(
       timed.map(t => (t._2, t._3)).toSeq).toDF("media_id", "payload")
     val batch = graft.multimodal.Multimodal
-      .extractFrameFeatures(spark, payloadDf)
+      .extractFrameFeatures(payloadDf)
       .withColumn("frame_rms_milli",
         isqrtC(expr("(1000000 * energy) DIV n_units")))
       .groupBy("media_id", "mime")
