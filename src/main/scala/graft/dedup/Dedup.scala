@@ -87,17 +87,20 @@ object Dedup {
     * property — is reproducible in ANY engine with md5 (the DuckDB
     * oracle computes the identical signature). No RNG, no JVM-specific
     * hashing in the result.
+    *
+    * This interpreted chain (per seed a `transform` + `array_min`,
+    * none of it codegen'd) is the REFERENCE definition: the streaming
+    * near-dup twins compute their band keys with the fused
+    * [[org.apache.spark.sql.graft.MinhashBandKeys]] expression, which
+    * DedupSpec pins, row for row, equal to [[lshBandKeys]] over this
+    * signature of the doc's distinct word shingles. Keep this body as
+    * it is.
     */
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     transform(sequence(lit(0), lit(numHashes - 1)),
       seed => array_min(transform(shingles,
         s => md5(concat(seed.cast("string"), lit(":"), s)))))
 
-  /** The min-aggregate column per seed of the md5(seed:shingle)
-    * family — THE oracle-parity-critical construction (seed format,
-    * separator, hash fn are mirrored literally by the DuckDB oracle),
-    * shared by every aggregate-form minhash consumer so it cannot
-    * silently fork. */
   /** Per-DISTINCT-shingle hash attach (guide §1.2 per-task work):
     * a signature hash family that evaluates expressions of the
     * SHINGLE alone per POSTING row repeats each distinct shingle's
@@ -139,6 +142,11 @@ object Dedup {
     postings.join(side, Seq("shingle"))
   }
 
+  /** The min-aggregate column per seed of the md5(seed:shingle)
+    * family — THE oracle-parity-critical construction (seed format,
+    * separator, hash fn are mirrored literally by the DuckDB oracle),
+    * shared by every aggregate-form minhash consumer so it cannot
+    * silently fork. */
   private def minhashMinExprs(numHashes: Int): Seq[Column] =
     (0 until numHashes).map(i =>
       min(md5(concat(lit(i.toString), lit(":"), col("shingle"))))
@@ -181,9 +189,6 @@ object Dedup {
         md5(concat_ws(",", slice(signature, b * rowsPerBand + 1,
           lit(rowsPerBand))))))
 
-  /** End-to-end MinHash-LSH near-dup candidate pairs with exact
-    * Jaccard verification on the shingle sets.
-    */
   /** Shared MinHash-LSH plumbing for [[minhashLshPairs]] and
     * [[fuzzyDecontaminate]]: ONE doc_id shuffle computes the minhash
     * signature AND the verification shingle set (the
@@ -227,6 +232,9 @@ object Dedup {
     (combined, banded)
   }
 
+  /** End-to-end MinHash-LSH near-dup candidate pairs with exact
+    * Jaccard verification on the shingle sets.
+    */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 12,
                       bands: Int = 4, threshold: Double = 0.5,

@@ -99,11 +99,13 @@ object Multimodal {
 
     /** PNG: the fixed 8-byte signature, then the IHDR chunk (length
       * 13, type "IHDR") with u32be width @16, u32be height @20, bit
-      * depth @24, color type @25; bits-per-pixel = bit depth × the
-      * channel count implied by the color type ([[pngChannels]]). */
+      * depth @24, color type @25, compression @26, filter @27 and
+      * interlace @28; bits-per-pixel = bit depth × the channel count
+      * implied by the color type ([[pngChannels]]). The whole IHDR
+      * body must be present: the pixel decodes read bytes 26–28. */
     private def png(p: Array[Byte]): Option[MediaInfo] = {
       val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-      if (p.length >= 26 &&
+      if (p.length >= 29 &&
           sig.indices.forall(i => (p(i) & 0xff) == sig(i)) &&
           be32(p, 8) == 13L && ascii(p, 12, "IHDR"))
         pngChannels.get(u8(p, 25).toInt).map(ch =>

@@ -110,8 +110,8 @@ object Streams {
 
   /** Streaming NEAR-dup signal: the incremental form of the MinHash
     * LSH dedup family (graft.dedup). Each arriving doc computes its
-    * LSH band keys ROW-LOCALLY (codegen'd shingles → md5 minhash →
-    * band keys — no corpus-wide shuffle), then
+    * LSH band keys ROW-LOCALLY (one codegen'd expression, see
+    * [[withBandKeys]] — no corpus-wide shuffle), then
     * `dropDuplicatesWithinWatermark` keeps only first-seen band keys
     * and a windowed count per doc emits how many of its bands were
     * novel: `novel_bands == n bands` → no LSH collision with anything
@@ -129,7 +129,7 @@ object Streams {
                              bands: Int = 4): DataFrame =
     // explode the key expression itself: exploding a projected column
     // lets the optimizer infer a non-empty filter on it and push that
-    // below the projection, evaluating the minhash up to three times
+    // below the projection, evaluating the band keys three times
     withBandKeys(docs, shingleSize, numHashes, bands)(keys =>
         Seq(col("ts"), col("doc_id"), explode(keys).as("band")))
       .withWatermark("ts", lateness)
@@ -140,25 +140,23 @@ object Streams {
       .select(col("window.start").as("window_start"), col("doc_id"),
         col("novel_bands"))
 
-  /** The near-dup twins' shared prelude: `cols(keys)` per eligible
-    * doc, where `keys` is the doc's LSH band-key array computed
-    * row-locally (tokens → shingles → md5 minhash → bands).
-    * Shingle-less docs (fewer than shingleSize tokens) MUST drop
-    * here: their minhash is array_min(empty) = null per seed, so every
-    * short doc would share the md5('')-derived band keys and be
-    * silently reported as a duplicate of any other short doc. Mirrors
-    * shinglePostings' emit-nothing guard in the batch path. */
+  /** The near-dup twins' shared prelude: `cols(keys)` per doc, where
+    * `keys` is the doc's LSH band-key array from ONE codegen'd
+    * expression ([[org.apache.spark.sql.graft.MinhashBandKeys]]:
+    * tokens → shingles → md5 minhash → bands in a single pass, equal
+    * to the reference chain of [[graft.dedup.Dedup.minhashSignature]]
+    * and [[graft.dedup.Dedup.lshBandKeys]]). `keys` is NULL for a
+    * shingle-less doc (fewer than shingleSize tokens), so exploding
+    * it emits nothing: such a doc MUST drop, since its empty shingle
+    * set would otherwise give it the md5('')-derived band keys every
+    * other short doc shares, and it would be silently reported as a
+    * duplicate of any of them.
+    * Mirrors shinglePostings' emit-nothing guard in the batch path. */
   private def withBandKeys(docs: DataFrame, shingleSize: Int,
                            numHashes: Int, bands: Int)(
-      cols: Column => Seq[Column]): DataFrame = {
-    val shingles = array_distinct(
-      TextFunctions.wordShingles(col("text"), shingleSize))
-    val sig = graft.dedup.Dedup.minhashSignature(shingles, numHashes)
-    docs
-      .filter(size(TextFunctions.tokens(col("text"))) >= shingleSize)
-      .select(cols(graft.dedup.Dedup.lshBandKeys(sig, bands,
-        numHashes / bands)): _*)
-  }
+      cols: Column => Seq[Column]): DataFrame =
+    docs.select(cols(org.apache.spark.sql.graft.MinhashBandKeys.of(
+      col("text"), shingleSize, numHashes, bands)): _*)
 
   /** Streaming near-dup IMPACT: [[streamingNearDupSignal]]'s band
     * novelty chained into a windowed d17-style accounting row — per
@@ -168,10 +166,11 @@ object Streams {
     * HALF_UP suppressed-tokens ppm — the live twin of the batch
     * d17 impact report, as ONE query.
     *
-    * Shape: each eligible doc emits its exploded band-key rows PLUS
-    * one MARKER row whose key (`d|doc_id`) is doc-unique, so a
-    * single `dropDuplicatesWithinWatermark` passes every marker
-    * while keeping only first-seen bands; the first windowed
+    * Shape: each eligible doc explodes, in ONE generator over its
+    * band keys, into its band-key rows PLUS one MARKER row whose key
+    * (`d|doc_id`) is doc-unique, so a single
+    * `dropDuplicatesWithinWatermark` passes every marker while
+    * keeping only first-seen bands; the first windowed
     * aggregate folds a doc's surviving rows into (novel_bands,
     * ntok) — the marker guarantees a row exists even when ALL bands
     * were dups, which is exactly the doc the impact report must
@@ -187,21 +186,21 @@ object Streams {
                              window: String = "1 minute",
                              shingleSize: Int = 3, numHashes: Int = 12,
                              bands: Int = 4): DataFrame = {
-    val eligible = withBandKeys(docs, shingleSize, numHashes, bands)(
-      keys => Seq(col("ts"), col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("ntok"),
-        keys.as("bands")))
-    val bandRows = eligible
-      .select(col("ts"), col("doc_id"), lit(0L).as("ntok"),
-        explode(col("bands")).as("b"), lit(1L).as("is_band"))
-      .select(col("ts"), col("doc_id"), col("ntok"),
-        concat(lit("b|"), col("b")).as("k"), col("is_band"))
-    val markerRows = eligible
-      .select(col("ts"), col("doc_id"), col("ntok"),
-        concat(lit("d|"), col("doc_id").cast("string")).as("k"),
-        lit(0L).as("is_band"))
+    // one explode per eligible doc: its band keys plus a null slot
+    // that becomes the marker row (a short doc's keys are null, so it
+    // emits neither); exploding the expression itself keeps the band
+    // keys evaluated once per doc (see streamingNearDupSignal)
+    val rows = withBandKeys(docs, shingleSize, numHashes, bands)(keys =>
+        Seq(col("ts"), col("doc_id"), col("text"), explode(concat(keys,
+          array(lit(null).cast("string")))).as("b")))
+      .select(col("ts"), col("doc_id"),
+        when(col("b").isNull, TextFunctions.tokenCount(col("text")))
+          .otherwise(0L).as("ntok"),
+        coalesce(concat(lit("b|"), col("b")),
+          concat(lit("d|"), col("doc_id").cast("string"))).as("k"),
+        col("b").isNotNull.cast("long").as("is_band"))
     val winDur = window
-    bandRows.unionByName(markerRows)
+    rows
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark(Seq("k"))
       .groupBy(org.apache.spark.sql.functions

@@ -57,6 +57,81 @@ class DedupSpec extends SparkSpec {
     assert(a(1L) == a.getOrElse(2L, Nil)) // identical docs, same sig
   }
 
+  test("fused band keys == the interpreted reference chain == the " +
+    "aggregate form, row for row, codegen'd and interpreted") {
+    import graft.text.TextFunctions
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.MinhashBandKeys
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    // case-mapping traps (İ, ß, Σ and final sigma, Ǆ, fullwidth),
+    // two separators that are NOT `\s` (no-break and em space) and
+    // a tiny vocabulary so shingles repeat across and within docs
+    val words = Vector("alpha", "beta", "gamma", "the", "of", "İstanbul",
+      "IŞIK", "Straße", "STRASSE", "ß", "ΣΟΦΟΣ", "ΟΔΟΣ", "Σ", "σοφός",
+      "ǄEMAL", "ＡＢＣ", "naïve", "ÉCOLE", "日本", "a\u00a0b", "x\u2003y")
+    val seps = Vector(" ", " ", " ", "  ", "\t", "\n", " \t ", "\r\n",
+      "\u000b", "\u000c")
+    val rnd = new scala.util.Random(611L)
+    def sep = seps(rnd.nextInt(seps.size))
+    def randomDoc: String = {
+      val toks = if (rnd.nextInt(5) == 0) { // a repeated phrase
+        val phrase = Vector.fill(2 + rnd.nextInt(2))(
+          words(rnd.nextInt(words.size)))
+        Vector.fill(2 + rnd.nextInt(3))(phrase).flatten
+      } else Vector.fill(rnd.nextInt(12))(words(rnd.nextInt(words.size)))
+      val body = toks.map(t => t + sep).mkString.dropRight(1)
+      (if (rnd.nextBoolean()) sep else "") + body +
+        (if (rnd.nextBoolean()) sep else "")
+    }
+    val fixed = Seq(None, Some(""), Some("   "), Some(" \t\n "),
+      Some("two tokens"), Some("three tokens here"),
+      Some("exactly four tokens here"), Some("  İ ß  Σ\t"),
+      Some("a b c a b c a b c"), Some("ΟΔΟΣ ΣΟΦΟΣ Σ ΣΣ"))
+    val texts = (fixed ++ Seq.fill(2000)(Some(randomDoc))).toVector
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val reference = df
+      .filter(size(TextFunctions.tokens(col("text"))) >= 3)
+      .select(col("doc_id"), Dedup.lshBandKeys(Dedup.minhashSignature(
+        array_distinct(TextFunctions.wordShingles(col("text"), 3)), 12),
+        4, 3))
+      .as[(Long, Seq[String])].collect().toMap
+    val aggregate = Dedup.minhashSignatures(TextFunctions.shinglePostings(
+        df, "doc_id", "text", 3, distinct = true), 12)
+      .select(col("doc_id"), Dedup.lshBandKeys(col("sig"), 4, 3))
+      .as[(Long, Seq[String])].collect().toMap
+    // short, empty and null docs get null keys, never md5('') ones
+    val want = texts.indices.map(i => i.toLong -> reference.get(i)).toMap
+    def diff(got: Map[Long, Option[Seq[String]]]) =
+      texts.indices.filter(i => got(i.toLong) != want(i.toLong))
+        .map(i => s"doc $i ${texts(i)}: ${got(i.toLong)} vs ${want(i.toLong)}")
+    def fused() = df
+      .select(col("doc_id"), MinhashBandKeys.of(col("text"), 3, 12, 4))
+      .as[(Long, Option[Seq[String]])].collect().toMap
+    // non-vacuous: both eligible and short docs occur
+    assert(reference.size > 1000 && reference.size < texts.size - 100)
+    assert(diff(aggregate.map { case (k, v) => k -> Option(v) }
+      .withDefaultValue(None)).isEmpty)
+    assert(diff(fused()).isEmpty, diff(fused()).take(5))
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(diff(fused()).isEmpty, diff(fused()).take(5))
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    // and the expression's own eval, called directly
+    val evaled = texts.zipWithIndex.map { case (t, i) =>
+      i.toLong -> Option(MinhashBandKeys(Lower(Literal(
+          UTF8String.fromString(t.orNull), StringType)), 3, 12, 4).eval())
+        .map(_.asInstanceOf[ArrayData].toSeq[Any](StringType)
+          .map(_.toString))
+    }.toMap
+    assert(diff(evaled).isEmpty, diff(evaled).take(5))
+  }
+
   test("bandsFor picks the fewest recall-preserving bands") {
     // maxHamming 3 → 4 bands of 16 bits (262 144 bucket keys)
     assert(Dedup.bandsFor(64, 3) == 4)

@@ -106,6 +106,19 @@ class MultimodalCodecSpec extends SparkSpec {
     assert(HeaderCodec.probe(null) === None)
   }
 
+  test("PNG cut inside the IHDR body is None from every entry point") {
+    // 26–28 bytes hold width, height, depth and color type but not
+    // compression / filter / interlace (@26–28), which the pixel
+    // decodes read
+    for (n <- 26 to 28) {
+      val cut = png1x1.take(n)
+      assert(HeaderCodec.probe(cut) === None, s"probe, $n bytes")
+      assert(HeaderCodec.pngRgb8ChannelSums(cut) === None,
+        s"channel sums, $n bytes")
+      assert(HeaderCodec.pngGrayGrid(cut) === None, s"gray grid, $n bytes")
+    }
+  }
+
   test("decode dispatches: containers → header features, else lanes") {
     // 2×2 24-bpp BMP: white,white / black,black → each channel sums
     // to 255+255 = 510 over the 4 pixels (row padding EXCLUDED)

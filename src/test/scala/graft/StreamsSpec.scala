@@ -364,6 +364,53 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("near-dup twins: the band keys are one codegen'd expression, " +
+    "planned once per doc") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+    import org.apache.spark.sql.graft.MinhashBandKeys
+    // the plan of the batch that carried the docs: a no-data batch
+    // after it (the watermark moved) would prune to an empty relation
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    def lastRun(name: String)(f: DataFrame => DataFrame) = {
+      val mem = MemoryStream[(Timestamp, Long, String)]
+      spark.conf.set(noData, "false")
+      val q = try f(mem.toDF().toDF("ts", "doc_id", "text"))
+          .writeStream.format("memory").queryName(name)
+          .outputMode(OutputMode.Append()).start()
+        finally spark.conf.unset(noData)
+      try {
+        mem.addData((ts(1), 1L, "alpha beta gamma delta"),
+          (ts(2), 2L, "too short"))
+        q.processAllAvailable()
+        PlanPin.lastExecution(q)
+      } finally q.stop()
+    }
+    val signal = lastRun("pin_signal")(
+      Streams.streamingNearDupSignal(_, lateness = "5 minutes"))
+    val impact = lastRun("pin_impact")(
+      Streams.streamingNearDupImpact(_, lateness = "5 minutes"))
+    assert(PlanPin.interpreted(signal.executedPlan).isEmpty,
+      signal.executedPlan.treeString)
+    // allowed: ntok is TextFunctions.tokenCount, whose `filter` over
+    // the tokens is batch d17's definition of a doc's token count —
+    // the impact rows must count tokens exactly as d17 does
+    val impInterp = PlanPin.interpreted(impact.executedPlan)
+    assert(impInterp.nonEmpty && impInterp.forall {
+      case f: ArrayFilter =>
+        f.argument.references.map(_.name).toSet == Set("text")
+      case _ => false
+    }, impInterp.mkString("\n"))
+    for (e <- Seq(signal, impact)) {
+      val k = classOf[MinhashBandKeys]
+      assert(PlanPin.occurrences(e.optimizedPlan, k) == 1,
+        e.optimizedPlan.treeString)
+      assert(PlanPin.occurrences(e.executedPlan, k) == 1,
+        e.executedPlan.treeString)
+    }
+  }
+
   test("sessionWindowStats emits closed sessions under the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, Long, Double)]
