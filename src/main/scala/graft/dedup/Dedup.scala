@@ -115,9 +115,9 @@ object Dedup {
     * side broadcasts under the house byte gate (EXACT count ×
     * estimated row width vs ~100 MB); past it the equi-join shuffles
     * both sides, and the map-side partial aggregation above still
-    * collapses per doc. The small distinct table persists for its
-    * two consumers (count + join build) and is released by the
-    * session cache clear (the HyperBall convention). Downstream
+    * collapses per doc. The small hashed table is an eager local
+    * checkpoint read by its two consumers (count + join build), so it
+    * leaves no CacheManager entry behind. Downstream
     * aggregates must stay order-insensitive (sums / set-intersect) —
     * the join does not preserve posting order.
     *
@@ -133,10 +133,11 @@ object Dedup {
   private def withShingleHashes(postings: DataFrame, rowBytes: Long,
                                 build: DataFrame => DataFrame)
     : DataFrame = {
-    val dist = postings.select(col("shingle")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = dist.count()
-    val hashed = build(dist)
+    // eager checkpoint, not persist: the table's blocks go with the
+    // returned plan, and no CacheManager entry outlives the call
+    val hashed = build(postings.select(col("shingle")).distinct())
+      .localCheckpoint(true)
+    val n = hashed.count()
     val side = if (SizePolicy.fits(n, rowBytes, SizePolicy.broadcastBytes))
       broadcast(hashed) else hashed
     postings.join(side, Seq("shingle"))

@@ -72,7 +72,8 @@ object HyperBall {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count() // consumed every round — materialize once
+    // the first action materializes the edge cache and sizes both gates
+    val (nEdges, nodesUpper) = SizePolicy.measure(e, "src", "dst")
     // RAW-EDGE exact driver finish (the PageRank/LabelPropagation
     // economics): at ≤ driverFinishMaxEdges edge ROWS, the register
     // init (md5 digit-for-digit) and the per-round byte-max merges
@@ -97,11 +98,10 @@ object HyperBall {
     // once and the state side carries a shuffled-hash hint. The
     // state's node set only grows: it starts at the distinct sources
     // and can reach every distinct endpoint, so the gate bounds it by
-    // |distinct src ∪ dst| (one aggregate over the cache, amortized
-    // over all rounds). Spec-pinned: broadcast == fallback == driver
-    // finish (Round16OpsSpec).
+    // |distinct src ∪ dst| (the measured upper estimate). Spec-pinned:
+    // broadcast == fallback == driver finish (Round16OpsSpec).
     val nodes = e.select(col("src").as("node")).distinct()
-    val bcastState = SizePolicy.fits(SizePolicy.nodeCount(e, "src", "dst"),
+    val bcastState = SizePolicy.fits(nodesUpper,
       SizePolicy.registerRowBytes, maxBroadcastBytes)
     val (j, rho) = HllRegisters.register(col("node"))
     var state = nodes.select(col("node"), hllInit(j, rho).as("regs"))

@@ -77,7 +77,8 @@ object Reachability {
                     SizePolicy.broadcastBytes): DataFrame = {
     val e0 = edges.select(col("child"), col("parent"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e0.count()
+    // the first action materializes the edge cache and sizes both gates
+    val (nEdges, nodesUpper) = SizePolicy.measure(e0, "child", "parent")
     if (nEdges <= driverFinishMaxEdges) return driverFinish(e0, targets)
     // Per-round join-side policy (SizePolicy, guide §2.4/§3.1): the
     // reach set is node-sized and its count is FREE (the convergence
@@ -87,8 +88,7 @@ object Reachability {
     // pre-partition the edge cache on the join key (parent) once and
     // hint shuffled-hash on the reach side. Spec-pinned: broadcast ==
     // fallback == driver finish (Round16OpsSpec).
-    val allFit = SizePolicy.fits(
-      SizePolicy.nodeCount(e0, "child", "parent"),
+    val allFit = SizePolicy.fits(nodesUpper,
       SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
     var reach = targets.select(col("node")).distinct()
       .localCheckpoint(true)

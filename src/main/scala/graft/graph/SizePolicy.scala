@@ -1,7 +1,10 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 /** The one place a size cap lives and a size gate is decided — for the
@@ -12,11 +15,22 @@ import org.apache.spark.storage.StorageLevel
   * bytes (rows × per-row hashed-relation cost) against a ~100 MB cap,
   * the cost every executor pays for a broadcast side. Below the cap a
   * loop's node-sized state broadcasts, so the cached edge list is
-  * never re-exchanged or sorted in any round; above it the edge cache
-  * is pre-partitioned on the join key once ([[loopEdges]]) and the
-  * state side carries a shuffled-hash hint, so the streamed edge side
-  * stays sort-free (guide §2.4/§3.1). Both branches are spec-pinned
-  * equal to the driver finish (Round16OpsSpec).
+  * never re-exchanged or sorted in any round (Bfs goes further: its
+  * state stays on the driver and each hop is one scan job); above it
+  * the edge cache is pre-partitioned on the join key once
+  * ([[loopEdges]]) and the state side carries a shuffled-hash hint,
+  * so the streamed edge side stays sort-free (guide §2.4/§3.1). Both
+  * branches are spec-pinned equal to the driver finish
+  * (Round16OpsSpec).
+  *
+  * A loop sizes its persisted edge cache with [[measure]]: the one
+  * action that materializes the cache also returns its exact row
+  * count (the driver-finish gate) and an upper estimate of its
+  * distinct endpoints (the node-state gate), with no shuffle. The
+  * estimate is HyperLogLog++ at [[nodesRsd]] inflated by
+  * [[nodesMargin]]; it replaces `nodeCount`, the exact `|src ∪ dst|`
+  * count that cost a second scan of the cache plus a distinct shuffle
+  * on top of the materializing `count()`.
   *
   * Operators keep their per-call `driverFinishMaxEdges` /
   * `maxBroadcastBytes` parameters only so specs and
@@ -71,10 +85,41 @@ private[graft] object SizePolicy {
       ep
     }
 
-  /** Distinct nodes among all endpoints (`a` ∪ `b`) of an edge frame:
-    * the bound on any node-sized loop state, which can reach pure
-    * sinks as well as sources. */
-  def nodeCount(e: DataFrame, a: String, b: String): Long =
-    e.select(col(a).as("node")).union(e.select(col(b).as("node")))
-      .distinct().count()
+  /** Relative standard deviation of the [[measure]] node estimate
+    * (HyperLogLog++ with 2^14 registers, ~13 KB per task). */
+  val nodesRsd: Double = 0.01
+
+  /** Inflation of the [[measure]] node estimate: five standard
+    * deviations, so the bound undercounts only with negligible
+    * probability. */
+  val nodesMargin: Double = 0.05
+
+  /** `(rows, nodesUpper)` of a persisted edge frame in one pass:
+    * the exact row count, and an upper estimate of the distinct
+    * endpoints `a` ∪ `b` — the bound on any node-sized loop state,
+    * which can reach pure sinks as well as sources. The pass is one
+    * job over the cached rows whose per-task sketches merge on the
+    * driver, so no shuffle; it leaves the cache materialized for
+    * the loop that follows. */
+  def measure(e: DataFrame, a: String, b: String): (Long, Long) = {
+    val (ta, tb) = (e.schema(a).dataType, e.schema(b).dataType)
+    val hll = new HyperLogLogPlusPlusHelper(nodesRsd)
+    def registers = new SpecificInternalRow(Seq.fill(hll.numWords)(LongType))
+    val parts = e.select(col(a), col(b)).queryExecution.toRdd
+      .mapPartitions { it =>
+        val regs = registers
+        var n = 0L
+        it.foreach { r =>
+          n += 1
+          if (!r.isNullAt(0)) hll.update(regs, 0, r.get(0, ta), ta)
+          if (!r.isNullAt(1)) hll.update(regs, 0, r.get(1, tb), tb)
+        }
+        Iterator.single((n, regs))
+      }
+      .collect()
+    val regs = registers
+    parts.foreach(p => hll.merge(regs, p._2, 0, 0))
+    val rows = parts.map(_._1).sum
+    (rows, math.ceil(hll.query(regs, 0) * (1 + nodesMargin)).toLong)
+  }
 }

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *
   *   - mode `gen`:      write <dir>/edges.parquet
   *   - mode `default`:  the branch graph.SizePolicy's byte gate picks
-  *                      (here: state broadcasts — 300K nodes × 48 B
-  *                      ≈ 14 MB < the 100 MB cap)
+  *                      (here: under the cap — 300K nodes × 48 B
+  *                      ≈ 14 MB < 100 MB): the state broadcasts, and
+  *                      for bfs4 it stays on the driver, one edge-scan
+  *                      job per hop
   *   - mode `fallback`: `maxBroadcastBytes = 0` — pre-partitioned
   *                      edge cache + shuffled-hash state side
   *   - mode `plans`:    dump `.explain("formatted")` of one

@@ -39,6 +39,18 @@ class DedupSpec extends SparkSpec {
     assert(!got.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
+  test("simhashSignatures leaves no cache entry behind") {
+    spark.sharedState.cacheManager.clearCache()
+    val sigs = Dedup.simhashSignatures(
+      graft.text.TextFunctions.shinglePostings(docs, "doc_id", "text", 3,
+        distinct = true))
+      .as[(Long, Long)].collect()
+    assert(sigs.length == 4 && sigs.find(_._1 == 1L) == sigs.find(_._1 == 2L)
+      .map(_.copy(_1 = 1L)))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "simhashSignatures left a CacheManager entry")
+  }
+
   test("simhashPairs: identical docs have hamming 0") {
     val got = Dedup.simhashPairs(docs, "doc_id", "text",
         shingleSize = 3, maxHamming = 0)
