@@ -18,6 +18,10 @@ import org.apache.spark.sql.types.DataType
   * as collected: a duplicate row is a duplicate neighbour, a self-loop
   * its own neighbour. The symmetric build lists every row in both
   * directions, for the canonical undirected operators.
+  *
+  * There is one build, [[LocalGraph.fromPairs]], over two `Array[Long]`
+  * of endpoint ids; `collect` feeds it a collected edge frame, Bfs the
+  * arrays of its edge blocks.
   */
 final class LocalGraph private (val ids: Array[Long],
                                 val offsets: Array[Int],
@@ -74,21 +78,31 @@ object LocalGraph {
   def collect(e: DataFrame, symmetric: Boolean = false): LocalGraph = {
     val Array(s, d) = e.columns.take(2)
     val rows = e.select(col(s).cast("long"), col(d).cast("long")).collect()
+    fromPairs(rows.map(_.getLong(0)), rows.map(_.getLong(1)),
+      e.sparkSession, e.schema(s).dataType, symmetric)
+  }
+
+  /** The graph of the rows `(src(k), dst(k))`, built straight from the
+    * two id arrays (Bfs collects its primitive edge blocks into them);
+    * `nodeType` is the type `toDF` maps node ids back to. */
+  def fromPairs(src: Array[Long], dst: Array[Long], spark: SparkSession,
+                nodeType: DataType, symmetric: Boolean = false): LocalGraph = {
+    require(src.length == dst.length, "src and dst differ in length")
     // endpoints indexed by first appearance in one hash pass, then
     // re-indexed by rank: only the n distinct ids are sorted
     val first = new scala.collection.mutable.LongMap[Int]()
     def index(id: Long): Int = first.getOrElseUpdate(id, first.size)
-    val (si, di) = (new Array[Int](rows.length), new Array[Int](rows.length))
-    for (k <- rows.indices) {
-      si(k) = index(rows(k).getLong(0))
-      di(k) = index(rows(k).getLong(1))
+    val (si, di) = (new Array[Int](src.length), new Array[Int](src.length))
+    for (k <- src.indices) {
+      si(k) = index(src(k))
+      di(k) = index(dst(k))
     }
     val n = first.size
     val byFirst = new Array[Long](n)
     first.foreachEntry((id, p) => byFirst(p) = id)
     val ids = byFirst.sorted
     val rank = byFirst.map(java.util.Arrays.binarySearch(ids, _))
-    for (k <- rows.indices) { si(k) = rank(si(k)); di(k) = rank(di(k)) }
+    for (k <- src.indices) { si(k) = rank(si(k)); di(k) = rank(di(k)) }
     val (from, to) =
       if (symmetric) (Array.concat(si, di), Array.concat(di, si))
       else (si, di)
@@ -101,7 +115,6 @@ object LocalGraph {
       targets(fill(from(k))) = to(k)
       fill(from(k)) += 1
     }
-    new LocalGraph(ids, offsets, targets, e.sparkSession,
-      e.schema(s).dataType)
+    new LocalGraph(ids, offsets, targets, spark, nodeType)
   }
 }

@@ -1,10 +1,11 @@
 package graft.graph
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 /** The one place a size cap lives and a size gate is decided — for the
@@ -23,14 +24,14 @@ import org.apache.spark.storage.StorageLevel
   * branches are spec-pinned equal to the driver finish
   * (Round16OpsSpec).
   *
-  * A loop sizes its persisted edge cache with [[measure]]: the one
-  * action that materializes the cache also returns its exact row
-  * count (the driver-finish gate) and an upper estimate of its
-  * distinct endpoints (the node-state gate), with no shuffle. The
-  * estimate is HyperLogLog++ at [[nodesRsd]] inflated by
-  * [[nodesMargin]]; it replaces `nodeCount`, the exact `|src ∪ dst|`
-  * count that cost a second scan of the cache plus a distinct shuffle
-  * on top of the materializing `count()`.
+  * A loop sizes its persisted edge cache in the one action that
+  * materializes it: that job also returns the exact row count (the
+  * driver-finish gate) and an upper estimate of the distinct
+  * endpoints (the node-state gate), with no shuffle. The estimate is
+  * HyperLogLog++ at [[nodesRsd]] inflated by [[nodesMargin]], and one
+  * helper, [[sketch]], holds that arithmetic for every edge format:
+  * [[measure]] runs it over a persisted frame (HyperBall,
+  * Reachability), Bfs over its primitive edge blocks.
   *
   * Operators keep their per-call `driverFinishMaxEdges` /
   * `maxBroadcastBytes` parameters only so specs and
@@ -97,29 +98,41 @@ private[graft] object SizePolicy {
   /** `(rows, nodesUpper)` of a persisted edge frame in one pass:
     * the exact row count, and an upper estimate of the distinct
     * endpoints `a` ∪ `b` — the bound on any node-sized loop state,
-    * which can reach pure sinks as well as sources. The pass is one
-    * job over the cached rows whose per-task sketches merge on the
-    * driver, so no shuffle; it leaves the cache materialized for
-    * the loop that follows. */
+    * which can reach pure sinks as well as sources. It leaves the
+    * cache materialized for the loop that follows. */
   def measure(e: DataFrame, a: String, b: String): (Long, Long) = {
     val (ta, tb) = (e.schema(a).dataType, e.schema(b).dataType)
+    sketch(e.select(col(a), col(b)).queryExecution.toRdd) { (rows, add) =>
+      var n = 0L
+      rows.foreach { r =>
+        n += 1
+        if (!r.isNullAt(0)) add(r.get(0, ta), ta)
+        if (!r.isNullAt(1)) add(r.get(1, tb), tb)
+      }
+      n
+    }
+  }
+
+  /** `(rows, nodesUpper)` over the partitions of `parts` in one job,
+    * with no shuffle: `scan` walks one partition, passes every
+    * endpoint to `add` and returns its row count. Each task keeps one
+    * set of HLL++ registers at [[nodesRsd]]; they merge on the driver
+    * and the estimate is inflated by [[nodesMargin]]. The one sketch
+    * behind [[measure]] and Bfs's edge blocks; the job materializes
+    * whatever persist `parts` reads. */
+  def sketch[T](parts: RDD[T])(
+      scan: (Iterator[T], (Any, DataType) => Unit) => Long): (Long, Long) = {
     val hll = new HyperLogLogPlusPlusHelper(nodesRsd)
     def registers = new SpecificInternalRow(Seq.fill(hll.numWords)(LongType))
-    val parts = e.select(col(a), col(b)).queryExecution.toRdd
-      .mapPartitions { it =>
+    val sized = parts.mapPartitions { it =>
         val regs = registers
-        var n = 0L
-        it.foreach { r =>
-          n += 1
-          if (!r.isNullAt(0)) hll.update(regs, 0, r.get(0, ta), ta)
-          if (!r.isNullAt(1)) hll.update(regs, 0, r.get(1, tb), tb)
-        }
+        val n = scan(it, (v, t) => hll.update(regs, 0, v, t))
         Iterator.single((n, regs))
       }
       .collect()
     val regs = registers
-    parts.foreach(p => hll.merge(regs, p._2, 0, 0))
-    val rows = parts.map(_._1).sum
-    (rows, math.ceil(hll.query(regs, 0) * (1 + nodesMargin)).toLong)
+    sized.foreach(p => hll.merge(regs, p._2, 0, 0))
+    (sized.map(_._1).sum,
+      math.ceil(hll.query(regs, 0) * (1 + nodesMargin)).toLong)
   }
 }

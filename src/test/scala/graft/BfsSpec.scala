@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.spark.LocalCheckpoints
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.apache.spark.sql.types.IntegerType
 
 import graft.graph.Bfs
 
 /** Bfs.hopDistances' three branches on the edge cases of its seed
-  * guard and hop cap, and the cost shape of the driver-state rounds.
+  * guard, hop cap and null endpoints, the cost shape of the
+  * driver-state rounds, and that no edge cache outlives a call.
   * Driver finish (default gates, small graphs) == driver-state rounds
   * (`driverFinishMaxEdges = 0`) == shuffled-hash fallback (plus
   * `maxBroadcastBytes = 0`), row for row and in schema.
@@ -19,14 +22,28 @@ class BfsSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("\u0000"))
 
+  private val branches: Seq[(String, Long, Long)] = Seq(
+    ("driver finish", graft.graph.SizePolicy.driverMaxEdges,
+      graft.graph.SizePolicy.broadcastBytes),
+    ("driver-state rounds", 0L, graft.graph.SizePolicy.broadcastBytes),
+    ("fallback", 0L, 0L))
+
+  /** The ids of the RDDs that `f` left persisted, less the local
+    * checkpoints the fallback stores its result layers in. */
+  private def persistedBy(f: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    f
+    (sc.getPersistentRDDs -- before)
+      .filterNot(p => LocalCheckpoints.marked(p._2)).keySet.toSet
+  }
+
   /** The three branches' results, asserted equal; returns one. */
   private def allBranches(name: String, edges: DataFrame,
                           seeds: DataFrame, hops: Int): DataFrame = {
-    val drv = Bfs.hopDistances(edges, seeds, hops)
-    val rounds = Bfs.hopDistances(edges, seeds, hops,
-      driverFinishMaxEdges = 0L)
-    val fb = Bfs.hopDistances(edges, seeds, hops,
-      driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)
+    val Seq(drv, rounds, fb) = branches.map { case (_, maxEdges, maxBytes) =>
+      Bfs.hopDistances(edges, seeds, hops, maxEdges, maxBytes)
+    }
     assert(rows(drv) == rows(rounds), s"$name: driver != driver-state rounds")
     assert(rows(rounds) == rows(fb), s"$name: driver-state rounds != fallback")
     assert(drv.schema("node").dataType == rounds.schema("node").dataType &&
@@ -59,6 +76,37 @@ class BfsSpec extends SparkSpec {
     assert(rows(got) == Seq(Seq(1L, 0L), Seq(6L, 0L)))
   }
 
+  test("null endpoints: a null src never expands, a null dst is never " +
+    "reached, a src with only null-dst out-edges passes the seed guard") {
+    val edges = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 1L),
+      (2L, null), (null, 3L), (3L, 2L), (2L, 3L), (4L, null))
+      .toDF("src", "dst")
+    val got = allBranches("nulls", edges, Seq(1L, 4L).toDF("node"), 3)
+    assert(rows(got) == Seq(Seq(1L, 0L), Seq(2L, 1L), Seq(3L, 2L),
+      Seq(4L, 0L)))
+  }
+
+  test("no edge cache outlives a call, on every branch and when the " +
+    "seeds fail") {
+    val edges = chain.toDF("src", "dst")
+    val seeds = Seq(1L, 5L).toDF("node")
+    // the third seed row raises when the frame is evaluated
+    val failing = spark.range(4).select(when(col("id") < 3, col("id"))
+      .otherwise(raise_error(lit("seed failure"))).as("node"))
+    for ((name, maxEdges, maxBytes) <- branches) {
+      spark.sharedState.cacheManager.clearCache()
+      val left = persistedBy(Bfs.hopDistances(edges, seeds, 3,
+        maxEdges, maxBytes).collect())
+      assert(left.isEmpty, s"$name left persisted RDDs $left")
+      val leftOnFailure = persistedBy(intercept[Exception](
+        Bfs.hopDistances(edges, failing, 3, maxEdges, maxBytes).collect()))
+      assert(leftOnFailure.isEmpty,
+        s"$name left persisted RDDs $leftOnFailure after a failure")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name: a cache entry outlived the call")
+    }
+  }
+
   test("Int-typed ids keep IntegerType") {
     val got = allBranches("int ids",
       chain.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst"),
@@ -68,6 +116,7 @@ class BfsSpec extends SparkSpec {
       Seq(5, 0L), Seq(6, 0L)))
   }
 
+  // "no cache entry" covers both the CacheManager and persisted RDDs
   test("driver-state rounds: no shuffle, at most maxHops + 3 jobs, " +
     "no cache entry left") {
     val rnd = new scala.util.Random(11)
@@ -89,12 +138,12 @@ class BfsSpec extends SparkSpec {
     val sc = spark.sparkContext
     org.apache.spark.ListenerDrain(sc)
     sc.addSparkListener(listener)
-    val got =
-      try {
-        val r = rows(Bfs.hopDistances(edges, seeds, hops,
+    var got = Seq.empty[Seq[Any]]
+    val left =
+      try persistedBy {
+        got = rows(Bfs.hopDistances(edges, seeds, hops,
           driverFinishMaxEdges = 0L))
         org.apache.spark.ListenerDrain(sc)
-        r
       } finally sc.removeSparkListener(listener)
     assert(got.nonEmpty && got.exists(_(1) == hops.toLong))
     listener.synchronized {
@@ -103,5 +152,6 @@ class BfsSpec extends SparkSpec {
     }
     assert(spark.sharedState.cacheManager.isEmpty,
       "a cache entry outlived the call")
+    assert(left.isEmpty, s"persisted RDDs $left outlived the call")
   }
 }

@@ -4,11 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.graph.SizePolicy
+import graft.graph.{Bfs, SizePolicy}
 
-/** SizePolicy.measure: the exact row count and a bounded upper
-  * estimate of the distinct endpoints, from the one action that also
-  * materializes the persisted edge cache. */
+/** SizePolicy's shared node sketch, over a persisted edge frame
+  * (`measure`) and over Bfs's primitive edge blocks: the exact row
+  * count and a bounded upper estimate of the distinct endpoints, from
+  * the one action that also materializes the cache. */
 class SizePolicySpec extends SparkSpec {
 
   private def edgesOf(n: Long, m: Long, strings: Boolean): DataFrame = {
@@ -20,9 +21,14 @@ class SizePolicySpec extends SparkSpec {
     else raw
   }
 
+  private val slack = 1 + SizePolicy.nodesMargin + 3 * SizePolicy.nodesRsd
+
+  private def exactNodes(e: DataFrame): Long =
+    e.select(col("src").as("x")).union(e.select(col("dst").as("x")))
+      .distinct().count()
+
   test("measure: exact rows, nodesUpper within [exact, (1 + margin + " +
     "3 rsd) × exact], cache loaded") {
-    val slack = 1 + SizePolicy.nodesMargin + 3 * SizePolicy.nodesRsd
     for ((n, m) <- Seq((1000L, 3000L), (100000L, 300000L));
          strings <- Seq(false, true)) {
       val name = s"n=$n strings=$strings"
@@ -32,12 +38,30 @@ class SizePolicySpec extends SparkSpec {
         .lookupCachedData(e.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
       assert(cached.exists(_.cachedRepresentation.cacheBuilder
         .isCachedColumnBuffersLoaded), s"$name: cache not materialized")
-      val exact = e.select(col("src").as("x"))
-        .union(e.select(col("dst").as("x"))).distinct().count()
+      val exact = exactNodes(e)
       assert(rows == m, name)
       assert(upper >= exact, s"$name: $upper < exact $exact")
       assert(upper <= slack * exact, s"$name: $upper > $slack × $exact")
       e.unpersist(true)
+    }
+  }
+
+  test("Bfs block measure: exact rows, nodesUpper within [exact, (1 + " +
+    "margin + 3 rsd) × exact], blocks loaded") {
+    val sc = spark.sparkContext
+    for ((n, m) <- Seq((1000L, 3000L), (100000L, 300000L))) {
+      val e = edgesOf(n, m, strings = false)
+      val blocks = Bfs.edgeBlocks(e)
+      try {
+        val (rows, upper) = Bfs.measure(blocks)
+        assert(sc.getRDDStorageInfo.exists(i => i.id == blocks.id &&
+          i.numCachedPartitions == blocks.getNumPartitions),
+          s"n=$n: blocks not materialized")
+        val exact = exactNodes(e)
+        assert(rows == m, s"n=$n")
+        assert(upper >= exact, s"n=$n: $upper < exact $exact")
+        assert(upper <= slack * exact, s"n=$n: $upper > $slack × $exact")
+      } finally blocks.unpersist(true)
     }
   }
 }
