@@ -71,7 +71,7 @@ object Bfs {
       val (nEdges, nodesUpper) = measure(blocks)
       // RAW-EDGE exact driver finish; 0 forces the distributed path.
       // Spec-pinned equal to both distributed branches (BfsSpec,
-      // DriverFinishParitySpec, Round16OpsSpec).
+      // DriverFinishParitySpec, GraphLoopsSpec).
       if (nEdges <= driverFinishMaxEdges)
         driverFinish(blocks, seeds, maxHops, nodeType)
       // The settled set can reach every endpoint, so the state gate

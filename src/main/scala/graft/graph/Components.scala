@@ -54,6 +54,8 @@ object Components {
     *   small-side economics as a broadcast join, and the common case
     *   once upstream pair generation has pruned a corpus. Larger
     *   graphs take the distributed loop. Set to 0 to force the loop.
+    *   Either way the edge caches are released before the call
+    *   returns or throws.
     * @return (id, component) where component = min id reachable
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
@@ -66,72 +68,76 @@ object Components {
     val e = edges.select(col("id1"), col("id2"))
       .filter(col("id1") =!= col("id2"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count()
-    if (nEdges <= driverFinishMaxEdges)
-      return driverFinish(nodes, e)
-    // eager: materialized now, logical plan truncated (see scaladoc)
-    var labels = nodes.select(col("id"), col("id").as("component"))
-      .localCheckpoint(true)
-    // Per-round join-side policy (SizePolicy, guide §2.4/§3.1): the
-    // label/nbrMin/stepA sides are all bounded by |nodes| — under the
-    // byte gate every per-round join BROADCASTS its node-sized side,
-    // so the edge stream is never exchanged or sorted; past it the
-    // symmetrized edge list persists pre-partitioned on its join key
-    // (dst) and node-sized sides carry shuffled-hash hints.
-    // Spec-pinned: broadcast == fallback == driver finish
-    // (Round16OpsSpec).
-    val bcast = SizePolicy.fits(labels.count(),
-      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
-    val sym = SizePolicy.loopEdges(
-      e.select(col("id1").as("src"), col("id2").as("dst"))
-        .union(e.select(col("id2").as("src"), col("id1").as("dst"))),
-      "dst", bcast)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // neighbour minima: one join (node side broadcast/SHJ-built)
-      // + one aggregate
-      val nbrMin = sym
-        .join(SizePolicy.sideFor(labels.select(col("id").as("dst"),
-          col("component").as("nbr")), bcast), Seq("dst"))
-        .groupBy("src").agg(min(col("nbr")).as("nbr_min"))
-      // materialized eagerly: stepA feeds BOTH sides of the pointer-
-      // jump self-join below (different join keys, so ReuseExchange
-      // cannot dedupe the subtree) — without the checkpoint the
-      // neighbour-min join + aggregate would execute twice per round
-      val stepA = labels
-        .join(SizePolicy.sideFor(
-          nbrMin.select(col("src").as("id"), col("nbr_min")), bcast),
-          Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr_min"),
-            col("component"))).as("component"),
-          (col("nbr_min").isNotNull &&
-            col("nbr_min") < col("component")).as("changed"))
+    try {
+      if (e.count() <= driverFinishMaxEdges)
+        return driverFinish(nodes, e)
+      // eager: materialized now, logical plan truncated (see scaladoc)
+      var labels = nodes.select(col("id"), col("id").as("component"))
         .localCheckpoint(true)
-      // convergence check BEFORE the jump: a neighbour-min fixpoint
-      // is constant per component, hence already the global minimum
-      val changed = stepA.filter(col("changed")).count()
-      // pointer jumping: component := label(component). Labels only
-      // ever decrease and always name a node of the same component,
-      // so the shortcut preserves the invariant while collapsing
-      // label chains exponentially.
-      val ptr = stepA.select(col("id").as("cid"),
-        col("component").as("cc"))
-      labels = stepA.as("x")
-        .join(SizePolicy.sideFor(ptr, bcast).as("p"),
-          col("x.component") === col("p.cid"), "left")
-        .select(col("x.id").as("id"),
-          coalesce(col("p.cc"), col("x.component")).as("component"))
-        .localCheckpoint(true)
-      converged = changed == 0
-      iter += 1
-    }
-    sym.unpersist(false)
-    e.unpersist(false)
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents: not converged after $maxIter rounds")
-    labels
+      // Per-round join-side policy (SizePolicy, guide §2.4/§3.1): the
+      // label/nbrMin/ptr sides are all bounded by |nodes| — under the
+      // byte gate every per-round join BROADCASTS its node-sized side,
+      // so the edge stream is never exchanged or sorted; past it the
+      // symmetrized edge list persists pre-partitioned on its join key
+      // (dst) and node-sized sides carry shuffled-hash hints. This loop
+      // keeps both: its few rounds do not amortize the up-front
+      // repartition, and the broadcast branch measured faster on
+      // GraphLoopBench's 300K-node graph (CHANGES.md). Spec-pinned:
+      // broadcast == fallback == driver finish (GraphLoopsSpec).
+      val bcast = SizePolicy.fits(labels.count(),
+        SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
+      val sym = SizePolicy.loopEdges(
+        e.select(col("id1").as("src"), col("id2").as("dst"))
+          .union(e.select(col("id2").as("src"), col("id1").as("dst"))),
+        "dst", bcast)
+      try {
+        var iter = 0
+        var converged = false
+        while (!converged && iter < maxIter) {
+          // neighbour minima: one join (node side broadcast/SHJ-built)
+          // + one aggregate
+          val nbrMin = sym
+            .join(SizePolicy.sideFor(labels.select(col("id").as("dst"),
+              col("component").as("nbr")), bcast), Seq("dst"))
+            .groupBy("src").agg(min(col("nbr")).as("nbr_min"))
+          // materialized eagerly: stepA feeds BOTH sides of the
+          // pointer-jump self-join below (different join keys, so
+          // ReuseExchange cannot dedupe the subtree) — without the
+          // checkpoint the neighbour-min join + aggregate would
+          // execute twice per round
+          val stepA = labels
+            .join(SizePolicy.sideFor(
+              nbrMin.select(col("src").as("id"), col("nbr_min")),
+              bcast), Seq("id"), "left")
+            .select(col("id"),
+              least(col("component"), coalesce(col("nbr_min"),
+                col("component"))).as("component"),
+              (col("nbr_min").isNotNull &&
+                col("nbr_min") < col("component")).as("changed"))
+            .localCheckpoint(true)
+          // convergence check BEFORE the jump: a neighbour-min fixpoint
+          // is constant per component, hence already the global minimum
+          val changed = stepA.filter(col("changed")).count()
+          // pointer jumping: component := label(component). Labels only
+          // ever decrease and always name a node of the same component,
+          // so the shortcut preserves the invariant while collapsing
+          // label chains exponentially.
+          val ptr = stepA.select(col("id").as("cid"),
+            col("component").as("cc"))
+          labels = stepA.as("x")
+            .join(SizePolicy.sideFor(ptr, bcast).as("p"),
+              col("x.component") === col("p.cid"), "left")
+            .select(col("x.id").as("id"),
+              coalesce(col("p.cc"), col("x.component")).as("component"))
+            .localCheckpoint(true)
+          converged = changed == 0
+          iter += 1
+        }
+        if (!converged) throw new IllegalStateException(
+          s"connectedComponents: not converged after $maxIter rounds")
+        labels
+      } finally sym.unpersist(false)
+    } finally e.unpersist(false)
   }
 
   /** Exact single-task finish for a bounded edge set: union-find with

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.HllRegisters
 import org.apache.spark.sql.graft.HllRegisterFunctions._
@@ -42,86 +42,75 @@ import org.apache.spark.storage.StorageLevel
   *    the HyperBall argument (q57's mergeability, per node);
   *  - the packed row is ~70 B where 64 separate byte FIELDS cost an
   *    UnsafeRow ~520 B (8-byte slots) — measured g10 4.1 → 2.2 s and
-  *    g11 4.7 → 1.9 s at sf0.1 from the packing alone — and the
-  *    whole state broadcasts at |V| ≤ ~1M nodes so the round join
-  *    never re-shuffles the edges;
+  *    g11 4.7 → 1.9 s at sf0.1 from the packing alone;
+  *  - the edge cache is pre-partitioned on src once and the state
+  *    side is shuffled-hash built (SizePolicy), so the round join
+  *    never re-exchanges or sorts the edges;
   *  - the edge list is consumed as-is (max-merge is idempotent, so
   *    duplicate edges change nothing but join fanout — a global
   *    dedup shuffle costs more than the ~1% fanout it saves here;
   *    callers with heavily duplicated edge lists can pre-distinct);
   *  - per-round eager `localCheckpoint` truncates the loop lineage
-  *    (CLAUDE.md iterative-loop rule); the LAST round stays lazy
-  *    when it feeds only the caller's single action.
+  *    (CLAUDE.md iterative-loop rule); the last round's too, so the
+  *    edge cache is released before the call returns.
+  *
+  * A row with a null endpoint is dropped before the gate count, on
+  * every path.
   */
 object HyperBall {
 
   private val R = 64
 
   /** Register states after rounds 1..`rounds`; element k-1 holds the
-    * radius-k ball sketch. All but the last are checkpointed (each
-    * feeds the next round twice); the last stays lazy — even when a
-    * caller reads several states in one action (harmonicCentrality),
-    * every EARLIER state it touches is already materialized, so the
-    * final state is computed exactly once. The returned lazy plans
-    * read the internal persisted edge projection — the session cache
-    * clear releases it after the caller's action (the Dedup caching
-    * contract; Bench/Verify clear between queries). */
+    * radius-k ball sketch. Every state is eagerly checkpointed (each
+    * but the last feeds the next round twice), so none reads the edge
+    * caches, which are released before the call returns or throws. */
   private def ballStates(edges: DataFrame, rounds: Int,
-                         driverFinishMaxEdges: Long,
-                         maxBroadcastBytes: Long): Seq[DataFrame] = {
+                         driverFinishMaxEdges: Long): Seq[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col("src"), col("dst"))
+    val e = edges.select(col("src"), col("dst")).na.drop()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the first action materializes the edge cache and sizes both gates
-    val (nEdges, nodesUpper) = SizePolicy.measure(e, "src", "dst")
-    // RAW-EDGE exact driver finish (the PageRank/LabelPropagation
-    // economics): at ≤ driverFinishMaxEdges edge ROWS, the register
-    // init (md5 digit-for-digit) and the per-round byte-max merges
-    // run in-memory over one 2-column collect, and each round's
-    // state returns as a LocalRelation of the SAME (node, regs)
-    // shape — [[estimate]] then applies the IDENTICAL
-    // HllRegisterExpressions over it, so the estimate arithmetic is
-    // shared, not replicated. Spec-pinned equal to the distributed
-    // loop (Round15OpsSpec); 0 forces the distributed path.
-    if (nEdges <= driverFinishMaxEdges) {
-      val g = LocalGraph.collect(e)
-      e.unpersist(false)
-      return localStates(g, rounds)
-    }
-    // Per-round join-side policy (SizePolicy): the register state is
-    // one ~70 B row per node, so under the byte gate every round
-    // BROADCASTS the state (the
-    // scaladoc's long-standing claim, now actually planned — a
-    // localCheckpoint'ed state has no stats, so auto-broadcast never
-    // fired) and the cached edge list is never re-exchanged or
-    // sorted; past the gate the edge cache pre-partitions on src
-    // once and the state side carries a shuffled-hash hint. The
-    // state's node set only grows: it starts at the distinct sources
-    // and can reach every distinct endpoint, so the gate bounds it by
-    // |distinct src ∪ dst| (the measured upper estimate). Spec-pinned:
-    // broadcast == fallback == driver finish (Round16OpsSpec).
-    val nodes = e.select(col("src").as("node")).distinct()
-    val bcastState = SizePolicy.fits(nodesUpper,
-      SizePolicy.registerRowBytes, maxBroadcastBytes)
-    val (j, rho) = HllRegisters.register(col("node"))
-    var state = nodes.select(col("node"), hllInit(j, rho).as("regs"))
-      .localCheckpoint(true)
-    // state is checkpointed — in the fallback branch the plain cache
-    // has no consumers left once the pre-partitioned copy exists
-    val eLoop = SizePolicy.loopEdges(e, "src", bcastState)
-    (1 to rounds).map { r =>
-      val prop = eLoop
-        .join(SizePolicy.sideFor(
-          state.withColumnRenamed("node", "src"), bcastState),
-          Seq("src"))
-        .select(col("dst").as("node"), col("regs"))
-      val merged = state.union(prop)
-        .groupBy("node")
-        .agg(byteMax(col("regs")).as("regs"))
-      state =
-        if (r < rounds) merged.localCheckpoint(true) else merged
-      state
-    }
+    try {
+      // RAW-EDGE exact driver finish (the PageRank/LabelPropagation
+      // economics): at ≤ driverFinishMaxEdges edge ROWS, the register
+      // init (md5 digit-for-digit) and the per-round byte-max merges
+      // run in-memory over one 2-column collect, and each round's
+      // state returns as a LocalRelation of the SAME (node, regs)
+      // shape — [[estimate]] then applies the IDENTICAL
+      // HllRegisterExpressions over it, so the estimate arithmetic is
+      // shared, not replicated. Spec-pinned equal to the distributed
+      // loop (DriverFinishParitySpec, GraphLoopsSpec); 0 forces the
+      // distributed path.
+      if (e.count() <= driverFinishMaxEdges)
+        return localStates(LocalGraph.collect(e), rounds)
+      // The state starts at the distinct sources; it is checkpointed
+      // before the edge cache is re-partitioned on src (SizePolicy),
+      // which releases `e`.
+      val (j, rho) = HllRegisters.register(col("node"))
+      var state = e.select(col("src").as("node")).distinct()
+        .select(col("node"), hllInit(j, rho).as("regs"))
+        .localCheckpoint(true)
+      val eLoop = SizePolicy.loopEdges(e, "src", bcast = false)
+      try (1 to rounds).map { _ =>
+        state = ballRound(eLoop, state).localCheckpoint(true)
+        state
+      } finally eLoop.unpersist(false)
+    } finally e.unpersist(false)
+  }
+
+  /** One max-merge round over the pre-partitioned edge cache — each
+    * node's registers byte-max its in-neighbours' — factored out so
+    * its physical plan is inspectable (tools.GraphLoopBench `plans`).
+    * The state side is shuffled-hash built (SizePolicy). */
+  private[graft] def ballRound(eLoop: DataFrame, state: DataFrame)
+    : DataFrame = {
+    val prop = eLoop
+      .join(SizePolicy.sideFor(state.withColumnRenamed("node", "src"),
+        bcast = false), Seq("src"))
+      .select(col("dst").as("node"), col("regs"))
+    state.union(prop)
+      .groupBy("node")
+      .agg(byteMax(col("regs")).as("regs"))
   }
 
   /** In-memory register init + max-merge rounds — the [[ballStates]]
@@ -193,11 +182,9 @@ object HyperBall {
     * `(node, s_scaled, v_empty, ball_est)` — `ball_est` counts the
     * node itself, exact sketch parity with the q42 formula. */
   def neighborhood(edges: DataFrame, rounds: Int,
-                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
-                   maxBroadcastBytes: Long =
-                     SizePolicy.broadcastBytes): DataFrame =
-    estimate(ballStates(edges, rounds, driverFinishMaxEdges,
-      maxBroadcastBytes).last)
+                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
+    : DataFrame =
+    estimate(ballStates(edges, rounds, driverFinishMaxEdges).last)
 
   /** Harmonic centrality from the per-radius estimate deltas — the
     * HyperBall paper's application: H(u) ≈ Σ_k (|ball_k| −
@@ -209,12 +196,9 @@ object HyperBall {
     * `(node, est_1.., harmonic_milli)`. */
   def harmonicCentrality(edges: DataFrame, rounds: Int,
                          driverFinishMaxEdges: Long =
-                           SizePolicy.driverMaxEdges,
-                         maxBroadcastBytes: Long =
-                           SizePolicy.broadcastBytes)
+                           SizePolicy.driverMaxEdges)
     : DataFrame = {
-    val states = ballStates(edges, rounds, driverFinishMaxEdges,
-      maxBroadcastBytes)
+    val states = ballStates(edges, rounds, driverFinishMaxEdges)
     val ests = states.zipWithIndex.map { case (st, i) =>
       estimate(st).select(col("node"),
         col("ball_est").as(s"est${i + 1}"))

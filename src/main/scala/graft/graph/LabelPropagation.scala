@@ -68,13 +68,14 @@ object LabelPropagation {
     *               (join + two aggregate exchanges + eager
     *               checkpoint) collapse to one 2-column collect.
     *               Spec-pinned equal to the distributed loop
-    *               (Round15OpsSpec); 0 forces the distributed path.
+    *               (DriverFinishParitySpec, GraphLoopsSpec); 0 forces
+    *               the distributed path. Either way the edge caches this
+    *               call persists are released before it returns or throws.
     * @return (node, label): the community label after `rounds` rounds
     */
   def run(edges: DataFrame, rounds: Int,
           canonical: Boolean = false,
-          driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
-          maxBroadcastBytes: Long = SizePolicy.broadcastBytes)
+          driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
     : DataFrame = {
     require(rounds >= 1)
     val e0 = canon(edges, canonical)
@@ -83,47 +84,39 @@ object LabelPropagation {
     // sym recomputed the distinct under sym's own materialization)
     val e = if (canonical) e0
       else e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count()
-    if (nEdges <= driverFinishMaxEdges) {
-      val g = LocalGraph.collect(e, symmetric = true)
+    try {
+      if (e.count() <= driverFinishMaxEdges)
+        return runLocal(LocalGraph.collect(e, symmetric = true), rounds)
+      // per-round edge-side shuffle removal (guide §2.4/§3.1): the
+      // symmetrized edge list persists PRE-PARTITIONED on the join key
+      // (src) — the per-round sort-merge exchange+sort of the EDGE
+      // side becomes one up-front shuffle, and the shuffled-hash hint
+      // on the label side keeps the streamed edge side sort-free
+      // (SizePolicy).
+      val symRaw = e.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+      var labels = symRaw.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node"))
+        .localCheckpoint(true)
+      val sym = SizePolicy.loopEdges(symRaw, "src", bcast = false)
+      // sym is its own cache from here on
       if (!canonical) e.unpersist(false)
-      return runLocal(g, rounds)
-    }
-    // per-round edge-side shuffle removal (guide §2.4/§3.1): labels
-    // are one row per node, so when |V|·row bytes clears the
-    // broadcast cap every round's join broadcasts the LABELS and the
-    // cached edge list is never re-exchanged or sorted; past the cap
-    // the edge list persists PRE-PARTITIONED on the join key (src) —
-    // the per-round sort-merge exchange+sort of the EDGE side
-    // becomes one up-front shuffle, and the shuffled-hash hint on
-    // the label side keeps the streamed edge side sort-free.
-    // Both branches spec-pinned equal (Round16OpsSpec).
-    val symRaw = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    var labels = symRaw.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(true)
-    val bcastLabels = SizePolicy.fits(labels.count(),
-      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
-    val sym = SizePolicy.loopEdges(symRaw, "src", bcastLabels)
-    // past the gate sym is its own cache; under it every round reads e
-    if (!canonical && !bcastLabels) e.unpersist(false)
-    for (_ <- 1 to rounds) {
-      labels = lpaRound(sym, labels, bcastLabels).localCheckpoint(true)
-    }
-    sym.unpersist(false)
-    if (!canonical) e.unpersist(false)
-    labels
+      try {
+        for (_ <- 1 to rounds)
+          labels = lpaRound(sym, labels).localCheckpoint(true)
+        labels
+      } finally sym.unpersist(false)
+    } finally if (!canonical) e.unpersist(false)
   }
 
   /** One synchronous LPA round over the persisted symmetrized edge
     * list — factored out so the round's physical plan is inspectable
-    * (plans/r16 evidence) and the broadcast/shuffled-hash branches
-    * share one body. Arithmetic identical to the pre-r16 inline loop. */
-  private[graft] def lpaRound(sym: DataFrame, labels: DataFrame,
-                              bcastLabels: Boolean): DataFrame = {
+    * (tools.GraphLoopBench `plans`). The label side is shuffled-hash
+    * built (SizePolicy). */
+  private[graft] def lpaRound(sym: DataFrame, labels: DataFrame)
+    : DataFrame = {
     val lab = SizePolicy.sideFor(
-      labels.withColumnRenamed("node", "src"), bcastLabels)
+      labels.withColumnRenamed("node", "src"), bcast = false)
     val msgs = sym.join(lab, Seq("src"))
       .select(col("dst").as("node"), col("label"))
     msgs

@@ -35,7 +35,10 @@ object PageRank {
   private val total = 1000000000000L // 1e12 mass units
 
   /** @param edges directed edge list, columns `src`, `dst` (any
-    *              integral type; nodes = distinct sources)
+    *              integral type; nodes = distinct sources). A row with
+    *              a null endpoint is dropped before the gate count, on
+    *              every path — as are the persisted edge caches before
+    *              the call returns or throws.
     * @param iters fixed iteration count (deterministic by design —
     *              convergence-based stopping would make the output
     *              depend on float comparisons)
@@ -44,11 +47,9 @@ object PageRank {
     */
   def pageRank(edges: DataFrame, iters: Int = 5,
                dampNum: Long = 17L, dampDen: Long = 20L,
-               driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
-               maxBroadcastBytes: Long =
-                 SizePolicy.broadcastBytes): DataFrame =
-    run(edges, None, iters, dampNum, dampDen, driverFinishMaxEdges,
-      maxBroadcastBytes)
+               driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
+    : DataFrame =
+    run(edges, None, iters, dampNum, dampDen, driverFinishMaxEdges)
 
   /** Personalized PageRank: teleport mass lands ONLY on `seeds`
     * (uniformly, in exact integer units), so ranks measure proximity
@@ -65,11 +66,9 @@ object PageRank {
     */
   def personalized(edges: DataFrame, seeds: DataFrame, iters: Int = 5,
                    dampNum: Long = 17L, dampDen: Long = 20L,
-                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
-                   maxBroadcastBytes: Long =
-                     SizePolicy.broadcastBytes): DataFrame =
-    run(edges, Some(seeds), iters, dampNum, dampDen,
-      driverFinishMaxEdges, maxBroadcastBytes)
+                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
+    : DataFrame =
+    run(edges, Some(seeds), iters, dampNum, dampDen, driverFinishMaxEdges)
 
   /** BLOCK-personalized PageRank: many seed cohorts through ONE
     * shared loop. Rank state is SPARSE — a (cohort, node, rank) row
@@ -105,105 +104,108 @@ object PageRank {
                         dampNum: Long = 17L, dampDen: Long = 20L,
                         driverFinishMaxEdges: Long =
                           SizePolicy.driverMaxEdges,
-                        cohortBatchSize: Int = Int.MaxValue,
-                        maxBroadcastBytes: Long =
-                          SizePolicy.broadcastBytes)
+                        cohortBatchSize: Int = Int.MaxValue)
     : DataFrame = {
     require(cohortBatchSize > 0, "cohortBatchSize must be positive")
     require(iters >= 0 && dampNum > 0 && dampDen >= dampNum)
-    // raw projection first: the driver-finish gate counts RAW rows
-    // (≥ the distinct count, so strictly conservative) and the
-    // bounded path dedups ON THE DRIVER — the global distinct
-    // exchange of the full edge list (1.2M rows at sf0.1 for g06)
-    // was the single biggest stage of the bounded path (guide §2.4:
-    // remove shuffles outright). The distributed path still
-    // distincts from this cached projection, one scan either way.
-    val e0 = edges.select(col("src").cast("long"),
-        col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nRaw = e0.count()
-    val teleport = total - total * dampNum / dampDen
-    if (nRaw <= driverFinishMaxEdges) {
-      // raw-edge driver finish (see run()): one cohort iteration each
-      val g = distinctTargets(LocalGraph.collect(e0))
+    val e0 = rawEdges(edges)
+    try {
+      val teleport = total - total * dampNum / dampDen
+      if (e0.count() <= driverFinishMaxEdges) {
+        // raw-edge driver finish (see run()): one cohort iteration each
+        val g = distinctTargets(LocalGraph.collect(e0))
+        val seedRows = seeds.select(col("cohort").cast("long"),
+            col("node").cast("long")).distinct()
+          .collect().map(r => (r.getLong(0), g.index(r.getLong(1))))
+          .filter { case (_, i) => i >= 0 && g.degree(i) > 0 }
+        require(seedRows.nonEmpty,
+          "blockPersonalized: no cohort has a seed inside the graph")
+        val out = seedRows.groupBy(_._1).toSeq.flatMap { case (c, rows) =>
+          val r = iterate(g, rows.map(_._2), iters, dampNum, dampDen)
+          r.indices.filter(r(_) > 0L).map(i => (c, g.ids(i), r(i)))
+        }
+        return g.toDF(out, "cohort", "node", "rank_u")
+      }
+      val ed = degreeEdges(e0)
       e0.unpersist(false)
-      val seedRows = seeds.select(col("cohort").cast("long"),
-          col("node").cast("long")).distinct()
-        .collect().map(r => (r.getLong(0), g.index(r.getLong(1))))
-        .filter { case (_, i) => i >= 0 && g.degree(i) > 0 }
-      require(seedRows.nonEmpty,
-        "blockPersonalized: no cohort has a seed inside the graph")
-      val out = seedRows.groupBy(_._1).toSeq.flatMap { case (c, rows) =>
-        val r = iterate(g, rows.map(_._2), iters, dampNum, dampDen)
-        r.indices.filter(r(_) > 0L).map(i => (c, g.ids(i), r(i)))
-      }
-      return g.toDF(out, "cohort", "node", "rank_u")
-    }
+      try {
+        val sources = ed.select(col("src").as("node")).distinct()
+        val svAll = seeds.select(col("cohort").cast("long"),
+            col("node").cast("long")).distinct()
+          .join(sources, Seq("node"), "left_semi")
+          .localCheckpoint(true) // feeds batch splits + every bases build
+        // cohort ids are query inputs (thousands at most — each is a
+        // curated seed list), so the batch split collects them
+        val cohortIds = svAll.select("cohort").distinct()
+          .orderBy("cohort").collect().map(_.getLong(0))
+        require(cohortIds.nonEmpty,
+          "blockPersonalized: no cohort has a seed inside the graph")
+        def runBatch(sv: DataFrame): DataFrame = {
+          val bases = sv
+            .join(sv.groupBy("cohort").agg(count(lit(1)).as("ns")),
+              "cohort")
+            .select(col("cohort"), col("node"),
+              expr(s"$teleport DIV ns").as("base"),
+              expr(s"$total DIV ns").as("r0"))
+            .localCheckpoint(true) // feeds EVERY round's full-outer join
+          var ranks = bases.select(col("cohort"), col("node"),
+            col("r0").as("r")).localCheckpoint(true)
+          for (_ <- 0 until iters) {
+            // the sparse rank side is shuffled-hash built; the cached
+            // ed plan is hash-partitioned on src (SizePolicy)
+            val contrib = ed
+              .join(SizePolicy.sideFor(ranks, bcast = false),
+                ed("src") === ranks("node"))
+              .select(col("cohort"), col("dst").as("node"),
+                expr(s"(r * $dampNum) DIV (deg * $dampDen)").as("c"))
+              .groupBy("cohort", "node").agg(sum("c").as("s"))
+            // full outer: seeds keep their base even when unreached;
+            // reached non-seeds appear with contribution only; exact
+            // zeros are dropped — lossless under integer arithmetic
+            ranks = bases.select(col("cohort"), col("node"), col("base"))
+              .join(contrib, Seq("cohort", "node"), "full_outer")
+              .select(col("cohort"), col("node"),
+                (coalesce(col("base"), lit(0L)) +
+                  coalesce(col("s"), lit(0L))).as("r"))
+              .filter(col("r") > 0)
+              .localCheckpoint(true)
+          }
+          ranks.select(col("cohort"), col("node"), col("r").as("rank_u"))
+        }
+        // every batch's final ranks are eagerly checkpointed, so the
+        // union references no live edge lineage when ed unpersists
+        cohortIds.grouped(cohortBatchSize).toSeq match {
+          case Seq(_) => runBatch(svAll)
+          case batches => batches.map { cs =>
+            runBatch(svAll.filter(col("cohort").isin(cs: _*)))
+          }.reduce(_ unionByName _)
+        }
+      } finally ed.unpersist(false)
+    } finally e0.unpersist(false)
+  }
+
+  /** The raw `(src, dst)` projection as longs, persisted, with every
+    * row that has a null endpoint dropped. The driver-finish gate
+    * counts RAW rows (≥ the distinct count, so strictly conservative)
+    * and the bounded path dedups ON THE DRIVER — the global distinct
+    * exchange of the full edge list (1.2M rows at sf0.1 for g01/g04's
+    * bipartite graph and g06) was the bounded path's biggest stage
+    * (guide §2.4). The distributed path distincts from this cache,
+    * one scan either way. */
+  private def rawEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .na.drop().persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The distinct edges of `e0` with each source's out-degree
+    * attached (`src`, `dst`, `deg`), persisted and materialized for
+    * every round; the distinct cache in between is released. */
+  private def degreeEdges(e0: DataFrame): DataFrame = {
     val e = e0.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    e0.unpersist(false)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ed = e.join(deg, "src")
+    val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-    e.unpersist(false)
-    val sources = ed.select(col("src").as("node")).distinct()
-    val svAll = seeds.select(col("cohort").cast("long"),
-        col("node").cast("long")).distinct()
-      .join(sources, Seq("node"), "left_semi")
-      .localCheckpoint(true) // feeds batch splits + every bases build
-    // cohort ids are query inputs (thousands at most — each is a
-    // curated seed list), so the batch split collects them
-    val cohortIds = svAll.select("cohort").distinct()
-      .orderBy("cohort").collect().map(_.getLong(0))
-    require(cohortIds.nonEmpty,
-      "blockPersonalized: no cohort has a seed inside the graph")
-    val batches = cohortIds.grouped(cohortBatchSize).toSeq
-    def runBatch(sv: DataFrame): DataFrame = {
-      val bases = sv
-        .join(sv.groupBy("cohort").agg(count(lit(1)).as("ns")),
-          "cohort")
-        .select(col("cohort"), col("node"),
-          expr(s"$teleport DIV ns").as("base"),
-          expr(s"$total DIV ns").as("r0"))
-        .localCheckpoint(true) // feeds EVERY round's full-outer join
-      var ranks = bases.select(col("cohort"), col("node"),
-        col("r0").as("r")).localCheckpoint(true)
-      for (_ <- 0 until iters) {
-        // join-side policy per round (SizePolicy): the sparse state
-        // grows with each cohort's reached neighbourhood, so the
-        // byte gate re-reads the count every round — cheap, ranks is
-        // already checkpointed. Fallback past the cap: shuffled-hash
-        // hint, the cached ed plan is hash-partitioned on src
-        val rankSide = SizePolicy.sideFor(ranks,
-          SizePolicy.fits(ranks.count(),
-            SizePolicy.keyedLongRowBytes + 8L, maxBroadcastBytes))
-        val contrib = ed.join(rankSide, ed("src") === ranks("node"))
-          .select(col("cohort"), col("dst").as("node"),
-            expr(s"(r * $dampNum) DIV (deg * $dampDen)").as("c"))
-          .groupBy("cohort", "node").agg(sum("c").as("s"))
-        // full outer: seeds keep their base even when unreached;
-        // reached non-seeds appear with contribution only; exact
-        // zeros are dropped — lossless under integer arithmetic
-        ranks = bases.select(col("cohort"), col("node"), col("base"))
-          .join(contrib, Seq("cohort", "node"), "full_outer")
-          .select(col("cohort"), col("node"),
-            (coalesce(col("base"), lit(0L)) +
-              coalesce(col("s"), lit(0L))).as("r"))
-          .filter(col("r") > 0)
-          .localCheckpoint(true)
-      }
-      ranks.select(col("cohort"), col("node"), col("r").as("rank_u"))
-    }
-    // every batch's final ranks are eagerly checkpointed, so the
-    // union references no live edge lineage when ed unpersists
-    val out =
-      if (batches.size == 1) runBatch(svAll)
-      else batches.map { cs =>
-        runBatch(svAll.filter(col("cohort").isin(cs: _*)))
-      }.reduce(_ unionByName _)
-    ed.unpersist(false)
-    out
+    try { e.count(); ed.count(); ed }
+    catch { case t: Throwable => ed.unpersist(false); throw t }
+    finally e.unpersist(false)
   }
 
   /** The collected raw edges with each source's repeated targets
@@ -256,124 +258,97 @@ object PageRank {
 
   private def run(edges: DataFrame, seeds: Option[DataFrame], iters: Int,
                   dampNum: Long, dampDen: Long,
-                  driverFinishMaxEdges: Long,
-                  maxBroadcastBytes: Long): DataFrame = {
+                  driverFinishMaxEdges: Long): DataFrame = {
     require(iters >= 0 && dampNum > 0 && dampDen >= dampNum)
-    // raw projection first (the blockPersonalized r15 shape): the
-    // driver-finish gate counts RAW rows (≥ distinct, so strictly
-    // conservative) and the bounded path dedups ON THE DRIVER — the
-    // global distinct exchange of the full edge list (1.2M rows at
-    // sf0.1 for g01/g04's bipartite graph) was the bounded path's
-    // biggest stage (guide §2.4). The distributed path distincts
-    // from this cached projection, one scan either way.
-    val e0 = edges.select(col("src").cast("long"),
-        col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nRaw = e0.count()
-    val teleport = total - total * dampNum / dampDen
-    // Exact driver finish on RAW edges: degrees, the node set and
-    // the teleport/init vector are all derivable on the driver, so
-    // the bounded path skips the deg aggregate, the attach join and
-    // the 3-column collect entirely — two whole shuffles less than
-    // finishing from the degree-attached list (measured ~1 s per
-    // graph query at sf0.1). Arithmetic identical to the distributed
-    // loop; the pinning specs cover every variant.
-    if (nRaw <= driverFinishMaxEdges) {
-      val g = distinctTargets(LocalGraph.collect(e0))
-      e0.unpersist(false)
-      val sources = (0 until g.n).filter(g.degree(_) > 0).toArray
-      val cohort = seeds match {
-        case None =>
-          require(sources.nonEmpty, "pageRank: empty graph")
-          sources
-        case Some(sd) =>
-          val seedSet = sd.select(col("node").cast("long")).distinct()
-            .collect().map(_.getLong(0)).toSet
-          val sn = sources.filter(i => seedSet(g.ids(i)))
-          require(sn.nonEmpty,
-            "personalized pageRank: no seed is a graph node")
-          sn
+    val e0 = rawEdges(edges)
+    try {
+      val teleport = total - total * dampNum / dampDen
+      // Exact driver finish on RAW edges: degrees, the node set and
+      // the teleport/init vector are all derivable on the driver, so
+      // the bounded path skips the deg aggregate, the attach join and
+      // the 3-column collect entirely — two whole shuffles less than
+      // finishing from the degree-attached list (measured ~1 s per
+      // graph query at sf0.1). Arithmetic identical to the distributed
+      // loop; the pinning specs cover every variant.
+      if (e0.count() <= driverFinishMaxEdges) {
+        val g = distinctTargets(LocalGraph.collect(e0))
+        val sources = (0 until g.n).filter(g.degree(_) > 0).toArray
+        val cohort = seeds match {
+          case None =>
+            require(sources.nonEmpty, "pageRank: empty graph")
+            sources
+          case Some(sd) =>
+            val seedSet = sd.select(col("node").cast("long")).distinct()
+              .collect().map(_.getLong(0)).toSet
+            val sn = sources.filter(i => seedSet(g.ids(i)))
+            require(sn.nonEmpty,
+              "personalized pageRank: no seed is a graph node")
+            sn
+        }
+        val r = iterate(g, cohort, iters, dampNum, dampDen)
+        return g.toDF(sources.toSeq.map(i => (g.ids(i), r(i))),
+          "node", "rank_u")
       }
-      val r = iterate(g, cohort, iters, dampNum, dampDen)
-      return g.toDF(sources.toSeq.map(i => (g.ids(i), r(i))),
-        "node", "rank_u")
-    }
-    val e = e0.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    e0.unpersist(false)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // edge list with out-degree attached, reused every round
-    val ed = e.join(deg, "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-    e.unpersist(false)
-    val nodeIds = ed.select(col("src").as("node")).distinct()
-    // nodes carries each node's per-round teleport share (`base`) and
-    // initial rank — a constant for plain PageRank, seed-only for the
-    // personalized form; the loop below is shared verbatim
-    val nodes = (seeds match {
-      case None =>
-        val n = nodeIds.count()
-        require(n > 0, "pageRank: empty graph")
-        nodeIds.withColumn("base", lit(teleport / n))
-          .withColumn("r0", lit(total / n))
-      case Some(sd) =>
-        val seedSet = sd.select(col("node").cast("long")).distinct()
-        val sn = nodeIds.join(seedSet, Seq("node"), "left_semi")
-        val nSeeds = sn.count()
-        require(nSeeds > 0, "personalized pageRank: no seed is a graph node")
-        nodeIds.join(sn.withColumn("is_seed", lit(true)),
-            Seq("node"), "left")
-          .select(col("node"),
-            when(col("is_seed"), lit(teleport / nSeeds)).otherwise(0L)
-              .as("base"),
-            when(col("is_seed"), lit(total / nSeeds)).otherwise(0L)
-              .as("r0"))
-    }).localCheckpoint(true)
-    var ranks = nodes.select(col("node"), col("r0").as("r"))
-      .localCheckpoint(true)
-    // Per-round join-side policy (guide §2.4/§3.1, the SizePolicy
-    // discipline): ranks is exactly one row per node every round, so
-    // the broadcast decision is one byte gate on the node count —
-    // under it the rank side broadcasts EXPLICITLY (the pre-r16 loop
-    // left the choice to AQE over a checkpointed relation's size
-    // ESTIMATE against the 10 MB auto threshold — deliberate and
-    // exact beats estimated); past it the shuffled-hash hint keeps
-    // the cached degree-attached edge list sort-free (its cached
-    // plan is already hash-partitioned on src by the deg join).
-    // Spec-pinned: broadcast == fallback == driver finish
-    // (Round16OpsSpec).
-    val nNodes = nodes.count()
-    val bcastRanks = SizePolicy.fits(nNodes,
-      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
-    for (_ <- 0 until iters) {
-      val contrib = prContrib(ed, ranks, dampNum, dampDen, bcastRanks)
-      // every node has out-edges by construction; in a symmetrized
-      // graph it therefore also has in-edges, but a directed caller
-      // may have sources nobody links to — they keep just the base.
-      // Per-round EAGER checkpoint: ranks feeds the next round only
-      // once (linear lineage, unlike Components' doubling), and the
-      // checkpoint keeps each round's plan flat — one deep 5-round
-      // plan measured ~2x slower when its joins fell back to SMJ
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (col("base") + coalesce(col("s"), lit(0L))).as("r"))
-        .localCheckpoint(true)
-    }
-    ed.unpersist(false)
-    ranks.select(col("node"), col("r").as("rank_u"))
+      // edge list with out-degree attached, reused every round
+      val ed = degreeEdges(e0)
+      e0.unpersist(false)
+      try {
+        val nodeIds = ed.select(col("src").as("node")).distinct()
+        // nodes carries each node's per-round teleport share (`base`)
+        // and initial rank — a constant for plain PageRank, seed-only
+        // for the personalized form; the loop below is shared verbatim
+        val nodes = (seeds match {
+          case None =>
+            val n = nodeIds.count()
+            require(n > 0, "pageRank: empty graph")
+            nodeIds.withColumn("base", lit(teleport / n))
+              .withColumn("r0", lit(total / n))
+          case Some(sd) =>
+            val seedSet = sd.select(col("node").cast("long")).distinct()
+            val sn = nodeIds.join(seedSet, Seq("node"), "left_semi")
+            val nSeeds = sn.count()
+            require(nSeeds > 0,
+              "personalized pageRank: no seed is a graph node")
+            nodeIds.join(sn.withColumn("is_seed", lit(true)),
+                Seq("node"), "left")
+              .select(col("node"),
+                when(col("is_seed"), lit(teleport / nSeeds)).otherwise(0L)
+                  .as("base"),
+                when(col("is_seed"), lit(total / nSeeds)).otherwise(0L)
+                  .as("r0"))
+        }).localCheckpoint(true)
+        var ranks = nodes.select(col("node"), col("r0").as("r"))
+          .localCheckpoint(true)
+        for (_ <- 0 until iters) {
+          val contrib = prContrib(ed, ranks, dampNum, dampDen)
+          // every node has out-edges by construction; in a symmetrized
+          // graph it therefore also has in-edges, but a directed caller
+          // may have sources nobody links to — they keep just the base.
+          // Per-round EAGER checkpoint: ranks feeds the next round only
+          // once (linear lineage, unlike Components' doubling), and the
+          // checkpoint keeps each round's plan flat — one deep 5-round
+          // plan measured ~2x slower when its joins fell back to SMJ
+          ranks = nodes.join(contrib, Seq("node"), "left")
+            .select(col("node"),
+              (col("base") + coalesce(col("s"), lit(0L))).as("r"))
+            .localCheckpoint(true)
+        }
+        ranks.select(col("node"), col("r").as("rank_u"))
+      } finally ed.unpersist(false)
+    } finally e0.unpersist(false)
   }
 
   /** One PageRank contribution round over the persisted degree-
     * attached edge list — factored out so the round's physical plan
-    * is inspectable (plans/r16 evidence) and both join-side branches
-    * share one body. DIV = exact integral division on longs —
-    * floor(double-div) could round across an integer boundary and
-    * break the oracle. */
+    * is inspectable (tools.GraphLoopBench `plans`). The rank side is
+    * shuffled-hash built (SizePolicy): the cached ed plan is already
+    * hash-partitioned on src by the deg join, so the edge side is
+    * never re-exchanged or sorted. DIV = exact integral division on
+    * longs — floor(double-div) could round across an integer boundary
+    * and break the oracle. */
   private[graft] def prContrib(ed: DataFrame, ranks: DataFrame,
-                               dampNum: Long, dampDen: Long,
-                               bcastRanks: Boolean): DataFrame =
-    ed.join(SizePolicy.sideFor(ranks, bcastRanks),
+                               dampNum: Long, dampDen: Long): DataFrame =
+    ed.join(SizePolicy.sideFor(ranks, bcast = false),
         ed("src") === ranks("node"))
       .select(col("dst").as("node"),
         expr(s"(r * $dampNum) DIV (deg * $dampDen)").as("c"))

@@ -87,7 +87,7 @@ object Reachability {
     // closure can outgrow the cap (node count over the byte gate),
     // pre-partition the edge cache on the join key (parent) once and
     // hint shuffled-hash on the reach side. Spec-pinned: broadcast ==
-    // fallback == driver finish (Round16OpsSpec).
+    // fallback == driver finish (GraphLoopsSpec).
     val allFit = SizePolicy.fits(nodesUpper,
       SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
     var reach = targets.select(col("node")).distinct()

@@ -14,28 +14,34 @@ import org.apache.spark.storage.StorageLevel
   *
   * House rule (CLAUDE.md): broadcast is a SIZE decision — estimated
   * bytes (rows × per-row hashed-relation cost) against a ~100 MB cap,
-  * the cost every executor pays for a broadcast side. Below the cap a
-  * loop's node-sized state broadcasts, so the cached edge list is
-  * never re-exchanged or sorted in any round (Bfs goes further: its
-  * state stays on the driver and each hop is one scan job); above it
-  * the edge cache is pre-partitioned on the join key once
-  * ([[loopEdges]]) and the state side carries a shuffled-hash hint,
-  * so the streamed edge side stays sort-free (guide §2.4/§3.1). Both
-  * branches are spec-pinned equal to the driver finish
-  * (Round16OpsSpec).
+  * the cost every executor pays for a broadcast side.
+  *
+  * Above the driver-finish gate a graph loop has ONE distributed path
+  * or two, by measurement (GraphLoopBench, CHANGES.md):
+  *  - PageRank, HyperBall and LabelPropagation run one: the edge
+  *    cache is pre-partitioned on the join key once ([[loopEdges]])
+  *    and the node-state side carries a shuffled-hash hint
+  *    ([[sideFor]]), so the streamed edge side stays sort-free (guide
+  *    §2.4/§3.1). A broadcast of their state timed no faster.
+  *  - Bfs, Components, KCore and Reachability keep a broadcast branch
+  *    under the cap, where it measured faster (Bfs goes further: its
+  *    state stays on the driver and each hop is one scan job); past
+  *    the cap they take the path above.
+  * Every branch is spec-pinned equal to the driver finish
+  * (GraphLoopsSpec, BfsSpec).
   *
   * A loop sizes its persisted edge cache in the one action that
-  * materializes it: that job also returns the exact row count (the
-  * driver-finish gate) and an upper estimate of the distinct
-  * endpoints (the node-state gate), with no shuffle. The estimate is
-  * HyperLogLog++ at [[nodesRsd]] inflated by [[nodesMargin]], and one
-  * helper, [[sketch]], holds that arithmetic for every edge format:
-  * [[measure]] runs it over a persisted frame (HyperBall,
-  * Reachability), Bfs over its primitive edge blocks.
+  * materializes it. For Bfs and Reachability that job also returns an
+  * upper estimate of the distinct endpoints (the broadcast gate), with
+  * no shuffle: HyperLogLog++ at [[nodesRsd]] inflated by
+  * [[nodesMargin]]. One helper, [[sketch]], holds that arithmetic for
+  * every edge format: [[measure]] runs it over a persisted frame
+  * (Reachability), Bfs over its primitive edge blocks.
   *
-  * Operators keep their per-call `driverFinishMaxEdges` /
-  * `maxBroadcastBytes` parameters only so specs and
-  * tools.GraphLoopBench can force a branch; every default is here.
+  * Operators keep their per-call `driverFinishMaxEdges` (and, where a
+  * broadcast branch remains, `maxBroadcastBytes`) parameters only so
+  * specs and tools.GraphLoopBench can force a branch; every default
+  * is here.
   */
 private[graft] object SizePolicy {
 
@@ -57,9 +63,6 @@ private[graft] object SizePolicy {
     * words plus row/map overhead. */
   val keyedLongRowBytes: Long = 48L
 
-  /** A (long key, 64-byte register vector) row: the HyperBall state. */
-  val registerRowBytes: Long = 160L
-
   /** A bare long key plus hashed-relation overhead: a semi-join set. */
   val keyRowBytes: Long = 16L
 
@@ -68,15 +71,16 @@ private[graft] object SizePolicy {
 
   /** The state side of a per-round join: explicit broadcast under the
     * gate, shuffled-hash hint (build on the node-sized state, stream
-    * the edge cache without sorting it) past it. */
+    * the edge cache without sorting it) past it or on a loop with no
+    * broadcast branch. */
   def sideFor(state: DataFrame, bcast: Boolean): DataFrame =
     if (bcast) broadcast(state) else state.hint("shuffle_hash")
 
   /** The edge cache every round of a distributed loop scans: `e` as
-    * given while the state broadcasts; past the gate, `e`
-    * repartitioned once on the round join `key`, persisted and
-    * materialized — after which `e` itself is released (callers have
-    * checkpointed whatever else read it). */
+    * given while the state broadcasts; otherwise `e` repartitioned
+    * once on the round join `key`, persisted and materialized — after
+    * which `e` itself is released (callers have checkpointed whatever
+    * else read it). */
   def loopEdges(e: DataFrame, key: String, bcast: Boolean): DataFrame =
     if (bcast) e
     else {

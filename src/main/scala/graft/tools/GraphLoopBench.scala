@@ -3,8 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Forced-distributed A/B harness for the iterative graph loops
-  * (round-16 optimization evidence; r15 verdict item 2).
+/** Forced-distributed A/B harness for the iterative graph loops.
   *
   * The test SFs never exercise the distributed branches — every
   * corpus graph sits under the 2M-edge driver-finish gate — so this
@@ -14,21 +13,22 @@ import org.apache.spark.sql.functions._
   * `driverFinishMaxEdges = 0`:
   *
   *   - mode `gen`:      write <dir>/edges.parquet
-  *   - mode `default`:  the branch graph.SizePolicy's byte gate picks
-  *                      (here: under the cap — 300K nodes × 48 B
-  *                      ≈ 14 MB < 100 MB): the state broadcasts, and
-  *                      for bfs4 it stays on the driver, one edge-scan
+  *   - mode `default`:  every loop on the branch graph.SizePolicy
+  *                      picks. lpa4, hyperball3 and pagerank5 have one
+  *                      distributed path (the pre-partitioned edge
+  *                      cache + shuffled-hash state side); bfs4,
+  *                      components, kcore4 and reach take their
+  *                      broadcast branch (here under the cap — 300K
+  *                      nodes × 48 B ≈ 14 MB < 100 MB), and for bfs4
+  *                      the state stays on the driver, one edge-scan
   *                      job per hop
-  *   - mode `fallback`: `maxBroadcastBytes = 0` — pre-partitioned
+  *   - mode `fallback`: bfs4, components, kcore4 and reach only, with
+  *                      `maxBroadcastBytes = 0` — their pre-partitioned
   *                      edge cache + shuffled-hash state side
-  *   - mode `plans`:    dump `.explain("formatted")` of one
-  *                      representative round per loop (the factored
+  *   - mode `plans`:    dump `.explain("formatted")` of one round each
+  *                      of LPA, PageRank and HyperBall (the factored
   *                      round functions the operators themselves run)
   *                      into <outDir>
-  *
-  * The "before" numbers come from running the same `default`-mode
-  * timing calls against the pre-r16 operator code (a worktree at the
-  * previous commit) — the call expressions compile unchanged there.
   *
   * Timing: per op, TWO full runs, report both and the min (the Bench
   * discipline — interference only adds time); caches cleared between
@@ -38,7 +38,7 @@ object GraphLoopBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/glb")
     val mode = if (args.length > 1) args(1) else "default"
-    val outDir = if (args.length > 2) args(2) else "plans/r16"
+    val outDir = if (args.length > 2) args(2) else "plans/glb"
     val spark = graft.SparkEntry.localSession()
     spark.sparkContext.setLogLevel("WARN")
     if (mode == "gen") { gen(spark, dir); spark.stop(); return }
@@ -50,62 +50,42 @@ object GraphLoopBench {
 
     if (mode == "plans") { plans(spark, sym, outDir); spark.stop(); return }
 
+    // the loops that keep a broadcast branch; maxBroadcastBytes = 0
+    // forces their repartition + shuffled-hash fallback
+    val armed = Set("bfs4", "components", "kcore4", "reach")
     val fb = mode == "fallback"
-    // maxBroadcastBytes = 0 forces the repartition + shuffled-hash
-    // branch; the named-arg calls only compile against the r16 code,
-    // so the pre-r16 baseline runs mode `default` only
+    val maxBytes = if (fb) 0L else graft.graph.SizePolicy.broadcastBytes
     def ops: Seq[(String, () => DataFrame)] = Seq(
-      "lpa4" -> (() =>
-        if (fb) graft.graph.LabelPropagation.run(
-          edges.select(col("src").as("id1"), col("dst").as("id2")),
-          rounds = 4, driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)
-        else graft.graph.LabelPropagation.run(
-          edges.select(col("src").as("id1"), col("dst").as("id2")),
-          rounds = 4, driverFinishMaxEdges = 0L)),
+      "lpa4" -> (() => graft.graph.LabelPropagation.run(
+        edges.select(col("src").as("id1"), col("dst").as("id2")),
+        rounds = 4, driverFinishMaxEdges = 0L)),
       "bfs4" -> { () =>
         val seeds = spark.range(10).select(col("id").as("node"))
-        if (fb) graft.graph.Bfs.hopDistances(sym, seeds, 4,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)
-        else graft.graph.Bfs.hopDistances(sym, seeds, 4,
-          driverFinishMaxEdges = 0L)
+        graft.graph.Bfs.hopDistances(sym, seeds, 4,
+          driverFinishMaxEdges = 0L, maxBroadcastBytes = maxBytes)
       },
-      "hyperball3" -> (() =>
-        if (fb) graft.graph.HyperBall.neighborhood(sym, 3,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)
-        else graft.graph.HyperBall.neighborhood(sym, 3,
-          driverFinishMaxEdges = 0L)),
-      "pagerank5" -> (() =>
-        if (fb) graft.graph.PageRank.pageRank(sym, iters = 5,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)
-        else graft.graph.PageRank.pageRank(sym, iters = 5,
-          driverFinishMaxEdges = 0L)),
+      "hyperball3" -> (() => graft.graph.HyperBall.neighborhood(sym, 3,
+        driverFinishMaxEdges = 0L)),
+      "pagerank5" -> (() => graft.graph.PageRank.pageRank(sym, iters = 5,
+        driverFinishMaxEdges = 0L)),
       "components" -> { () =>
         val nodes = spark.range(300000).select(col("id"))
-        if (fb) graft.graph.Components.connectedComponents(nodes,
+        graft.graph.Components.connectedComponents(nodes,
           edges.select(col("src").as("id1"), col("dst").as("id2")),
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)
-        else graft.graph.Components.connectedComponents(nodes,
-          edges.select(col("src").as("id1"), col("dst").as("id2")),
-          driverFinishMaxEdges = 0L)
+          driverFinishMaxEdges = 0L, maxBroadcastBytes = maxBytes)
       },
-      "kcore4" -> (() =>
-        if (fb) graft.graph.KCore.kcore(
-          edges.select(col("src").as("id1"), col("dst").as("id2")),
-          k = 8, rounds = 4, driverFinishMaxEdges = 0L,
-          maxBroadcastBytes = 0L)
-        else graft.graph.KCore.kcore(
-          edges.select(col("src").as("id1"), col("dst").as("id2")),
-          k = 8, rounds = 4, driverFinishMaxEdges = 0L)),
+      "kcore4" -> (() => graft.graph.KCore.kcore(
+        edges.select(col("src").as("id1"), col("dst").as("id2")),
+        k = 8, rounds = 4, driverFinishMaxEdges = 0L,
+        maxBroadcastBytes = maxBytes)),
       "reach" -> { () =>
         val targets = spark.range(10).select(col("id").as("node"))
         val dedges = edges.select(col("src").as("child"),
           col("dst").as("parent"))
-        if (fb) graft.graph.Reachability.reachingSet(dedges, targets,
+        graft.graph.Reachability.reachingSet(dedges, targets,
           maxRounds = 40, driverFinishMaxEdges = 0L,
-          maxBroadcastBytes = 0L)
-        else graft.graph.Reachability.reachingSet(dedges, targets,
-          maxRounds = 40, driverFinishMaxEdges = 0L)
-      })
+          maxBroadcastBytes = maxBytes)
+      }).filter { case (n, _) => !fb || armed(n) }
 
     // optional 4th arg: comma-separated op subset for targeted A/Bs
     val only = args.lift(3)
@@ -142,12 +122,13 @@ object GraphLoopBench {
   }
 
   /** Dump the per-round physical plans the operators themselves build
-    * (lpaRound / prContrib are the loops' factored round bodies; the
-    * HyperBall dump is the real neighborhood() output, whose lazy
-    * last round carries the join + byte-max merge). */
+    * (lpaRound / prContrib / ballRound are the loops' factored round
+    * bodies), each over the edge cache pre-partitioned on src the way
+    * the loops build it. */
   private def plans(spark: SparkSession, sym: DataFrame,
                     outDir: String): Unit = {
-    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.sql.graft.HllRegisters
+    import org.apache.spark.sql.graft.HllRegisterFunctions.hllInit
     def dump(name: String, df: DataFrame): Unit = {
       val p = java.nio.file.Paths.get(outDir, name)
       java.nio.file.Files.createDirectories(p.getParent)
@@ -156,31 +137,23 @@ object GraphLoopBench {
           org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
       println(s"[glb] wrote $p")
     }
-    Seq(false, true).foreach { fbMode =>
-      val tag = if (fbMode) "after_fallback" else "after_bcast"
-      val symP = (if (fbMode) sym.repartition(col("src")) else sym)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      symP.count()
-      val labels = symP.select(col("src").as("node")).distinct()
-        .withColumn("label", col("node")).localCheckpoint(true)
-      dump(s"glb_lpa_round_$tag.txt",
-        graft.graph.LabelPropagation.lpaRound(symP, labels, !fbMode))
-      val deg = symP.groupBy("src").agg(count(lit(1)).as("deg"))
-      val ed = symP.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-      ed.count()
-      val ranks = labels.select(col("node"), col("label").as("r"))
-        .localCheckpoint(true)
-      dump(s"glb_pr_round_$tag.txt",
-        graft.graph.PageRank.prContrib(ed, ranks, 17L, 20L, !fbMode))
-      spark.sharedState.cacheManager.clearCache()
-    }
-    val hb = graft.graph.HyperBall.neighborhood(sym, 2,
-      driverFinishMaxEdges = 0L)
-    dump("glb_hyperball_after_bcast.txt", hb)
-    spark.sharedState.cacheManager.clearCache()
-    val hbFb = graft.graph.HyperBall.neighborhood(sym, 2,
-      driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)
-    dump("glb_hyperball_after_fallback.txt", hbFb)
+    val symP = graft.graph.SizePolicy.loopEdges(sym, "src", bcast = false)
+    val labels = symP.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node")).localCheckpoint(true)
+    dump("glb_lpa_round.txt",
+      graft.graph.LabelPropagation.lpaRound(symP, labels))
+    val ed = symP.join(symP.groupBy("src").agg(count(lit(1)).as("deg")),
+      "src").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    ed.count()
+    val ranks = labels.select(col("node"), col("label").as("r"))
+      .localCheckpoint(true)
+    dump("glb_pr_round.txt",
+      graft.graph.PageRank.prContrib(ed, ranks, 17L, 20L))
+    val (j, rho) = HllRegisters.register(col("node"))
+    val state = labels.select(col("node"), hllInit(j, rho).as("regs"))
+      .localCheckpoint(true)
+    dump("glb_hyperball_round.txt",
+      graft.graph.HyperBall.ballRound(symP, state))
     spark.sharedState.cacheManager.clearCache()
   }
 }

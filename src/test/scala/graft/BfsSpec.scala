@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.LocalCheckpoints
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
@@ -27,16 +26,6 @@ class BfsSpec extends SparkSpec {
       graft.graph.SizePolicy.broadcastBytes),
     ("driver-state rounds", 0L, graft.graph.SizePolicy.broadcastBytes),
     ("fallback", 0L, 0L))
-
-  /** The ids of the RDDs that `f` left persisted, less the local
-    * checkpoints the fallback stores its result layers in. */
-  private def persistedBy(f: => Unit): Set[Int] = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    f
-    (sc.getPersistentRDDs -- before)
-      .filterNot(p => LocalCheckpoints.marked(p._2)).keySet.toSet
-  }
 
   /** The three branches' results, asserted equal; returns one. */
   private def allBranches(name: String, edges: DataFrame,

@@ -2,6 +2,7 @@ package graft
 
 import graft.dedup.{Dedup, ShingleCache}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** The family-shared shingle cache (round-9 candidate from the
   * round-5 verdict): d02/d03/d12/d14 over ONE ShingleCache must be
@@ -70,5 +71,27 @@ class ShingleCacheSpec extends SparkSpec {
     val c2 = new ShingleCache(docs, "doc_id", "text")
     assert(rows(c2.postings(3, distinct = true)) == rows(p1))
     c2.release()
+  }
+
+  test("d16's two audit sides build from ONE ShingleCache tokenize " +
+    "pass (raw postings once, hashed projection once)") {
+    // the d16 QFn shape: truth = ngramJaccardPairs over the cache's
+    // HASHED postings, signatures = minhashSignatures over the RAW
+    // postings — one tokenize+shingle pass total (VERDICT r15 item 3:
+    // prove the single-subtree claim, not just state it)
+    val docs = graft.sources.Tables(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("text"))
+    val c = new ShingleCache(docs, "doc_id", "text")
+    val truth = Dedup.ngramJaccardPairs(docs, "doc_id",
+      "text", 3, cache = Some(c))
+    val sigs = Dedup.minhashSignatures(
+      c.postings(3, distinct = true), 12)
+    assert(truth.count() >= 0 && sigs.count() > 0)
+    assert(c.rawBuilds.get() == 1,
+      s"raw postings built ${c.rawBuilds.get()}x — d16 re-tokenized")
+    assert(c.hashedBuilds.get() == 1,
+      s"hashed postings built ${c.hashedBuilds.get()}x")
+    c.release()
+    spark.sharedState.cacheManager.clearCache()
   }
 }

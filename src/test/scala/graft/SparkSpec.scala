@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.LocalCheckpoints
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,6 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String) = s"/root/testdata/$name"
+
+  /** The ids of the RDDs that `f` left persisted, less the local
+    * checkpoints the graph loops store their result layers in. */
+  def persistedBy(f: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    f
+    (sc.getPersistentRDDs -- before)
+      .filterNot(p => LocalCheckpoints.marked(p._2)).keySet.toSet
+  }
 }
 
 object SparkSpec {
