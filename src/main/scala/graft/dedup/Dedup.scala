@@ -138,8 +138,8 @@ object Dedup {
     val hashed = build(postings.select(col("shingle")).distinct())
       .localCheckpoint(true)
     val n = hashed.count()
-    val side = if (SizePolicy.fits(n, rowBytes, SizePolicy.broadcastBytes))
-      broadcast(hashed) else hashed
+    val side = if (SizePolicy.broadcasts(n, rowBytes)) broadcast(hashed)
+      else hashed
     postings.join(side, Seq("shingle"))
   }
 

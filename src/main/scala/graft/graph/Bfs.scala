@@ -60,26 +60,22 @@ object Bfs {
     * `dist` is the exact minimum hop count (BIGINT). `edges` must
     * already contain both directions for an undirected walk. */
   def hopDistances(edges: DataFrame, seeds: DataFrame,
-                   maxHops: Int,
-                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
-                   maxBroadcastBytes: Long =
-                     SizePolicy.broadcastBytes): DataFrame = {
+                   maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val nodeType = edges.schema("src").dataType
     val blocks = edgeBlocks(edges)
     try {
       val (nEdges, nodesUpper) = measure(blocks)
-      // RAW-EDGE exact driver finish; 0 forces the distributed path.
-      // Spec-pinned equal to both distributed branches (BfsSpec,
-      // DriverFinishParitySpec, GraphLoopsSpec).
-      if (nEdges <= driverFinishMaxEdges)
+      // RAW-EDGE exact driver finish. Spec-pinned equal to both
+      // distributed branches (BfsSpec, DriverFinishParitySpec,
+      // GraphLoopsSpec).
+      if (SizePolicy.driverFinish(nEdges))
         driverFinish(blocks, seeds, maxHops, nodeType)
       // The settled set can reach every endpoint, so the state gate
       // bounds it by |src ∪ dst| (the measured upper estimate).
-      else if (SizePolicy.fits(nodesUpper, SizePolicy.keyedLongRowBytes,
-          maxBroadcastBytes))
+      else if (SizePolicy.broadcasts(nodesUpper, SizePolicy.keyedLongRowBytes))
         driverStateRounds(blocks, seeds, maxHops, nodeType)
-      else frontierJoins(edges, seeds, maxHops, maxBroadcastBytes)
+      else frontierJoins(edges, seeds, maxHops)
     } finally blocks.unpersist(false)
   }
 
@@ -218,8 +214,7 @@ object Bfs {
     * each side still broadcast while its row count (the loop counts
     * every layer) fits, shuffled-hash otherwise. */
   private def frontierJoins(edges: DataFrame, seeds: DataFrame,
-                            maxHops: Int,
-                            maxBroadcastBytes: Long): DataFrame = {
+                            maxHops: Int): DataFrame = {
     val eLoop = SizePolicy.loopEdges(edges.select(col("src"), col("dst")),
       "src", bcast = false)
     try {
@@ -237,11 +232,9 @@ object Bfs {
           layers.map(_.select("node")).reduce(_ union _)
         val fSide = SizePolicy.sideFor(
           frontier.withColumnRenamed("node", "src"),
-          SizePolicy.fits(frontierSize, SizePolicy.keyedLongRowBytes,
-            maxBroadcastBytes))
+          SizePolicy.broadcasts(frontierSize, SizePolicy.keyedLongRowBytes))
         val sSide = SizePolicy.sideFor(settledNodes,
-          SizePolicy.fits(settledCount, SizePolicy.keyedLongRowBytes,
-            maxBroadcastBytes))
+          SizePolicy.broadcasts(settledCount, SizePolicy.keyedLongRowBytes))
         val next = eLoop
           .join(fSide, Seq("src"))
           .filter(col("dst").isNotNull)

@@ -45,31 +45,26 @@ object Components {
     * it would not merge (and it is absent from the output). Dedup
     * callers satisfy this trivially (pairs come from the doc set).
     *
+    * An edge set under the driver-finish gate ([[SizePolicy]]) is
+    * solved EXACTLY in one task (collect + union-find + broadcast the
+    * label mapping back) — the same small-side economics as a
+    * broadcast join, and the common case once upstream pair
+    * generation has pruned a corpus. Larger graphs take the
+    * distributed loop. Either way the edge caches are released before
+    * the call returns or throws.
+    *
     * @param nodes one column `id` — every vertex (isolated vertices
     *              become their own singleton component)
     * @param edges columns `id1`,`id2` — undirected near-dup pairs
-    * @param driverFinishMaxEdges when the edge set is at most this
-    *   many rows it is solved EXACTLY in one task (collect +
-    *   union-find + broadcast the label mapping back) — the same
-    *   small-side economics as a broadcast join, and the common case
-    *   once upstream pair generation has pruned a corpus. Larger
-    *   graphs take the distributed loop. Set to 0 to force the loop.
-    *   Either way the edge caches are released before the call
-    *   returns or throws.
     * @return (id, component) where component = min id reachable
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIter: Int = 20,
-                          driverFinishMaxEdges: Long =
-                            SizePolicy.driverMaxEdges,
-                          maxBroadcastBytes: Long =
-                            SizePolicy.broadcastBytes)
-    : DataFrame = {
+                          maxIter: Int = 20): DataFrame = {
     val e = edges.select(col("id1"), col("id2"))
       .filter(col("id1") =!= col("id2"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (e.count() <= driverFinishMaxEdges)
+      if (SizePolicy.driverFinish(e.count()))
         return driverFinish(nodes, e)
       // eager: materialized now, logical plan truncated (see scaladoc)
       var labels = nodes.select(col("id"), col("id").as("component"))
@@ -84,8 +79,8 @@ object Components {
       // repartition, and the broadcast branch measured faster on
       // GraphLoopBench's 300K-node graph (CHANGES.md). Spec-pinned:
       // broadcast == fallback == driver finish (GraphLoopsSpec).
-      val bcast = SizePolicy.fits(labels.count(),
-        SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
+      val bcast = SizePolicy.broadcasts(labels.count(),
+        SizePolicy.keyedLongRowBytes)
       val sym = SizePolicy.loopEdges(
         e.select(col("id1").as("src"), col("id2").as("dst"))
           .union(e.select(col("id2").as("src"), col("id1").as("dst"))),

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Whole-graph summary statistics with exact integer arithmetic. */
 object GraphStats {
@@ -20,66 +21,68 @@ object GraphStats {
     * degree 200); past that cast the four moments to DECIMAL(38,0)
     * (the DuckDB oracle mirrors in HUGEINT either way).
     */
-  def assortativityPpm(edges: DataFrame,
-                       driverFinishMaxEdges: Long =
-                         SizePolicy.driverMaxEdges)
-    : DataFrame = {
+  def assortativityPpm(edges: DataFrame): DataFrame = {
     // the canonical edge set feeds the union twice, the degree
     // aggregate and the join chain — uncached, the caller's edge
     // pipeline (a co-occurrence join) replays once per consumer
     // (CLAUDE.md persist rule; measured 2.7 s → 1.5 s at sf0.1).
-    // deg likewise feeds both attaches. Both are bounded: |E|, |V|.
+    // deg likewise feeds both attaches. Both are bounded: |E|, |V|;
+    // both are released before the call returns or throws.
     val e = LocalGraph.canonicalEdges(edges)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nE = e.count()
-    // RAW-EDGE exact driver finish (the PageRank/Triangles
-    // economics): the four moments are one O(|E|) pass over the
-    // collected list, in the SAME Long arithmetic as the distributed
-    // expressions (including the documented Long range — overflow
-    // behaviour stays identical, and the gate keeps it far from the
-    // documented 1e8-edge bound anyway). Spec-pinned equal
-    // (DriverFinishParitySpec); 0 forces the distributed path.
-    if (nE <= driverFinishMaxEdges) {
-      val g = LocalGraph.collect(e, symmetric = true)
-      e.unpersist(false)
-      var n = 0L; var sx = 0L; var sxy = 0L; var sxx = 0L
-      // one term per direction of the symmetrized list
-      g.foreachEdge { (u, v) =>
-        val du = g.degree(u).toLong
-        n += 1L
-        sx += du
-        sxy += du * g.degree(v)
-        sxx += du * du
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // RAW-EDGE exact driver finish (the PageRank/Triangles
+      // economics): the four moments are one O(|E|) pass over the
+      // collected list, in the SAME Long arithmetic as the distributed
+      // expressions (including the documented Long range — overflow
+      // behaviour stays identical, and the gate keeps it far from the
+      // documented 1e8-edge bound anyway). Spec-pinned equal
+      // (DriverFinishParitySpec).
+      if (SizePolicy.driverFinish(e.count())) {
+        val g = LocalGraph.collect(e, symmetric = true)
+        var n = 0L; var sx = 0L; var sxy = 0L; var sxx = 0L
+        // one term per direction of the symmetrized list
+        g.foreachEdge { (u, v) =>
+          val du = g.degree(u).toLong
+          n += 1L
+          sx += du
+          sxy += du * g.degree(v)
+          sxx += du * du
+        }
+        val varx = n * sxx - sx * sx
+        val cov = n * sxy - sx * sx
+        val ppm =
+          if (varx == 0L) 0L
+          else if (cov >= 0L) (2L * 1000000L * cov + varx) / (2L * varx)
+          else -((2L * 1000000L * (-cov) + varx) / (2L * varx))
+        return g.toDF(Seq((n, sx, sxy, sxx, ppm)),
+          "n", "sx", "sxy", "sxx", "assortativity_ppm")
       }
-      val varx = n * sxx - sx * sx
-      val cov = n * sxy - sx * sx
-      val ppm =
-        if (varx == 0L) 0L
-        else if (cov >= 0L) (2L * 1000000L * cov + varx) / (2L * varx)
-        else -((2L * 1000000L * (-cov) + varx) / (2L * varx))
-      return g.toDF(Seq((n, sx, sxy, sxx, ppm)),
-        "n", "sx", "sxy", "sxx", "assortativity_ppm")
-    }
-    val dir = e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v")))
-    val deg = dir.groupBy("u").agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    deg.count()
-    dir
-      .join(deg.select(col("u"), col("deg").as("dx")), "u")
-      .join(deg.select(col("u").as("v"), col("deg").as("dy")), "v")
-      .agg(count(lit(1)).as("n"), sum("dx").as("sx"),
-        sum(col("dx") * col("dy")).as("sxy"),
-        sum(col("dx") * col("dx")).as("sxx"))
-      .select(col("n"), col("sx").cast("long").as("sx"),
-        col("sxy").cast("long").as("sxy"),
-        col("sxx").cast("long").as("sxx"),
-        expr("""CASE WHEN n * sxx - sx * sx = 0 THEN 0
-          |WHEN n * sxy - sx * sx >= 0
-          |THEN (2 * 1000000 * (n * sxy - sx * sx) + (n * sxx - sx * sx))
-          |  DIV (2 * (n * sxx - sx * sx))
-          |ELSE -((2 * 1000000 * (sx * sx - n * sxy) + (n * sxx - sx * sx))
-          |  DIV (2 * (n * sxx - sx * sx))) END""".stripMargin)
-          .as("assortativity_ppm"))
+      val dir = e.select(col("a").as("u"), col("b").as("v"))
+        .union(e.select(col("b").as("u"), col("a").as("v")))
+      val deg = dir.groupBy("u").agg(count(lit(1)).as("deg"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // the result is checkpointed, so it reads neither cache
+      try {
+        deg.count()
+        dir
+          .join(deg.select(col("u"), col("deg").as("dx")), "u")
+          .join(deg.select(col("u").as("v"), col("deg").as("dy")), "v")
+          .agg(count(lit(1)).as("n"), sum("dx").as("sx"),
+            sum(col("dx") * col("dy")).as("sxy"),
+            sum(col("dx") * col("dx")).as("sxx"))
+          .select(col("n"), col("sx").cast("long").as("sx"),
+            col("sxy").cast("long").as("sxy"),
+            col("sxx").cast("long").as("sxx"),
+            expr("""CASE WHEN n * sxx - sx * sx = 0 THEN 0
+              |WHEN n * sxy - sx * sx >= 0
+              |THEN (2 * 1000000 * (n * sxy - sx * sx) + (n * sxx - sx * sx))
+              |  DIV (2 * (n * sxx - sx * sx))
+              |ELSE -((2 * 1000000 * (sx * sx - n * sxy) + (n * sxx - sx * sx))
+              |  DIV (2 * (n * sxx - sx * sx))) END""".stripMargin)
+              .as("assortativity_ppm"))
+          .localCheckpoint(true)
+      } finally deg.unpersist(false)
+    } finally e.unpersist(false)
   }
 }

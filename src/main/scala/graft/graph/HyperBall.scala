@@ -65,23 +65,21 @@ object HyperBall {
     * radius-k ball sketch. Every state is eagerly checkpointed (each
     * but the last feeds the next round twice), so none reads the edge
     * caches, which are released before the call returns or throws. */
-  private def ballStates(edges: DataFrame, rounds: Int,
-                         driverFinishMaxEdges: Long): Seq[DataFrame] = {
+  private def ballStates(edges: DataFrame, rounds: Int): Seq[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col("src"), col("dst")).na.drop()
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // RAW-EDGE exact driver finish (the PageRank/LabelPropagation
-      // economics): at ≤ driverFinishMaxEdges edge ROWS, the register
-      // init (md5 digit-for-digit) and the per-round byte-max merges
-      // run in-memory over one 2-column collect, and each round's
+      // economics): under the driver-finish gate on edge ROWS, the
+      // register init (md5 digit-for-digit) and the per-round byte-max
+      // merges run in-memory over one 2-column collect, and each round's
       // state returns as a LocalRelation of the SAME (node, regs)
       // shape — [[estimate]] then applies the IDENTICAL
       // HllRegisterExpressions over it, so the estimate arithmetic is
       // shared, not replicated. Spec-pinned equal to the distributed
-      // loop (DriverFinishParitySpec, GraphLoopsSpec); 0 forces the
-      // distributed path.
-      if (e.count() <= driverFinishMaxEdges)
+      // loop (DriverFinishParitySpec, GraphLoopsSpec).
+      if (SizePolicy.driverFinish(e.count()))
         return localStates(LocalGraph.collect(e), rounds)
       // The state starts at the distinct sources; it is checkpointed
       // before the edge cache is re-partitioned on src (SizePolicy),
@@ -181,10 +179,8 @@ object HyperBall {
   /** Per-node radius-`rounds` ball-size estimates:
     * `(node, s_scaled, v_empty, ball_est)` — `ball_est` counts the
     * node itself, exact sketch parity with the q42 formula. */
-  def neighborhood(edges: DataFrame, rounds: Int,
-                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
-    : DataFrame =
-    estimate(ballStates(edges, rounds, driverFinishMaxEdges).last)
+  def neighborhood(edges: DataFrame, rounds: Int): DataFrame =
+    estimate(ballStates(edges, rounds).last)
 
   /** Harmonic centrality from the per-radius estimate deltas — the
     * HyperBall paper's application: H(u) ≈ Σ_k (|ball_k| −
@@ -194,11 +190,8 @@ object HyperBall {
     * ESTIMATE down — the clamp is mirrored by the oracle), and the
     * 1/k weights are exact integer `DIV`s in milli units. Output:
     * `(node, est_1.., harmonic_milli)`. */
-  def harmonicCentrality(edges: DataFrame, rounds: Int,
-                         driverFinishMaxEdges: Long =
-                           SizePolicy.driverMaxEdges)
-    : DataFrame = {
-    val states = ballStates(edges, rounds, driverFinishMaxEdges)
+  def harmonicCentrality(edges: DataFrame, rounds: Int): DataFrame = {
+    val states = ballStates(edges, rounds)
     val ests = states.zipWithIndex.map { case (st, i) =>
       estimate(st).select(col("node"),
         col("ball_est").as(s"est${i + 1}"))

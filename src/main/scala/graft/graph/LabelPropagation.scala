@@ -61,22 +61,10 @@ object LabelPropagation {
     * @param canonical edges are already distinct (a < b) pairs from a
     *               persisted+materialized frame — skip the
     *               re-canonicalizing distinct shuffle (see [[canon]])
-    * @param driverFinishMaxEdges raw-edge exact driver finish bound
-    *               (the PageRank.run economics): at or under it the
-    *               synchronous rounds run in-memory with the SAME
-    *               packed-argmax arithmetic — 4 rounds of
-    *               (join + two aggregate exchanges + eager
-    *               checkpoint) collapse to one 2-column collect.
-    *               Spec-pinned equal to the distributed loop
-    *               (DriverFinishParitySpec, GraphLoopsSpec); 0 forces
-    *               the distributed path. Either way the edge caches this
-    *               call persists are released before it returns or throws.
     * @return (node, label): the community label after `rounds` rounds
     */
   def run(edges: DataFrame, rounds: Int,
-          canonical: Boolean = false,
-          driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
-    : DataFrame = {
+          canonical: Boolean = false): DataFrame = {
     require(rounds >= 1)
     val e0 = canon(edges, canonical)
     // non-canonical: the distinct'd list feeds the gate count AND
@@ -85,7 +73,15 @@ object LabelPropagation {
     val e = if (canonical) e0
       else e0.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (e.count() <= driverFinishMaxEdges)
+      // raw-edge exact driver finish (the PageRank.run economics):
+      // under the gate the synchronous rounds run in-memory with the
+      // SAME packed-argmax arithmetic — 4 rounds of (join + two
+      // aggregate exchanges + eager checkpoint) collapse to one
+      // 2-column collect. Spec-pinned equal to the distributed loop
+      // (DriverFinishParitySpec, GraphLoopsSpec). Either way the edge
+      // caches this call persists are released before it returns or
+      // throws.
+      if (SizePolicy.driverFinish(e.count()))
         return runLocal(LocalGraph.collect(e, symmetric = true), rounds)
       // per-round edge-side shuffle removal (guide §2.4/§3.1): the
       // symmetrized edge list persists PRE-PARTITIONED on the join key
@@ -227,7 +223,7 @@ object LabelPropagation {
     * between-community counts) and community-bounded aggregates that
     * collapse map-side — that part is distributed at any scale. The
     * best-partner + mutual-matching tail reads only the bounded
-    * between/dc tables: under `driverFinishMaxEdges` it is an exact
+    * between/dc tables: under the driver-finish gate it is an exact
     * driver finish (spec-pinned to the distributed fallback — one
     * row_number window over |communities| rows + a best-pair
     * self-join) and the merge map remaps via a LocalRelation join
@@ -241,7 +237,6 @@ object LabelPropagation {
     *         the smaller of the two labels
     */
   def refineMerge(edges: DataFrame, labels: DataFrame,
-                  driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
                   canonical: Boolean = false): DataFrame = {
     // canonical ⇒ the caller's persisted frame backs every consumer;
     // otherwise the distinct is materialized locally (2+ branches)
@@ -275,7 +270,7 @@ object LabelPropagation {
     // distributed fallback below. The merge map returns as a
     // LocalRelation whose stats Catalyst sees, so the remap join
     // broadcasts itself — the corpus-sized side never reshuffles.
-    if (nEdges <= driverFinishMaxEdges) {
+    if (SizePolicy.driverFinish(nEdges)) {
       // RAW-EDGE driver finish (the PageRank.run / modularityPpm
       // economics): between/dc are label-keyed sums over the bounded
       // edge list — computing them driver-side from one 2-column
@@ -287,8 +282,8 @@ object LabelPropagation {
       val (dcm, _, betM) = labelSums(e, lab)
       val m = nEdges
       // both directions of every community pair; gains in BigInt so
-      // a caller raising driverFinishMaxEdges past ~1e9 edges can't
-      // silently wrap 2·d_c·d_d (~8m²) through Long
+      // a driver-finish cap raised past ~1e9 edges can't silently wrap
+      // 2·d_c·d_d (~8m²) through Long
       val best = LongMap.empty[(Long, BigInt)] // c -> (partner, gain)
       def offer(c: Long, p: Long, ecd: Long): Unit = {
         val gain = BigInt(4) * m * ecd - BigInt(2) * dcm(c) * dcm(p)
@@ -322,7 +317,7 @@ object LabelPropagation {
     // `dc` feeds both gains joins — persist + count BOTH before the
     // fan-out (house rule: independent parallel stages otherwise
     // race-recompute the two edge-label join subtrees, exactly on
-    // the >driverFinishMaxEdges path where they are most expensive).
+    // the above-the-gate path where they are most expensive).
     val betweenP = between.persist(StorageLevel.MEMORY_AND_DISK)
     betweenP.count()
     val dcP = dc.persist(StorageLevel.MEMORY_AND_DISK)
@@ -384,9 +379,7 @@ object LabelPropagation {
     * @return one row: n_communities, m_edges, modularity_ppm
     */
   def modularityPpm(edges: DataFrame, labels: DataFrame,
-                    canonical: Boolean = false,
-                    driverFinishMaxEdges: Long =
-                      SizePolicy.driverMaxEdges): DataFrame = {
+                    canonical: Boolean = false): DataFrame = {
     val e0 = canon(edges, canonical)
     val e = if (canonical) e0
       else e0.persist(StorageLevel.MEMORY_AND_DISK)
@@ -398,9 +391,8 @@ object LabelPropagation {
     // node-sized (≤ 2m) — under the gate the two edge-label joins,
     // the degree aggregate and the scalar rollup collapse to two
     // collects + BigInt arithmetic identical to the distributed
-    // DECIMAL(38,0) chain. Spec-pinned equal (Round15OpsSpec);
-    // 0 forces the distributed path.
-    if (m <= driverFinishMaxEdges) {
+    // DECIMAL(38,0) chain. Spec-pinned equal (Round15OpsSpec).
+    if (SizePolicy.driverFinish(m)) {
       val (dcM, ecM, _) = labelSums(e, labels)
       if (!canonical) e.unpersist(false)
       var num = BigInt(0)

@@ -46,10 +46,8 @@ object PageRank {
     *         1e-12 mass units after `iters` rounds
     */
   def pageRank(edges: DataFrame, iters: Int = 5,
-               dampNum: Long = 17L, dampDen: Long = 20L,
-               driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
-    : DataFrame =
-    run(edges, None, iters, dampNum, dampDen, driverFinishMaxEdges)
+               dampNum: Long = 17L, dampDen: Long = 20L): DataFrame =
+    run(edges, None, iters, dampNum, dampDen)
 
   /** Personalized PageRank: teleport mass lands ONLY on `seeds`
     * (uniformly, in exact integer units), so ranks measure proximity
@@ -65,10 +63,8 @@ object PageRank {
     * @param seeds one column `node` (any integral type)
     */
   def personalized(edges: DataFrame, seeds: DataFrame, iters: Int = 5,
-                   dampNum: Long = 17L, dampDen: Long = 20L,
-                   driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
-    : DataFrame =
-    run(edges, Some(seeds), iters, dampNum, dampDen, driverFinishMaxEdges)
+                   dampNum: Long = 17L, dampDen: Long = 20L): DataFrame =
+    run(edges, Some(seeds), iters, dampNum, dampDen)
 
   /** BLOCK-personalized PageRank: many seed cohorts through ONE
     * shared loop. Rank state is SPARSE — a (cohort, node, rank) row
@@ -102,8 +98,6 @@ object PageRank {
   def blockPersonalized(edges: DataFrame, seeds: DataFrame,
                         iters: Int = 5,
                         dampNum: Long = 17L, dampDen: Long = 20L,
-                        driverFinishMaxEdges: Long =
-                          SizePolicy.driverMaxEdges,
                         cohortBatchSize: Int = Int.MaxValue)
     : DataFrame = {
     require(cohortBatchSize > 0, "cohortBatchSize must be positive")
@@ -111,7 +105,7 @@ object PageRank {
     val e0 = rawEdges(edges)
     try {
       val teleport = total - total * dampNum / dampDen
-      if (e0.count() <= driverFinishMaxEdges) {
+      if (SizePolicy.driverFinish(e0.count())) {
         // raw-edge driver finish (see run()): one cohort iteration each
         val g = distinctTargets(LocalGraph.collect(e0))
         val seedRows = seeds.select(col("cohort").cast("long"),
@@ -257,8 +251,7 @@ object PageRank {
   }
 
   private def run(edges: DataFrame, seeds: Option[DataFrame], iters: Int,
-                  dampNum: Long, dampDen: Long,
-                  driverFinishMaxEdges: Long): DataFrame = {
+                  dampNum: Long, dampDen: Long): DataFrame = {
     require(iters >= 0 && dampNum > 0 && dampDen >= dampNum)
     val e0 = rawEdges(edges)
     try {
@@ -270,7 +263,7 @@ object PageRank {
       // finishing from the degree-attached list (measured ~1 s per
       // graph query at sf0.1). Arithmetic identical to the distributed
       // loop; the pinning specs cover every variant.
-      if (e0.count() <= driverFinishMaxEdges) {
+      if (SizePolicy.driverFinish(e0.count())) {
         val g = distinctTargets(LocalGraph.collect(e0))
         val sources = (0 until g.n).filter(g.degree(_) > 0).toArray
         val cohort = seeds match {

@@ -58,66 +58,65 @@ object Reachability {
     * loop discipline: every round ends in an EAGER localCheckpoint
     * (the reach set feeds both the join and the union — the plan
     * would double per round) and a non-converged exit THROWS instead
-    * of returning a silently partial closure.
+    * of returning a silently partial closure. A type graph under the
+    * driver-finish gate ([[SizePolicy]]) is solved EXACTLY in one task
+    * (collect + DFS + parallelize the set back) — the
+    * Components/PageRank economics: below ~2M edges, per-round job
+    * scheduling costs more than walking an adjacency map on the
+    * driver. Both paths are spec-pinned identical. The edge caches
+    * are released before the call returns or throws.
     *
     * @param edges   columns `child`, `parent`
     * @param targets column `node`
-    * @param driverFinishMaxEdges when the type graph is at most this
-    *   many edges, solve the closure EXACTLY in one task (collect +
-    *   DFS + parallelize the set back) — the Components/PageRank
-    *   broadcast-join economics: below ~2M edges, per-round job
-    *   scheduling costs more than walking an adjacency map on the
-    *   driver. Both paths are spec-pinned identical; set 0 to force
-    *   the distributed loop.
     */
   def reachingSet(edges: DataFrame, targets: DataFrame,
-                  maxRounds: Int = 20,
-                  driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges,
-                  maxBroadcastBytes: Long =
-                    SizePolicy.broadcastBytes): DataFrame = {
+                  maxRounds: Int = 20): DataFrame = {
     val e0 = edges.select(col("child"), col("parent"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the first action materializes the edge cache and sizes both gates
-    val (nEdges, nodesUpper) = SizePolicy.measure(e0, "child", "parent")
-    if (nEdges <= driverFinishMaxEdges) return driverFinish(e0, targets)
-    // Per-round join-side policy (SizePolicy, guide §2.4/§3.1): the
-    // reach set is node-sized and its count is FREE (the convergence
-    // check counts it every round) — broadcast it while it fits, so
-    // the cached edge list is never re-exchanged or sorted; when the
-    // closure can outgrow the cap (node count over the byte gate),
-    // pre-partition the edge cache on the join key (parent) once and
-    // hint shuffled-hash on the reach side. Spec-pinned: broadcast ==
-    // fallback == driver finish (GraphLoopsSpec).
-    val allFit = SizePolicy.fits(nodesUpper,
-      SizePolicy.keyedLongRowBytes, maxBroadcastBytes)
-    var reach = targets.select(col("node")).distinct()
-      .localCheckpoint(true)
-    // reach is checkpointed — e0 has no other reader left
-    val e = SizePolicy.loopEdges(e0, "parent", allFit)
-    var size = reach.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      val rSide = SizePolicy.sideFor(
-        reach.select(col("node").as("parent")),
-        SizePolicy.fits(size, SizePolicy.keyedLongRowBytes,
-          maxBroadcastBytes))
-      val next = e
-        .join(rSide, Seq("parent"))
-        .select(col("child").as("node"))
-        .union(reach.select("node"))
-        .distinct()
+    try {
+      // the first action materializes the edge cache and sizes both
+      // gates
+      val (nEdges, nodesUpper) = SizePolicy.measure(e0, "child", "parent")
+      if (SizePolicy.driverFinish(nEdges)) return driverFinish(e0, targets)
+      // Per-round join-side policy (SizePolicy, guide §2.4/§3.1): the
+      // reach set is node-sized and its count is FREE (the convergence
+      // check counts it every round) — broadcast it while it fits, so
+      // the cached edge list is never re-exchanged or sorted; when the
+      // closure can outgrow the cap (node count over the byte gate),
+      // pre-partition the edge cache on the join key (parent) once and
+      // hint shuffled-hash on the reach side. Spec-pinned: broadcast ==
+      // fallback == driver finish (GraphLoopsSpec).
+      val allFit = SizePolicy.broadcasts(nodesUpper,
+        SizePolicy.keyedLongRowBytes)
+      var reach = targets.select(col("node")).distinct()
         .localCheckpoint(true)
-      val nextSize = next.count()
-      converged = nextSize == size
-      size = nextSize
-      reach = next
-      round += 1
-    }
-    e.unpersist(false)
-    if (!converged) throw new IllegalStateException(
-      s"reachingSet: not converged after $maxRounds rounds")
-    reach
+      // reach is checkpointed — e0 has no other reader left
+      val e = SizePolicy.loopEdges(e0, "parent", allFit)
+      try {
+        var size = reach.count()
+        var converged = false
+        var round = 0
+        while (!converged && round < maxRounds) {
+          val rSide = SizePolicy.sideFor(
+            reach.select(col("node").as("parent")),
+            SizePolicy.broadcasts(size, SizePolicy.keyedLongRowBytes))
+          val next = e
+            .join(rSide, Seq("parent"))
+            .select(col("child").as("node"))
+            .union(reach.select("node"))
+            .distinct()
+            .localCheckpoint(true)
+          val nextSize = next.count()
+          converged = nextSize == size
+          size = nextSize
+          reach = next
+          round += 1
+        }
+        if (!converged) throw new IllegalStateException(
+          s"reachingSet: not converged after $maxRounds rounds")
+        reach
+      } finally e.unpersist(false)
+    } finally e0.unpersist(false)
   }
 
   /** Exact single-task closure for a bounded type graph: reverse
@@ -129,7 +128,6 @@ object Reachability {
     val spark = e.sparkSession
     val idType = e.schema("child").dataType
     val pairs = e.collect().map(r => (r.get(0), r.get(1)))
-    e.unpersist(false)
     val children =
       scala.collection.mutable.HashMap
         .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
@@ -167,13 +165,11 @@ object Reachability {
     * @param reach       column `node` (from [[reachingSet]])
     * @return distinct `member` keys that validate
     */
-  def validMembers(memberTypes: DataFrame, reach: DataFrame,
-                   maxBroadcastBytes: Long = SizePolicy.broadcastBytes)
-    : DataFrame = {
+  def validMembers(memberTypes: DataFrame, reach: DataFrame): DataFrame = {
     val r = reach.select(col("node").as("tid"))
     // reachingSet returns a materialized set — this count is cheap
-    val keyed = if (SizePolicy.fits(r.count(), SizePolicy.keyRowBytes,
-      maxBroadcastBytes)) broadcast(r) else r
+    val keyed = if (SizePolicy.broadcasts(r.count(), SizePolicy.keyRowBytes))
+      broadcast(r) else r
     memberTypes.join(keyed, Seq("tid"), "left_semi")
       .select("member").distinct()
   }

@@ -38,10 +38,9 @@ import org.apache.spark.storage.StorageLevel
   * every edge format: [[measure]] runs it over a persisted frame
   * (Reachability), Bfs over its primitive edge blocks.
   *
-  * Operators keep their per-call `driverFinishMaxEdges` (and, where a
-  * broadcast branch remains, `maxBroadcastBytes`) parameters only so
-  * specs and tools.GraphLoopBench can force a branch; every default
-  * is here.
+  * Every gate is read through [[driverFinish]] or [[broadcasts]], when
+  * its operator is called; no operator takes a cap as a parameter.
+  * Specs and tools.GraphLoopBench force a branch with [[forcing]].
   */
 private[graft] object SizePolicy {
 
@@ -66,8 +65,62 @@ private[graft] object SizePolicy {
   /** A bare long key plus hashed-relation overhead: a semi-join set. */
   val keyRowBytes: Long = 16L
 
-  def fits(rows: Long, bytesPerRow: Long, cap: Long): Boolean =
-    rows * bytesPerRow <= cap
+  /** Whether a graph operator collects its `edgeRows` edge rows and
+    * finishes on the driver ([[driverMaxEdges]]). */
+  def driverFinish(edgeRows: Long): Boolean = forced.get match {
+    case null => edgeRows <= driverMaxEdges
+    case f => f.edgesRead = true; edgeRows <= f.edges
+  }
+
+  /** Whether a side of `rows` rows, each costing `bytesPerRow` as a
+    * hashed relation, is broadcast ([[broadcastBytes]]). */
+  def broadcasts(rows: Long, bytesPerRow: Long): Boolean = forced.get match {
+    case null => rows * bytesPerRow <= broadcastBytes
+    case f => f.bytesRead = true; rows * bytesPerRow <= f.bytes
+  }
+
+  /** The caps a [[forcing]] block set, and whether a gate read each. */
+  private final class Forced(val edges: Long, val bytes: Long) {
+    var edgesRead, bytesRead = false
+  }
+
+  /** This thread's innermost [[forcing]] block, or null. Not
+    * inheritable: a thread started inside a block reads the defaults. */
+  private val forced = new ThreadLocal[Forced]
+
+  /** The (edge, byte) caps this thread's gates read now. */
+  private def caps: (Long, Long) = forced.get match {
+    case null => (driverMaxEdges, broadcastBytes)
+    case f => (f.edges, f.bytes)
+  }
+
+  /** Runs `body` with this thread's gates reading the caps given here
+    * in place of the defaults of the same names — the one way to force
+    * a branch (specs, tools.GraphLoopBench). A cap left out keeps the
+    * enclosing block's value; the enclosing values return when `body`
+    * exits, also by a throw. Gates are read when an operator is
+    * called, so the block wraps the call, not the action on its
+    * result. If `body` returns without any gate read, or without a
+    * gate reading a cap the block changed, this throws: a forced
+    * comparison then cannot silently compare a branch with itself. */
+  private[graft] def forcing[T](driverMaxEdges: Long = caps._1,
+                                broadcastBytes: Long = caps._2)
+                               (body: => T): T = {
+    val (outer, f) = (forced.get, new Forced(driverMaxEdges, broadcastBytes))
+    forced.set(f)
+    val out = try body finally forced.set(outer)
+    val (e0, b0) = caps
+    if (!(f.edgesRead || f.bytesRead) || f.edges != e0 && !f.edgesRead ||
+        f.bytes != b0 && !f.bytesRead) throw new IllegalStateException(
+      s"SizePolicy.forcing: no gate read a cap the block set " +
+        s"(driverMaxEdges = ${f.edges}, broadcastBytes = ${f.bytes})")
+    // a cap the block kept is the enclosing block's: so was its read
+    if (outer != null) {
+      outer.edgesRead |= f.edgesRead && f.edges == e0
+      outer.bytesRead |= f.bytesRead && f.bytes == b0
+    }
+    out
+  }
 
   /** The state side of a per-round join: explicit broadcast under the
     * gate, shuffled-hash hint (build on the node-sized state, stream
@@ -85,7 +138,8 @@ private[graft] object SizePolicy {
     if (bcast) e
     else {
       val ep = e.repartition(col(key)).persist(StorageLevel.MEMORY_AND_DISK)
-      ep.count()
+      try ep.count()
+      catch { case t: Throwable => ep.unpersist(false); throw t }
       e.unpersist(false)
       ep
     }

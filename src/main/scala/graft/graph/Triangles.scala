@@ -23,7 +23,7 @@ import org.apache.spark.storage.StorageLevel
 object Triangles {
 
   /** Canonical (a < b, loop-free) distinct edge view, persisted —
-    * shared by the driver-finish gate and [[orient]]. Callers count
+    * shared by the driver-finish gate and [[distributed]]. Callers count
     * it to materialize. */
   private def canonPersisted(edges: DataFrame): DataFrame =
     LocalGraph.canonicalEdges(edges)
@@ -33,15 +33,14 @@ object Triangles {
     * orient + wedge + closing-edge counting over the collected
     * canonical edges, with the same packed (deg·10⁹ + id) order, the
     * same wedge canonicalization and the same 1e9 id guard. Doubly
-    * gated: None past `maxEdges` edge rows, or when the implied wedge
-    * count Σ C(outdeg, 2) — read off the same orientation pass —
-    * exceeds the local wedge cap (a dense graph under the edge gate
+    * gated: None past the driver-finish gate, or when the implied
+    * wedge count Σ C(outdeg, 2) — read off the same orientation pass
+    * — exceeds the local wedge cap (a dense graph under the edge gate
     * can still imply E^1.5 wedges; that work belongs on the cluster).
-    * Returns (graph, wedges, triangles, per-node triangle counts) and
-    * releases `eC`. */
-  private def local(eC: DataFrame, nE: Long, maxEdges: Long)
+    * Returns (graph, wedges, triangles, per-node triangle counts). */
+  private def local(eC: DataFrame, nE: Long)
     : Option[(LocalGraph, Long, Long, Array[Long])] = {
-    if (nE > maxEdges) return None
+    if (!SizePolicy.driverFinish(nE)) return None
     val g = LocalGraph.collect(eC, symmetric = true)
     val maxNode = g.ids.lastOption.getOrElse(Long.MinValue)
     require(maxNode < 1000000000L,
@@ -54,7 +53,6 @@ object Triangles {
     g.foreachEdge((u, v) => if (u < v) outdeg(src(u, v)) += 1)
     val nWedges = outdeg.map(d => d.toLong * (d - 1) / 2).sum
     if (nWedges > SizePolicy.localMaxWedges) return None
-    eC.unpersist(false)
     val offsets = outdeg.scanLeft(0)(_ + _)
     val fill = offsets.clone()
     val out = new Array[Int](offsets(g.n))
@@ -78,17 +76,16 @@ object Triangles {
     Some((g, nWedges, nTriangles, tri))
   }
 
-  /** Canonicalize + degree-orient the canonical edge list `e`
-    * (persisted+materialized by the caller via [[canonPersisted]]).
-    * Returns (oriented edges persisted+materialized, per-node
-    * degrees, oriented edge count). `oriented` carries src, dst and
-    * the packed (deg, id) order key of dst (`dstk`) so wedge
-    * canonicalization needs no further join. The degree subtree keeps
-    * `e` persisted underneath it — callers re-read deg when their
-    * results materialize, and recomputing the caller's whole edge
-    * pipeline (the dominant cost of a co-occurrence graph) would dwarf
-    * the cache; the session harness releases caches between queries. */
-  private def orient(e: DataFrame): (DataFrame, DataFrame, Long) = {
+  /** The distributed path: degree-orient the canonical edge list `e`
+    * (persisted+materialized by the caller via [[canonPersisted]]) and
+    * run `body` over (oriented edges, per-node degrees, oriented edge
+    * count), both frames persisted and materialized. `oriented`
+    * carries src, dst and the packed (deg, id) order key of dst
+    * (`dstk`) so wedge canonicalization needs no further join. The
+    * result is eagerly checkpointed, so it reads neither cache; both
+    * are released before this returns or throws. */
+  private def distributed(e: DataFrame)(
+      body: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
     // ids must fit under the okey packing factor — corrupt order keys
     // would silently mis-orient edges, so refuse loudly instead.
     // e is materialized, so this max is a cheap cached scan.
@@ -105,7 +102,6 @@ object Triangles {
       .union(e.select(col("b").as("node")))
       .groupBy("node").agg(sqlCount(lit(1)).as("deg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    deg.count()
     val maxId = 1000000000L
     val okey = (col("deg") * maxId + col("node")).as("okey")
     val keyed = deg.select(col("node"), okey)
@@ -121,57 +117,56 @@ object Triangles {
         when(col("ka") < col("kb"), col("b")).otherwise(col("a"))
           .as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = oriented.count()
-    (oriented, deg, nEdges)
+    try {
+      deg.count()
+      body(oriented, deg, oriented.count()).localCheckpoint(true)
+    } finally { oriented.unpersist(false); deg.unpersist(false) }
   }
+
+  /** The closing-edge side: broadcast while the oriented edges fit
+    * (known — they were counted), so the wedge stream — the big side,
+    * up to out-deg² per source — never shuffles. Past the cap the
+    * equi-join on (v, w) shuffles both sides; the wedge side is then
+    * the cost, which is the algorithm's honest lower bound. */
+  private def closeSide(closing: DataFrame, nEdges: Long): DataFrame =
+    if (SizePolicy.broadcasts(nEdges, SizePolicy.keyedLongRowBytes))
+      broadcast(closing) else closing
 
   /** @param edges undirected edge list, columns `id1`, `id2` (one row
     *              per edge, any orientation, self-loops ignored)
     * @return one row: n_nodes, n_edges, n_wedges, n_triangles
     */
-  def count(edges: DataFrame,
-            maxBroadcastBytes: Long = SizePolicy.broadcastBytes,
-            driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
-    : DataFrame = {
+  def count(edges: DataFrame): DataFrame = {
     val eC = canonPersisted(edges)
-    val nE = eC.count()
-    // exact driver finish ([[local]]); spec-pinned equal
-    // (DriverFinishParitySpec); 0 forces the distributed path
-    local(eC, nE, driverFinishMaxEdges) match {
-      case Some((g, nw, nt, _)) => return g.toDF(Seq((g.n.toLong, nE, nw,
-        nt)), "n_nodes", "n_edges", "n_wedges", "n_triangles")
-      case None =>
-    }
-    val (oriented, deg, nEdges) = orient(eC)
-    // e stays persisted: the n_nodes branch below re-reads deg (and
-    // through it e) when the RESULT materializes — unpersisting here
-    // would recompute the caller's whole edge pipeline (the dominant
-    // cost of a co-occurrence graph); the session harness releases
-    // caches between queries
-    // wedges from a shared source, canonicalized v ≺ w by the SAME
-    // total order so each candidate triangle is generated exactly once
-    val wedges = oriented.as("x").join(oriented.as("y"),
-        col("x.src") === col("y.src") &&
-        col("x.dstk") < col("y.dstk"))
-      .select(col("x.dst").as("v"), col("y.dst").as("w"))
-    val closing = oriented.select(col("src").as("v"),
-      col("dst").as("w"), lit(1L).as("hit"))
-    // ONE pass over the wedge stream counts wedges AND triangles
-    // (separate aggregates would run the wedge self-join twice). The
-    // closing-edge set is O(|E|); when it fits (known — we counted
-    // the edges) broadcast it so the wedge stream — the big side, up
-    // to out-deg² per source — never shuffles. Past broadcast size
-    // the equi-join on (v, w) shuffles both sides; the wedge side is
-    // then the cost, which is the algorithm's honest lower bound.
-    val close = if (SizePolicy.fits(nEdges, SizePolicy.keyedLongRowBytes,
-      maxBroadcastBytes)) broadcast(closing) else closing
-    val agg2 = wedges.join(close, Seq("v", "w"), "left")
-      .agg(sqlCount(lit(1)).as("n_wedges"),
-        coalesce(sum("hit"), lit(0L)).as("n_triangles"))
-    val nNodes = deg.agg(sqlCount(lit(1)).as("n_nodes"))
-    nNodes
-      .crossJoin(oriented.agg(sqlCount(lit(1)).as("n_edges")))
-      .crossJoin(agg2)
+    try {
+      val nE = eC.count()
+      // exact driver finish ([[local]]); spec-pinned equal
+      // (DriverFinishParitySpec)
+      local(eC, nE) match {
+        case Some((g, nw, nt, _)) => g.toDF(Seq((g.n.toLong, nE, nw, nt)),
+          "n_nodes", "n_edges", "n_wedges", "n_triangles")
+        case None => distributed(eC) { (oriented, deg, nEdges) =>
+          // wedges from a shared source, canonicalized v ≺ w by the
+          // SAME total order so each candidate triangle is generated
+          // exactly once
+          val wedges = oriented.as("x").join(oriented.as("y"),
+              col("x.src") === col("y.src") &&
+              col("x.dstk") < col("y.dstk"))
+            .select(col("x.dst").as("v"), col("y.dst").as("w"))
+          val closing = oriented.select(col("src").as("v"),
+            col("dst").as("w"), lit(1L).as("hit"))
+          // ONE pass over the wedge stream counts wedges AND triangles
+          // (separate aggregates would run the wedge self-join twice)
+          val agg2 = wedges.join(closeSide(closing, nEdges), Seq("v", "w"),
+              "left")
+            .agg(sqlCount(lit(1)).as("n_wedges"),
+              coalesce(sum("hit"), lit(0L)).as("n_triangles"))
+          deg.agg(sqlCount(lit(1)).as("n_nodes"))
+            .crossJoin(oriented.agg(sqlCount(lit(1)).as("n_edges")))
+            .crossJoin(agg2)
+        }
+      }
+    } finally eC.unpersist(false)
   }
 
   /** Per-node triangle counts and local clustering coefficient over
@@ -191,42 +186,38 @@ object Triangles {
     *
     * @return (node, deg, tri, cc_ppm) for every node with deg ≥ 2
     */
-  def perNode(edges: DataFrame,
-              maxBroadcastBytes: Long = SizePolicy.broadcastBytes,
-              driverFinishMaxEdges: Long = SizePolicy.driverMaxEdges)
-    : DataFrame = {
+  def perNode(edges: DataFrame): DataFrame = {
     val eC = canonPersisted(edges)
-    val nE = eC.count()
-    // same driver finish as [[count]]; per-node output mirrors the
-    // deg ≥ 2 filter, the left-join coalesce and the HALF_UP ppm
-    local(eC, nE, driverFinishMaxEdges) match {
-      case Some((g, _, _, tri)) => return g.toDF(
-        (0 until g.n).filter(g.degree(_) >= 2).map { i =>
-          val deg = g.degree(i).toLong
-          (g.ids(i), deg, tri(i), (4L * tri(i) * 1000000L +
-            deg * (deg - 1)) / (2L * deg * (deg - 1)))
-        }, "node", "deg", "tri", "cc_ppm")
-      case None =>
-    }
-    val (oriented, deg, nEdges) = orient(eC)
-    val wedges = oriented.as("x").join(oriented.as("y"),
-        col("x.src") === col("y.src") &&
-        col("x.dstk") < col("y.dstk"))
-      .select(col("x.src").as("u"), col("x.dst").as("v"),
-        col("y.dst").as("w"))
-    val closing = oriented.select(col("src").as("v"),
-      col("dst").as("w"))
-    val close = if (SizePolicy.fits(nEdges, SizePolicy.keyedLongRowBytes,
-      maxBroadcastBytes)) broadcast(closing) else closing
-    val corners = wedges.join(close, Seq("v", "w"))
-      .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-      .groupBy("node").agg(sqlCount(lit(1)).as("tri"))
-    deg.filter(col("deg") >= 2)
-      .join(corners, Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("tri"), lit(0L)).as("tri"))
-      .withColumn("cc_ppm",
-        expr("(4 * tri * 1000000 + deg * (deg - 1)) DIV " +
-          "(2 * deg * (deg - 1))"))
+    try {
+      // same driver finish as [[count]]; per-node output mirrors the
+      // deg ≥ 2 filter, the left-join coalesce and the HALF_UP ppm
+      local(eC, eC.count()) match {
+        case Some((g, _, _, tri)) => g.toDF(
+          (0 until g.n).filter(g.degree(_) >= 2).map { i =>
+            val deg = g.degree(i).toLong
+            (g.ids(i), deg, tri(i), (4L * tri(i) * 1000000L +
+              deg * (deg - 1)) / (2L * deg * (deg - 1)))
+          }, "node", "deg", "tri", "cc_ppm")
+        case None => distributed(eC) { (oriented, deg, nEdges) =>
+          val wedges = oriented.as("x").join(oriented.as("y"),
+              col("x.src") === col("y.src") &&
+              col("x.dstk") < col("y.dstk"))
+            .select(col("x.src").as("u"), col("x.dst").as("v"),
+              col("y.dst").as("w"))
+          val closing = oriented.select(col("src").as("v"),
+            col("dst").as("w"))
+          val corners = wedges.join(closeSide(closing, nEdges), Seq("v", "w"))
+            .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
+            .groupBy("node").agg(sqlCount(lit(1)).as("tri"))
+          deg.filter(col("deg") >= 2)
+            .join(corners, Seq("node"), "left")
+            .select(col("node"), col("deg"),
+              coalesce(col("tri"), lit(0L)).as("tri"))
+            .withColumn("cc_ppm",
+              expr("(4 * tri * 1000000 + deg * (deg - 1)) DIV " +
+                "(2 * deg * (deg - 1))"))
+        }
+      }
+    } finally eC.unpersist(false)
   }
 }

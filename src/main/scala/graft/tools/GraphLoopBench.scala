@@ -3,14 +3,16 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.graph.SizePolicy
+
 /** Forced-distributed A/B harness for the iterative graph loops.
   *
   * The test SFs never exercise the distributed branches — every
   * corpus graph sits under the 2M-edge driver-finish gate — so this
   * tool synthesizes a deterministic graph ABOVE the gate (4M directed
   * edges over 300K nodes, xxhash64-derived, partition-invariant),
-  * writes it to parquet once, and times each loop with
-  * `driverFinishMaxEdges = 0`:
+  * writes it to parquet once, and times each loop forced past the
+  * driver-finish gate (`SizePolicy.forcing(driverMaxEdges = 0)`):
   *
   *   - mode `gen`:      write <dir>/edges.parquet
   *   - mode `default`:  every loop on the branch graph.SizePolicy
@@ -22,8 +24,9 @@ import org.apache.spark.sql.functions._
   *                      nodes × 48 B ≈ 14 MB < 100 MB), and for bfs4
   *                      the state stays on the driver, one edge-scan
   *                      job per hop
-  *   - mode `fallback`: bfs4, components, kcore4 and reach only, with
-  *                      `maxBroadcastBytes = 0` — their pre-partitioned
+  *   - mode `fallback`: bfs4, components, kcore4 and reach only, also
+  *                      forced past the broadcast cap
+  *                      (`broadcastBytes = 0`) — their pre-partitioned
   *                      edge cache + shuffled-hash state side
   *   - mode `plans`:    dump `.explain("formatted")` of one round each
   *                      of LPA, PageRank and HyperBall (the factored
@@ -50,41 +53,37 @@ object GraphLoopBench {
 
     if (mode == "plans") { plans(spark, sym, outDir); spark.stop(); return }
 
-    // the loops that keep a broadcast branch; maxBroadcastBytes = 0
+    // the loops that keep a broadcast branch; a zero broadcast cap
     // forces their repartition + shuffled-hash fallback
     val armed = Set("bfs4", "components", "kcore4", "reach")
     val fb = mode == "fallback"
-    val maxBytes = if (fb) 0L else graft.graph.SizePolicy.broadcastBytes
+    def forced(build: () => DataFrame): DataFrame = SizePolicy.forcing(
+      driverMaxEdges = 0L,
+      broadcastBytes = if (fb) 0L else SizePolicy.broadcastBytes)(build())
     def ops: Seq[(String, () => DataFrame)] = Seq(
       "lpa4" -> (() => graft.graph.LabelPropagation.run(
         edges.select(col("src").as("id1"), col("dst").as("id2")),
-        rounds = 4, driverFinishMaxEdges = 0L)),
+        rounds = 4)),
       "bfs4" -> { () =>
         val seeds = spark.range(10).select(col("id").as("node"))
-        graft.graph.Bfs.hopDistances(sym, seeds, 4,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = maxBytes)
+        graft.graph.Bfs.hopDistances(sym, seeds, 4)
       },
-      "hyperball3" -> (() => graft.graph.HyperBall.neighborhood(sym, 3,
-        driverFinishMaxEdges = 0L)),
-      "pagerank5" -> (() => graft.graph.PageRank.pageRank(sym, iters = 5,
-        driverFinishMaxEdges = 0L)),
+      "hyperball3" -> (() => graft.graph.HyperBall.neighborhood(sym, 3)),
+      "pagerank5" -> (() => graft.graph.PageRank.pageRank(sym, iters = 5)),
       "components" -> { () =>
         val nodes = spark.range(300000).select(col("id"))
         graft.graph.Components.connectedComponents(nodes,
-          edges.select(col("src").as("id1"), col("dst").as("id2")),
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = maxBytes)
+          edges.select(col("src").as("id1"), col("dst").as("id2")))
       },
       "kcore4" -> (() => graft.graph.KCore.kcore(
         edges.select(col("src").as("id1"), col("dst").as("id2")),
-        k = 8, rounds = 4, driverFinishMaxEdges = 0L,
-        maxBroadcastBytes = maxBytes)),
+        k = 8, rounds = 4)),
       "reach" -> { () =>
         val targets = spark.range(10).select(col("id").as("node"))
         val dedges = edges.select(col("src").as("child"),
           col("dst").as("parent"))
         graft.graph.Reachability.reachingSet(dedges, targets,
-          maxRounds = 40, driverFinishMaxEdges = 0L,
-          maxBroadcastBytes = maxBytes)
+          maxRounds = 40)
       }).filter { case (n, _) => !fb || armed(n) }
 
     // optional 4th arg: comma-separated op subset for targeted A/Bs
@@ -95,7 +94,7 @@ object GraphLoopBench {
       spark.sparkContext.setJobDescription(s"glb:$name")
       val ts = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        build().write.format("noop").mode("overwrite").save()
+        forced(build).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
         spark.sharedState.cacheManager.clearCache()
         dt
@@ -137,7 +136,7 @@ object GraphLoopBench {
           org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
       println(s"[glb] wrote $p")
     }
-    val symP = graft.graph.SizePolicy.loopEdges(sym, "src", bcast = false)
+    val symP = SizePolicy.loopEdges(sym, "src", bcast = false)
     val labels = symP.select(col("src").as("node")).distinct()
       .withColumn("label", col("node")).localCheckpoint(true)
     dump("glb_lpa_round.txt",

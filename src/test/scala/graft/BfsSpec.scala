@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.apache.spark.sql.types.IntegerType
 
 import graft.graph.Bfs
+import graft.graph.SizePolicy.forcing
 
 /** Bfs.hopDistances' three branches on the edge cases of its seed
   * guard, hop cap and null endpoints, the cost shape of the
   * driver-state rounds, and that no edge cache outlives a call.
   * Driver finish (default gates, small graphs) == driver-state rounds
-  * (`driverFinishMaxEdges = 0`) == shuffled-hash fallback (plus
-  * `maxBroadcastBytes = 0`), row for row and in schema.
+  * (`SizePolicy.forcing(driverMaxEdges = 0L)`) == shuffled-hash
+  * fallback (plus `broadcastBytes = 0L`), row for row and in schema.
   */
 class BfsSpec extends SparkSpec {
   import spark.implicits._
@@ -31,7 +32,7 @@ class BfsSpec extends SparkSpec {
   private def allBranches(name: String, edges: DataFrame,
                           seeds: DataFrame, hops: Int): DataFrame = {
     val Seq(drv, rounds, fb) = branches.map { case (_, maxEdges, maxBytes) =>
-      Bfs.hopDistances(edges, seeds, hops, maxEdges, maxBytes)
+      forcing(maxEdges, maxBytes)(Bfs.hopDistances(edges, seeds, hops))
     }
     assert(rows(drv) == rows(rounds), s"$name: driver != driver-state rounds")
     assert(rows(rounds) == rows(fb), s"$name: driver-state rounds != fallback")
@@ -84,11 +85,12 @@ class BfsSpec extends SparkSpec {
       .otherwise(raise_error(lit("seed failure"))).as("node"))
     for ((name, maxEdges, maxBytes) <- branches) {
       spark.sharedState.cacheManager.clearCache()
-      val left = persistedBy(Bfs.hopDistances(edges, seeds, 3,
-        maxEdges, maxBytes).collect())
+      val left = persistedBy(forcing(maxEdges, maxBytes)(
+        Bfs.hopDistances(edges, seeds, 3)).collect())
       assert(left.isEmpty, s"$name left persisted RDDs $left")
       val leftOnFailure = persistedBy(intercept[Exception](
-        Bfs.hopDistances(edges, failing, 3, maxEdges, maxBytes).collect()))
+        forcing(maxEdges, maxBytes)(Bfs.hopDistances(edges, failing, 3))
+          .collect()))
       assert(leftOnFailure.isEmpty,
         s"$name left persisted RDDs $leftOnFailure after a failure")
       assert(spark.sharedState.cacheManager.isEmpty,
@@ -130,8 +132,8 @@ class BfsSpec extends SparkSpec {
     var got = Seq.empty[Seq[Any]]
     val left =
       try persistedBy {
-        got = rows(Bfs.hopDistances(edges, seeds, hops,
-          driverFinishMaxEdges = 0L))
+        got = rows(forcing(driverMaxEdges = 0L)(
+          Bfs.hopDistances(edges, seeds, hops)))
         org.apache.spark.ListenerDrain(sc)
       } finally sc.removeSparkListener(listener)
     assert(got.nonEmpty && got.exists(_(1) == hops.toLong))

@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.graph.SizePolicy.forcing
+
 /** Round-15 optimization pinning: every NEW raw-edge driver finish
   * (LabelPropagation.run / modularityPpm / refineMerge's raw-edge
   * bounded branch, Bfs.hopDistances, HyperBall.neighborhood /
   * harmonicCentrality) must equal its distributed loop ROW FOR ROW —
   * on random graphs (ties, duplicate edge rows, isolated label
-  * ranges) and on the real corpus at two SFs. `driverFinishMaxEdges
-  * = 0` forces the distributed path; the default takes the driver
-  * finish (the graphs here are far under the bound).
+  * ranges) and on the real corpus at two SFs.
+  * `SizePolicy.forcing(driverMaxEdges = 0L)` around the call forces
+  * the distributed path; the default takes the driver finish (the
+  * graphs here are far under the bound).
   */
 class DriverFinishParitySpec extends SparkSpec {
   import spark.implicits._
@@ -40,8 +43,8 @@ class DriverFinishParitySpec extends SparkSpec {
         val drv = graft.graph.LabelPropagation
           .run(edges, rounds)
           .as[(Long, Long)].collect().sortBy(_._1).toSeq
-        val dist = graft.graph.LabelPropagation
-          .run(edges, rounds, driverFinishMaxEdges = 0L)
+        val dist = forcing(driverMaxEdges = 0L)(graft.graph.LabelPropagation
+          .run(edges, rounds))
           .as[(Long, Long)].collect().sortBy(_._1).toSeq
         assert(drv == dist, s"seed=$seed rounds=$rounds")
         assert(drv.nonEmpty)
@@ -58,9 +61,8 @@ class DriverFinishParitySpec extends SparkSpec {
       val drv = graft.graph.LabelPropagation
         .run(pairs, rounds = 4, canonical = true)
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      val dist = graft.graph.LabelPropagation
-        .run(pairs, rounds = 4, canonical = true,
-          driverFinishMaxEdges = 0L)
+      val dist = forcing(driverMaxEdges = 0L)(graft.graph.LabelPropagation
+        .run(pairs, rounds = 4, canonical = true))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
       assert(drv == dist, s"paths diverge at $sfn")
       assert(drv.nonEmpty)
@@ -79,9 +81,8 @@ class DriverFinishParitySpec extends SparkSpec {
         .run(pairs, rounds = 4, canonical = true)
       val drv = rows(graft.graph.LabelPropagation
         .modularityPpm(pairs, labels, canonical = true))
-      val dist = rows(graft.graph.LabelPropagation
-        .modularityPpm(pairs, labels, canonical = true,
-          driverFinishMaxEdges = 0L))
+      val dist = rows(forcing(driverMaxEdges = 0L)(graft.graph.LabelPropagation
+        .modularityPpm(pairs, labels, canonical = true)))
       assert(drv == dist, s"paths diverge at $sfn")
       spark.sharedState.cacheManager.clearCache()
     }
@@ -90,8 +91,8 @@ class DriverFinishParitySpec extends SparkSpec {
       val labels = graft.graph.LabelPropagation.run(edges, 2)
       val drv = rows(graft.graph.LabelPropagation
         .modularityPpm(edges, labels))
-      val dist = rows(graft.graph.LabelPropagation
-        .modularityPpm(edges, labels, driverFinishMaxEdges = 0L))
+      val dist = rows(forcing(driverMaxEdges = 0L)(graft.graph.LabelPropagation
+        .modularityPpm(edges, labels)))
       assert(drv == dist, s"seed=$seed")
       spark.sharedState.cacheManager.clearCache()
     }
@@ -108,8 +109,8 @@ class DriverFinishParitySpec extends SparkSpec {
       val drv = graft.graph.LabelPropagation
         .refineMerge(edges, labels)
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      val dist = graft.graph.LabelPropagation
-        .refineMerge(edges, labels, driverFinishMaxEdges = 0L)
+      val dist = forcing(driverMaxEdges = 0L)(graft.graph.LabelPropagation
+        .refineMerge(edges, labels))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
       assert(drv == dist, s"seed=$seed")
       spark.sharedState.cacheManager.clearCache()
@@ -129,8 +130,8 @@ class DriverFinishParitySpec extends SparkSpec {
       (0 to 3).foreach { hops =>
         val drv = graft.graph.Bfs.hopDistances(edges, seeds, hops)
           .as[(Long, Long)].collect().sortBy(_._1).toSeq
-        val dist = graft.graph.Bfs.hopDistances(edges, seeds, hops,
-            driverFinishMaxEdges = 0L)
+        val dist = forcing(driverMaxEdges = 0L)(
+            graft.graph.Bfs.hopDistances(edges, seeds, hops))
           .as[(Long, Long)].collect().sortBy(_._1).toSeq
         assert(drv == dist, s"seed=$seed hops=$hops")
       }
@@ -150,8 +151,8 @@ class DriverFinishParitySpec extends SparkSpec {
         .filter(col("s_suppkey") % 7 === 0)
         .select((col("s_suppkey") * 2 + 1).as("node"))
       val drv = rows(graft.graph.Bfs.hopDistances(edges, seeds, 4))
-      val dist = rows(graft.graph.Bfs.hopDistances(edges, seeds, 4,
-        driverFinishMaxEdges = 0L))
+      val dist = rows(forcing(driverMaxEdges = 0L)(
+        graft.graph.Bfs.hopDistances(edges, seeds, 4)))
       assert(drv == dist, s"paths diverge at $sfn")
       assert(drv.nonEmpty)
       spark.sharedState.cacheManager.clearCache()
@@ -171,14 +172,13 @@ class DriverFinishParitySpec extends SparkSpec {
       (1 to 3).foreach { rounds =>
         val drvN = rows(graft.graph.HyperBall
           .neighborhood(edges, rounds))
-        val distN = rows(graft.graph.HyperBall
-          .neighborhood(edges, rounds, driverFinishMaxEdges = 0L))
+        val distN = rows(forcing(driverMaxEdges = 0L)(graft.graph.HyperBall
+          .neighborhood(edges, rounds)))
         assert(drvN == distN, s"neighborhood seed=$seed r=$rounds")
         val drvH = rows(graft.graph.HyperBall
           .harmonicCentrality(edges, rounds))
-        val distH = rows(graft.graph.HyperBall
-          .harmonicCentrality(edges, rounds,
-            driverFinishMaxEdges = 0L))
+        val distH = rows(forcing(driverMaxEdges = 0L)(graft.graph.HyperBall
+          .harmonicCentrality(edges, rounds)))
         assert(drvH == distH, s"harmonic seed=$seed r=$rounds")
       }
       spark.sharedState.cacheManager.clearCache()
@@ -190,8 +190,8 @@ class DriverFinishParitySpec extends SparkSpec {
     val edges = e0.union(
       e0.select(col("dst").as("src"), col("src").as("dst")))
     val drv = rows(graft.graph.HyperBall.harmonicCentrality(edges, 2))
-    val dist = rows(graft.graph.HyperBall.harmonicCentrality(edges, 2,
-      driverFinishMaxEdges = 0L))
+    val dist = rows(forcing(driverMaxEdges = 0L)(
+      graft.graph.HyperBall.harmonicCentrality(edges, 2)))
     assert(drv == dist)
     assert(drv.nonEmpty)
     spark.sharedState.cacheManager.clearCache()
@@ -203,19 +203,19 @@ class DriverFinishParitySpec extends SparkSpec {
     (1 to 4).foreach { seed =>
       val edges = randomEdges(seed, 25, 80).toDF("id1", "id2")
       val drvC = rows(graft.graph.Triangles.count(edges))
-      val distC = rows(graft.graph.Triangles.count(edges,
-        driverFinishMaxEdges = 0L))
+      val distC = rows(forcing(driverMaxEdges = 0L)(
+        graft.graph.Triangles.count(edges)))
       assert(drvC == distC, s"count seed=$seed")
       val drvP = rows(graft.graph.Triangles.perNode(edges))
-      val distP = rows(graft.graph.Triangles.perNode(edges,
-        driverFinishMaxEdges = 0L))
+      val distP = rows(forcing(driverMaxEdges = 0L)(
+        graft.graph.Triangles.perNode(edges)))
       assert(drvP == distP, s"perNode seed=$seed")
       spark.sharedState.cacheManager.clearCache()
     }
     val pairs = Queries.coPurchasePairs(spark, sf("sf0.01"))
     val drv = rows(graft.graph.Triangles.count(pairs))
-    val dist = rows(graft.graph.Triangles.count(pairs,
-      driverFinishMaxEdges = 0L))
+    val dist = rows(forcing(driverMaxEdges = 0L)(
+      graft.graph.Triangles.count(pairs)))
     assert(drv == dist)
     spark.sharedState.cacheManager.clearCache()
   }
@@ -227,9 +227,8 @@ class DriverFinishParitySpec extends SparkSpec {
       Seq(10000L, 4L).foreach { cap => // 4 exercises the hub cap
         val drv = rows(graft.graph.LinkPrediction
           .jaccardCandidates(edges, topK = 20, maxCenterDegree = cap))
-        val dist = rows(graft.graph.LinkPrediction
-          .jaccardCandidates(edges, topK = 20, maxCenterDegree = cap,
-            driverFinishMaxEdges = 0L))
+        val dist = rows(forcing(driverMaxEdges = 0L)(graft.graph.LinkPrediction
+          .jaccardCandidates(edges, topK = 20, maxCenterDegree = cap)))
         assert(drv == dist, s"seed=$seed cap=$cap")
       }
       spark.sharedState.cacheManager.clearCache()
@@ -237,9 +236,8 @@ class DriverFinishParitySpec extends SparkSpec {
     val pairs = Queries.coPurchasePairs(spark, sf("sf0.01"))
     val drv = rows(graft.graph.LinkPrediction
       .jaccardCandidates(pairs, topK = 50, maxCenterDegree = 10000L))
-    val dist = rows(graft.graph.LinkPrediction
-      .jaccardCandidates(pairs, topK = 50, maxCenterDegree = 10000L,
-        driverFinishMaxEdges = 0L))
+    val dist = rows(forcing(driverMaxEdges = 0L)(graft.graph.LinkPrediction
+      .jaccardCandidates(pairs, topK = 50, maxCenterDegree = 10000L)))
     assert(drv == dist)
     spark.sharedState.cacheManager.clearCache()
   }
@@ -248,15 +246,15 @@ class DriverFinishParitySpec extends SparkSpec {
     (1 to 3).foreach { seed =>
       val edges = randomEdges(seed, 25, 60).toDF("id1", "id2")
       val drv = rows(graft.graph.GraphStats.assortativityPpm(edges))
-      val dist = rows(graft.graph.GraphStats.assortativityPpm(edges,
-        driverFinishMaxEdges = 0L))
+      val dist = rows(forcing(driverMaxEdges = 0L)(
+        graft.graph.GraphStats.assortativityPpm(edges)))
       assert(drv == dist, s"seed=$seed")
       spark.sharedState.cacheManager.clearCache()
     }
     val pairs = Queries.coPurchasePairs(spark, sf("sf0.01"))
     val drv = rows(graft.graph.GraphStats.assortativityPpm(pairs))
-    val dist = rows(graft.graph.GraphStats.assortativityPpm(pairs,
-      driverFinishMaxEdges = 0L))
+    val dist = rows(forcing(driverMaxEdges = 0L)(
+      graft.graph.GraphStats.assortativityPpm(pairs)))
     assert(drv == dist)
     spark.sharedState.cacheManager.clearCache()
   }

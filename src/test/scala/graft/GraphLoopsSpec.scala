@@ -3,16 +3,17 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.graph.{Bfs, Components, HyperBall, KCore, LabelPropagation,
-  PageRank, Reachability}
+import graft.graph.{Bfs, Components, GraphStats, HyperBall, KCore,
+  LabelPropagation, LinkPrediction, PageRank, Reachability, Triangles}
+import graft.graph.SizePolicy.forcing
 
 /** The distributed graph loops against their driver finishes, row for
-  * row. PageRank, HyperBall and LabelPropagation have one distributed
-  * path (pre-partitioned edge cache + shuffled-hash state side):
-  * driver finish == distributed (`driverFinishMaxEdges = 0`). Bfs,
-  * Components, KCore and Reachability keep a broadcast branch: driver
-  * finish == broadcast == shuffled-hash fallback
-  * (`maxBroadcastBytes = 0`).
+  * row; `SizePolicy.forcing` around a call picks its branch. PageRank,
+  * HyperBall and LabelPropagation have one distributed path
+  * (pre-partitioned edge cache + shuffled-hash state side): driver
+  * finish == distributed (`driverMaxEdges = 0L`). Bfs, Components,
+  * KCore and Reachability keep a broadcast branch: driver finish ==
+  * broadcast == shuffled-hash fallback (also `broadcastBytes = 0L`).
   * Plus: the pre-partitioned paths are shuffle-partition invariant
   * (their `repartition(col(key))` makes the partition count part of
   * the physical plan), rows with a null endpoint are dropped on every
@@ -52,8 +53,7 @@ class GraphLoopsSpec extends SparkSpec {
       val edges = randomEdges(seed, 40, 70).toDF("id1", "id2")
       same(s"lpa seed=$seed",
         "driver" -> LabelPropagation.run(edges, 3),
-        "distributed" -> LabelPropagation.run(edges, 3,
-          driverFinishMaxEdges = 0L))
+        "distributed" -> forcing(driverMaxEdges = 0L)(LabelPropagation.run(edges, 3)))
     }
   }
 
@@ -67,10 +67,9 @@ class GraphLoopsSpec extends SparkSpec {
       val seeds = Seq.fill(5)(rnd.nextInt(40).toLong).toDF("node")
       same(s"bfs seed=$seed",
         "driver" -> Bfs.hopDistances(edges, seeds, 3),
-        "broadcast" -> Bfs.hopDistances(edges, seeds, 3,
-          driverFinishMaxEdges = 0L),
-        "fallback" -> Bfs.hopDistances(edges, seeds, 3,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L))
+        "broadcast" -> forcing(driverMaxEdges = 0L)(Bfs.hopDistances(edges, seeds, 3)),
+        "fallback" -> forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+          Bfs.hopDistances(edges, seeds, 3)))
     }
   }
 
@@ -81,12 +80,11 @@ class GraphLoopsSpec extends SparkSpec {
     val edges = (es ++ es.map(_.swap)).toDF("src", "dst")
     same("hyperball neighborhood",
       "driver" -> HyperBall.neighborhood(edges, 2),
-      "distributed" -> HyperBall.neighborhood(edges, 2,
-        driverFinishMaxEdges = 0L))
+      "distributed" -> forcing(driverMaxEdges = 0L)(HyperBall.neighborhood(edges, 2)))
     same("hyperball harmonic",
       "driver" -> HyperBall.harmonicCentrality(edges, 2),
-      "distributed" -> HyperBall.harmonicCentrality(edges, 2,
-        driverFinishMaxEdges = 0L))
+      "distributed" -> forcing(driverMaxEdges = 0L)(
+        HyperBall.harmonicCentrality(edges, 2)))
   }
 
   test("PageRank + personalized + block: driver == distributed") {
@@ -96,19 +94,18 @@ class GraphLoopsSpec extends SparkSpec {
     val edges = (es ++ es.map(_.swap)).toDF("src", "dst")
     same("pagerank",
       "driver" -> PageRank.pageRank(edges, iters = 3),
-      "distributed" -> PageRank.pageRank(edges, iters = 3,
-        driverFinishMaxEdges = 0L))
+      "distributed" -> forcing(driverMaxEdges = 0L)(PageRank.pageRank(edges, iters = 3)))
     val seeds = Seq(1L, 4L, 9L).toDF("node")
     same("personalized",
       "driver" -> PageRank.personalized(edges, seeds, iters = 3),
-      "distributed" -> PageRank.personalized(edges, seeds, iters = 3,
-        driverFinishMaxEdges = 0L))
+      "distributed" -> forcing(driverMaxEdges = 0L)(
+        PageRank.personalized(edges, seeds, iters = 3)))
     val cohorts = Seq((0L, 1L), (0L, 4L), (1L, 2L), (1L, 9L))
       .toDF("cohort", "node")
     same("blockPersonalized",
       "driver" -> PageRank.blockPersonalized(edges, cohorts, iters = 3),
-      "distributed" -> PageRank.blockPersonalized(edges, cohorts,
-        iters = 3, driverFinishMaxEdges = 0L))
+      "distributed" -> forcing(driverMaxEdges = 0L)(
+        PageRank.blockPersonalized(edges, cohorts, iters = 3)))
   }
 
   test("Components: driver == broadcast == shuffled-hash fallback " +
@@ -118,10 +115,10 @@ class GraphLoopsSpec extends SparkSpec {
       val nodes = (0L until 40L).toDF("id")
       same(s"components seed=$seed",
         "driver" -> Components.connectedComponents(nodes, edges),
-        "broadcast" -> Components.connectedComponents(nodes, edges,
-          driverFinishMaxEdges = 0L),
-        "fallback" -> Components.connectedComponents(nodes, edges,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L))
+        "broadcast" -> forcing(driverMaxEdges = 0L)(
+          Components.connectedComponents(nodes, edges)),
+        "fallback" -> forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+          Components.connectedComponents(nodes, edges)))
     }
   }
 
@@ -130,10 +127,9 @@ class GraphLoopsSpec extends SparkSpec {
       val edges = randomEdges(seed, 25, 90).toDF("id1", "id2")
       same(s"kcore seed=$seed",
         "driver" -> KCore.kcore(edges, k = 3, rounds = 4),
-        "broadcast" -> KCore.kcore(edges, k = 3, rounds = 4,
-          driverFinishMaxEdges = 0L),
-        "fallback" -> KCore.kcore(edges, k = 3, rounds = 4,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L))
+        "broadcast" -> forcing(driverMaxEdges = 0L)(KCore.kcore(edges, k = 3, rounds = 4)),
+        "fallback" -> forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+          KCore.kcore(edges, k = 3, rounds = 4)))
     }
   }
 
@@ -145,10 +141,9 @@ class GraphLoopsSpec extends SparkSpec {
     val targets = Seq(0L, 3L, 7L).toDF("node")
     same("reachingSet",
       "driver" -> Reachability.reachingSet(edges, targets),
-      "broadcast" -> Reachability.reachingSet(edges, targets,
-        driverFinishMaxEdges = 0L),
-      "fallback" -> Reachability.reachingSet(edges, targets,
-        driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L))
+      "broadcast" -> forcing(driverMaxEdges = 0L)(Reachability.reachingSet(edges, targets)),
+      "fallback" -> forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+        Reachability.reachingSet(edges, targets)))
   }
 
   test("pre-partitioned distributed paths are shuffle-partition " +
@@ -162,14 +157,13 @@ class GraphLoopsSpec extends SparkSpec {
     def all(parts: String): Seq[Seq[Seq[Any]]] = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try Seq(
-        rows(LabelPropagation.run(edges, 3, driverFinishMaxEdges = 0L)),
-        rows(Bfs.hopDistances(dedges, seeds, 3,
-          driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L)),
-        rows(HyperBall.neighborhood(dedges, 2, driverFinishMaxEdges = 0L)),
-        rows(PageRank.pageRank(
+        rows(forcing(driverMaxEdges = 0L)(LabelPropagation.run(edges, 3))),
+        rows(forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+          Bfs.hopDistances(dedges, seeds, 3))),
+        rows(forcing(driverMaxEdges = 0L)(HyperBall.neighborhood(dedges, 2))),
+        rows(forcing(driverMaxEdges = 0L)(PageRank.pageRank(
           dedges.union(dedges.select(col("dst").as("src"),
-            col("src").as("dst"))), iters = 3,
-          driverFinishMaxEdges = 0L)))
+            col("src").as("dst"))), iters = 3))))
       finally spark.sharedState.cacheManager.clearCache()
     }
     val a = all("4")
@@ -188,12 +182,10 @@ class GraphLoopsSpec extends SparkSpec {
       .toDF("src", "dst")
     val pr = same("pagerank nulls",
       "driver" -> PageRank.pageRank(edges, iters = 3),
-      "distributed" -> PageRank.pageRank(edges, iters = 3,
-        driverFinishMaxEdges = 0L))
+      "distributed" -> forcing(driverMaxEdges = 0L)(PageRank.pageRank(edges, iters = 3)))
     val hb = same("hyperball nulls",
       "driver" -> HyperBall.neighborhood(edges, 2),
-      "distributed" -> HyperBall.neighborhood(edges, 2,
-        driverFinishMaxEdges = 0L))
+      "distributed" -> forcing(driverMaxEdges = 0L)(HyperBall.neighborhood(edges, 2)))
     assert(pr.map(_.head) == Seq(1L, 2L, 3L))
     assert(hb.map(_.head) == Seq(1L, 2L, 3L))
   }
@@ -230,15 +222,14 @@ class GraphLoopsSpec extends SparkSpec {
     val failingNodes = spark.range(20).select(when(col("id") < 19,
       col("id")).otherwise(raise_error(lit("node failure"))).as("id"))
     noCacheOutlives("components fallback",
-      Components.connectedComponents(nodes, edges,
-        driverFinishMaxEdges = 0L, maxBroadcastBytes = 0L))
+      forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+        Components.connectedComponents(nodes, edges)))
     noCacheOutlives("components",
-      Components.connectedComponents(nodes, edges,
-        driverFinishMaxEdges = 0L),
-      () => Components.connectedComponents(nodes,
-        failingEdges("id1", "id2"), driverFinishMaxEdges = 0L),
-      () => Components.connectedComponents(failingNodes, edges,
-        driverFinishMaxEdges = 0L))
+      forcing(driverMaxEdges = 0L)(Components.connectedComponents(nodes, edges)),
+      () => forcing(driverMaxEdges = 0L)(Components.connectedComponents(nodes,
+        failingEdges("id1", "id2"))),
+      () => forcing(driverMaxEdges = 0L)(
+        Components.connectedComponents(failingNodes, edges)))
   }
 
   test("PageRank: no edge cache outlives a call, also when it throws") {
@@ -246,34 +237,82 @@ class GraphLoopsSpec extends SparkSpec {
     val cohorts = Seq((0L, 1L), (1L, 2L)).toDF("cohort", "node")
     val noSeed = Seq(99L).toDF("node")
     noCacheOutlives("pageRank",
-      PageRank.pageRank(edges, iters = 2, driverFinishMaxEdges = 0L),
-      () => PageRank.pageRank(failingEdges("src", "dst"), iters = 2,
-        driverFinishMaxEdges = 0L),
-      () => PageRank.personalized(edges, noSeed, iters = 2,
-        driverFinishMaxEdges = 0L))
+      forcing(driverMaxEdges = 0L)(PageRank.pageRank(edges, iters = 2)),
+      () => forcing(driverMaxEdges = 0L)(
+        PageRank.pageRank(failingEdges("src", "dst"), iters = 2)),
+      () => forcing(driverMaxEdges = 0L)(
+        PageRank.personalized(edges, noSeed, iters = 2)))
     noCacheOutlives("blockPersonalized",
-      PageRank.blockPersonalized(edges, cohorts, iters = 2,
-        driverFinishMaxEdges = 0L),
-      () => PageRank.blockPersonalized(edges,
-        Seq((0L, 99L)).toDF("cohort", "node"), iters = 2,
-        driverFinishMaxEdges = 0L))
+      forcing(driverMaxEdges = 0L)(PageRank.blockPersonalized(edges, cohorts, iters = 2)),
+      () => forcing(driverMaxEdges = 0L)(PageRank.blockPersonalized(edges,
+        Seq((0L, 99L)).toDF("cohort", "node"), iters = 2)))
   }
 
   test("HyperBall: no edge cache outlives a call, also when it throws") {
     val edges = (chain ++ chain.map(_.swap)).toDF("src", "dst")
     noCacheOutlives("neighborhood",
-      HyperBall.neighborhood(edges, 2, driverFinishMaxEdges = 0L),
-      () => HyperBall.neighborhood(failingEdges("src", "dst"), 2,
-        driverFinishMaxEdges = 0L))
+      forcing(driverMaxEdges = 0L)(HyperBall.neighborhood(edges, 2)),
+      () => forcing(driverMaxEdges = 0L)(
+        HyperBall.neighborhood(failingEdges("src", "dst"), 2)))
     noCacheOutlives("harmonicCentrality",
-      HyperBall.harmonicCentrality(edges, 2, driverFinishMaxEdges = 0L))
+      forcing(driverMaxEdges = 0L)(HyperBall.harmonicCentrality(edges, 2)))
   }
 
   test("LPA: no edge cache outlives a call, also when it throws") {
     val edges = chain.toDF("id1", "id2")
     noCacheOutlives("lpa",
-      LabelPropagation.run(edges, 2, driverFinishMaxEdges = 0L),
-      () => LabelPropagation.run(failingEdges("id1", "id2"), 2,
-        driverFinishMaxEdges = 0L))
+      forcing(driverMaxEdges = 0L)(LabelPropagation.run(edges, 2)),
+      () => forcing(driverMaxEdges = 0L)(
+        LabelPropagation.run(failingEdges("id1", "id2"), 2)))
+  }
+
+  test("KCore: no edge cache outlives a call, also when it throws") {
+    val edges = chain.toDF("id1", "id2")
+    noCacheOutlives("kcore fallback",
+      forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+        KCore.kcore(edges, k = 2, rounds = 2)))
+    noCacheOutlives("kcore",
+      forcing(driverMaxEdges = 0L)(KCore.kcore(edges, k = 2, rounds = 2)),
+      () => forcing(driverMaxEdges = 0L)(
+        KCore.kcore(failingEdges("id1", "id2"), k = 2, rounds = 2)))
+  }
+
+  test("Reachability: no edge cache outlives a call, also when it " +
+    "throws") {
+    val edges = chain.toDF("child", "parent")
+    val targets = Seq(0L, 3L).toDF("node")
+    val failingTargets = spark.range(3).select(when(col("id") < 2,
+      col("id")).otherwise(raise_error(lit("target failure"))).as("node"))
+    noCacheOutlives("reachingSet fallback",
+      forcing(driverMaxEdges = 0L, broadcastBytes = 0L)(
+        Reachability.reachingSet(edges, targets)))
+    noCacheOutlives("reachingSet",
+      forcing(driverMaxEdges = 0L)(Reachability.reachingSet(edges, targets)),
+      () => forcing(driverMaxEdges = 0L)(
+        Reachability.reachingSet(failingEdges("child", "parent"), targets)),
+      () => forcing(driverMaxEdges = 0L)(
+        Reachability.reachingSet(edges, failingTargets)))
+  }
+
+  test("Triangles: no edge cache outlives a call, also when it throws") {
+    val edges = chain.toDF("id1", "id2")
+    for ((name, op) <- Seq[(String, DataFrame => DataFrame)](
+        "count" -> (Triangles.count(_)), "perNode" -> (Triangles.perNode(_))))
+      noCacheOutlives(name,
+        forcing(driverMaxEdges = 0L)(op(edges)),
+        () => forcing(driverMaxEdges = 0L)(op(failingEdges("id1", "id2"))))
+  }
+
+  test("LinkPrediction and GraphStats: no edge cache outlives a call, " +
+    "also when it throws") {
+    val edges = chain.toDF("id1", "id2")
+    noCacheOutlives("jaccardCandidates",
+      forcing(driverMaxEdges = 0L)(LinkPrediction.jaccardCandidates(edges)),
+      () => forcing(driverMaxEdges = 0L)(
+        LinkPrediction.jaccardCandidates(failingEdges("id1", "id2"))))
+    noCacheOutlives("assortativityPpm",
+      forcing(driverMaxEdges = 0L)(GraphStats.assortativityPpm(edges)),
+      () => forcing(driverMaxEdges = 0L)(
+        GraphStats.assortativityPpm(failingEdges("id1", "id2"))))
   }
 }

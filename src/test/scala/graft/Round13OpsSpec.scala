@@ -1,5 +1,6 @@
 package graft
 
+import graft.graph.SizePolicy.forcing
 import graft.text.TextFunctions
 import org.apache.spark.sql.functions._
 
@@ -98,8 +99,8 @@ class Round13OpsSpec extends SparkSpec {
       val drv = graft.graph.LabelPropagation
         .refineMerge(pairs, lpa)
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      val dist = graft.graph.LabelPropagation
-        .refineMerge(pairs, lpa, driverFinishMaxEdges = 0L)
+      val dist = forcing(driverMaxEdges = 0L)(graft.graph.LabelPropagation
+        .refineMerge(pairs, lpa))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
       assert(drv == dist, s"paths diverge at $sfn")
       assert(drv.nonEmpty)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.Components
+import graft.graph.SizePolicy.forcing
 import org.apache.spark.sql.functions._
 
 /** Round-3 operators: connected-components dedup clustering, as-of
@@ -33,11 +34,11 @@ class Round3OpsSpec extends SparkSpec {
   test("distributed loop converges on a 200-node path in 20 rounds") {
     // diameter 199: plain min-propagation would need 199 rounds; the
     // pointer-jumping shortcut must land it within the default cap.
-    // driverFinishMaxEdges = 0 forces the distributed path.
+    // forcing(driverMaxEdges = 0L) forces the distributed path.
     val nodes = (1L to 200L).toDF("id")
     val edges = (1L to 199L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val got = Components.connectedComponents(nodes, edges,
-        driverFinishMaxEdges = 0L)
+    val got = forcing(driverMaxEdges = 0L)(
+        Components.connectedComponents(nodes, edges))
       .as[(Long, Long)].collect().toMap
     assert(got.size == 200 && got.values.toSet == Set(1L))
   }
@@ -65,8 +66,8 @@ class Round3OpsSpec extends SparkSpec {
       val nodes = (1L to n).toDF("id")
       val edges = es.toDF("id1", "id2")
       Seq(1000000L, 0L).foreach { cap =>
-        val got = Components.connectedComponents(nodes, edges,
-            driverFinishMaxEdges = cap)
+        val got = forcing(driverMaxEdges = cap)(
+            Components.connectedComponents(nodes, edges))
           .as[(Long, Long)].collect().toMap
         assert(got == want, s"cap=$cap edges=$es")
       }
@@ -80,8 +81,8 @@ class Round3OpsSpec extends SparkSpec {
       rnd.nextInt(60) + 1L)).toDF("id1", "id2")
     val viaDriver = Components.connectedComponents(nodes, edges)
       .as[(Long, Long)].collect().toMap
-    val viaLoop = Components.connectedComponents(nodes, edges,
-        driverFinishMaxEdges = 0L)
+    val viaLoop = forcing(driverMaxEdges = 0L)(
+        Components.connectedComponents(nodes, edges))
       .as[(Long, Long)].collect().toMap
     assert(viaDriver == viaLoop)
   }

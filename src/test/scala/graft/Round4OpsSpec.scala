@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.Components
+import graft.graph.SizePolicy.forcing
 import org.apache.spark.sql.functions._
 
 /** Round-4 wiring: native session_window (e07) pinned to the manual
@@ -262,8 +263,8 @@ class Round4OpsSpec extends SparkSpec {
     val edges = Seq(("n2", "n3"), ("n3", "n4")).toDF("id1", "id2")
     val a = Components.connectedComponents(nodes, edges)
       .as[(String, String)].collect().toMap
-    val b = Components.connectedComponents(nodes, edges,
-        driverFinishMaxEdges = 0L)
+    val b = forcing(driverMaxEdges = 0L)(
+        Components.connectedComponents(nodes, edges))
       .as[(String, String)].collect().toMap
     assert(a == b)
   }
@@ -278,8 +279,8 @@ class Round4OpsSpec extends SparkSpec {
     val edges = Seq((hi, emoji)).toDF("id1", "id2")
     val a = Components.connectedComponents(nodes, edges)
       .as[(String, String)].collect().toMap
-    val b = Components.connectedComponents(nodes, edges,
-        driverFinishMaxEdges = 0L)
+    val b = forcing(driverMaxEdges = 0L)(
+        Components.connectedComponents(nodes, edges))
       .as[(String, String)].collect().toMap
     assert(a == b)
     assert(a.values.toSet == Set(hi)) // UTF-8 byte order picks U+FFFF

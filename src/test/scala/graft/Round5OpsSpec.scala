@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.Triangles
+import graft.graph.SizePolicy.forcing
 import org.apache.spark.sql.functions._
 
 /** Round-5 operators: per-node triangle counts / local clustering
@@ -279,15 +280,15 @@ class Round5OpsSpec extends SparkSpec {
       (3L, 1L), (1L, 3L), (3L, 4L), (4L, 3L)).toDF("src", "dst")
     val a = PageRank.pageRank(edges, iters = 4)
       .as[(Long, Long)].collect().toMap
-    val b = PageRank.pageRank(edges, iters = 4,
-        driverFinishMaxEdges = 0L)
+    val b = forcing(driverMaxEdges = 0L)(
+        PageRank.pageRank(edges, iters = 4))
       .as[(Long, Long)].collect().toMap
     assert(a == b)
     val seeds = Seq(1L).toDF("node")
     val c = PageRank.personalized(edges, seeds, iters = 4)
       .as[(Long, Long)].collect().toMap
-    val e = PageRank.personalized(edges, seeds, iters = 4,
-        driverFinishMaxEdges = 0L)
+    val e = forcing(driverMaxEdges = 0L)(
+        PageRank.personalized(edges, seeds, iters = 4))
       .as[(Long, Long)].collect().toMap
     assert(c == e)
     assert(a != c) // personalization actually changes the ranking

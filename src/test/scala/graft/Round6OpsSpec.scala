@@ -1,20 +1,37 @@
 package graft
 
 import graft.graph.{SizePolicy, Triangles}
+import graft.graph.SizePolicy.forcing
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Round-6 session specs: size-based Triangles broadcast gate and the
   * session's later additions. */
 class Round6OpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The executed plans of the SQL actions `f` runs. */
+  private def plansRun(f: => Unit): Seq[String] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution,
+                             ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      override def onFailure(name: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { f; org.apache.spark.ListenerDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toSeq)
+  }
+
   test("triangles broadcast gate is a byte estimate, not a row count") {
     val capEdges = SizePolicy.broadcastBytes /
       SizePolicy.keyedLongRowBytes
-    assert(SizePolicy.fits(capEdges, SizePolicy.keyedLongRowBytes,
-      SizePolicy.broadcastBytes))
-    assert(!SizePolicy.fits(capEdges + 1, SizePolicy.keyedLongRowBytes,
-      SizePolicy.broadcastBytes))
+    assert(SizePolicy.broadcasts(capEdges, SizePolicy.keyedLongRowBytes))
+    assert(!SizePolicy.broadcasts(capEdges + 1, SizePolicy.keyedLongRowBytes))
     // ~2M edges under the 100 MB default — 10x below the old 20M rows
     assert(capEdges <= 2200000L && capEdges >= 2000000L)
   }
@@ -25,20 +42,26 @@ class Round6OpsSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // driverFinishMaxEdges = 0: this spec pins the DISTRIBUTED
+      // driverMaxEdges = 0: this spec pins the DISTRIBUTED
       // closing-join plan shapes (the r15 driver finish would
-      // otherwise return a LocalRelation with no join at all)
-      val fallback = Triangles.count(k5, maxBroadcastBytes = 1L,
-        driverFinishMaxEdges = 0L)
+      // otherwise return a LocalRelation with no join at all). The
+      // distributed result is checkpointed inside the call, so the
+      // plans asserted on are those of the queries the call ran.
+      var fallback: org.apache.spark.sql.DataFrame = null
+      val fallbackPlans = plansRun {
+        fallback = forcing(driverMaxEdges = 0L, broadcastBytes = 1L)(
+          Triangles.count(k5))
+      }
       val rows = fallback.collect()
       // with auto-broadcast off and the hint gated out, the closing
       // join must have planned as a shuffle join
-      assert(!fallback.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"))
-      val hinted = Triangles.count(k5, driverFinishMaxEdges = 0L)
+      assert(!fallbackPlans.exists(_.contains("BroadcastHashJoin")))
+      var hinted: org.apache.spark.sql.DataFrame = null
+      val hintedPlans = plansRun {
+        hinted = forcing(driverMaxEdges = 0L)(Triangles.count(k5))
+      }
       val hintedRows = hinted.collect()
-      assert(hinted.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"))
+      assert(hintedPlans.exists(_.contains("BroadcastHashJoin")))
       assert(rows.toSeq == hintedRows.toSeq)
       // K5: C(5,3) = 10 triangles, every wedge closes
       assert(rows.head.getLong(3) == 10L)
@@ -293,8 +316,8 @@ class Round6OpsSpec extends SparkSpec {
       df.as[(Long, Long, Long)].collect()
         .map(t => (t._1, t._2) -> t._3).toMap
     val driver = asMap(PageRank.blockPersonalized(edges, seeds, iters = 4))
-    val dist = asMap(PageRank.blockPersonalized(edges, seeds, iters = 4,
-      driverFinishMaxEdges = 0L))
+    val dist = asMap(forcing(driverMaxEdges = 0L)(
+      PageRank.blockPersonalized(edges, seeds, iters = 4)))
     assert(driver == dist && driver.nonEmpty)
     // each cohort equals its own standalone personalized run
     // (restricted to the > 0 rows the sparse block form keeps)
@@ -311,8 +334,9 @@ class Round6OpsSpec extends SparkSpec {
     assert(!driver.keySet.exists(k => k._1 == 1L && k._2 <= 4L))
     // cohort batching past the driver bound: one-cohort-per-batch
     // loops must be bit-identical to the single shared loop
-    val batched = asMap(PageRank.blockPersonalized(edges, seeds,
-      iters = 4, driverFinishMaxEdges = 0L, cohortBatchSize = 1))
+    val batched = asMap(forcing(driverMaxEdges = 0L)(
+      PageRank.blockPersonalized(edges, seeds, iters = 4,
+        cohortBatchSize = 1)))
     assert(batched == dist)
   }
 
@@ -417,8 +441,8 @@ class Round6OpsSpec extends SparkSpec {
     // and an isolated edge 7-8 that dies in round one
     val edges = ((for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j))
       ++ Seq((4L, 5L), (5L, 6L), (7L, 8L))).toDF("id1", "id2")
-    def run(bound: Long) = KCore.kcore(edges, k = 2, rounds = 4,
-      driverFinishMaxEdges = bound)
+    def run(bound: Long) = forcing(driverMaxEdges = bound)(
+        KCore.kcore(edges, k = 2, rounds = 4))
       .as[(Long, Long)].collect().toMap
     val driver = run(2000000L)
     val dist = run(0L)
@@ -479,8 +503,8 @@ class Round6OpsSpec extends SparkSpec {
     assert(reach == Set(1L, 2L, 3L, 4L, 5L))
     // the bounded driver finish and the distributed loop are the
     // same fixpoint (the Components/PageRank pinning discipline)
-    val loop = Reachability.reachingSet(eff.toSeq.toDF("child", "parent"),
-      targets, driverFinishMaxEdges = 0L).as[Long].collect().toSet
+    val loop = forcing(driverMaxEdges = 0L)(Reachability.reachingSet(
+      eff.toSeq.toDF("child", "parent"), targets)).as[Long].collect().toSet
     assert(loop == reach)
     // string-typed ids survive the driver path (no silent cast)
     val sEdges = Seq(("Q2", "Q1"), ("Q3", "Q2")).toDF("child", "parent")
@@ -498,8 +522,8 @@ class Round6OpsSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val fb = Reachability.validMembers(memberTypes,
-        reach.toSeq.toDF("node"), maxBroadcastBytes = 1L)
+      val fb = forcing(broadcastBytes = 1L)(Reachability.validMembers(
+        memberTypes, reach.toSeq.toDF("node")))
       val fbRows = fb.as[String].collect().toSet
       assert(fbRows == valid)
       assert(!fb.queryExecution.executedPlan.toString

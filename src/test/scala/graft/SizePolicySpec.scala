@@ -4,12 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.graph.{Bfs, SizePolicy}
+import graft.graph.{Bfs, PageRank, SizePolicy}
+import graft.graph.SizePolicy.forcing
 
 /** SizePolicy's shared node sketch, over a persisted edge frame
   * (`measure`) and over Bfs's primitive edge blocks: the exact row
   * count and a bounded upper estimate of the distinct endpoints, from
-  * the one action that also materializes the cache. */
+  * the one action that also materializes the cache. And `forcing`, the
+  * one way to move the caps: scoped to its block and its thread, and
+  * loud when no gate read what it set. */
 class SizePolicySpec extends SparkSpec {
 
   private def edgesOf(n: Long, m: Long, strings: Boolean): DataFrame = {
@@ -63,5 +66,55 @@ class SizePolicySpec extends SparkSpec {
         assert(upper <= slack * exact, s"n=$n: $upper > $slack × $exact")
       } finally blocks.unpersist(true)
     }
+  }
+
+  /** The (driver-finish, broadcast) decisions for a one-row input. */
+  private def gates: (Boolean, Boolean) =
+    (SizePolicy.driverFinish(1L), SizePolicy.broadcasts(1L, 1L))
+
+  test("forcing restores the caps after a normal exit, a throw and a " +
+    "nested block") {
+    assert(gates == ((true, true)))
+    assert(forcing(driverMaxEdges = 0L)(gates) == ((false, true)))
+    assert(gates == ((true, true)))
+    val thrown = intercept[RuntimeException](forcing(broadcastBytes = 0L) {
+      assert(gates == ((true, false)))
+      throw new RuntimeException("body failed")
+    })
+    assert(thrown.getMessage == "body failed")
+    assert(gates == ((true, true)))
+    forcing(driverMaxEdges = 0L) {
+      assert(forcing(broadcastBytes = 0L)(gates) == ((false, false)))
+      assert(gates == ((false, true)))
+    }
+    assert(gates == ((true, true)))
+  }
+
+  test("forcing does not reach another thread") {
+    var other: (Boolean, Boolean) = null
+    forcing(driverMaxEdges = 0L, broadcastBytes = 0L) {
+      assert(gates == ((false, false)))
+      val t = new Thread(() => other = gates)
+      t.start()
+      t.join()
+    }
+    assert(other == ((true, true)))
+  }
+
+  test("forcing rejects a block in which no gate read a cap it set") {
+    import spark.implicits._
+    intercept[IllegalStateException](forcing()(()))
+    intercept[IllegalStateException](forcing(driverMaxEdges = 0L)(()))
+    intercept[IllegalStateException](
+      forcing(broadcastBytes = 0L)(SizePolicy.driverFinish(1L)))
+    // PageRank has no broadcast gate: forcing one compares nothing
+    val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    intercept[IllegalStateException](
+      forcing(broadcastBytes = 0L)(PageRank.pageRank(edges, iters = 1)))
+    // an inner block's read of a cap it kept counts for the outer one
+    forcing(driverMaxEdges = 0L) {
+      forcing(broadcastBytes = 0L)(gates)
+    }
+    assert(gates == ((true, true)))
   }
 }
