@@ -3,12 +3,23 @@
 
 Usage: bench_fold.py <prev_full.json> <out.json> <fresh1.json>...
          --fresh-only q63_bpe_merges,t23_bpe_encode,...
+       bench_fold.py --all-fresh <out.json> <fresh1.json>...
 
-Per-query MIN across the fresh runs; queries NOT in --fresh-only
-additionally fold in the previous round's committed minimum
-(byte-identical code since that fold — interference only ever adds
-time). Queries in --fresh-only (code changed this round, or new)
-take minima from the fresh runs alone.
+Every fresh run must record the same "cpus" and "heap" (scripts/bench.sh
+stamps both); the artifact records them too.
+
+--all-fresh: per-query MIN across the fresh runs and nothing else — no
+committed minima carried, no normalization. This is the baseline a
+fold at a new box size starts from, and the per-round honest total.
+
+Otherwise: per-query MIN across the fresh runs; queries NOT in
+--fresh-only additionally fold in the previous round's committed
+minimum (byte-identical code since that fold — interference only ever
+adds time). Queries in --fresh-only (code changed this round, or new)
+take minima from the fresh runs alone. Minima are carried only between
+runs at the same CPU count: a prev artifact with another (or no)
+"cpus" is refused, since across core counts the carried minima and
+the control ratio measure the cores, not the code or the load.
 
 Control normalization (r13 verdict item 3 — the calm-session bar
 was unreachable two rounds running, so the METHOD changed): ambient
@@ -37,9 +48,28 @@ def main():
         i = args.index("--fresh-only")
         fo = args[i + 1].split(",")
         del args[i:i + 2]
-    prev_path, out_path, fresh_paths = args[0], args[1], args[2:]
-    prev = json.load(open(prev_path))
+    all_fresh = "--all-fresh" in args
+    if all_fresh:
+        args.remove("--all-fresh")
+        if fo:
+            sys.exit("bench_fold: --all-fresh takes no --fresh-only list")
+        prev_path, prev = None, {"queries": {}}
+        out_path, fresh_paths = args[0], args[1:]
+    else:
+        prev_path, out_path, fresh_paths = args[0], args[1], args[2:]
+        prev = json.load(open(prev_path))
     fresh = [json.load(open(p)) for p in fresh_paths]
+    boxes = {(r.get("cpus"), r.get("heap")) for r in fresh}
+    if len(boxes) != 1 or None in next(iter(boxes)):
+        sys.exit(f"bench_fold: the fresh runs must all record one "
+                 f"(cpus, heap), got {sorted(boxes, key=str)} — run them "
+                 f"through scripts/bench.sh")
+    cpus, heap = next(iter(boxes))
+    if not all_fresh and prev.get("cpus") != cpus:
+        sys.exit(f"bench_fold: {prev_path} was run at cpus="
+                 f"{prev.get('cpus')}, the fresh runs at cpus={cpus} — "
+                 f"minima do not carry across core counts; fold with "
+                 f"--all-fresh")
     bad_controls = [c for c in CONTROLS if c in fo]
     if bad_controls:
         sys.exit(f"bench_fold: controls {bad_controls} cannot be "
@@ -73,10 +103,10 @@ def main():
     # to 3dp before the geomean biased the clamp input); the per-
     # control ratios are rounded for DISPLAY in the artifact only
     raw_ratios = {}
-    for c in CONTROLS:
+    for c in [] if all_fresh else CONTROLS:
         if c in names and prev["queries"].get(c):
             raw_ratios[c] = fresh_min(c) / prev["queries"][c]
-    if not raw_ratios:
+    if not raw_ratios and not all_fresh:
         sys.exit(f"bench_fold: no control ratio could be formed "
                  f"(controls {CONTROLS} missing from the fresh runs "
                  f"or null in {prev_path}) — cannot normalize")
@@ -84,7 +114,7 @@ def main():
     prod = 1.0
     for v in raw_ratios.values():
         prod *= v
-    geo = prod ** (1.0 / len(raw_ratios))
+    geo = prod ** (1.0 / len(raw_ratios)) if raw_ratios else 1.0
     ratio = round(max(geo, 1.0), 3)  # a calm box never deflates
     # a query committed in prev but absent from EVERY fresh run would
     # silently vanish from the folded artifact (names is the fresh
@@ -132,10 +162,16 @@ def main():
         "sf": fresh[0]["sf"],
         "n_queries": len(folded),
         "commit": commit,
+        "cpus": cpus,
+        "heap": heap,
         "control_ratios": ratios,
         "load_factor": ratio,
         "fresh_raw": fresh_raw,
         "method": (
+            f"all fresh: per-query MIN over {len(fresh)} fresh full runs "
+            f"(raw run totals {raw_totals}) at cpus={cpus}, heap={heap}; "
+            f"no committed minima carried, no normalization")
+        if all_fresh else (
             f"per-query MIN folded over {len(fresh)} fresh full runs "
             f"(raw run totals {raw_totals}) and, for queries "
             f"byte-identical since the previous fold, the committed "
