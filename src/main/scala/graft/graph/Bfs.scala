@@ -5,8 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.graft.LocalFrames
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.storage.StorageLevel
 
 /** Multi-source BFS hop distances over an edge list.
@@ -108,8 +110,12 @@ object Bfs {
     SizePolicy.sketch(blocks) { (parts, add) =>
       var n = 0L
       parts.foreach { case (src, dst) =>
-        src.foreach(add(_, LongType))
-        dst.foreach(add(_, LongType))
+        var k = 0
+        while (k < src.length) {
+          add(XXH64.hashLong(src(k), 42L))
+          add(XXH64.hashLong(dst(k), 42L))
+          k += 1
+        }
         n += src.length
       }
       n
@@ -142,8 +148,9 @@ object Bfs {
       frontier = next.result()
       hop += 1
     }
-    g.toDF(dist.indices.filter(dist(_) >= 0L)
-      .map(i => (g.ids(i), dist(i))), "node", "dist")
+    val reached = dist.indices.filter(dist(_) >= 0L).toArray
+    LocalFrames.longPairs(seeds.sparkSession, "node", "dist", nodeType,
+      reached.map(g.ids), reached.map(dist))
   }
 
   /** The hop rounds with the node state on the driver: `layers(k)`
@@ -168,10 +175,9 @@ object Bfs {
         settled = sortedDistinct(settled ++ frontier)
       }
     }
-    val rows = layers.toSeq.zipWithIndex
-      .flatMap { case (l, d) => l.map((_, d.toLong)) }
-    seeds.sparkSession.createDataFrame(rows).toDF("node", "dist")
-      .withColumn("node", col("node").cast(nodeType))
+    LocalFrames.longPairs(seeds.sparkSession, "node", "dist", nodeType,
+      Array.concat(layers.toSeq: _*),
+      layers.indices.flatMap(d => Iterator.fill(layers(d).length)(d.toLong)).toArray)
   }
 
   /** One hop as one job over the edge blocks: the frontier nodes

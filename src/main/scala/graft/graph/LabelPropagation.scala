@@ -240,124 +240,131 @@ object LabelPropagation {
                   canonical: Boolean = false): DataFrame = {
     // canonical ⇒ the caller's persisted frame backs every consumer;
     // otherwise the distinct is materialized locally (2+ branches)
+    // and released in the `finally` — every branch's result is cut
+    // free of it (a LocalRelation join or a checkpoint)
     val e0 = canon(edges, canonical)
     val e = if (canonical) e0
       else e0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count() // == m; feeds between AND the degree agg
-    // labels feed two edge joins, degrees, and the remap — but every
-    // caller passes [[run]]'s output, which is ALREADY eagerly
-    // localCheckpoint-ed (materialized); re-persisting it here cost a
-    // full redundant scan + cache write + count action (measured in
-    // g14's isolated A/B). Contract: pass materialized labels.
-    val lab = labels
+    try {
+      val nEdges = e.count() // == m; feeds between AND the degree agg
+      // labels feed two edge joins, degrees, and the remap — but every
+      // caller passes [[run]]'s output, which is ALREADY eagerly
+      // localCheckpoint-ed (materialized); re-persisting it here cost a
+      // full redundant scan + cache write + count action (measured in
+      // g14's isolated A/B). Contract: pass materialized labels.
+      val lab = labels
+      // Everything past `between`/`dc` operates on COMMUNITY-bounded
+      // tables (|between| ≤ m, |dc| ≤ 2m): under the edge gate, the
+      // best-partner + mutual-matching logic is a bounded exact driver
+      // finish (the KCore/PageRank economics — the distributed tail is
+      // ~6 tiny stages of pure scheduling), spec-pinned equal to the
+      // distributed fallback below. The merge map returns as a
+      // LocalRelation whose stats Catalyst sees, so the remap join
+      // broadcasts itself — the corpus-sized side never reshuffles.
+      if (SizePolicy.driverFinish(nEdges)) {
+        // RAW-EDGE driver finish (the PageRank.run / modularityPpm
+        // economics): between/dc are label-keyed sums over the bounded
+        // edge list — computing them driver-side from one 2-column
+        // collect skips the two edge-label join jobs the old bounded
+        // branch still scheduled (it collected the DISTRIBUTED
+        // between/dc). Inner-join semantics mirrored: endpoints with
+        // no label row drop from both. Spec-pinned equal to the
+        // distributed fallback (Round13OpsSpec/Round15OpsSpec).
+        val (dcm, _, betM) = labelSums(e, lab)
+        val m = nEdges
+        // both directions of every community pair; gains in BigInt so
+        // a driver-finish cap raised past ~1e9 edges can't silently wrap
+        // 2·d_c·d_d (~8m²) through Long
+        val best = LongMap.empty[(Long, BigInt)] // c -> (partner, gain)
+        def offer(c: Long, p: Long, ecd: Long): Unit = {
+          val gain = BigInt(4) * m * ecd - BigInt(2) * dcm(c) * dcm(p)
+          best.get(c) match {
+            case Some((bp, bg)) if bg > gain ||
+              (bg == gain && bp <= p) => ()
+            case _ => best(c) = (p, gain)
+          }
+        }
+        betM.foreachEntry { (k, ecd) =>
+          val (c, p) = (k >>> 32, k & 0xFFFFFFFFL)
+          offer(c, p, ecd); offer(p, c, ecd)
+        }
+        val merges = best.iterator.collect {
+          case (c, (p, g))
+            if g > 0 && c < p && best.get(p).exists(_._1 == c) =>
+            (c, p) // (newl, oldl)
+        }.toSeq
+        val ses = edges.sparkSession
+        import ses.implicits._
+        val mutualDf = merges.toDF("newl", "oldl")
+        // the returned remap reads only `lab` + the LocalRelation — the
+        // edge cache has served its two consumers (between/dc collects)
+        lab
+          .join(mutualDf, lab("label") === mutualDf("oldl"), "left")
+          .select(col("node"),
+            coalesce(col("newl"), col("label")).cast("long").as("label"))
+      } else distributedMerge(e, lab, nEdges)
+    } finally if (!canonical) e.unpersist(blocking = false)
+  }
+
+  /** [[refineMerge]] past the driver-finish gate: `between` feeds
+    * both unionAll arms and `dc` feeds both gains joins — both are
+    * persisted and counted before the fan-out (house rule: independent
+    * parallel stages otherwise race-recompute the two edge-label join
+    * subtrees, exactly on the above-the-gate path where they are most
+    * expensive). The caches exist only for this call's fan-out: the
+    * result is cut free of them (eager localCheckpoint — |nodes| rows)
+    * and both are released, also on a throw, so a session making many
+    * refineMerge calls doesn't accumulate cached tables for its
+    * lifetime (round-9 advice). */
+  private def distributedMerge(e: DataFrame, lab: DataFrame,
+                               nEdges: Long): DataFrame = {
     val la = lab.select(col("node").as("a"), col("label").as("la"))
     val lb = lab.select(col("node").as("b"), col("label").as("lb"))
-    val between = e.join(la, Seq("a")).join(lb, Seq("b"))
+    val betweenP = e.join(la, Seq("a")).join(lb, Seq("b"))
       .filter(col("la") =!= col("lb"))
       .groupBy(least(col("la"), col("lb")).as("c"),
         greatest(col("la"), col("lb")).as("p"))
       .agg(count(lit(1)).as("ecd"))
-    val dc = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .join(lab, Seq("node"))
-      .groupBy("label").agg(sum("deg").as("dc"))
-    // Everything past `between`/`dc` operates on COMMUNITY-bounded
-    // tables (|between| ≤ m, |dc| ≤ 2m): under the edge gate, the
-    // best-partner + mutual-matching logic is a bounded exact driver
-    // finish (the KCore/PageRank economics — the distributed tail is
-    // ~6 tiny stages of pure scheduling), spec-pinned equal to the
-    // distributed fallback below. The merge map returns as a
-    // LocalRelation whose stats Catalyst sees, so the remap join
-    // broadcasts itself — the corpus-sized side never reshuffles.
-    if (SizePolicy.driverFinish(nEdges)) {
-      // RAW-EDGE driver finish (the PageRank.run / modularityPpm
-      // economics): between/dc are label-keyed sums over the bounded
-      // edge list — computing them driver-side from one 2-column
-      // collect skips the two edge-label join jobs the old bounded
-      // branch still scheduled (it collected the DISTRIBUTED
-      // between/dc). Inner-join semantics mirrored: endpoints with
-      // no label row drop from both. Spec-pinned equal to the
-      // distributed fallback (Round13OpsSpec/Round15OpsSpec).
-      val (dcm, _, betM) = labelSums(e, lab)
-      val m = nEdges
-      // both directions of every community pair; gains in BigInt so
-      // a driver-finish cap raised past ~1e9 edges can't silently wrap
-      // 2·d_c·d_d (~8m²) through Long
-      val best = LongMap.empty[(Long, BigInt)] // c -> (partner, gain)
-      def offer(c: Long, p: Long, ecd: Long): Unit = {
-        val gain = BigInt(4) * m * ecd - BigInt(2) * dcm(c) * dcm(p)
-        best.get(c) match {
-          case Some((bp, bg)) if bg > gain ||
-            (bg == gain && bp <= p) => ()
-          case _ => best(c) = (p, gain)
-        }
-      }
-      betM.foreachEntry { (k, ecd) =>
-        val (c, p) = (k >>> 32, k & 0xFFFFFFFFL)
-        offer(c, p, ecd); offer(p, c, ecd)
-      }
-      val merges = best.iterator.collect {
-        case (c, (p, g))
-          if g > 0 && c < p && best.get(p).exists(_._1 == c) =>
-          (c, p) // (newl, oldl)
-      }.toSeq
-      val ses = edges.sparkSession
-      import ses.implicits._
-      val mutualDf = merges.toDF("newl", "oldl")
-      // the returned remap reads only `lab` + the LocalRelation — the
-      // edge cache has served its two consumers (between/dc collects)
-      if (!canonical) e.unpersist(blocking = false)
-      return lab
-        .join(mutualDf, lab("label") === mutualDf("oldl"), "left")
-        .select(col("node"),
-          coalesce(col("newl"), col("label")).cast("long").as("label"))
-    }
-    // Distributed branch: `between` feeds both unionAll arms and
-    // `dc` feeds both gains joins — persist + count BOTH before the
-    // fan-out (house rule: independent parallel stages otherwise
-    // race-recompute the two edge-label join subtrees, exactly on
-    // the above-the-gate path where they are most expensive).
-    val betweenP = between.persist(StorageLevel.MEMORY_AND_DISK)
-    betweenP.count()
-    val dcP = dc.persist(StorageLevel.MEMORY_AND_DISK)
-    dcP.count()
-    val ordered = betweenP.unionAll(
-      betweenP.select(col("p").as("c"), col("c").as("p"), col("ecd")))
-    val gains = ordered
-      .join(dcP.select(col("label").as("c"), col("dc").as("dcc")),
-        Seq("c"))
-      .join(dcP.select(col("label").as("p"), col("dc").as("dcp")),
-        Seq("p"))
-      .select(col("c"), col("p"),
-        // DECIMAL(38,0): 2·d_c·d_d reaches ~8m², past 2^63 at
-        // m ≈ 1.07e9 edges — decimal keeps the merge test exact to
-        // ~3e15 edges at zero cost (community-bounded table)
-        (lit(4L) * lit(nEdges) * col("ecd").cast("decimal(38,0)")
-          - lit(2L) * col("dcc").cast("decimal(38,0)")
-            * col("dcp")).as("gain"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("c").orderBy(col("gain").desc, col("p").asc)
-    val best = gains.withColumn("r", row_number().over(w))
-      .filter(col("r") === 1).select("c", "p", "gain")
-    val mutual = best.as("b1")
-      .join(best.as("b2"),
-        col("b1.c") === col("b2.p") && col("b1.p") === col("b2.c"))
-      .filter(col("b1.gain") > 0 && col("b1.c") < col("b1.p"))
-      .select(col("b1.c").as("newl"), col("b1.p").as("oldl"))
-    val out = lab.join(mutual, lab("label") === mutual("oldl"), "left")
-      .select(col("node"),
-        coalesce(col("newl"), col("label")).cast("long").as("label"))
-    // The caches exist only to keep this call's fan-out from
-    // race-recomputing; cut the result free of them (eager
-    // localCheckpoint — |nodes| rows) and release all three so a
-    // session making many refineMerge calls doesn't accumulate
-    // cached tables for its lifetime (round-9 advice).
-    val outM = out.localCheckpoint(true)
-    betweenP.unpersist(blocking = false)
-    dcP.unpersist(blocking = false)
-    if (!canonical) e.unpersist(blocking = false)
-    outM
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      betweenP.count()
+      val dcP = e.select(col("a").as("node"))
+        .unionAll(e.select(col("b").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+        .join(lab, Seq("node"))
+        .groupBy("label").agg(sum("deg").as("dc"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        dcP.count()
+        val ordered = betweenP.unionAll(
+          betweenP.select(col("p").as("c"), col("c").as("p"), col("ecd")))
+        val gains = ordered
+          .join(dcP.select(col("label").as("c"), col("dc").as("dcc")),
+            Seq("c"))
+          .join(dcP.select(col("label").as("p"), col("dc").as("dcp")),
+            Seq("p"))
+          .select(col("c"), col("p"),
+            // DECIMAL(38,0): 2·d_c·d_d reaches ~8m², past 2^63 at
+            // m ≈ 1.07e9 edges — decimal keeps the merge test exact to
+            // ~3e15 edges at zero cost (community-bounded table)
+            (lit(4L) * lit(nEdges) * col("ecd").cast("decimal(38,0)")
+              - lit(2L) * col("dcc").cast("decimal(38,0)")
+                * col("dcp")).as("gain"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy("c").orderBy(col("gain").desc, col("p").asc)
+        val best = gains.withColumn("r", row_number().over(w))
+          .filter(col("r") === 1).select("c", "p", "gain")
+        val mutual = best.as("b1")
+          .join(best.as("b2"),
+            col("b1.c") === col("b2.p") && col("b1.p") === col("b2.c"))
+          .filter(col("b1.gain") > 0 && col("b1.c") < col("b1.p"))
+          .select(col("b1.c").as("newl"), col("b1.p").as("oldl"))
+        lab.join(mutual, lab("label") === mutual("oldl"), "left")
+          .select(col("node"),
+            coalesce(col("newl"), col("label")).cast("long").as("label"))
+          .localCheckpoint(true)
+      } finally dcP.unpersist(blocking = false)
+    } finally betweenP.unpersist(blocking = false)
   }
 
   /** MODULARITY of a node partition — the standard quality score for
@@ -381,73 +388,79 @@ object LabelPropagation {
   def modularityPpm(edges: DataFrame, labels: DataFrame,
                     canonical: Boolean = false): DataFrame = {
     val e0 = canon(edges, canonical)
+    // not canonical: the distinct edge list is this call's cache,
+    // released in the `finally` — both results are cut free of it (a
+    // local Seq, a checkpointed row)
     val e = if (canonical) e0
       else e0.persist(StorageLevel.MEMORY_AND_DISK)
-    // the materializing count IS m (e is canonical+distinct) — ride
-    // it as a literal instead of a scalar agg + two cross joins
-    val m = e.count()
-    // Exact driver finish (the [[run]]/PageRank economics): ec/dc
-    // are label-keyed sums over a bounded edge list and labels is
-    // node-sized (≤ 2m) — under the gate the two edge-label joins,
-    // the degree aggregate and the scalar rollup collapse to two
-    // collects + BigInt arithmetic identical to the distributed
-    // DECIMAL(38,0) chain. Spec-pinned equal (Round15OpsSpec).
-    if (SizePolicy.driverFinish(m)) {
-      val (dcM, ecM, _) = labelSums(e, labels)
-      if (!canonical) e.unpersist(false)
-      var num = BigInt(0)
-      dcM.foreachEntry { (label: Long, dc: Long) =>
-        val ec: Long = ecM.getOrElse(label, 0L)
-        val term: BigInt =
-          (BigInt(4) * BigInt(m) * BigInt(ec)) - (BigInt(dc) * BigInt(dc))
-        num += term
+    try {
+      // the materializing count IS m (e is canonical+distinct) — ride
+      // it as a literal instead of a scalar agg + two cross joins
+      val m = e.count()
+      // Exact driver finish (the [[run]]/PageRank economics): ec/dc
+      // are label-keyed sums over a bounded edge list and labels is
+      // node-sized (≤ 2m) — under the gate the two edge-label joins,
+      // the degree aggregate and the scalar rollup collapse to two
+      // collects + BigInt arithmetic identical to the distributed
+      // DECIMAL(38,0) chain. Spec-pinned equal (Round15OpsSpec).
+      if (SizePolicy.driverFinish(m)) {
+        val (dcM, ecM, _) = labelSums(e, labels)
+        var num = BigInt(0)
+        dcM.foreachEntry { (label: Long, dc: Long) =>
+          val ec: Long = ecM.getOrElse(label, 0L)
+          val term: BigInt =
+            (BigInt(4) * BigInt(m) * BigInt(ec)) - (BigInt(dc) * BigInt(dc))
+          num += term
+        }
+        val fourM2 = BigInt(4) * BigInt(m) * BigInt(m)
+        val eightM2 = fourM2 * 2
+        val ppm =
+          if (num >= 0) (BigInt(2) * 1000000 * num + fourM2) / eightM2
+          else -((BigInt(2) * 1000000 * (-num) + fourM2) / eightM2)
+        val ses = edges.sparkSession
+        import ses.implicits._
+        Seq((dcM.size.toLong, m, ppm.toLong))
+          .toDF("n_communities", "m_edges", "modularity_ppm")
+      } else {
+        val la = labels.select(col("node").as("a"), col("label").as("la"))
+        val lb = labels.select(col("node").as("b"), col("label").as("lb"))
+        val ec = e.join(la, Seq("a")).join(lb, Seq("b"))
+          .filter(col("la") === col("lb"))
+          .groupBy(col("la").as("label")).agg(count(lit(1)).as("ec"))
+        val dc = e.select(col("a").as("node"))
+          .unionAll(e.select(col("b").as("node")))
+          .groupBy("node").agg(count(lit(1)).as("deg"))
+          .join(labels, Seq("node"))
+          .groupBy("label").agg(sum("deg").as("dc"))
+        // per community: 4m*ec - dc^2 (communities with zero intra edges
+        // still contribute -dc^2 — hence the left join from dc). The
+        // whole numerator chain runs in DECIMAL(38,0): the scaled ppm
+        // product 2e6·Σ(4m·ec − dc²) ≈ 8e6·m² passes 2^63 already at
+        // m ≈ 1.07e6 edges, and 4m·ec itself at m ≈ 1.5e9 — both well
+        // inside what a 100 TB graph carries. Decimal(38) holds exact
+        // integers to 1e38, i.e. m up to ~3e15 edges; the per-community
+        // table is bounded, so the wider arithmetic costs nothing.
+        val terms = dc.join(ec, Seq("label"), "left")
+          .select(col("label"), col("dc"),
+            coalesce(col("ec"), lit(0L)).as("ec"))
+          .select((lit(4L) * lit(m) * col("ec").cast("decimal(38,0)")
+            - col("dc").cast("decimal(38,0)") * col("dc")).as("term"))
+        val fourM2 = BigInt(4) * BigInt(m) * BigInt(m)  // HALF_UP bias
+        val eightM2 = fourM2 * 2                        // denominator
+        terms.agg(count(lit(1)).as("n_communities"),
+            sum("term").as("num"))
+          .select(col("n_communities"),
+            lit(m).as("m_edges"),
+            expr(s"CAST(CASE WHEN num >= 0" +
+              s" THEN (2 * 1000000 * num" +
+              s"       + CAST('$fourM2' AS DECIMAL(38,0)))" +
+              s"   DIV CAST('$eightM2' AS DECIMAL(38,0))" +
+              s" ELSE -((2 * 1000000 * (-num)" +
+              s"       + CAST('$fourM2' AS DECIMAL(38,0)))" +
+              s"   DIV CAST('$eightM2' AS DECIMAL(38,0))) END AS BIGINT)")
+              .as("modularity_ppm"))
+          .localCheckpoint(true)
       }
-      val fourM2 = BigInt(4) * BigInt(m) * BigInt(m)
-      val eightM2 = fourM2 * 2
-      val ppm =
-        if (num >= 0) (BigInt(2) * 1000000 * num + fourM2) / eightM2
-        else -((BigInt(2) * 1000000 * (-num) + fourM2) / eightM2)
-      val ses = edges.sparkSession
-      import ses.implicits._
-      return Seq((dcM.size.toLong, m, ppm.toLong))
-        .toDF("n_communities", "m_edges", "modularity_ppm")
-    }
-    val la = labels.select(col("node").as("a"), col("label").as("la"))
-    val lb = labels.select(col("node").as("b"), col("label").as("lb"))
-    val ec = e.join(la, Seq("a")).join(lb, Seq("b"))
-      .filter(col("la") === col("lb"))
-      .groupBy(col("la").as("label")).agg(count(lit(1)).as("ec"))
-    val dc = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .join(labels, Seq("node"))
-      .groupBy("label").agg(sum("deg").as("dc"))
-    // per community: 4m*ec - dc^2 (communities with zero intra edges
-    // still contribute -dc^2 — hence the left join from dc). The
-    // whole numerator chain runs in DECIMAL(38,0): the scaled ppm
-    // product 2e6·Σ(4m·ec − dc²) ≈ 8e6·m² passes 2^63 already at
-    // m ≈ 1.07e6 edges, and 4m·ec itself at m ≈ 1.5e9 — both well
-    // inside what a 100 TB graph carries. Decimal(38) holds exact
-    // integers to 1e38, i.e. m up to ~3e15 edges; the per-community
-    // table is bounded, so the wider arithmetic costs nothing.
-    val terms = dc.join(ec, Seq("label"), "left")
-      .select(col("label"), col("dc"),
-        coalesce(col("ec"), lit(0L)).as("ec"))
-      .select((lit(4L) * lit(m) * col("ec").cast("decimal(38,0)")
-        - col("dc").cast("decimal(38,0)") * col("dc")).as("term"))
-    val fourM2 = BigInt(4) * BigInt(m) * BigInt(m)  // HALF_UP bias
-    val eightM2 = fourM2 * 2                        // denominator
-    terms.agg(count(lit(1)).as("n_communities"),
-        sum("term").as("num"))
-      .select(col("n_communities"),
-        lit(m).as("m_edges"),
-        expr(s"CAST(CASE WHEN num >= 0" +
-          s" THEN (2 * 1000000 * num" +
-          s"       + CAST('$fourM2' AS DECIMAL(38,0)))" +
-          s"   DIV CAST('$eightM2' AS DECIMAL(38,0))" +
-          s" ELSE -((2 * 1000000 * (-num)" +
-          s"       + CAST('$fourM2' AS DECIMAL(38,0)))" +
-          s"   DIV CAST('$eightM2' AS DECIMAL(38,0))) END AS BIGINT)")
-          .as("modularity_ppm"))
+    } finally if (!canonical) e.unpersist(false)
   }
 }

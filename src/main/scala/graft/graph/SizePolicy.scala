@@ -2,10 +2,11 @@ package graft.graph
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
+  XxHash64Function}
 import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.functions.{broadcast, col}
-import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 /** The one place a size cap lives and a size gate is decided — for the
@@ -164,33 +165,61 @@ private[graft] object SizePolicy {
       var n = 0L
       rows.foreach { r =>
         n += 1
-        if (!r.isNullAt(0)) add(r.get(0, ta), ta)
-        if (!r.isNullAt(1)) add(r.get(1, tb), tb)
+        if (!r.isNullAt(0)) add(XxHash64Function.hash(r.get(0, ta), ta, 42L))
+        if (!r.isNullAt(1)) add(XxHash64Function.hash(r.get(1, tb), tb, 42L))
       }
       n
     }
   }
 
   /** `(rows, nodesUpper)` over the partitions of `parts` in one job,
-    * with no shuffle: `scan` walks one partition, passes every
-    * endpoint to `add` and returns its row count. Each task keeps one
-    * set of HLL++ registers at [[nodesRsd]]; they merge on the driver
-    * and the estimate is inflated by [[nodesMargin]]. The one sketch
-    * behind [[measure]] and Bfs's edge blocks; the job materializes
-    * whatever persist `parts` reads. */
+    * with no shuffle: `scan` walks one partition, passes the 64-bit
+    * hash of every endpoint to `add` and returns its row count — the
+    * hash HyperLogLog++ takes of a value of type t is
+    * `XxHash64Function.hash(v, t, 42L)`, for a long
+    * `XXH64.hashLong(v, 42L)`. Each task keeps one set of register
+    * words at [[nodesRsd]], updated by [[hllAdd]]; they merge on the
+    * driver and the estimate is inflated by [[nodesMargin]]. The one
+    * sketch behind [[measure]] and Bfs's edge blocks; the job
+    * materializes whatever persist `parts` reads. */
   def sketch[T](parts: RDD[T])(
-      scan: (Iterator[T], (Any, DataType) => Unit) => Long): (Long, Long) = {
-    val hll = new HyperLogLogPlusPlusHelper(nodesRsd)
-    def registers = new SpecificInternalRow(Seq.fill(hll.numWords)(LongType))
+      scan: (Iterator[T], Long => Unit) => Long): (Long, Long) = {
     val sized = parts.mapPartitions { it =>
-        val regs = registers
-        val n = scan(it, (v, t) => hll.update(regs, 0, v, t))
-        Iterator.single((n, regs))
+        val words = new Array[Long](hll.numWords)
+        val n = scan(it, hllAdd(words, _))
+        Iterator.single((n, words))
       }
       .collect()
-    val regs = registers
-    sized.foreach(p => hll.merge(regs, p._2, 0, 0))
+    val regs = hllRow(new Array[Long](hll.numWords))
+    sized.foreach(p => hll.merge(regs, hllRow(p._2), 0, 0))
     (sized.map(_._1).sum,
       math.ceil(hll.query(regs, 0) * (1 + nodesMargin)).toLong)
+  }
+
+  /** Spark's HyperLogLog++ at [[nodesRsd]]: its merge and estimate
+    * serve [[sketch]]; [[hllAdd]] is its register update. */
+  private[graft] val hll = new HyperLogLogPlusPlusHelper(nodesRsd)
+
+  /** The helper's index bits p, by its own formula. */
+  private val hllP =
+    math.ceil(2.0d * math.log(1.106d / nodesRsd) / math.log(2.0d)).toInt
+
+  /** Register words as the helper's aggregation buffer. */
+  private[graft] def hllRow(words: Array[Long]): InternalRow =
+    new GenericInternalRow(words.map(w => w: Any))
+
+  /** `HyperLogLogPlusPlusHelper.update` of an already hashed value,
+    * on register words in a primitive array: the top p bits of `hash`
+    * pick the register, the leading zeros of the rest (plus one) are
+    * its candidate, six bits per register, ten registers per word. */
+  private[graft] def hllAdd(words: Array[Long], hash: Long): Unit = {
+    val idx = (hash >>> (64 - hllP)).toInt
+    val pw = java.lang.Long.numberOfLeadingZeros(
+      (hash << hllP) | (1L << (hllP - 1))) + 1L
+    val w = idx / 10
+    val shift = 6 * (idx - w * 10)
+    val mask = 0x3FL << shift
+    val word = words(w)
+    if (pw > ((word & mask) >>> shift)) words(w) = (word & ~mask) | (pw << shift)
   }
 }

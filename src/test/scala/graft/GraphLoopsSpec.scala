@@ -266,6 +266,34 @@ class GraphLoopsSpec extends SparkSpec {
         LabelPropagation.run(failingEdges("id1", "id2"), 2)))
   }
 
+  private val failingLabels = spark.range(20).select(col("id").as("node"),
+    when(col("id") < 19, col("id"))
+      .otherwise(raise_error(lit("label failure"))).as("label"))
+
+  test("LPA modularityPpm: no edge cache outlives a call, also when it " +
+    "throws") {
+    val edges = chain.toDF("id1", "id2")
+    val labels = LabelPropagation.run(edges, 2)
+    noCacheOutlives("modularityPpm",
+      forcing(driverMaxEdges = 0L)(LabelPropagation.modularityPpm(edges, labels)),
+      () => forcing(driverMaxEdges = 0L)(LabelPropagation.modularityPpm(
+        failingEdges("id1", "id2"), labels)),
+      () => forcing(driverMaxEdges = 0L)(
+        LabelPropagation.modularityPpm(edges, failingLabels)))
+  }
+
+  test("LPA refineMerge: no edge cache outlives a call, also when it " +
+    "throws") {
+    val edges = chain.toDF("id1", "id2")
+    val labels = LabelPropagation.run(edges, 2)
+    noCacheOutlives("refineMerge",
+      forcing(driverMaxEdges = 0L)(LabelPropagation.refineMerge(edges, labels)),
+      () => forcing(driverMaxEdges = 0L)(LabelPropagation.refineMerge(
+        failingEdges("id1", "id2"), labels)),
+      () => forcing(driverMaxEdges = 0L)(
+        LabelPropagation.refineMerge(edges, failingLabels)))
+  }
+
   test("KCore: no edge cache outlives a call, also when it throws") {
     val edges = chain.toDF("id1", "id2")
     noCacheOutlives("kcore fallback",

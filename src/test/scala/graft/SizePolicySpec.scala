@@ -68,6 +68,36 @@ class SizePolicySpec extends SparkSpec {
     }
   }
 
+  test("hllAdd on a hash == HyperLogLogPlusPlusHelper.update on the " +
+    "value: register words and query, longs and strings") {
+    import org.apache.spark.sql.catalyst.expressions.{XXH64, XxHash64Function}
+    import org.apache.spark.sql.types.{DataType, LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val hll = SizePolicy.hll
+    val rnd = new scala.util.Random(7)
+    val longs = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue) ++
+      Seq.fill(20000)(rnd.nextLong()) ++ Seq.fill(2000)(rnd.nextInt(500).toLong - 250)
+    val strings = Seq("", "a", "node-\u00e9") ++
+      Seq.fill(5000)(rnd.alphanumeric.take(1 + rnd.nextInt(12)).mkString)
+    def check(name: String, values: Seq[Any], t: DataType,
+              hash: Any => Long): Unit = {
+      val words = new Array[Long](hll.numWords)
+      val row = SizePolicy.hllRow(new Array[Long](hll.numWords))
+      values.foreach { v =>
+        SizePolicy.hllAdd(words, hash(v))
+        hll.update(row, 0, v, t)
+      }
+      assert(words.toSeq == (0 until hll.numWords).map(row.getLong), name)
+      assert(hll.query(SizePolicy.hllRow(words), 0) == hll.query(row, 0), name)
+      assert(words.exists(_ != 0L), name)
+    }
+    check("longs", longs, LongType, v => XXH64.hashLong(v.asInstanceOf[Long], 42L))
+    check("longs via XxHash64Function", longs, LongType,
+      XxHash64Function.hash(_, LongType, 42L))
+    check("strings", strings.map(UTF8String.fromString), StringType,
+      XxHash64Function.hash(_, StringType, 42L))
+  }
+
   /** The (driver-finish, broadcast) decisions for a one-row input. */
   private def gates: (Boolean, Boolean) =
     (SizePolicy.driverFinish(1L), SizePolicy.broadcasts(1L, 1L))
